@@ -108,7 +108,7 @@ def build(root):
 def run_jvm(root, cp, args, run_dir):
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    cmd = (["java", "-Xms2g", "-Xmx2g", f"-Djava.io.tmpdir={tmp}", "-Dspark.ui.enabled=false",
+    cmd = (["java", "-Xms2g", "-Xmx2g", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}", "-Dspark.ui.enabled=false",
             "-Dspark.sql.session.timeZone=UTC", f"-Dspark.local.dir={tmp}"]
            + [x for o in OPENS for x in ("--add-opens", f"{o}=ALL-UNNAMED")]
            + ["-cp", cp, "graft.perfbench.Main"] + args)
