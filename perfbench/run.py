@@ -34,15 +34,7 @@ import trace_report  # noqa: E402
 SF = 0.02
 TINY_SF = 0.002
 JVM_TIMEOUT_S = 165
-# medallion_daily runs by hand; BENCHMARK.json lists the other two
-WORKLOADS = ("query_mix", "lakehouse_rw", "medallion_daily")
-OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-    "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
-    "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
-    "java.base/sun.util.calendar",
-]
+WORKLOADS = ("query_mix", "medallion_daily", "lakehouse_rw")
 
 
 def log(msg):
@@ -80,37 +72,44 @@ def sbt_env():
 
 
 def build(root):
-    """Compiles engine + benchmark; returns the runtime classpath."""
-    stamp = os.path.join(root, "perfbench", "target", "bench-classpath.txt")
-    if os.path.exists(stamp) and os.path.getmtime(stamp) >= sources_mtime(root):
-        with open(stamp) as f:
-            return f.read().strip()
-    log("building engine and benchmark with sbt ...")
-    t0 = time.time()
-    p = subprocess.run(
-        ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
-         "export Runtime/fullClasspath"],
-        cwd=os.path.join(root, "perfbench"), env=sbt_env(),
-        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
-        timeout=600, stdin=subprocess.DEVNULL)
-    lines = [x for x in p.stdout.splitlines() if x.strip()]
-    if p.returncode != 0 or not lines or "classes" not in lines[-1]:
-        log(p.stdout[-4000:])
-        raise SystemExit("build failed")
-    cp = lines[-1].strip()
-    os.makedirs(os.path.dirname(stamp), exist_ok=True)
-    with open(stamp, "w") as f:
-        f.write(cp)
-    log(f"built in {time.time() - t0:.0f} s")
-    return cp
+    """Compiles engine + benchmark; returns the runtime classpath and the
+    engine's JVM options, as perfbench/build.sbt's benchLaunch writes them."""
+    launch = os.path.join(root, "perfbench", "target", "bench-launch.txt")
+    if not (os.path.exists(launch) and os.path.getmtime(launch) >= sources_mtime(root)):
+        log("building engine and benchmark with sbt ...")
+        if os.path.exists(cds_archive(root)):
+            os.remove(cds_archive(root))
+        t0 = time.time()
+        p = subprocess.run(
+            ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile", "benchLaunch"],
+            cwd=os.path.join(root, "perfbench"), env=sbt_env(),
+            stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
+            timeout=600, stdin=subprocess.DEVNULL)
+        if p.returncode != 0 or not os.path.exists(launch):
+            log(p.stdout[-4000:])
+            raise SystemExit("build failed")
+        log(f"built in {time.time() - t0:.0f} s")
+    with open(launch) as f:
+        cp, *opts = f.read().splitlines()
+    return cp, opts
 
 
-def run_jvm(root, cp, args, run_dir):
+def cds_archive(root):
+    return os.path.join(root, "perfbench", "target", "bench-cds.jsa")
+
+
+def run_jvm(root, launch, args, run_dir):
+    cp, opts = launch
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    cmd = (["java", "-Xms2g", "-Xmx2g", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}", "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC", f"-Dspark.local.dir={tmp}"]
-           + [x for o in OPENS for x in ("--add-opens", f"{o}=ALL-UNNAMED")]
+    # Class-data sharing: the first run after a build archives the classes
+    # it loaded, and later runs map them. That takes about 2.5 s off JVM and
+    # Spark start, which every run pays inside a fixed time budget.
+    jsa = cds_archive(root)
+    cds = (f"-XX:SharedArchiveFile={jsa}" if os.path.exists(jsa)
+           else f"-XX:ArchiveClassesAtExit={jsa}")
+    cmd = (["java", "-Xms2g", "-Xmx2g", "-XX:-UsePerfData", cds, f"-Djava.io.tmpdir={tmp}",
+            f"-Dspark.local.dir={tmp}"] + opts
            + ["-cp", cp, "graft.perfbench.Main"] + args)
     env = dict(os.environ, SPARK_LOCAL_DIRS=tmp)
     with open(os.path.join(run_dir, "jvm.log"), "w") as out:
@@ -136,7 +135,6 @@ def main():
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
     ap.add_argument("--tiny", action="store_true", help="self-test sizes")
     ap.add_argument("--inject", default="", help="self-test: plant a wrong expectation")
-    ap.add_argument("--keep", action="store_true", help="keep the run directory")
     a = ap.parse_args()
 
     root = os.getcwd()
@@ -149,7 +147,7 @@ def main():
     if a.workload not in WORKLOADS:
         raise SystemExit(f"unknown workload {a.workload}; one of {WORKLOADS}")
 
-    cp = build(root)
+    launch = build(root)
     base = os.path.join(root, ".perfbench")
     run_dir = os.path.join(base, f"run-{a.workload}-{a.seed}-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
@@ -166,7 +164,7 @@ def main():
             args.append("--tiny")
         if a.inject:
             args += ["--inject", a.inject]
-        rc = run_jvm(root, cp, args, run_dir)
+        rc = run_jvm(root, launch, args, run_dir)
         if rc != 0 or not os.path.exists(out):
             with open(os.path.join(run_dir, "jvm.log")) as f:
                 log(f.read()[-4000:])
@@ -181,8 +179,7 @@ def main():
             with open(os.path.join(traces, f"{a.workload}-{a.seed}.record.json"), "w") as f:
                 json.dump(rec, f)
     finally:
-        if not a.keep:
-            shutil.rmtree(run_dir, ignore_errors=True)
+        shutil.rmtree(run_dir, ignore_errors=True)
 
     got = rec["metrics"]
     print(f"workload {a.workload} seed {a.seed} trace {a.trace}: "
@@ -195,12 +192,11 @@ def main():
             print(f"  self time {name:38s} {v['self_ms']:>16.6g} ms/op ({n} traced ops)")
     for k, v in rec.get("failed_ops", {}).items():
         print(f"  failed op {k}: {v}x ({rec.get('errors', {}).get(k, '')[:120]})")
-    wanted = bench["per_layer"] if a.trace else bench["end_to_end"]
-    metrics = {}
-    for m in wanted:
-        # a layer the workload never enters reports zero work
-        v = got.get(m["name"], {"value": 0.0})["value"]
-        metrics[m["name"]] = {"value": v, "unit": m["unit"]}
+    wanted = bench["per_layer" if a.trace else "end_to_end"]
+    missing = [m["name"] for m in wanted if got.get(m["name"], {}).get("unit") != m["unit"]]
+    if missing:
+        raise SystemExit(f"the benchmark JVM did not report {missing} with their units")
+    metrics = {m["name"]: got[m["name"]] for m in wanted}
     print(json.dumps({"correct": rec["correct"], "attempted": rec["attempted"],
                       "failed": rec["failed"], "metrics": metrics}))
 

@@ -49,7 +49,16 @@ def check_result(workload, res, wanted):
         assert isinstance(got["value"], (int, float))
 
 
-def digests(cp, seed):
+def check_printed(workload, human, wanted):
+    """Each metric is on a report line of its own, with the unit the
+    benchmark JVM gave it."""
+    for m in wanted:
+        assert any(line.split()[:1] == [m["name"]] and line.split()[-1] == m["unit"]
+                   for line in human), f"{workload}: {m['name']} not printed with unit"
+
+
+def digests(launch, seed):
+    cp, _ = launch
     out = subprocess.run(["java", "-cp", cp, "graft.perfbench.Main", "--digest",
                           "--seed", str(seed)], stdout=subprocess.PIPE, text=True,
                          check=True, timeout=120).stdout
@@ -69,9 +78,9 @@ def table_digest(seed):
 def main():
     spec = run.spec(os.getcwd())
     os.makedirs(".perfbench", exist_ok=True)
-    cp = run.build(os.getcwd())
-    assert digests(cp, 7) == digests(cp, 7), "same seed, different op sequences"
-    a, b = digests(cp, 7), digests(cp, 8)
+    launch = run.build(os.getcwd())
+    assert digests(launch, 7) == digests(launch, 7), "same seed, different op sequences"
+    a, b = digests(launch, 7), digests(launch, 8)
     assert all(a[w] != b[w] for w in a), "different seeds, same op sequence"
     assert table_digest(7) == table_digest(7), "same seed, different tables"
     assert table_digest(7) != table_digest(8), "different seeds, same tables"
@@ -79,13 +88,12 @@ def main():
     for w in run.WORKLOADS:
         human, res = bench(w, 3, 0)
         check_result(w, res, spec["end_to_end"])
-        for m in spec["end_to_end"]:
-            assert any(line.split()[:1] == [m["name"]] and line.split()[-1] == m["unit"]
-                       for line in human), f"{w}: {m['name']} not printed with unit"
+        check_printed(w, human, spec["end_to_end"])
         assert res["correct"], f"{w}: clean run reported an incorrect output"
         print(f"{w}: clean run ok ({res['attempted']} ops, {res['failed']} failed)")
         human, bad = bench(w, 3, 1, INJECT[w])
         check_result(w, bad, spec["per_layer"])
+        check_printed(w, human, spec["per_layer"])
         assert not bad["correct"] and bad["failed"] > 0, \
             f"{w}: planted wrong expectation not caught: {bad}"
         print(f"{w}: planted {INJECT[w]} error caught ({bad['failed']} failed ops)")

@@ -134,6 +134,7 @@ final class Lakehouse(r: Runner, work: File, dataDir: String, seed: Long,
 
   private def liveFiles: Int = files.size
 
+  /** Mean stored bytes per live row (traced ops only, like [[measured]]). */
   private def avgRowBytes: Double =
     files.values.sum.toDouble / math.max(1, model.size)
 
@@ -181,7 +182,7 @@ final class Lakehouse(r: Runner, work: File, dataDir: String, seed: Long,
         java.util.Arrays.asList(rows.map(x =>
           Row(x.k, x.cust, x.status, x.price, x.prio, x.v)): _*), schema)
       src.createOrReplaceTempView("lh_src")
-      val avg = avgRowBytes
+      val avg = if (r.tracer.on) avgRowBytes else 0.0
       val (_, bytes) = measured(r.tracer.on)(r.tracer.span("dsv2.exec")(sql(
         s"MERGE INTO $table t USING lh_src s ON t.k = s.k " +
           "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *").collect()))
@@ -190,7 +191,7 @@ final class Lakehouse(r: Runner, work: File, dataDir: String, seed: Long,
       if (r.tracer.on) { writeBytes += bytes.toDouble; userBytes += rows.size * avg }
       true
     case Delete(keys) =>
-      val avg = avgRowBytes
+      val avg = if (r.tracer.on) avgRowBytes else 0.0
       val (_, bytes) = measured(r.tracer.on)(r.tracer.span("dsv2.exec")(sql(
         s"DELETE FROM $table WHERE k IN (${keys.mkString(",")})").collect()))
       val n = keys.count(model.contains)

@@ -14,7 +14,6 @@ import scala.collection.mutable
   *      --seconds S --trace 0|1 --data DIR --work DIR --out FILE
   *      [--tiny] [--inject hash|model|truth]
   * Main --digest --seed N     (op-sequence digests, no Spark)
-  * Main --list N              (the query_mix set of size N, no Spark)
   * }}}
   *
   * `--tiny` shrinks every workload for the benchmark's self-test, and
@@ -28,10 +27,9 @@ object Main {
       .toMap
     val flags = argv.filter(_.startsWith("--")).map(_.drop(2)).toSet
     if (flags("digest")) { println(digest(a("seed").toLong)); return }
-    if (a.contains("list")) { QueryMix.pick(a("list").toInt).foreach(println); return }
     val workload = a("workload")
     val seed = a("seed").toLong
-    val seconds = a("seconds").toDouble
+    val units = math.max(1, math.round(a("seconds").toDouble / UnitSeconds(workload)).toInt)
     val traced = a.getOrElse("trace", "0") == "1"
     val tiny = flags("tiny")
     val inject = a.getOrElse("inject", "")
@@ -50,11 +48,11 @@ object Main {
 
     workload match {
       case "query_mix" =>
-        val names = QueryMix.pick(if (tiny) 8 else 13)
+        val names = QueryMix.pick(if (tiny) 8 else 10)
         val s = QueryMix.setup(spark, a("data"), new File(work, "dumps").getPath, names)
         checkSec = s.oracleSec
         val t0 = System.nanoTime()
-        QueryMix.loop(r, a("data"), s, seed, seconds, inject == "hash")
+        QueryMix.loop(r, a("data"), s, seed, units, inject == "hash")
         // a validated query whose timed answer differs is a wrong answer;
         // a query that failed validation is a failed op, known at setup
         wrongAnswers = r.ops.count(o => !o.ok && s.expected.contains(o.kind))
@@ -69,20 +67,22 @@ object Main {
         closer = () => md.close()
         if (inject == "truth") md.truth.empVersions.getOrElseUpdate("E99999", 1)
         md.day() // day 0: the bootstrap full load is set-up
+        md.check()
         checkSec = md.checkSec
         val setupFailed = r.ops.count(!_.ok)
         resetCounters(r, md)
-        val deadline = System.nanoTime() + (seconds * 1e9).toLong
         val t0 = System.nanoTime()
         // traced runs alternate traced and untraced days (at least one of
         // each), so every op kind has a baseline for the tracing overhead
         var traceDay = new java.util.Random(seed).nextBoolean()
-        while (System.nanoTime() < deadline || (traced && md.days < 2)) {
+        while (md.days < units || (traced && md.days < 2)) {
           md.day(if (traced) Some(traceDay) else None)
           traceDay = !traceDay
         }
+        val wall = (System.nanoTime() - t0) / 1e9
+        md.check()
         wrongAnswers = setupFailed + r.ops.count(!_.ok)
-        shared(r, metrics, (System.nanoTime() - t0) / 1e9)
+        shared(r, metrics, wall)
         m("batch_p50_s", Stats.median(md.dayMs.toSeq) / 1000, "s")
         m("rows_per_s", md.landed / (r.ops.map(_.ms).sum / 1000), "1/s")
         m("space_amp", md.spaceAmp, "ratio")
@@ -99,11 +99,10 @@ object Main {
         val setupFailed = r.ops.count(!_.ok)
         r.reset()
         lh.rowsWritten.clear()
-        val deadline = System.nanoTime() + (seconds * 1e9).toLong
         val t0 = System.nanoTime()
         var fullFailed = 0
         // whole cycles, so every run has the same op mix
-        while (System.nanoTime() < deadline || r.ops.size % lh.ops.CycleLen != 0) {
+        while (r.ops.size < units * lh.ops.CycleLen) {
           lh.step()
           if (r.ops.size % 50 == 0 && !lh.checkAll()) fullFailed += 1
         }
@@ -125,7 +124,10 @@ object Main {
     metrics("setup_s") = (setup, "s")
     m("setup.session_s", (sessionUs - jvmStartUs) / 1e6, "s")
     m("peak_rss_mb", Stats.peakRssMb, "MB")
-    if (traced) m("trace.overhead_frac", r.traceOverhead, "frac")
+    if (traced) {
+      m("trace.overhead_frac", r.traceOverhead, "frac")
+      completeLayers(workload, metrics)
+    }
     closer()
 
     val attempted = r.ops.size
@@ -167,7 +169,59 @@ object Main {
     out("wall_s") = (wallSec, "s")
   }
 
+  /** How long one unit of each workload's work takes on the 4-core
+    * machine the benchmark was written on: a query_mix pass, a
+    * medallion_daily day, a lakehouse_rw cycle. `--seconds` sets how many
+    * units a run times, so every run does the same work. A count set by
+    * a clock moved with the host's load, and the op percentiles moved
+    * with the count. */
+  private val UnitSeconds =
+    Map("query_mix" -> 7.0, "medallion_daily" -> 11.0, "lakehouse_rw" -> 4.5)
+
   // ------------------------------------------------------------ layers
+
+  /** Every per-layer metric, with its unit, by layer. */
+  private val Layers: Seq[(String, Seq[(String, String)])] = Seq(
+    "registry" -> Seq("registry.build_ms" -> "ms"),
+    "plans" -> Seq("plans.plan_ms" -> "ms", "plans.exchanges" -> "count",
+      "plans.scans" -> "count", "plans.smj" -> "count", "plans.bhj" -> "count",
+      "plans.codegen_fallbacks" -> "count"),
+    "spark" -> (new GroupCounters().fields.map { case (k, _) =>
+      s"spark.$k" -> (if (k.endsWith("_ms")) "ms" else if (k.endsWith("_bytes")) "B" else "count")
+    } :+ ("spark.core_busy_frac" -> "frac")),
+    "sources" -> Seq("sources.ingest_ms" -> "ms", "sources.http_requests" -> "count",
+      "sources.records_fetched" -> "count", "sources.records_landed" -> "count",
+      "sources.useful_frac" -> "frac"),
+    "warehouse" -> Seq("warehouse.bronze_ms" -> "ms", "warehouse.silver_ms" -> "ms",
+      "warehouse.gold_ms" -> "ms", "warehouse.files_written" -> "count",
+      "warehouse.bytes_written" -> "B"),
+    "operators" -> Seq("operators.merge_partitions_rewritten" -> "count",
+      "operators.merge_rows_rewritten_per_changed_row" -> "ratio"),
+    "dsv2" -> (Seq("upsert", "delete", "point_read", "scan", "compact", "changes")
+      .map(k => s"dsv2.${k}_ms" -> "ms") ++ Seq("dsv2.point_bytes_read" -> "B",
+      "dsv2.prune_frac" -> "frac", "dsv2.live_files" -> "count",
+      "dsv2.sidecar_files" -> "count", "dsv2.write_amp" -> "ratio",
+      "dsv2.compact_bytes_rewritten" -> "B")),
+    "trace" -> Seq("trace.overhead_frac" -> "frac"))
+
+  /** The layers each workload enters, besides spark and trace. */
+  private val Enters = Map(
+    "query_mix" -> Set("registry", "plans"),
+    "medallion_daily" -> Set("sources", "warehouse", "operators"),
+    "lakehouse_rw" -> Set("dsv2"))
+
+  /** Reports the layers the workload never enters as zero work, and
+    * fails the run if a metric of a layer it enters was not measured or
+    * carries another unit. */
+  private def completeLayers(workload: String,
+                             out: mutable.LinkedHashMap[String, (Double, String)]): Unit = {
+    val entered = Enters(workload) ++ Set("spark", "trace")
+    for ((layer, ms) <- Layers; (name, unit) <- ms) {
+      if (!entered(layer)) out(name) = (0.0, unit)
+      else require(out.get(name).exists(_._2 == unit),
+        s"$workload: per-layer metric $name ($unit) not measured: ${out.get(name)}")
+    }
+  }
 
   /** spark.* per traced op, and executor busy share of traced op time. */
   private def sparkLayer(r: Runner, m: (String, Double, String) => Unit): Unit = {

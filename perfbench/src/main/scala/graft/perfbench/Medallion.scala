@@ -11,7 +11,7 @@ import scala.collection.mutable.ArrayBuffer
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.functions.{col, count, lit, sum, to_date, when}
+import org.apache.spark.sql.functions.{col, count, lit, sum, when}
 
 import graft.ingest.IngestionState
 import graft.sources.{HttpLarkClient, LarkSource}
@@ -226,10 +226,14 @@ final class LarkFake(truth: LarkTruth) {
   }
 }
 
+/** A medallion day the benchmark has run but not yet checked: its
+  * partition, the op id of each call, and the records the source added. */
+final case class DayRec(part: String, opOf: Map[String, Int], added: Map[String, Int])
+
 /** medallion_daily: the reference pipeline over successive seeded days.
   * A day is: ingestIncremental per table, then runBronze, runSilver and
-  * runGold; each call is one op. After each day the benchmark checks the
-  * lake against the source truth (outside the timed ops). */
+  * runGold; each call is one op. The benchmark checks the lake against
+  * the source truth outside the timed ops (see [[Medallion.check]]). */
 final class Medallion(r: Runner, work: File, seed: Long, tiny: Boolean) {
   private val spark = r.spark
   val truth =
@@ -272,7 +276,10 @@ final class Medallion(r: Runner, work: File, seed: Long, tiny: Boolean) {
     try rd.getRecordCount finally rd.close()
   }
 
-  /** One day. In a traced run `traced` says whether its ops are traced. */
+  private val unchecked = ArrayBuffer.empty[DayRec]
+
+  /** One day. In a traced run `traced` says whether its ops are traced.
+    * Its output is checked by [[check]]. */
   def day(traced: Option[Boolean] = None): Unit = {
     truth.nextDay()
     val date = truth.date
@@ -311,36 +318,45 @@ final class Medallion(r: Runner, work: File, seed: Long, tiny: Boolean) {
     mergePartitions += rewritten.map(p => new File(p).getParent).toSet.size
     mergeRowsRewritten += rewritten.map(parquetRows).sum
     changedRows += truth.changedKeys
-    val c0 = System.nanoTime()
-    check(part, first)
-    checkSec += (System.nanoTime() - c0) / 1e9
+    unchecked += DayRec(part, r.ops.drop(first).map(o => o.kind -> o.id).toMap,
+      truth.newToday.toMap)
   }
 
-  private def countWhere(layer: String, table: String, part: String): Long =
-    Harness.safely(pipe.table(layer, table)
-      .filter(col("partition_value") === to_date(lit(part))).count()).getOrElse(-1L)
+  /** Rows per partition date of a lake table (-1 for every date when the
+    * table cannot be read). */
+  private def perPartition(layer: String, table: String): String => Long = {
+    val counts = Harness.safely(pipe.table(layer, table).groupBy(col("partition_value"))
+      .count().collect().map(row => row.get(0).toString -> row.getLong(1)).toMap)
+    part => counts.map(_.getOrElse(part, 0L)).getOrElse(-1L)
+  }
 
-  /** Checks the day against the source truth and fails the op whose
-    * output is wrong. */
-  private def check(part: String, first: Int): Unit = {
-    val opOf = r.ops.drop(first).map(o => o.kind -> o.id).toMap
-    def expect(kind: String, got: Long, want: Long, what: String): Unit =
-      if (got != want) r.fail(opOf(kind), s"$what: got $got, want $want")
-    order.foreach { t =>
-      val n = Harness.safely(pipe.readLanding(t, part).map(_.count()).getOrElse(0L))
-        .getOrElse(-1L)
-      landed += math.max(n, 0L)
-      expect(s"ingest.$t", n, truth.newToday(t), s"landed $t")
-      expect("bronze", countWhere("bronze", s"lark_$t", part), truth.newToday(t), s"bronze $t")
+  /** Checks the days run since the last check against the source truth
+    * and fails the op whose output is wrong: each day's landing, bronze,
+    * fact and gold row counts, and the dims' SCD2 state after the last
+    * day. One scan per lake table covers all the days, so the checks
+    * cost little beside the days themselves. */
+  def check(): Unit = {
+    if (unchecked.isEmpty) return
+    val c0 = System.nanoTime()
+    val bronze = order.map(t => t -> perPartition("bronze", s"lark_$t")).toMap
+    val facts = Seq("fact_attendance" -> "attendance",
+      "fact_attendance_record" -> "attendance_record", "fact_payment" -> "payment")
+      .map { case (f, src) => (f, src, perPartition("silver", f)) }
+    val cube = perPartition("gold", "cube_attendance_report")
+    for (d <- unchecked) {
+      def expect(kind: String, got: Long, want: Long, what: String): Unit =
+        if (got != want) r.fail(d.opOf(kind), s"$what on ${d.part}: got $got, want $want")
+      order.foreach { t =>
+        val n = Harness.safely(pipe.readLanding(t, d.part).map(_.count()).getOrElse(0L))
+          .getOrElse(-1L)
+        landed += math.max(n, 0L)
+        expect(s"ingest.$t", n, d.added(t), s"landed $t")
+        expect("bronze", bronze(t)(d.part), d.added(t), s"bronze $t")
+      }
+      facts.foreach { case (f, src, got) => expect("silver", got(d.part), d.added(src), f) }
+      expect("gold", cube(d.part), d.added("attendance"), "cube_attendance_report")
     }
-    val nAtt = truth.newToday("attendance")
-    expect("silver", countWhere("silver", "fact_attendance", part), nAtt, "fact_attendance")
-    expect("silver", countWhere("silver", "fact_attendance_record", part),
-      truth.newToday("attendance_record"), "fact_attendance_record")
-    expect("silver", countWhere("silver", "fact_payment", part),
-      truth.newToday("payment"), "fact_payment")
-    expect("gold", countWhere("gold", "cube_attendance_report", part), nAtt,
-      "cube_attendance_report")
+    val lastSilver = unchecked.last.opOf("silver")
     Seq(("dim_employee", "user_id", truth.empVersions),
         ("dim_vendor", "vendor_id", truth.vendorVersions)).foreach { case (t, key, want) =>
       val got = Harness.safely(pipe.table("silver", t).groupBy(key)
@@ -349,8 +365,10 @@ final class Medallion(r: Runner, work: File, seed: Long, tiny: Boolean) {
         .getOrElse(Map.empty)
       val ok = got.size == want.size && want.forall { case (k, v) =>
         got.get(k).contains((v.toLong, 1L)) }
-      if (!ok) r.fail(opOf("silver"), s"$t SCD2 versions/current rows differ from source")
+      if (!ok) r.fail(lastSilver, s"$t SCD2 versions/current rows differ from source")
     }
+    unchecked.clear()
+    checkSec += (System.nanoTime() - c0) / 1e9
   }
 
   /** Lake bytes over landing CSV bytes. */

@@ -112,15 +112,13 @@ object QueryMix {
     Setup(names, expected, ok, oracleSec, warmSec)
   }
 
-  /** Closed loop of whole passes over the set, each in seeded order, so
-    * every query runs equally often. Passes start until `seconds` have
-    * passed. */
-  def loop(r: Runner, dataDir: String, s: Setup, seed: Long, seconds: Double,
+  /** Closed loop of `passes` whole passes over the set, each in seeded
+    * order, so every query runs equally often. */
+  def loop(r: Runner, dataDir: String, s: Setup, seed: Long, passes: Int,
            corruptHash: Boolean): Unit = {
     val spark = r.spark
     val rnd = new scala.util.Random(seed)
-    val deadline = System.nanoTime() + (seconds * 1e9).toLong
-    while (System.nanoTime() < deadline) {
+    for (_ <- 1 to passes) {
       // traced runs run each query twice in a row, traced and untraced in
       // seeded order, so each query's tracing overhead is measured
       for (name <- rnd.shuffle(s.names);
