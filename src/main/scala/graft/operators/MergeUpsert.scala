@@ -97,7 +97,15 @@ object MergeUpsert {
     * rename itself can expose a partial partition to readers until the
     * next recovery; on object stores front this with an atomic-commit
     * layer — [[graft.warehouse.VersionedTable]] is that layer here
-    * (pointer-file commit, no data renames). */
+    * (pointer-file commit, no data renames).
+    *
+    * Evaluate-once contract: `source` is evaluated exactly once per
+    * call. When the table exists, it is materialized with
+    * `localCheckpoint` after torn-merge recovery and before the target
+    * is read, and both the touched-partition probe and the staging write
+    * read that copy; when the table is absent, the create write is its
+    * only reader. A source that reads this table (an SCD2 delta over the
+    * current dim) therefore sees the pre-merge state. */
   def intoPartitionedPath(spark: SparkSession, path: String, source: DataFrame,
                           pks: Seq[String],
                           partitionCol: String = "partition_value"): Unit =
@@ -154,8 +162,14 @@ object MergeUpsert {
       if (reinsertSource) source.write.partitionBy(partitionCol).parquet(path)
       return
     }
+    // evaluate the source ONCE, before the target is read: the touched-
+    // partition probe and the staging write below both read this copy
+    // (a lazy source would be planned and run by each). The copy lives
+    // in executor block storage, never on the driver.
+    val src = (if (reinsertSource) source else source.select(pks.map(col): _*))
+      .localCheckpoint()
     val t = spark.read.parquet(path)
-    val srcKeys = source.select(pks.map(col): _*)
+    val srcKeys = src.select(pks.map(col): _*)
     // touched = partitions holding rows the source replaces (or, for a
     // deletion, rows being removed) PLUS — merges only — partitions
     // the source writes into (an insert landing in an existing
@@ -163,7 +177,7 @@ object MergeUpsert {
     // partition-count-sized distinct either way
     val matchedParts = t.join(srcKeys, pks, "left_semi").select(col(partitionCol))
     val touchedAll = (if (reinsertSource)
-        matchedParts unionByName source.select(col(partitionCol))
+        matchedParts unionByName src.select(col(partitionCol))
       else matchedParts)
       .distinct().collect().map(_.get(0))
     // a deletion whose keys match nothing touches nothing: skip the
@@ -190,7 +204,7 @@ object MergeUpsert {
       else col(partitionCol).isin(touchedRaw.toSeq: _*)
     val keep = t.filter(touchedPred).join(srcKeys, pks, "left_anti")
     val out =
-      if (reinsertSource) keep.unionByName(source.select(t.columns.map(col): _*))
+      if (reinsertSource) keep.unionByName(src.select(t.columns.map(col): _*))
       else keep
     // stage fully (materializes out BEFORE any target mutation)...
     val tmp = stagingDir(path)

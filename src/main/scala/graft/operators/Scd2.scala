@@ -19,7 +19,8 @@ import graft.functions.LarkFunctions.surrogateKey
   * Two implementations:
   *   - [[delta]]: incremental — one batch vs. the current dim slice.
   *     This is the reference's operational shape (5-minute micro-batch).
-  *     One broadcast-or-shuffle left join feeds all three branches.
+  *     One left join feeds all three branches and one explode emits
+  *     their rows.
   *   - [[fromHistory]]: full rebuild from an ordered change history in
   *     ONE window pass — the 100 TB shape for backfills: a single
   *     shuffle on the natural key instead of N sequential joins, no
@@ -38,6 +39,12 @@ object Scd2 {
     * `batch` must carry the natural key, the change timestamp `tsCol`,
     * a `surKey` column (surrogate), and the attribute columns;
     * `dimCurrent` carries the same plus valid_from/valid_to/is_current.
+    *
+    * Evaluate-once contract: the plan reads `batch` and `dimCurrent`
+    * once each — one aggregate collapses the batch to its latest row per
+    * key, one left join meets the current dim rows, one explode emits
+    * the versions. Nothing is shared between branches by re-planning a
+    * subtree, so the caller's frames are scanned once per action.
     */
   def delta(batch: DataFrame, dimCurrent: DataFrame, naturalKey: String,
             tsCol: String, surKey: String): DataFrame = {
@@ -68,39 +75,36 @@ object Scd2 {
                   struct((col(tsCol) +: tieBreak): _*)).as("__r"))
       .select(attrCols.map(c => col(s"__r.$c").as(c)): _*)
 
-    // One join, reused by all three branches (Catalyst caches the
-    // common subplan per-branch; at scale the dim side is the smaller
-    // current-slice and broadcasts).
-    val latest = dimCurrent.select(
-      col(naturalKey),
-      col(tsCol).as(s"${tsCol}_latest"))
-
-    // Branch 1 — net-new natural keys (reference: etl.py:310-317).
-    val netNew = batchLatest.join(latest, Seq(naturalKey), "left_anti")
-
-    // Branch 2 — new version of changed keys (reference: etl.py:320-329).
-    val changed = batchLatest.join(latest, Seq(naturalKey))
-      .filter(col(s"${tsCol}_latest") < col(tsCol))
-      .select(attrCols.map(col): _*)
-
-    val opened = netNew.unionByName(changed)
-      .withColumn("valid_from", col(tsCol))
-      .withColumn("valid_to", sentinelTs)
-      .withColumn("is_current", lit(true))
-
-    // Branch 3 — expire the old version (reference: etl.py:332-340):
-    // old row's attributes survive; change ts is OVERWRITTEN to the new
-    // version's ts; valid_from untouched; old surrogate key carried.
-    val newTs = batchLatest.select(col(naturalKey), col(tsCol).as(s"${tsCol}_new"))
-    val expired = dimCurrent.join(newTs, Seq(naturalKey))
-      .filter(col(tsCol) < col(s"${tsCol}_new"))
-      .withColumn(tsCol, col(s"${tsCol}_new"))
-      .withColumn("valid_to", col(s"${tsCol}_new"))
-      .withColumn("is_current", lit(false))
-      .drop(s"${tsCol}_new")
-      .select((attrCols ++ meta).map(col): _*)
-
-    opened.select((attrCols ++ meta).map(col): _*).unionByName(expired)
+    // One left join of the latest batch rows against the current dim
+    // rows feeds all three branches, and one explode emits each opened
+    // and/or expired version — the dim side is scanned and joined once.
+    // A batch row without a dim match (`__m` null) is net-new (branch
+    // 1, etl.py:310-317). A matched row whose dim version is older opens
+    // the new version (branch 2, etl.py:320-329) AND expires the old one
+    // (branch 3, etl.py:332-340): the old row's attributes survive, its
+    // change ts is OVERWRITTEN to the new version's ts, valid_from is
+    // untouched and the old surrogate key is carried. A key with two
+    // current dim rows joins twice and emits both branches twice, as the
+    // three-join form did. Null timestamps compare as null: neither
+    // branch 2 nor 3 fires.
+    def d(c: String) = s"__d_$c"
+    val dim = dimCurrent.select(
+      ((attrCols ++ meta).map(c => col(c).as(d(c))) :+ lit(true).as("__m")): _*)
+    val joined = batchLatest.join(dim, col(naturalKey) === col(d(naturalKey)), "left")
+    val newer = col(d(tsCol)) < col(tsCol)
+    val opened = struct((attrCols.map(col) ++ Seq(
+      col(tsCol).as("valid_from"), sentinelTs.as("valid_to"),
+      lit(true).as("is_current"))): _*)
+    val expired = struct((attrCols.map(c =>
+      (if (c == tsCol) col(tsCol) else col(d(c))).as(c)) ++ Seq(
+      col(d("valid_from")).as("valid_from"), col(tsCol).as("valid_to"),
+      lit(false).as("is_current"))): _*)
+    joined
+      .select(explode(array(
+        when(col("__m").isNull || newer, opened),
+        when(newer, expired))).as("__v"))
+      .filter(col("__v").isNotNull)
+      .select((attrCols ++ meta).map(c => col(s"__v.$c").as(c)): _*)
   }
 
   /** Apply a batch to a full dim snapshot: delta + keyed upsert. */

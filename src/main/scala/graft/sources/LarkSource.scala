@@ -128,11 +128,14 @@ object LarkSource {
       return Some(writeLandingCsv(df, landingDir, tableId, partition))
     val offset = state.offsetFor(tableId, runDate)
     val inc = df.filter(col(watermarkField).cast("long") > offset)
-    if (inc.isEmpty) None
+    // the batch is a driver-side LocalRelation: this collect runs Spark's
+    // own cast on the driver, with no job, where an aggregate would
+    // plan and run two
+    val marks = inc.select(col(watermarkField).cast("long")).collect().map(_.getLong(0))
+    if (marks.isEmpty) None
     else {
       val path = writeLandingCsv(inc, landingDir, tableId, partition)
-      val mx = inc.agg(max(col(watermarkField).cast("long"))).head().getLong(0)
-      state.advance(tableId, runDate, Some(mx))
+      state.advance(tableId, runDate, Some(marks.max))
       Some(path)
     }
   }

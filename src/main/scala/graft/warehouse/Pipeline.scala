@@ -51,10 +51,17 @@ final class Pipeline(spark: SparkSession, landingDir: String, lakeDir: String) {
       }
     }
 
+  /** The day slice of a published table, or None when the table has no
+    * partition for the day (read-or-skip, etl.py:147) — a directory
+    * check, not a Spark job. */
+  private def daySlice(layer: String, table: String,
+                       partition: String): Option[DataFrame] =
+    if (!writer.hasPartition(layer, table, partition)) None
+    else Some(writer.read(layer, table)
+      .filter(col("partition_value") === to_date(lit(partition))))
+
   private def bronzeSlice(table: String, partition: String): Option[DataFrame] =
-    writer.readIfExists("bronze", s"lark_$table")
-      .map(_.filter(col("partition_value") === to_date(lit(partition))))
-      .filter(!_.isEmpty)
+    daySlice("bronze", s"lark_$table", partition)
 
   private def currentDim(table: String): Option[DataFrame] =
     writer.readIfExists("silver", table).map(_.filter(col("is_current")))
@@ -100,14 +107,11 @@ final class Pipeline(spark: SparkSession, landingDir: String, lakeDir: String) {
 
   def runGold(partition: String): Unit =
     currentDim("dim_employee").foreach { dimEmp =>
-      writer.readIfExists("silver", "fact_attendance")
-        .map(_.filter(col("partition_value") === to_date(lit(partition))))
-        .filter(!_.isEmpty)
-        .foreach { fa =>
-          writer.overwritePartition(
-            Gold.cubeAttendanceReport(fa, dimEmp),
-            "gold", "cube_attendance_report", partition)
-        }
+      daySlice("silver", "fact_attendance", partition).foreach { fa =>
+        writer.overwritePartition(
+          Gold.cubeAttendanceReport(fa, dimEmp),
+          "gold", "cube_attendance_report", partition)
+      }
     }
 
   /** Full run for one partition date (bronze -> silver -> gold). */

@@ -1,6 +1,7 @@
 package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import graft.operators.MergeUpsert
 
@@ -63,6 +64,18 @@ final class WarehouseWriter(spark: SparkSession, lakeDir: String) {
     new org.apache.hadoop.fs.Path(path(layer, table))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(new org.apache.hadoop.fs.Path(path(layer, table)))
+
+  /** Whether `table` holds a `partition_value` directory for the day
+    * `partition` (an ISO date, as [[overwritePartition]] and
+    * [[mergeUpsert]] stamp it). The name is built with Spark's own
+    * partition-path escaping, so it matches what the partitioned write
+    * produced; a write creates the directory only for a non-empty slice,
+    * so this answers "does the day have rows" without a Spark job. */
+  def hasPartition(layer: String, table: String, partition: String): Boolean = {
+    val dir = new org.apache.hadoop.fs.Path(path(layer, table),
+      ExternalCatalogUtils.getPartitionPathString("partition_value", partition))
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)
+  }
 
   def read(layer: String, table: String): DataFrame =
     spark.read.parquet(path(layer, table))

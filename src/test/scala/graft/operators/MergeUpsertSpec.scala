@@ -295,4 +295,35 @@ class MergeUpsertSpec extends AnyFunSuite {
     assert(got === Seq((1, "a", "p1"), (2, "B", "p1"), (3, "c", "p2")))
     assert(files(dir, "partition_value=p2") === p2Before)
   }
+
+  // ------------------------------------------------- evaluate-once
+
+  /** `frame` with its `id` column passed through a UDF that counts every
+    * evaluation in `acc`. The UDF wraps the key, so no plan can prune it
+    * away; the repartition keeps the optimizer from folding it into a
+    * driver-side local relation. */
+  private def counted(frame: org.apache.spark.sql.DataFrame,
+                      acc: org.apache.spark.util.LongAccumulator) = {
+    val seen = udf { (id: Int) => acc.add(1); id }
+    frame.repartition(2).withColumn("id", seen(col("id")))
+  }
+
+  test("a partition-scoped merge evaluates its source exactly once") {
+    val dir = java.nio.file.Files.createTempDirectory("once1").toString + "/t"
+    seed(dir)
+    val acc = spark.sparkContext.longAccumulator("merge-source-rows")
+    MergeUpsert.intoPartitionedPath(spark, dir, counted(src, acc), Seq("id"))
+    assert(acc.value == 2, "each source row is evaluated once")
+    assert(readAll(dir) === merged)
+  }
+
+  test("a partition-scoped delete evaluates its keys exactly once") {
+    val dir = java.nio.file.Files.createTempDirectory("once2").toString + "/t"
+    seed(dir)
+    val acc = spark.sparkContext.longAccumulator("delete-key-rows")
+    MergeUpsert.deleteFromPartitionedPath(spark, dir,
+      counted(Seq(1, 3, 99).toDF("id"), acc), Seq("id"))
+    assert(acc.value == 3, "each key row is evaluated once")
+    assert(readAll(dir) === Seq((2, "b", "p2")))
+  }
 }

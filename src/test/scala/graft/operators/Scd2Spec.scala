@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
 import graft.TestSpark
 import graft.functions.LarkFunctions.surrogateKey
 
@@ -142,5 +144,103 @@ class Scd2Spec extends AnyFunSuite {
   test("current rows keep sentinel valid_to") {
     val cur = oneShot.filter(col("is_current"))
     assert(cur.filter(col("valid_to") =!= to_timestamp(lit(Scd2.Sentinel))).isEmpty)
+  }
+
+  // ------------------------------------------ one-join vs three-branch
+
+  /** Reference model: the three-branch form [[Scd2.delta]] had before
+    * it became one join. It collapses the batch to its latest row per
+    * key, then runs the reference's merge-compare-split as three joins
+    * against the current dim rows (etl.py:310-340): an anti join for
+    * net-new keys, an inner join for changed keys and an expire join.
+    * [[Scd2.delta]] must emit exactly these rows, duplicates included. */
+  private def threeBranchDelta(batch: DataFrame, dimCurrent: DataFrame,
+                               naturalKey: String, tsCol: String): DataFrame = {
+    val attrCols = batch.columns.toSeq
+    val meta = Seq("valid_from", "valid_to", "is_current")
+    val batchLatest = batch
+      .groupBy(col(naturalKey))
+      .agg(max_by(struct(attrCols.map(col): _*),
+                  struct((col(tsCol) +: attrCols.map(col)): _*)).as("__r"))
+      .select(attrCols.map(c => col(s"__r.$c").as(c)): _*)
+    val latest = dimCurrent.select(col(naturalKey), col(tsCol).as(s"${tsCol}_latest"))
+    val netNew = batchLatest.join(latest, Seq(naturalKey), "left_anti")
+    val changed = batchLatest.join(latest, Seq(naturalKey))
+      .filter(col(s"${tsCol}_latest") < col(tsCol))
+      .select(attrCols.map(col): _*)
+    val opened = netNew.unionByName(changed)
+      .withColumn("valid_from", col(tsCol))
+      .withColumn("valid_to", to_timestamp(lit(Scd2.Sentinel)))
+      .withColumn("is_current", lit(true))
+    val newTs = batchLatest.select(col(naturalKey), col(tsCol).as(s"${tsCol}_new"))
+    val expired = dimCurrent.join(newTs, Seq(naturalKey))
+      .filter(col(tsCol) < col(s"${tsCol}_new"))
+      .withColumn(tsCol, col(s"${tsCol}_new"))
+      .withColumn("valid_to", col(s"${tsCol}_new"))
+      .withColumn("is_current", lit(false))
+      .select((attrCols ++ meta).map(col): _*)
+    opened.select((attrCols ++ meta).map(col): _*).unionByName(expired)
+  }
+
+  /** (key, change ts offset, attr); None models a null. */
+  private type Version = (Option[String], Option[Int], String)
+
+  private val genVersion: Gen[Version] = for {
+    k <- Gen.frequency(12 -> Gen.oneOf("K0", "K1", "K2", "K3").map(Some(_)),
+                       1 -> Gen.const(None))
+    ts <- Gen.frequency(6 -> Gen.choose(0, 3).map(Some(_)), 1 -> Gen.const(None))
+    a <- Gen.oneOf("a", "b")
+  } yield (k, ts, a)
+
+  private val genCase: Gen[(List[Version], List[(Version, Int)])] = for {
+    batch <- Gen.choose(0, 7).flatMap(Gen.listOfN(_, genVersion))
+    dim <- Gen.choose(0, 6).flatMap(Gen.listOfN(_,
+      Gen.zip(genVersion, Gen.choose(-2, 0))))
+  } yield (batch, dim)
+
+  private def batchFrame(vs: Seq[Version]): DataFrame = vs
+    .toDF("user_id", "off", "attr")
+    .withColumn("datetime_updated", timestamp_seconds(lit(1700000000) + col("off")))
+    .withColumn("user_sur_id", concat_ws("@", col("user_id"), col("off").cast("string"), col("attr")))
+    .select("user_sur_id", "user_id", "datetime_updated", "attr")
+
+  /** Current dim rows: valid_from is `vfOff` before the row's change ts. */
+  private def dimFrame(vs: Seq[(Version, Int)]): DataFrame = vs
+    .map { case ((k, ts, a), vf) => (k, ts, a, vf) }
+    .toDF("user_id", "off", "attr", "vf")
+    .withColumn("datetime_updated", timestamp_seconds(lit(1700000000) + col("off")))
+    .withColumn("user_sur_id", concat_ws("@", lit("dim"), col("user_id"), col("off").cast("string")))
+    .withColumn("valid_from", timestamp_seconds(lit(1700000000) + col("off") + col("vf")))
+    .withColumn("valid_to", to_timestamp(lit(Scd2.Sentinel)))
+    .withColumn("is_current", lit(true))
+    .select("user_sur_id", "user_id", "datetime_updated", "attr",
+      "valid_from", "valid_to", "is_current")
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map((r: Row) => r.toSeq.mkString("|")).sorted
+
+  test("property: one-join delta == three-branch reference, quirks and duplicates included") {
+    val seen = scala.collection.mutable.Set.empty[String]
+    val prop = Prop.forAll(genCase) { case (bv, dv) =>
+      val batch = batchFrame(bv)
+      val dim = dimFrame(dv)
+      val got = Scd2.delta(batch, dim, "user_id", "datetime_updated", "user_sur_id")
+      val want = threeBranchDelta(batch, dim, "user_id", "datetime_updated")
+      val dimKeys = dv.flatMap(_._1._1)
+      val batchKeys = bv.flatMap(_._1)
+      if (batchKeys.exists(k => !dimKeys.contains(k))) seen += "net-new key"
+      if (batchKeys.groupBy(identity).exists(_._2.size > 1)) seen += "versions of one key"
+      if (bv.groupBy(v => (v._1, v._2)).exists(g => g._1._1.nonEmpty && g._2.size > 1))
+        seen += "equal timestamps"
+      if (bv.exists(_._2.isEmpty) || dv.exists(_._1._2.isEmpty)) seen += "null change ts"
+      if (dimKeys.groupBy(identity).exists { case (k, g) => g.size > 1 && batchKeys.contains(k) })
+        seen += "two current rows"
+      rows(got) == rows(want)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(40)
+      .withInitialSeed(20240601L), prop)
+    assert(res.passed, res.status.toString)
+    assert(seen === Set("net-new key", "versions of one key", "equal timestamps",
+      "null change ts", "two current rows"))
   }
 }

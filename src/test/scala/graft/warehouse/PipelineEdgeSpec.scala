@@ -6,8 +6,9 @@ import graft.TestSpark
 import graft.sources.LarkSource
 
 /** Edge paths of the medallion run: facts landing before any dim
-  * exists, and free-text fields with embedded newlines surviving the
-  * CSV round-trip.
+  * exists, free-text fields with embedded newlines surviving the CSV
+  * round-trip, days a published table has no partition for, and the
+  * Spark job count of an incremental silver day.
   */
 class PipelineEdgeSpec extends AnyFunSuite {
 
@@ -49,5 +50,58 @@ class PipelineEdgeSpec extends AnyFunSuite {
     val bronze = pipe.table("bronze", "lark_attendance_record")
     assert(bronze.select("check_location_name").head().getString(0) == note)
     assert(bronze.select("is_offsite").head().getBoolean(0))
+  }
+
+  /** The committed two-day Lark fixtures (see GoldenPipelineSpec). */
+  private val fixtures = new java.io.File("fixtures").getAbsolutePath
+
+  test("a day no table has a partition for is skipped at every stage") {
+    val lake = java.nio.file.Files.createTempDirectory("edge3").toString
+    val pipe = new Pipeline(spark, fixtures, lake)
+    pipe.run("2024-06-01")
+    def snapshot = Seq("silver" -> "dim_employee", "silver" -> "dim_vendor",
+        "silver" -> "fact_attendance", "silver" -> "fact_attendance_record",
+        "gold" -> "cube_attendance_report")
+      .map { case (l, t) => t -> pipe.table(l, t).drop("etl_inserted")
+        .collect().map(_.toString).sorted.toSeq }
+    val before = snapshot
+    // every table exists, none has a 2024-06-03 partition and nothing
+    // lands for that day
+    pipe.run("2024-06-03")
+    assert(snapshot === before)
+    for (t <- Seq("bronze/lark_employee", "silver/fact_attendance",
+                  "gold/cube_attendance_report"))
+      assert(!new java.io.File(s"$lake/$t/partition_value=2024-06-03").exists(), t)
+  }
+
+  test("an incremental silver day runs a fixed number of Spark jobs") {
+    // a fresh SQL conf: settings other suites leave on the shared
+    // session would change the plans, and with them the count
+    val session = spark.newSession()
+    val lake = java.nio.file.Files.createTempDirectory("edge4").toString
+    val pipe = new Pipeline(session, fixtures, lake)
+    pipe.run("2024-06-01")
+    pipe.runBronze("2024-06-02")
+    val sc = session.sparkContext
+    val group = s"silver-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    sc.setJobGroup(group, "runSilver 2024-06-02")
+    try pipe.runSilver("2024-06-02")
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerDrain(sc)
+      sc.removeSparkListener(counter)
+    }
+    // two SCD2 dim merges (each dim delta evaluated once) and one fact
+    // write; the attendance tables have no partition for the day. A
+    // second evaluation of a dim delta, or a Spark job to probe for an
+    // empty day slice, raises this count.
+    assert(jobs.get() === 34)
   }
 }
