@@ -6,9 +6,15 @@ r"""Attribute the Spark jobs of an event log to the engine lines that ran them.
 
 Reads an uncompressed Spark event log (a file, or the directory of a
 rolling log) and groups its jobs by their first `graft.` stack frame:
-the engine line whose action submitted the job. For each call site it prints the job count and the summed job wall time
-(submission to completion). Given two logs it prints both sides and the
-difference per call site. `--desc` keeps only jobs whose description
+the engine line whose action submitted the job. For each call site it
+prints the job count and the summed job wall time (submission to
+completion). For each job group it then prints the job count, the
+summed wall time and the busy wall time: the length of the union of
+the group's job intervals. Jobs that run at once count once in the
+busy time, so when a span overlaps its jobs the busy time drops below
+the sum while the job count stays. Given two logs it prints both sides
+and the difference per call site, then per job description (the groups
+of one span name, summed). `--desc` keeps only jobs whose description
 (`spark.job.description`) equals NAME; the benchmark names each traced
 span's jobs after the span, e.g. `warehouse.silver` or
 `sources.ingest.employee`. `--method` drops the line number from each
@@ -70,7 +76,8 @@ def log_lines(path):
 
 
 def read_jobs(path, desc=None, method=False):
-    """Returns [(site, wall_ms, group)] of every finished job in the log."""
+    """Returns [(site, start_ms, end_ms, group, description)] of every
+    finished job in the log."""
     sql_sites = {}
     started = {}
     jobs = []
@@ -92,34 +99,67 @@ def read_jobs(path, desc=None, method=False):
             if method:
                 site = re.sub(r":\d+\)$", ")", site)
             started[e["Job ID"]] = (site, e.get("Submission Time"),
-                                    props.get("spark.jobGroup.id"))
+                                    props.get("spark.jobGroup.id"),
+                                    props.get("spark.job.description") or "")
         elif kind == "SparkListenerJobEnd" and e["Job ID"] in started:
-            site, t0, group = started.pop(e["Job ID"])
-            wall = (e["Completion Time"] - t0) if t0 is not None else 0
-            jobs.append((site, wall, group))
+            site, t0, group, description = started.pop(e["Job ID"])
+            t1 = e["Completion Time"]
+            jobs.append((site, t1 if t0 is None else t0, t1, group, description))
     return jobs
 
 
+def busy_ms(jobs):
+    """Length of the union of the jobs' [start, end] intervals."""
+    total, end = 0, None
+    for _, t0, t1, _, _ in sorted(jobs, key=lambda j: j[1]):
+        if end is None or t0 > end:
+            total += t1 - t0
+            end = t1
+        elif t1 > end:
+            total += t1 - end
+            end = t1
+    return total
+
+
+def totals(jobs):
+    """[job count, summed wall ms, busy ms], the busy time taken per job
+    group (jobs outside any group form one group) and summed."""
+    groups = defaultdict(list)
+    for j in jobs:
+        groups[j[3]].append(j)
+    return [len(jobs), sum(t1 - t0 for _, t0, t1, _, _ in jobs),
+            sum(busy_ms(g) for g in groups.values())]
+
+
+def by_key(jobs, key):
+    out = defaultdict(list)
+    for j in jobs:
+        out[key(j)].append(j)
+    return {k: totals(v) for k, v in out.items()}
+
+
 def by_site(jobs):
-    out = defaultdict(lambda: [0, 0])
-    for site, wall, _ in jobs:
-        out[site][0] += 1
-        out[site][1] += wall
-    return out
+    return by_key(jobs, lambda j: j[0])
 
 
 def header(path, jobs):
-    groups = {g for _, _, g in jobs if g is not None}
+    groups = {j[3] for j in jobs if j[3] is not None}
     spans = f" in {len(groups)} job groups" if groups else ""
-    return f"{path}: {len(jobs)} jobs{spans}, {sum(w for _, w, _ in jobs)} ms"
+    n, ms, busy = totals(jobs)
+    return f"{path}: {n} jobs{spans}, {ms} ms summed, {busy} ms busy"
 
 
 def report(path, desc, method):
     jobs = read_jobs(path, desc, method)
     print(header(path, jobs))
     print(f"{'jobs':>5} {'wall_ms':>8}  call site")
-    for site, (n, ms) in sorted(by_site(jobs).items(), key=lambda kv: (-kv[1][0], kv[0])):
+    for site, (n, ms, _) in sorted(by_site(jobs).items(), key=lambda kv: (-kv[1][0], kv[0])):
         print(f"{n:5d} {ms:8d}  {site}")
+    print()
+    print(f"{'jobs':>5} {'wall_ms':>8} {'busy_ms':>8}  job group (description)")
+    groups = by_key(jobs, lambda j: (j[3] or "-", j[4]))
+    for (group, description), (n, ms, busy) in sorted(groups.items()):
+        print(f"{n:5d} {ms:8d} {busy:8d}  {group} ({description})")
 
 
 def diff(base_path, new_path, desc, method):
@@ -127,11 +167,19 @@ def diff(base_path, new_path, desc, method):
     print("base " + header(base_path, base))
     print("new  " + header(new_path, new))
     a, b = by_site(base), by_site(new)
-    rows = [(s, a.get(s, [0, 0]), b.get(s, [0, 0])) for s in set(a) | set(b)]
+    rows = [(s, a.get(s, [0, 0, 0]), b.get(s, [0, 0, 0])) for s in set(a) | set(b)]
     rows.sort(key=lambda r: (r[2][0] - r[1][0], r[0]))
     print(f"{'base':>5} {'new':>5} {'Δjobs':>6} {'base_ms':>8} {'new_ms':>8}  call site")
-    for site, (n0, ms0), (n1, ms1) in rows:
+    for site, (n0, ms0, _), (n1, ms1, _) in rows:
         print(f"{n0:5d} {n1:5d} {n1 - n0:+6d} {ms0:8d} {ms1:8d}  {site}")
+    # group ids differ between runs; the spans' descriptions line up
+    a, b = by_key(base, lambda j: j[4]), by_key(new, lambda j: j[4])
+    print()
+    print(f"{'base':>5} {'new':>5} {'base_ms':>8} {'new_ms':>8} "
+          f"{'base_busy':>9} {'new_busy':>9}  job description")
+    for d in sorted(set(a) | set(b)):
+        (n0, ms0, busy0), (n1, ms1, busy1) = a.get(d, [0, 0, 0]), b.get(d, [0, 0, 0])
+        print(f"{n0:5d} {n1:5d} {ms0:8d} {ms1:8d} {busy0:9d} {busy1:9d}  {d or '-'}")
 
 
 def main(argv=None):

@@ -14,6 +14,20 @@ import org.apache.spark.sql.types.StringType
   * recomputed dim frame would silently diverge — the write + fresh
   * read forces materialization).
   *
+  * Within a step, writes that read no table of the same step run at
+  * once: the five bronze tables; then the `dim_employee` and
+  * `dim_vendor` merges; then, after the dims-before-facts barrier
+  * above, the three fact tables. Gold is one write. The reference runs
+  * them one after another only because its worker has one thread; at
+  * this scale each write is a few small Spark jobs, so a serial step
+  * leaves most cores idle. Spark's FIFO scheduler gives a large write
+  * its slots first and fills only idle ones with its siblings' tasks.
+  *
+  * Failure policy: a failed write does not stop its siblings, which
+  * run to completion; then the step rethrows the first failure (in the
+  * step's write order) as it was thrown, with the others suppressed,
+  * and no later step runs.
+  *
   * Scale posture: every published table is partitioned on
   * `partition_value`; bronze inputs for the day are re-read with a
   * partition predicate (pruned scan); dims broadcast into fact joins.
@@ -42,14 +56,14 @@ final class Pipeline(spark: SparkSession, landingDir: String, lakeDir: String) {
   }
 
   def runBronze(partition: String): Unit =
-    BronzeSchemas.specsFor.foreach { case (table, specs) =>
-      readLanding(table, partition).foreach { raw =>
+    concurrently("bronze", BronzeSchemas.specsFor.toSeq.map { case (table, specs) =>
+      () => readLanding(table, partition).foreach { raw =>
         val norm = graft.operators.BronzeNormalize(raw, specs)
         // P4: employee rows with null natural key are dropped (etl.py:154)
         val cleaned = if (table == "employee") norm.na.drop(Seq("user_id")) else norm
         writer.overwritePartition(cleaned, "bronze", s"lark_$table", partition)
       }
-    }
+    })
 
   /** The day slice of a published table, or None when the table has no
     * partition for the day (read-or-skip, etl.py:147) — a directory
@@ -68,16 +82,17 @@ final class Pipeline(spark: SparkSession, landingDir: String, lakeDir: String) {
 
   def runSilver(partition: String): Unit = {
     // dims first (publish EARLY, etl.py:566)
-    bronzeSlice("employee", partition).foreach { emp =>
-      val delta = Silver.dimEmployeeDelta(emp, currentDim("dim_employee"))
-      writer.mergeUpsert(delta, "silver", "dim_employee", partition,
-        Seq("employee_sur_id"))
-    }
-    bronzeSlice("vendor", partition).foreach { ven =>
-      val delta = Silver.dimVendorDelta(ven, currentDim("dim_vendor"))
-      writer.mergeUpsert(delta, "silver", "dim_vendor", partition,
-        Seq("vendor_sur_id"))
-    }
+    concurrently("silver-dims", Seq(
+      () => bronzeSlice("employee", partition).foreach { emp =>
+        val delta = Silver.dimEmployeeDelta(emp, currentDim("dim_employee"))
+        writer.mergeUpsert(delta, "silver", "dim_employee", partition,
+          Seq("employee_sur_id"))
+      },
+      () => bronzeSlice("vendor", partition).foreach { ven =>
+        val delta = Silver.dimVendorDelta(ven, currentDim("dim_vendor"))
+        writer.mergeUpsert(delta, "silver", "dim_vendor", partition,
+          Seq("vendor_sur_id"))
+      }))
     // re-read POST-MERGE dim state before the fact joins (etl.py:568-578);
     // a dim that doesn't exist yet joins as a TYPED empty slice (the
     // schemaless emptyDataFrame would fail column resolution in the
@@ -88,21 +103,22 @@ final class Pipeline(spark: SparkSession, landingDir: String, lakeDir: String) {
       .getOrElse(Silver.emptyDimVendorSlice(spark))
     // facts sort within files by their common filter/join key so
     // parquet row-group stats prune scans at scale
-    bronzeSlice("attendance_record", partition).foreach { ar =>
-      writer.overwritePartition(
-        Silver.factAttendanceRecord(ar, dimEmp),
-        "silver", "fact_attendance_record", partition, Seq("user_id"))
-    }
-    bronzeSlice("attendance", partition).foreach { a =>
-      writer.overwritePartition(
-        Silver.factAttendance(a, dimEmp), "silver", "fact_attendance",
-        partition, Seq("user_id"))
-    }
-    bronzeSlice("payment", partition).foreach { p =>
-      writer.overwritePartition(
-        Silver.factPayment(p, dimVen, dimEmp),
-        "silver", "fact_payment", partition, Seq("payment_id"))
-    }
+    concurrently("silver-facts", Seq(
+      () => bronzeSlice("attendance_record", partition).foreach { ar =>
+        writer.overwritePartition(
+          Silver.factAttendanceRecord(ar, dimEmp),
+          "silver", "fact_attendance_record", partition, Seq("user_id"))
+      },
+      () => bronzeSlice("attendance", partition).foreach { a =>
+        writer.overwritePartition(
+          Silver.factAttendance(a, dimEmp), "silver", "fact_attendance",
+          partition, Seq("user_id"))
+      },
+      () => bronzeSlice("payment", partition).foreach { p =>
+        writer.overwritePartition(
+          Silver.factPayment(p, dimVen, dimEmp),
+          "silver", "fact_payment", partition, Seq("payment_id"))
+      }))
   }
 
   def runGold(partition: String): Unit =
@@ -113,6 +129,33 @@ final class Pipeline(spark: SparkSession, landingDir: String, lakeDir: String) {
           "gold", "cube_attendance_report", partition)
       }
     }
+
+  /** Runs the writes of one step at once and returns when every one
+    * has ended. Each call starts one thread per write (named
+    * `graft-pipeline-<step>-<i>`) and joins them all, so none outlives
+    * the call. Threads made by the caller inherit its Spark local
+    * properties, so each write's jobs run under the caller's job group
+    * and description; a long-lived pool would keep those of whichever
+    * call first created its threads. No write is interrupted: an
+    * interrupt of the caller is kept for after the joins. */
+  private def concurrently(step: String, writes: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](writes.size)
+    val threads = writes.indices.map { i =>
+      new Thread(() => try writes(i)() catch { case e: Throwable => failures(i) = e },
+        s"graft-pipeline-$step-$i")
+    }
+    threads.foreach(_.start())
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+      case _ =>
+    }
+  }
 
   /** Full run for one partition date (bronze -> silver -> gold). */
   def run(partition: String): Unit = {

@@ -2,6 +2,7 @@ package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -17,8 +18,10 @@ import graft.TestSpark
   *     overwrite quirk, etl.py:337), E005 is net-new, VENDOR-1 rolls a
   *     version, payments join post-merge dim state (etl.py:566-578);
   *   - re-running day 2 is a no-op (watermark-shaped idempotence).
+  *
+  * The lake is a temp dir, deleted when the suite ends.
   */
-class GoldenPipelineSpec extends AnyFunSuite {
+class GoldenPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = TestSpark.spark
 
@@ -26,6 +29,10 @@ class GoldenPipelineSpec extends AnyFunSuite {
   private lazy val lake =
     java.nio.file.Files.createTempDirectory("graft-golden-lake").toString
   private lazy val pipe = new Pipeline(spark, landing, lake)
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(lake))
+    finally super.afterAll()
 
   private def fmt(c: String): org.apache.spark.sql.Column =
     date_format(col(c), "yyyy-MM-dd HH:mm:ss")

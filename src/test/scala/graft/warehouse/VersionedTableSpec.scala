@@ -1,5 +1,6 @@
 package graft.warehouse
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
@@ -7,15 +8,25 @@ import java.nio.file.Files
 
 /** Pointer-commit versioned table: publish/read round-trip, snapshot
   * isolation for in-flight readers, time travel, CDC diff, crash
-  * (pointer-never-moved) recovery, and vacuum retention rules.
+  * (pointer-never-moved) recovery, and vacuum retention rules. Each
+  * table lives in a temp dir, deleted when the suite ends.
   */
-class VersionedTableSpec extends AnyFunSuite {
+class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmpRoot(): String =
-    Files.createTempDirectory("graft-vt").resolve("tbl").toString
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  private def tmpRoot(): String = {
+    val dir = Files.createTempDirectory("graft-vt")
+    dirs += dir.toFile
+    dir.resolve("tbl").toString
+  }
+
+  override def afterAll(): Unit =
+    try dirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    finally super.afterAll()
 
   test("publish assigns increasing versions; read resolves the latest") {
     val root = tmpRoot()
