@@ -44,7 +44,7 @@ object EagerAbBench {
     // key-clustered fact (the external-parquet analogue of
     // graft.write.order): map-side combine is what converts the
     // pre-aggregation into shuffle-volume savings
-    val tmp = java.nio.file.Files.createTempDirectory("graft-eagerab").toString
+    val tmp = graft.core.Fixtures.tempDir("graft-eagerab").toString
     spark.read.parquet(s"$sfDir/orders.parquet")
       .repartition(cpus.toInt, col("o_custkey"))
       .sortWithinPartitions("o_custkey")

@@ -21,7 +21,7 @@ object FmtBench {
     val c = spark.newSession()
     c.conf.set("spark.sql.catalog.fb", "graft.sources.dsv2.GraftCatalog")
     c.conf.set("spark.sql.catalog.fb.root",
-      java.nio.file.Files.createTempDirectory("graft-fmtbench").toString)
+      graft.core.Fixtures.tempDir("graft-fmtbench").toString)
     c.sql("CREATE NAMESPACE fb.m")
     for (fmt <- Seq("jsonl", "parquet"))
       c.sql(

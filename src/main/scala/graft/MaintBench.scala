@@ -26,7 +26,7 @@ object MaintBench {
     val c = spark.newSession()
     c.conf.set("spark.sql.catalog.mb", "graft.sources.dsv2.GraftCatalog")
     c.conf.set("spark.sql.catalog.mb.root",
-      java.nio.file.Files.createTempDirectory("graft-maintbench").toString)
+      graft.core.Fixtures.tempDir("graft-maintbench").toString)
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     def timed(name: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.functions.Exact._
 
 /** Analytical query surface over the warehouse star schema.
@@ -559,6 +559,32 @@ object Analytics {
     sqlText(topCustomersSql, Seq("orders", "customer"))(s, dir)
 
   // ---------------------------------------------------------------- q240
+  /** Shared at-scale child for q240/q241: eager aggregation on,
+    * broadcast disabled (both sides shuffle — the 100 TB posture the
+    * rows represent), star dim keys exactly verified. */
+  private def eagerAtScaleSession(s: SparkSession, dir: String): SparkSession =
+    Fixtures("eager-at-scale", dir) {
+      val c = s.newSession()
+      c.conf.set("spark.graft.eagerAgg.enabled", "true")
+      c.conf.set("spark.graft.eagerAgg.fingerprint.ttl.ms", "30000")
+      c.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      graft.operators.CatalogStats.verifyUnique(
+        c, s"$dir/orders.parquet", Seq("o_orderkey"))
+      graft.operators.CatalogStats.verifyUnique(
+        c, s"$dir/customer.parquet", Seq("c_custkey"))
+      c
+    }
+
+  val eagerLeftOuterSql: String =
+    """SELECT c_mktsegment,
+      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) AS total,
+      |  COUNT(*) AS n, MAX(o_orderkey) AS max_ok
+      |FROM orders LEFT JOIN
+      |  (SELECT c_custkey, c_mktsegment FROM customer
+      |   WHERE c_custkey % 3 <> 1) d
+      |  ON o_custkey = c_custkey
+      |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
+
   /** LEFT-OUTER EAGER AGGREGATION over external parquet — the
     * reference's J5 fact-enrichment join writ large: a verbatim
     * `orders LEFT JOIN customer` aggregate pre-shrinks the fact below
@@ -572,35 +598,6 @@ object Analytics {
     * broadcast disabled (the at-scale posture, as q237): at 100 TB the
     * enrichment dim shuffles and the pre-shrink pays in join-shuffle
     * volume. */
-  private val eagerAtScaleSessions =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
-  /** Shared at-scale child for q240/q241: eager aggregation on,
-    * broadcast disabled (both sides shuffle — the 100 TB posture the
-    * rows represent), star dim keys exactly verified. */
-  private def eagerAtScaleSession(s: SparkSession, dir: String): SparkSession =
-    eagerAtScaleSessions.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.graft.eagerAgg.enabled", "true")
-      c.conf.set("spark.graft.eagerAgg.fingerprint.ttl.ms", "30000")
-      c.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      graft.operators.CatalogStats.verifyUnique(
-        c, s"$dir/orders.parquet", Seq("o_orderkey"))
-      graft.operators.CatalogStats.verifyUnique(
-        c, s"$dir/customer.parquet", Seq("c_custkey"))
-      c
-    })
-
-  val eagerLeftOuterSql: String =
-    """SELECT c_mktsegment,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) AS total,
-      |  COUNT(*) AS n, MAX(o_orderkey) AS max_ok
-      |FROM orders LEFT JOIN
-      |  (SELECT c_custkey, c_mktsegment FROM customer
-      |   WHERE c_custkey % 3 <> 1) d
-      |  ON o_custkey = c_custkey
-      |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
-
   def eagerLeftOuterSqlText(s: SparkSession, dir: String): DataFrame = {
     val child = eagerAtScaleSession(s, dir)
     Seq("orders", "customer")
@@ -668,11 +665,8 @@ object Analytics {
     * unrewritten plan Expands directly over the fact-grain join).
     * The oracle pins exactness — decimal partial sums are associative,
     * so the two-level fold is bit-identical. */
-  private val eagerDistinctSessions =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def eagerDistinctSqlText(s: SparkSession, dir: String): DataFrame = {
-    val child = eagerDistinctSessions.computeIfAbsent(dir, _ => {
+    val child = Fixtures("eager-distinct", dir) {
       val c = s.newSession()
       c.conf.set("spark.graft.eagerAgg.enabled", "true")
       c.conf.set("spark.graft.eagerAgg.fingerprint.ttl.ms", "30000")
@@ -681,7 +675,7 @@ object Analytics {
       graft.operators.CatalogStats.verifyUnique(
         c, s"$dir/customer.parquet", Seq("c_custkey"))
       c
-    })
+    }
     Seq("lineitem", "orders", "customer")
       .foreach(n => t(child, dir, n).createOrReplaceTempView(n))
     val df = child.sql(segmentRevenueSql)

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.operators.{AsOfJoin, MergeUpsert, RangeJoin, Scd2, SkewJoin}
 import graft.functions.LarkFunctions
 import graft.functions.Exact.sumRevenue
@@ -302,13 +302,9 @@ object WarehouseQueries {
     * DuckDB's filtered scan of the ORIGINAL table. Layout + index
     * build once per (JVM, sf) and amortize over probes, mirroring how
     * OPTIMIZE amortizes over queries at 100 TB. */
-  private val prunedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def prunedShipdateProbe(s: SparkSession, dir: String): DataFrame = {
-    val layout = prunedLayouts.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-zorder")
-        .resolve("lineitem").toString
+    val layout = Fixtures("graft-zorder", dir) {
+      val p = Fixtures.tempDir("graft-zorder").resolve("lineitem").toString
       val li = Tables.load(s, dir, "lineitem")
         .withColumn("ship_days",
           datediff(to_date(col("l_shipdate")), lit("1970-01-01")))
@@ -316,7 +312,7 @@ object WarehouseQueries {
         Seq("ship_days", "l_extendedprice"), nFiles = 16)
       graft.operators.DataSkipping.writeIndex(s, p, Seq("ship_days"))
       p
-    })
+    }
     val lo = java.time.LocalDate.of(1995, 3, 1).toEpochDay
     val hi = java.time.LocalDate.of(1995, 3, 31).toEpochDay
     graft.operators.DataSkipping.readPruned(s, layout, "ship_days", lo, hi)
@@ -353,13 +349,9 @@ object WarehouseQueries {
     * pruning counts are pinned by `DataSkippingSpec`, the oracle pins
     * that pruning never costs rows. Probe keys derive from the data
     * (scalar max — one driver row by contract, q90's discipline). */
-  private val bloomLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def bloomPointLookup(s: SparkSession, dir: String): DataFrame = {
-    val layout = bloomLayouts.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-bloom")
-        .resolve("orders").toString
+    val layout = Fixtures("graft-bloom", dir) {
+      val p = Fixtures.tempDir("graft-bloom").resolve("orders").toString
       Tables.load(s, dir, "orders")
         .repartition(16, col("o_custkey"))
         .write.parquet(p)
@@ -367,7 +359,7 @@ object WarehouseQueries {
       graft.operators.DataSkipping.writeBloomIndex(s, p, "o_orderkey",
         expectedItems = 1L << 14, numBits = 1L << 18)
       p
-    })
+    }
     val hit = Tables.load(s, dir, "orders")
       .agg(max(col("o_orderkey"))).head().getLong(0)
     import graft.operators.DataSkipping.readPrunedByKey
@@ -455,17 +447,13 @@ object WarehouseQueries {
     * result must be bit-identical to DuckDB reading the ORIGINAL
     * parquet. Round-trips JSON escaping (newlines, quotes, unicode)
     * through a real connector, not just the built-in reader. */
-  private val jsonlExports =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def dsv2JsonlScan(s: SparkSession, dir: String): DataFrame = {
-    val path = jsonlExports.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-jsonl-export")
-        .resolve("documents").toString
+    val path = Fixtures("graft-jsonl-export", dir) {
+      val p = Fixtures.tempDir("graft-jsonl-export").resolve("documents").toString
       graft.sources.JsonlCorpus.write(Tables.load(s, dir, "documents"), p,
         partitionCol = None)
       p
-    })
+    }
     s.read.format("graft-jsonl").load(path)
       .filter(col("lang").isin("en", "de"))
       .groupBy(col("source"))
@@ -494,13 +482,10 @@ object WarehouseQueries {
     * (JVM, sf); the catalog NAME embeds the sf dir because catalog
     * instances are cached per session by name (a conf re-point after
     * first use would be ignored). */
-  private val evoRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def catalogEvolution(s: SparkSession, dir: String): DataFrame = {
     val cat = s"graft_evo_${math.abs(dir.hashCode).toString}"
-    val root = evoRoots.computeIfAbsent(dir, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-evo").toString
+    val root = Fixtures("graft-evo", dir) {
+      val r = Fixtures.tempDir("graft-evo").toString
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.dsv2.GraftCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.root", r)
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
@@ -515,7 +500,7 @@ object WarehouseQueries {
         .withColumn("chars_bucket", expr("n_chars div 100"))
         .writeTo(s"$cat.wh.docs").append()
       r
-    })
+    }
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.dsv2.GraftCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.root", root)
     s.sql(
@@ -544,13 +529,10 @@ object WarehouseQueries {
     * branches — matched-delete, matched-update, not-matched-insert —
     * and the oracle recomputes the merged state relationally from the
     * original parquet. Built once per (JVM, sf). */
-  private val mergeRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def sqlMerge(s: SparkSession, dir: String): DataFrame = {
     val cat = s"graft_mrg_${math.abs(dir.hashCode).toString}"
-    val root = mergeRoots.computeIfAbsent(dir, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-merge").toString
+    val root = Fixtures("graft-merge", dir) {
+      val r = Fixtures.tempDir("graft-merge").toString
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.dsv2.GraftCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.root", r)
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
@@ -579,7 +561,7 @@ object WarehouseQueries {
            |  SET o_totalprice = t.o_totalprice - 1
            |""".stripMargin)
       r
-    })
+    }
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.dsv2.GraftCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.root", root)
     s.sql(
@@ -622,13 +604,10 @@ object WarehouseQueries {
     * DuckDB's relational recomputation of the same waves. This is the
     * q202 copy-on-write path's twin: same statement shapes, opposite
     * write amplification contract. Built once per (JVM, sf). */
-  private val morRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def sqlMergeOnRead(s: SparkSession, dir: String): DataFrame = {
     val cat = s"graft_mor_${math.abs(dir.hashCode).toString}"
-    val root = morRoots.computeIfAbsent(dir, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-mor").toString
+    val root = Fixtures("graft-mor", dir) {
+      val r = Fixtures.tempDir("graft-mor").toString
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.dsv2.GraftCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.root", r)
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
@@ -664,7 +643,7 @@ object WarehouseQueries {
       // retire the accumulated sidecars; answers must not move
       s.sql(s"CALL $cat.system.compact('wh.dim', max_shards => 4)")
       r
-    })
+    }
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.dsv2.GraftCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.root", root)
     s.sql(
@@ -713,13 +692,10 @@ object WarehouseQueries {
     * creation-context re-qualified, column aliases re-applied — and
     * DuckDB recomputing the same aggregate relationally. Built once
     * per (JVM, sf). */
-  private val viewRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def viewRouted(s: SparkSession, dir: String): DataFrame = {
     val cat = s"graft_vw_${math.abs(dir.hashCode).toString}"
-    val root = viewRoots.computeIfAbsent(dir, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-view").toString
+    val root = Fixtures("graft-view", dir) {
+      val r = Fixtures.tempDir("graft-view").toString
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.dsv2.GraftCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.root", r)
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
@@ -738,7 +714,7 @@ object WarehouseQueries {
            |WHERE o_totalprice > 1000
            |GROUP BY o_orderpriority""".stripMargin)
       r
-    })
+    }
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.dsv2.GraftCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.root", root)
     s.sql(s"SELECT prio, n, total FROM $cat.wh.big_orders ORDER BY prio")
@@ -865,12 +841,9 @@ object WarehouseQueries {
     * returning, so the green oracle row certifies the co-located plan
     * computed the exact joined answer — at 100 TB this is two
     * corpus-scale tables joined with no shuffle of either side. */
-  private val spjExports =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def spjDocJoin(s: SparkSession, dir: String): DataFrame = {
-    val root = spjExports.computeIfAbsent(dir, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-spj").toString
+    val root = Fixtures("graft-spj", dir) {
+      val r = Fixtures.tempDir("graft-spj").toString
       val docs = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       // round-robin into 4 writers so every lang dir holds SEVERAL
@@ -882,7 +855,7 @@ object WarehouseQueries {
           .agg(floor(avg(col("n_chars"))).cast("long").as("avg_chars")),
         s"$r/stats", partitionCol = Some("lang"), compression = "none")
       r
-    })
+    }
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val facts = s.read.format("graft-jsonl")
       .schema(StructType(Seq(StructField("doc_id", LongType),
@@ -917,23 +890,15 @@ object WarehouseQueries {
     * predicate applied. A green row certifies the whole DDL/DML
     * lifecycle (CREATE NAMESPACE/CTAS/DELETE/SELECT) produced exactly
     * the right rows, not just that the pieces individually work. */
-  private val catalogRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def catalogSqlRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val child = catalogRoots.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.wh", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.wh.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q193").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q193", "wh") { c =>
       c.sql("CREATE NAMESPACE wh.corpus")
       c.sql(
         s"""CREATE TABLE wh.corpus.docs PARTITIONED BY (lang) AS
            |SELECT doc_id, lang, source, n_chars
            |FROM parquet.`$dir/documents.parquet`""".stripMargin)
       c.sql("DELETE FROM wh.corpus.docs WHERE lang = 'zh'")
-      c
-    })
+    }
     child.sql(
       """SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
@@ -948,6 +913,21 @@ object WarehouseQueries {
       |GROUP BY lang, source ORDER BY lang, source""".stripMargin
 
   // ---------------------------------------------------------------- q207
+  /** The q207/q208 shared fixture: orders range-clustered on
+    * `o_orderkey` into an 8-shard catalog table with a min/max + bloom
+    * skip index built over the key. */
+  private def skipCatalog(s: SparkSession, dir: String): SparkSession =
+    Fixtures.catalogSession(s, dir, "graft-cat-q207", "whsk") { c =>
+      c.sql("CREATE NAMESPACE whsk.sk")
+      c.sql(
+        s"""CREATE TABLE whsk.sk.orders AS
+           |SELECT /*+ REPARTITION_BY_RANGE(8, o_orderkey) */
+           |  o_orderkey, o_custkey, o_orderstatus
+           |FROM parquet.`$dir/orders.parquet`""".stripMargin)
+      c.sql("""CALL whsk.system.build_skip_index('sk.orders',
+              |columns => 'o_orderkey', bloom_columns => 'o_orderkey')""".stripMargin)
+    }
+
   /** The file-skipping index CONSULTED BY CATALOG-TABLE SCANS
     * ([[graft.sources.dsv2.JsonlSkipIndex]] wired into `JsonlScan`
     * planning — q179's sibling, but through pure SQL on a catalog
@@ -959,29 +939,6 @@ object WarehouseQueries {
     * max-key point lookup (bloom + range). Plan-guarded in-query:
     * both probes must open strictly fewer shards than the table
     * holds; the oracle pins that pruning never costs rows. */
-  private val skipCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
-  /** The q207/q208 shared fixture: orders range-clustered on
-    * `o_orderkey` into an 8-shard catalog table with a min/max + bloom
-    * skip index built over the key. */
-  private def skipCatalog(s: SparkSession, dir: String): SparkSession =
-    skipCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whsk", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whsk.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q207").toString)
-      c.sql("CREATE NAMESPACE whsk.sk")
-      c.sql(
-        s"""CREATE TABLE whsk.sk.orders AS
-           |SELECT /*+ REPARTITION_BY_RANGE(8, o_orderkey) */
-           |  o_orderkey, o_custkey, o_orderstatus
-           |FROM parquet.`$dir/orders.parquet`""".stripMargin)
-      c.sql("""CALL whsk.system.build_skip_index('sk.orders',
-              |columns => 'o_orderkey', bloom_columns => 'o_orderkey')""".stripMargin)
-      c
-    })
-
   def skipIndexProbe(s: SparkSession, dir: String): DataFrame = {
     val child = skipCatalog(s, dir)
     // probe keys derive from the data (scalar max — one driver row by
@@ -1048,15 +1005,8 @@ object WarehouseQueries {
     * than the table holds — only possible because the rewrite
     * physically reordered the rows; the oracle pins that the rewrite
     * changed no answer. The cluster→stats→skip ladder end-to-end. */
-  private val clusterCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def clusterTableProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = clusterCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whcl", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whcl.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q209").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q209", "whcl") { c =>
       c.sql("CREATE NAMESPACE whcl.cl")
       c.sql(
         s"""CREATE TABLE whcl.cl.orders AS
@@ -1064,8 +1014,7 @@ object WarehouseQueries {
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
       c.sql("""CALL whcl.system.cluster_table('cl.orders',
               |columns => 'o_orderkey', target_shards => 8)""".stripMargin)
-      c
-    })
+    }
     // plan-guard on the SORT-FREE probe: an ORDER BY adds an exchange
     // whose (AQE-coalesced) partition count would pass regardless of
     // scan pruning
@@ -1096,15 +1045,8 @@ object WarehouseQueries {
     * live — and DuckDB reproduces both sides from the parquet with
     * and without the delete predicate: time travel is exactly "the
     * data as it was", not approximately. */
-  private val snapCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def snapshotTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val child = snapCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whsn", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whsn.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q210").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q210", "whsn") { c =>
       c.sql("CREATE NAMESPACE whsn.sn")
       c.sql(
         s"""CREATE TABLE whsn.sn.orders AS
@@ -1112,8 +1054,7 @@ object WarehouseQueries {
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
       c.sql("CALL whsn.system.snapshot('sn.orders', tag => 'base')")
       c.sql("DELETE FROM whsn.sn.orders WHERE o_orderstatus = 'F'")
-      c
-    })
+    }
     child.sql(
       """SELECT 'base' AS src, o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n
         |FROM whsn.sn.orders VERSION AS OF 'base' GROUP BY o_orderstatus
@@ -1143,15 +1084,8 @@ object WarehouseQueries {
     * fewer shards than the dir held before the rewrite — partition
     * pruning alone cannot get there; the oracle pins that the rewrite
     * changed no answer. */
-  private val clusterPartCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def clusterPartitionedProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = clusterPartCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whcp", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whcp.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q211").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q211", "whcp") { c =>
       c.sql("CREATE NAMESPACE whcp.cp")
       c.sql(
         s"""CREATE TABLE whcp.cp.orders
@@ -1160,8 +1094,7 @@ object WarehouseQueries {
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
       c.sql("""CALL whcp.system.cluster_table('cp.orders',
               |columns => 'o_orderkey', target_shards => 6)""".stripMargin)
-      c
-    })
+    }
     // plan-guard on the SORT-FREE probe: an ORDER BY adds an exchange
     // whose (AQE-coalesced) partition count would pass regardless of
     // scan pruning
@@ -1186,27 +1119,11 @@ object WarehouseQueries {
       |ORDER BY o_orderkey""".stripMargin
 
   // ---------------------------------------------------------------- q212
-  /** Snapshot CDC ([[graft.sources.dsv2.JsonlChangeFeed]]): a
-    * merge-on-read orders table, snapshot 'v1', then one appended
-    * batch (keys shifted +10M) and one MOR DELETE of the original 'F'
-    * rows (the key guard spares the batch), snapshot 'v2' — the
-    * change feed between v1 and v2 must be EXACTLY "the batch
-    * inserted, the original F rows deleted", recovered from the
-    * manifest diff (added shards + delete-ordinal deltas) with zero
-    * row comparison. Guarded
-    * in-query: `CALL table_changes` (the metadata-grain summary of
-    * the same diff) must report added shards and delta-deletes but
-    * ZERO removed shards — MOR deletes must not retire files. The
-    * oracle recomputes both sides from the parquet. */
-  private val cdcCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
-  def snapshotChangeFeed(s: SparkSession, dir: String): DataFrame = {
-    val child = cdcCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whcd", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whcd.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q212").toString)
+  /** The q212/q217/q222 shared fixture: a merge-on-read orders table
+    * with snapshots 'v1' and 'v2' around one appended batch and one MOR
+    * DELETE. */
+  private def cdcCatalog(s: SparkSession, dir: String): SparkSession =
+    Fixtures.catalogSession(s, dir, "graft-cat-q212", "whcd") { c =>
       c.sql("CREATE NAMESPACE whcd.cd")
       c.sql(
         s"""CREATE TABLE whcd.cd.orders
@@ -1222,8 +1139,22 @@ object WarehouseQueries {
       c.sql("""DELETE FROM whcd.cd.orders
               |WHERE o_orderstatus = 'F' AND o_orderkey <= 10000000""".stripMargin)
       c.sql("CALL whcd.system.snapshot('cd.orders', tag => 'v2')")
-      c
-    })
+    }
+
+  /** Snapshot CDC ([[graft.sources.dsv2.JsonlChangeFeed]]): a
+    * merge-on-read orders table, snapshot 'v1', then one appended
+    * batch (keys shifted +10M) and one MOR DELETE of the original 'F'
+    * rows (the key guard spares the batch), snapshot 'v2' — the
+    * change feed between v1 and v2 must be EXACTLY "the batch
+    * inserted, the original F rows deleted", recovered from the
+    * manifest diff (added shards + delete-ordinal deltas) with zero
+    * row comparison. Guarded
+    * in-query: `CALL table_changes` (the metadata-grain summary of
+    * the same diff) must report added shards and delta-deletes but
+    * ZERO removed shards — MOR deletes must not retire files. The
+    * oracle recomputes both sides from the parquet. */
+  def snapshotChangeFeed(s: SparkSession, dir: String): DataFrame = {
+    val child = cdcCatalog(s, dir)
     val summary = child.sql(
       "CALL whcd.system.table_changes('cd.orders', 'v1', 'v2')").collect()
     val kinds = summary.groupBy(_.getString(0)).view.mapValues(_.length).toMap
@@ -1250,15 +1181,8 @@ object WarehouseQueries {
     * filter, the aggregate, and the group — or half the rows vanish
     * and the oracle (which recomputes the doubled union from parquet)
     * catches it. */
-  private val renameCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def columnRenameTwoGen(s: SparkSession, dir: String): DataFrame = {
-    val child = renameCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whrn", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whrn.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q213").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q213", "whrn") { c =>
       c.sql("CREATE NAMESPACE whrn.rn")
       c.sql(
         s"""CREATE TABLE whrn.rn.orders AS
@@ -1271,8 +1195,7 @@ object WarehouseQueries {
            |  o_orderkey + 10000000 AS o_orderkey, o_custkey AS cust_id,
            |  o_orderstatus
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
-      c
-    })
+    }
     child.sql(
       """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(cust_id) AS BIGINT) AS sum_cust
@@ -1297,15 +1220,8 @@ object WarehouseQueries {
     * layout with ZERO maintenance CALLs ever issued. Plan-guarded
     * in-query (the probe must open a strict subset of the shards);
     * the oracle pins that declarative clustering changed no answer. */
-  private val writeOrderCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def writeOrderProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = writeOrderCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whwo", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whwo.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q214").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q214", "whwo") { c =>
       // sf0.01 orders ≈ small: keep AQE from rightly coalescing the
       // whole insert into one shard, so the plan guard can SEE the
       // multi-shard range layout (at corpus scale coalescing to the
@@ -1321,8 +1237,7 @@ object WarehouseQueries {
         s"""INSERT INTO whwo.wo.orders
            |SELECT o_orderkey, o_custkey, o_orderstatus
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
-      c
-    })
+    }
     val total = child.sql("SELECT o_orderkey FROM whwo.wo.orders")
       .rdd.getNumPartitions
     // plan-guard on the SORT-FREE probe: an ORDER BY adds an exchange
@@ -1353,15 +1268,8 @@ object WarehouseQueries {
     * round-tripped timestamp. DuckDB recomputes from the flat parquet:
     * any drift in micros, struct field routing, or null passthrough
     * hash-fails. */
-  private val nestedCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def nestedEventsRollup(s: SparkSession, dir: String): DataFrame = {
-    val child = nestedCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whnt", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whnt.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q215").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q215", "whnt") { c =>
       c.sql("CREATE NAMESPACE whnt.nt")
       graft.core.Tables.events(c, dir)
         .selectExpr(
@@ -1369,8 +1277,7 @@ object WarehouseQueries {
           "CAST(ts AS TIMESTAMP_NTZ) AS ts", "value")
         .createOrReplaceTempView("q215_src")
       c.sql("CREATE TABLE whnt.nt.events AS SELECT * FROM q215_src")
-      c
-    })
+    }
     child.sql(
       """SELECT ev.etype AS event_type, date_format(ts, 'yyyy-MM-dd') AS day,
         |  CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(ev.uid) AS BIGINT) AS uid_sum
@@ -1398,15 +1305,8 @@ object WarehouseQueries {
     * micros overlap — `.explain` shows PruneFilters, not a pushed
     * claim. Plan-guarded; DuckDB recomputes the window from the raw
     * parquet. */
-  private val temporalCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def temporalSkipProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = temporalCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whts", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whts.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q216").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q216", "whts") { c =>
       c.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       c.conf.set("spark.sql.shuffle.partitions", "8")
       c.sql("CREATE NAMESPACE whts.ts")
@@ -1420,8 +1320,7 @@ object WarehouseQueries {
           "event_type", "user_id")
         .createOrReplaceTempView("q216_src")
       c.sql("INSERT INTO whts.ts.events SELECT * FROM q216_src")
-      c
-    })
+    }
     // probe bound derived from the data (one scalar row, q179's
     // discipline): the last ~eighth of the time range
     val hi = child.sql(
@@ -1478,15 +1377,8 @@ object WarehouseQueries {
     * lost the resurrection. Guarded in-query: `table_changes` reports
     * delta_restores and ZERO added/removed shards (rollback of a pure
     * sidecar mutation moves no files). */
-  private val restoreCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def cdcRollbackRestores(s: SparkSession, dir: String): DataFrame = {
-    val child = restoreCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whrr", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whrr.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q223").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q223", "whrr") { c =>
       c.sql("CREATE NAMESPACE whrr.rr")
       c.sql(
         s"""CREATE TABLE whrr.rr.orders
@@ -1499,8 +1391,7 @@ object WarehouseQueries {
       c.sql("CALL whrr.system.rollback_to_snapshot('rr.orders', " +
         "version => 'v1')").collect()
       c.sql("CALL whrr.system.snapshot('rr.orders', tag => 'v3')")
-      c
-    })
+    }
     val kinds = child.sql(
       "CALL whrr.system.table_changes('rr.orders', 'v2', 'v3')").collect()
       .groupBy(_.getString(0)).view.mapValues(_.length).toMap
@@ -1532,8 +1423,7 @@ object WarehouseQueries {
     * the direct live aggregate row-for-row; the oracle recomputes the
     * mutated state from the raw parquet. */
   def cdcIncrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    snapshotChangeFeed(s, dir) // build/reuse the shared q212 fixture
-    val child = cdcCatalogs.get(dir)
+    val child = cdcCatalog(s, dir)
     val catalog = child.sessionState.catalogManager.catalog("whcd")
       .asInstanceOf[graft.sources.dsv2.GraftCatalog]
     val base = child.sql(
@@ -1592,15 +1482,8 @@ object WarehouseQueries {
     * exactly what DuckDB recomputes; guarded in-query that the 'mut'
     * snapshot still answers AFTER the rollback (its shards retained —
     * rolling forward stays possible). */
-  private val rollbackCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def rollbackSnapshotProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = rollbackCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whrb", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whrb.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q221").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q221", "whrb") { c =>
       c.sql("CREATE NAMESPACE whrb.rb")
       c.sql(
         s"""CREATE TABLE whrb.rb.orders
@@ -1625,8 +1508,7 @@ object WarehouseQueries {
         .head.getLong(0)
       require(mutAfter == mutated,
         s"rollback must not destroy the newer snapshot: $mutAfter != $mutated")
-      c
-    })
+    }
     child.sql(
       """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(o_custkey) AS BIGINT) AS sum_cust
@@ -1651,15 +1533,8 @@ object WarehouseQueries {
     * opens only the shards whose [min, max] uid overlaps.
     * Plan-guarded (strict shard subset + PruneFilters in the plan);
     * DuckDB recomputes the slice from the flat parquet. */
-  private val nestedSkipCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def nestedSkipProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = nestedSkipCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whnk", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whnk.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q220").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q220", "whnk") { c =>
       c.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       c.conf.set("spark.sql.shuffle.partitions", "8")
       c.sql("CREATE NAMESPACE whnk.nk")
@@ -1673,8 +1548,7 @@ object WarehouseQueries {
       // the ORDER BY range-shuffles on the nested leaf: landed shards
       // are uid-disjoint, so their write-time stats prune immediately
       c.sql("INSERT INTO whnk.nk.events SELECT * FROM q220_src ORDER BY ev.uid")
-      c
-    })
+    }
     val bound = child.sql(
       "SELECT CAST(FLOOR(MAX(ev.uid) / 8) AS BIGINT) FROM whnk.nk.events")
       .head.getLong(0)
@@ -1715,15 +1589,8 @@ object WarehouseQueries {
     * SUM(o_custkey) must see ONLY gen-3 — a resurrection of gen-1's
     * dead values shifts both and hash-fails against the DuckDB
     * recompute. */
-  private val dropColCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def dropColumnThreeGen(s: SparkSession, dir: String): DataFrame = {
-    val child = dropColCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whdc", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whdc.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q219").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q219", "whdc") { c =>
       c.sql("CREATE NAMESPACE whdc.dc")
       c.sql(
         s"""CREATE TABLE whdc.dc.orders AS
@@ -1742,8 +1609,7 @@ object WarehouseQueries {
            |  o_orderkey + 20000000 AS o_orderkey, o_orderstatus,
            |  o_custkey + 1000 AS o_custkey
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
-      c
-    })
+    }
     child.sql(
       """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(COUNT(o_custkey) AS BIGINT) AS n_cust,
@@ -1769,15 +1635,8 @@ object WarehouseQueries {
     * INT-era shard misparsed through BIGINT, or a text decimal
     * reparsed at the wrong precision, shifts the sums and
     * hash-fails. */
-  private val widenCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def typeWidenTwoGen(s: SparkSession, dir: String): DataFrame = {
-    val child = widenCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whwd", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whwd.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q224").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q224", "whwd") { c =>
       c.sql("CREATE NAMESPACE whwd.wd")
       c.sql(
         s"""CREATE TABLE whwd.wd.orders AS
@@ -1797,8 +1656,7 @@ object WarehouseQueries {
            |    CAST(100000000000.00 AS DECIMAL(18,2)) AS o_total,
            |  o_orderstatus
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
-      c
-    })
+    }
     child.sql(
       """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(o_custkey) AS BIGINT) AS sum_cust,
@@ -1828,15 +1686,8 @@ object WarehouseQueries {
     * update_postimage (new values). A leaked churn row, lost pair, or
     * mis-paired key changes the row set and hash-fails against
     * DuckDB's recompute. */
-  private val cowCdcCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def cowTypedWindow(s: SparkSession, dir: String): DataFrame = {
-    val child = cowCdcCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whcw", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whcw.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q225").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q225", "whcw") { c =>
       c.sql("CREATE NAMESPACE whcw.cw")
       c.sql(
         s"""CREATE TABLE whcw.cw.orders AS
@@ -1847,8 +1698,7 @@ object WarehouseQueries {
         """UPDATE whcw.cw.orders SET o_custkey = o_custkey + 1000000
           |WHERE o_orderkey % 97 = 0""".stripMargin)
       c.sql("CALL whcw.system.snapshot('cw.orders', tag => 'v2')")
-      c
-    })
+    }
     val catalog = child.sessionState.catalogManager.catalog("whcw")
       .asInstanceOf[graft.sources.dsv2.GraftCatalog]
     graft.sources.dsv2.JsonlChangeFeed
@@ -1877,15 +1727,8 @@ object WarehouseQueries {
     * gen-1 resolves `o_prio` from the JSON body, gen-2 from the path;
     * per-shard pruning admits each generation by its OWN dirs — must
     * match DuckDB's recompute of the two waves. */
-  private val partEvoCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def partitionEvolutionProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = partEvoCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whpe", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whpe.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q226").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q226", "whpe") { c =>
       c.sql("CREATE NAMESPACE whpe.pe")
       c.sql(
         s"""CREATE TABLE whpe.pe.orders
@@ -1901,8 +1744,7 @@ object WarehouseQueries {
            |  o_custkey, substr(o_orderpriority, 1, 1) AS o_prio,
            |  o_orderstatus
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
-      c
-    })
+    }
     child.sql(
       """SELECT o_prio, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(o_orderkey) AS BIGINT) AS sum_key
@@ -1928,15 +1770,8 @@ object WarehouseQueries {
     * scanned. The grouped aggregate over the visible state must match
     * DuckDB's recompute of last-wave-wins; a leaked hidden row or an
     * over-deleted key shifts the sums and hash-fails. */
-  private val upsertCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def upsertWaves(s: SparkSession, dir: String): DataFrame = {
-    val child = upsertCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whup", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whup.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q227").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q227", "whup") { c =>
       c.sql("CREATE NAMESPACE whup.up")
       c.sql(
         """CREATE TABLE whup.up.orders
@@ -1958,8 +1793,7 @@ object WarehouseQueries {
            |  o_custkey + 5000000 AS o_custkey, o_orderstatus
            |FROM parquet.`$dir/orders.parquet` WHERE o_orderkey % 7 = 0"""
           .stripMargin)
-      c
-    })
+    }
     child.sql(
       """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(o_custkey) AS BIGINT) AS sum_cust
@@ -1984,15 +1818,8 @@ object WarehouseQueries {
     * + stamped shards, the corpus never rescanned. The per-language
     * rollup of the visible state must match DuckDB's last-wave-wins
     * recompute. */
-  private val corpusUpsertCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def corpusUpsertWaves(s: SparkSession, dir: String): DataFrame = {
-    val child = corpusUpsertCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whcu", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whcu.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q228").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q228", "whcu") { c =>
       c.sql("CREATE NAMESPACE whcu.cu")
       c.sql(
         """CREATE TABLE whcu.cu.docs
@@ -2018,8 +1845,7 @@ object WarehouseQueries {
            |  lang, n_chars + 5000 AS n_chars
            |FROM parquet.`$dir/documents.parquet` WHERE lang = 'de'"""
           .stripMargin)
-      c
-    })
+    }
     child.sql(
       """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
@@ -2055,15 +1881,8 @@ object WarehouseQueries {
     * last-wave-wins CASE arithmetic — a pinned scan that ignored the
     * equality state, or a window that missed the hidden preimages,
     * hash-fails. */
-  private val upsertTtCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def upsertTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val child = upsertTtCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whtm", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whtm.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q229").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q229", "whtm") { c =>
       c.sql("CREATE NAMESPACE whtm.tt")
       c.sql(
         """CREATE TABLE whtm.tt.docs
@@ -2090,8 +1909,7 @@ object WarehouseQueries {
            |  lang, n_chars + 5000 AS n_chars
            |FROM parquet.`$dir/documents.parquet` WHERE lang = 'de'"""
           .stripMargin) // wave -> v3
-      c
-    })
+    }
     def rollup(src: String, phase: String): DataFrame = child.sql(
       s"""SELECT '$phase' AS phase, lang, CAST(COUNT(*) AS BIGINT) AS n,
          |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
@@ -2154,15 +1972,8 @@ object WarehouseQueries {
     * skip-range exemption prunes by the LEADING column. The
     * per-month rollup of the visible state must match DuckDB's
     * last-wave-wins recompute. */
-  private val dateKeyCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def dateKeyUpsert(s: SparkSession, dir: String): DataFrame = {
-    val child = dateKeyCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whdk", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whdk.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q230").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q230", "whdk") { c =>
       c.sql("CREATE NAMESPACE whdk.dk")
       c.sql(
         """CREATE TABLE whdk.dk.orders (day DATE, k BIGINT, v BIGINT)
@@ -2181,8 +1992,7 @@ object WarehouseQueries {
            |FROM parquet.`$dir/orders.parquet`
            |WHERE o_orderdate >= DATE'1995-03-01'
            |  AND o_orderdate < DATE'1995-04-01'""".stripMargin)
-      c
-    })
+    }
     child.sql(
       """SELECT CAST(year(day) AS BIGINT) AS y,
         |  CAST(month(day) AS BIGINT) AS m,
@@ -2211,16 +2021,9 @@ object WarehouseQueries {
     * values resolved from the path and pruned through the rename
     * alias — must match DuckDB's doubled recompute. Guarded in-query:
     * both dir generations must actually exist on disk. */
-  private val partRenameCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def partitionRenameProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = partRenameCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      val root =
-        java.nio.file.Files.createTempDirectory("graft-cat-q231").toString
-      c.conf.set("spark.sql.catalog.whpr", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whpr.root", root)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q231", "whpr") { c =>
+      val root = c.conf.get("spark.sql.catalog.whpr.root")
       c.sql("CREATE NAMESPACE whpr.pr")
       c.sql("""CREATE TABLE whpr.pr.orders
               |  (o_orderkey BIGINT, o_custkey BIGINT, status STRING)
@@ -2244,8 +2047,7 @@ object WarehouseQueries {
       require(dirs.exists(_.startsWith("status=")) &&
         dirs.exists(_.startsWith("state=")),
         s"q231 needs pre- AND post-rename dir generations, got $dirs")
-      c
-    })
+    }
     child.sql(
       """SELECT state, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(o_custkey) AS BIGINT) AS sc
@@ -2270,8 +2072,7 @@ object WarehouseQueries {
     * only the delta positions (no join at all on this surface). Must
     * match the same DuckDB recompute q212 matches. */
   def changesSourceWindow(s: SparkSession, dir: String): DataFrame = {
-    snapshotChangeFeed(s, dir) // shared fixture: build it if q217 runs first
-    val child = cdcCatalogs.get(dir)
+    val child = cdcCatalog(s, dir)
     val tableDir = s"${child.conf.get("spark.sql.catalog.whcd.root")}/cd/orders"
     child.read.format("graft-jsonl-changes")
       .option("fromVersion", 1).option("toVersion", 2).load(tableDir)
@@ -2293,15 +2094,8 @@ object WarehouseQueries {
     * through `graft-jsonl-changes` tagged by version, and the oracle
     * recomputes all three waves from the parquet — a netted or
     * missing pin shifts rows across windows and hash-fails. */
-  private val autoSnapCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def autoSnapshotFeed(s: SparkSession, dir: String): DataFrame = {
-    val child = autoSnapCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whas", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whas.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q218").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q218", "whas") { c =>
       c.sql("CREATE NAMESPACE whas.asf")
       c.sql("""CREATE TABLE whas.asf.orders
               |  (o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING)
@@ -2312,8 +2106,7 @@ object WarehouseQueries {
              |SELECT o_orderkey + ${w * 10000000L} AS o_orderkey, o_custkey,
              |  o_orderstatus
              |FROM parquet.`$dir/orders.parquet`""".stripMargin)
-      c
-    })
+    }
     val pinned = child.sql("CALL whas.system.snapshots('asf.orders')")
       .collect().map(_.getLong(0)).toSeq
     require(pinned == Seq(1L, 2L, 3L),
@@ -2438,15 +2231,8 @@ object WarehouseQueries {
     * manifests prune parquet files exactly as they prune JSONL ones,
     * because every index layer is keyed by shard path, not by bytes.
     * The oracle pins that pruning never costs rows. */
-  private val pqSkipCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def parquetSkipProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = pqSkipCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whpq", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whpq.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q232").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q232", "whpq") { c =>
       // the write-order distribution re-shuffles the insert; at small
       // SF AQE would rightly coalesce it to one shard — pin the
       // partition count in this CHILD session so the fixture lands the
@@ -2464,8 +2250,7 @@ object WarehouseQueries {
            |SELECT /*+ REPARTITION_BY_RANGE(8, o_orderkey) */
            |  o_orderkey, o_custkey, o_orderstatus
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
-      c
-    })
+    }
     val hit = child.sql("SELECT MAX(o_orderkey) AS m FROM whpq.pq.orders")
       .head.getLong(0)
     val slice = child.sql(
@@ -2504,15 +2289,8 @@ object WarehouseQueries {
     * sides with and without the delete predicate — rollback and time
     * travel are exactly "the data as it was" regardless of the shard
     * format. */
-  private val pqSnapCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def parquetSnapshotRollback(s: SparkSession, dir: String): DataFrame = {
-    val child = pqSnapCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whpn", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whpn.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q233").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q233", "whpn") { c =>
       c.sql("CREATE NAMESPACE whpn.pn")
       c.sql(
         """CREATE TABLE whpn.pn.orders
@@ -2526,8 +2304,7 @@ object WarehouseQueries {
       c.sql("DELETE FROM whpn.pn.orders WHERE o_orderstatus = 'F'")
       c.sql("CALL whpn.system.snapshot('pn.orders', tag => 'afterdel')")
       c.sql("CALL whpn.system.rollback_to_snapshot('pn.orders', 'base')")
-      c
-    })
+    }
     child.sql(
       """SELECT 'deleted' AS src, o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n
         |FROM whpn.pn.orders VERSION AS OF 'afterdel' GROUP BY o_orderstatus
@@ -2555,15 +2332,8 @@ object WarehouseQueries {
     * last-wave-wins recompute — a leaked hidden row, an over-deleted
     * key, or a row lost by the parquet rewrite shifts the sums and
     * hash-fails. */
-  private val pqUpsertCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def parquetUpsertWaves(s: SparkSession, dir: String): DataFrame = {
-    val child = pqUpsertCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whpu", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whpu.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q234").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q234", "whpu") { c =>
       c.sql("CREATE NAMESPACE whpu.pu")
       c.sql(
         """CREATE TABLE whpu.pu.orders
@@ -2587,8 +2357,7 @@ object WarehouseQueries {
            |FROM parquet.`$dir/orders.parquet` WHERE o_orderkey % 7 = 0"""
           .stripMargin)
       c.sql("CALL whpu.system.compact('pu.orders')")
-      c
-    })
+    }
     child.sql(
       """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(o_custkey) AS BIGINT) AS sum_cust
@@ -2615,15 +2384,8 @@ object WarehouseQueries {
     * NDV — the statistics channel join reordering and broadcast
     * decisions feed on at 100 TB. The oracle pins that the statistics
     * path never changes results. */
-  private val cboStatsCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def cboStatsJoin(s: SparkSession, dir: String): DataFrame = {
-    val child = cboStatsCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whcb", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whcb.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q235").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q235", "whcb") { c =>
       c.conf.set("spark.sql.cbo.enabled", "true")
       c.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
       c.sql("CREATE NAMESPACE whcb.cb")
@@ -2645,8 +2407,7 @@ object WarehouseQueries {
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
       c.sql("CALL whcb.system.analyze_table('cb.customer')")
       c.sql("CALL whcb.system.analyze_table('cb.orders')")
-      c
-    })
+    }
     val df = child.sql(
       """SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust
@@ -2694,15 +2455,8 @@ object WarehouseQueries {
     * answering from retained jsonl shards while the live table serves
     * every row from parquet — guarded in-query by a live-layout
     * extension sweep. */
-  private val convertCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def convertTableProbe(s: SparkSession, dir: String): DataFrame = {
-    val child = convertCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whcv", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whcv.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q236").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q236", "whcv") { c =>
       c.sql("CREATE NAMESPACE whcv.cv")
       c.sql(
         """CREATE TABLE whcv.cv.orders
@@ -2731,8 +2485,7 @@ object WarehouseQueries {
           !f.getName.startsWith(".") && !f.getName.endsWith(".parquet"))
       require(bad.isEmpty,
         s"convert_table left non-parquet live shards: ${bad.toSeq}")
-      c
-    })
+    }
     child.sql(
       """SELECT 'live' AS src, o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
@@ -2758,15 +2511,8 @@ object WarehouseQueries {
     * the optimized plan, and the rewrite must not survive with the
     * premise withdrawn. The oracle pins exactness — a double-counted
     * pre-merged group or a dropped null-key row shifts every sum. */
-  private val eagerAggCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
   def eagerAggJoin(s: SparkSession, dir: String): DataFrame = {
-    val child = eagerAggCatalogs.computeIfAbsent(dir, _ => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.catalog.whea", "graft.sources.dsv2.GraftCatalog")
-      c.conf.set("spark.sql.catalog.whea.root",
-        java.nio.file.Files.createTempDirectory("graft-cat-q237").toString)
+    val child = Fixtures.catalogSession(s, dir, "graft-cat-q237", "whea") { c =>
       c.conf.set("spark.graft.eagerAgg.enabled", "true")
       // the rewrite's cost guard stands down for broadcast-able dims;
       // this row represents the AT-SCALE shape (both sides shuffle)
@@ -2788,8 +2534,7 @@ object WarehouseQueries {
            |FROM parquet.`$dir/orders.parquet`""".stripMargin)
       c.sql("CALL whea.system.analyze_table('ea.customer', " +
         "unique_candidates => 'c_custkey')")
-      c
-    })
+    }
     val df = child.sql(
       """SELECT c_mktsegment,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) AS total,

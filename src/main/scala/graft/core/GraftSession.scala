@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   private lazy val warehouseDir: String =
-    java.nio.file.Files.createTempDirectory("graft-warehouse").toString
+    Fixtures.tempDir("graft-warehouse").toString
 
   def applyConfigs(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 
 /** Registry + DuckDB oracles for the round-7 curation tier
   * ([[CurationOps]]): q155–q161. Same contract as [[LlmQueries]] —
@@ -325,17 +325,15 @@ object CurationQueries {
     * pattern, guarded so bench reps measure the PROBE, not repeated
     * index construction); the `% 10 == 7` slice is the incoming wave
     * probed against it. */
-  private val lshIndexBuilt = new java.util.concurrent.ConcurrentHashMap[String, Boolean]
   def dedupAgainstIndex(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     // table name carries the sf-dir so two dirs in one JVM can't read
-    // each other's index; the guard key IS the table name
+    // each other's index; the fixture key IS the table name
     val table = s"graft_lsh_index_${math.abs(dir.hashCode.toLong)}"
-    lshIndexBuilt.computeIfAbsent(table, { _ =>
+    Fixtures("graft-lsh-index", table) {
       Dedup.writeLshIndex(d.filter(col("doc_id") % 10 =!= 7),
         table, k = 8, bands = 4, shingle = 3)
-      true
-    })
+    }
     Dedup.dedupAgainstIndex(s, table,
         d.filter(col("doc_id") % 10 === 7), k = 8, bands = 4, shingle = 3,
         minAgree = 4)

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 
 /** Query registry for the LLM-data-pipeline operators (dedup,
   * similarity search, text analysis, multimodal) with their DuckDB
@@ -558,12 +558,9 @@ object LlmQueries {
     * recomputation as q57 over the final corpus, so an answer computed
     * from the stale v1 index would hash-fail the gate, not just lose
     * recall. */
-  private val staleCorpusDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def ivfStaleRebuild(s: SparkSession, dir: String): DataFrame = {
-    val tmp = staleCorpusDirs.computeIfAbsent(dir, _ =>
-      java.nio.file.Files.createTempDirectory("graft-ivf-stale").toString)
+    val tmp = Fixtures("graft-ivf-stale", dir)(
+      Fixtures.tempDir("graft-ivf-stale").toString)
     val corpusPath = s"$tmp/corpus.parquet"
     // v1: a partial crawl (keeps the stride-centroid ids — 100n ≡ 3
     // (mod 7) only for n ≡ 5 (mod 7), so most cells keep their seed)

@@ -98,7 +98,7 @@ class RoundEightPropertySpec extends AnyFunSuite {
 
   test("non-ASCII partition values round-trip through the catalog end-to-end") {
     val spark = TestSpark.spark
-    val root = java.nio.file.Files.createTempDirectory("graft-uni").toString
+    val root = graft.core.Fixtures.tempDir("graft-uni").toString
     spark.conf.set("spark.sql.catalog.uni", "graft.sources.dsv2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.uni.root", root)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS uni.ns")

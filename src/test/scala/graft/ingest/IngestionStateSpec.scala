@@ -6,7 +6,7 @@ import java.time.LocalDate
 class IngestionStateSpec extends AnyFunSuite {
 
   private def fresh() = new IngestionState(
-    java.nio.file.Files.createTempDirectory("ing").toString + "/state.json")
+    graft.core.Fixtures.tempDir("ing").toString + "/state.json")
 
   private val d1 = LocalDate.parse("2024-06-01")
   private val d2 = LocalDate.parse("2024-06-02")

@@ -15,7 +15,7 @@ class IndexStampSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private lazy val dir =
-    java.nio.file.Files.createTempDirectory("graft-stamp").toString
+    graft.core.Fixtures.tempDir("graft-stamp").toString
 
   private def writeEmb(path: String, n: Int, seed: Int): Unit =
     spark.sql(
@@ -114,7 +114,7 @@ class IndexStampSpec extends AnyFunSuite {
     val s = spark
     s.conf.set("spark.sql.catalog.ist", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.ist.root",
-      java.nio.file.Files.createTempDirectory("graft-ist").toString)
+      graft.core.Fixtures.tempDir("graft-ist").toString)
     s.sql("CREATE NAMESPACE IF NOT EXISTS ist.ns")
     s.sql("""CREATE TABLE ist.ns.emb (vec_id BIGINT, embedding ARRAY<FLOAT>)
             |TBLPROPERTIES ('graft.row-level.mode'='merge-on-read')""".stripMargin)

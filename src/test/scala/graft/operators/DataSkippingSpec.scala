@@ -3,7 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import java.nio.file.Files
+import graft.core.Fixtures
 
 /** File-level min/max skipping: pruned read touches strictly fewer
   * files on a clustered layout, results equal the full filtered scan,
@@ -15,7 +15,7 @@ class DataSkippingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("pruned probe reads fewer files, same rows, on a sorted layout") {
-    val path = Files.createTempDirectory("skip").resolve("t").toString
+    val path = Fixtures.tempDir("skip").resolve("t").toString
     // 10 files, each covering a disjoint 100-value range of k
     (0L until 1000L).map(i => (i, s"r$i")).toDF("k", "s")
       .repartitionByRange(10, col("k")).sortWithinPartitions("k")
@@ -32,7 +32,7 @@ class DataSkippingSpec extends AnyFunSuite {
   }
 
   test("files appended after indexing are read unconditionally (stale-safe)") {
-    val path = Files.createTempDirectory("skip2").resolve("t").toString
+    val path = Fixtures.tempDir("skip2").resolve("t").toString
     (0L until 100L).map(i => (i, "old")).toDF("k", "s").coalesce(1)
       .write.parquet(path)
     DataSkipping.writeIndex(spark, path, Seq("k"))
@@ -45,7 +45,7 @@ class DataSkippingSpec extends AnyFunSuite {
   }
 
   test("fully out-of-range probe returns an empty frame with the schema") {
-    val path = Files.createTempDirectory("skip3").resolve("t").toString
+    val path = Fixtures.tempDir("skip3").resolve("t").toString
     (0L until 100L).map(i => (i, "x")).toDF("k", "s").coalesce(1)
       .write.parquet(path)
     DataSkipping.writeIndex(spark, path, Seq("k"))
@@ -55,7 +55,7 @@ class DataSkippingSpec extends AnyFunSuite {
   }
 
   test("the consult is a distributed join; only the pruned path list is its output") {
-    val path = Files.createTempDirectory("skip5").resolve("t").toString
+    val path = Fixtures.tempDir("skip5").resolve("t").toString
     (0L until 1000L).map(i => (i, s"r$i")).toDF("k", "s")
       .repartitionByRange(10, col("k")).sortWithinPartitions("k")
       .write.parquet(path)
@@ -75,7 +75,7 @@ class DataSkippingSpec extends AnyFunSuite {
   }
 
   test("bloom tier: point lookup opens only admitting files; absent key opens none") {
-    val path = Files.createTempDirectory("skipb").resolve("t").toString
+    val path = Fixtures.tempDir("skipb").resolve("t").toString
     // 8 files hash-scattered on k — every file's k range spans the key
     // space, so min/max skipping could never prune a k-probe
     (0L until 4000L).map(i => (i, i % 8, s"r$i")).toDF("k", "g", "s")
@@ -101,7 +101,7 @@ class DataSkippingSpec extends AnyFunSuite {
   }
 
   test("bloom tier is stale-safe: unseen files are always probed") {
-    val path = Files.createTempDirectory("skipb2").resolve("t").toString
+    val path = Fixtures.tempDir("skipb2").resolve("t").toString
     (0L until 100L).map(i => (i, "old")).toDF("k", "s").coalesce(1)
       .write.parquet(path)
     DataSkipping.writeBloomIndex(spark, path, "k",
@@ -115,7 +115,7 @@ class DataSkippingSpec extends AnyFunSuite {
   }
 
   test("index rebuild via versioned publish is atomic history") {
-    val path = Files.createTempDirectory("skip4").resolve("t").toString
+    val path = Fixtures.tempDir("skip4").resolve("t").toString
     (0L until 10L).map(i => (i, "x")).toDF("k", "s").coalesce(1)
       .write.parquet(path)
     DataSkipping.writeIndex(spark, path, Seq("k"))

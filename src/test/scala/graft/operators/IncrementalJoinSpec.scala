@@ -3,6 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.core.Fixtures
 
 /** Contract tests for [[IncrementalJoin]]: delta algebra == full
   * recompute, bag multiplicity, idempotent replay, torn-wave
@@ -12,12 +13,8 @@ class IncrementalJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshRoot(tag: String): String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_ij_spec_$tag"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    root
-  }
+  private def freshRoot(tag: String): String =
+    Fixtures.tempDir(s"graft_ij_spec_$tag").resolve("t").toString
 
   private def left(rows: (Long, String)*) = rows.toDF("k", "lv")
   private def right(rows: (Long, Long)*) = rows.toDF("k", "rv")

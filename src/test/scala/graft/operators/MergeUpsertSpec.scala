@@ -27,7 +27,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("intoPath creates then upserts a parquet target atomically") {
-    val dir = java.nio.file.Files.createTempDirectory("merge").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("merge").toString + "/t"
     MergeUpsert.intoPath(spark, dir, target, Seq("id"))
     MergeUpsert.intoPath(spark, dir, source, Seq("id"))
     val got = spark.read.parquet(dir).orderBy("id").as[(Int, String)].collect().toSeq
@@ -49,7 +49,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("intoPartitionedPath rewrites only touched partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("pmerge").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("pmerge").toString + "/t"
     val t0 = Seq((1, "a", "p1"), (2, "b", "p2"), (3, "c", "p3"))
       .toDF("id", "v", "partition_value")
     MergeUpsert.intoPartitionedPath(spark, dir, t0, Seq("id"))
@@ -74,7 +74,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("deleteFromPartitionedPath forgets keys, drops emptied partitions, leaves the rest byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("pdelete").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("pdelete").toString + "/t"
     val t0 = Seq((1, "a", "p1"), (2, "b", "p1"), (3, "c", "p2"), (4, "d", "p3"))
       .toDF("id", "v", "partition_value")
     MergeUpsert.intoPartitionedPath(spark, dir, t0, Seq("id"))
@@ -99,7 +99,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("deleting every row removes the table cleanly; the path stays usable") {
-    val dir = java.nio.file.Files.createTempDirectory("pdeleteall").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("pdeleteall").toString + "/t"
     val t0 = Seq((1, "a", "p1"), (2, "b", "p2")).toDF("id", "v", "partition_value")
     MergeUpsert.intoPartitionedPath(spark, dir, t0, Seq("id"))
     MergeUpsert.deleteFromPartitionedPath(spark, dir,
@@ -114,7 +114,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("deleteFromPartitionedPath propagates a forget through the streaming LSH index layout") {
-    val base = java.nio.file.Files.createTempDirectory("forget_idx").toString
+    val base = graft.core.Fixtures.tempDir("forget_idx").toString
     val idx = s"$base/idx"
     // two ingest epochs of signature rows, as nearDupIngest lays them out
     for ((epoch, ids) <- Seq(0L -> Seq(1L, 2L), 1L -> Seq(3L))) {
@@ -132,7 +132,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("insert-only source into an existing partition keeps resident rows") {
-    val dir = java.nio.file.Files.createTempDirectory("pmerge3").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("pmerge3").toString + "/t"
     val t0 = Seq((1, "a", "p1"), (2, "b", "p1")).toDF("id", "v", "partition_value")
     MergeUpsert.intoPartitionedPath(spark, dir, t0, Seq("id"))
     // source has NO matched keys but lands in the existing p1
@@ -144,7 +144,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("null partition values merge without losing resident rows") {
-    val dir = java.nio.file.Files.createTempDirectory("pmerge4").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("pmerge4").toString + "/t"
     val t0 = Seq((1, "a", Some("p1")), (2, "b", None), (3, "c", None))
       .toDF("id", "v", "partition_value")
     MergeUpsert.intoPartitionedPath(spark, dir, t0, Seq("id"))
@@ -179,7 +179,7 @@ class MergeUpsertSpec extends AnyFunSuite {
     .as[(Int, String, String)].collect().toSeq
 
   test("crash BEFORE the manifest commit leaves the target untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("crash1").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("crash1").toString + "/t"
     seed(dir)
     intercept[SimulatedCrash] {
       MergeUpsert.intoPartitionedPath(spark, dir, src, Seq("id"),
@@ -192,7 +192,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("crash between the aside and swap-in renames loses nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("crash2").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("crash2").toString + "/t"
     seed(dir)
     // p2's only row is replaced into p4: p2 is a drop, p4 a fresh swap.
     // Add a same-partition replace so a swap has a live predecessor to
@@ -212,7 +212,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("a torn non-atomic aside rename (live AND trash both present) replays clean") {
-    val dir = java.nio.file.Files.createTempDirectory("crash4").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("crash4").toString + "/t"
     seed(dir)
     val s = Seq((1, "A", "p1")).toDF("id", "v", "partition_value")
     intercept[SimulatedCrash] {
@@ -234,7 +234,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("crash during the stale-partition drop rolls forward on the next merge") {
-    val dir = java.nio.file.Files.createTempDirectory("crash3").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("crash3").toString + "/t"
     seed(dir)
     intercept[SimulatedCrash] {
       MergeUpsert.intoPartitionedPath(spark, dir, src, Seq("id"),
@@ -251,7 +251,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("stale pre-crash staging dirs never leak into a later merge") {
-    val dir = java.nio.file.Files.createTempDirectory("crash4").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("crash4").toString + "/t"
     seed(dir)
     // leftover staging from a crashed run of some OTHER source: a bogus
     // partition that must never be swapped into the target (the dynamic
@@ -265,7 +265,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("intoPath recovers a swap torn between its two renames") {
-    val dir = java.nio.file.Files.createTempDirectory("crash5").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("crash5").toString + "/t"
     MergeUpsert.intoPath(spark, dir, target, Seq("id"))
     // simulate the torn state: staged write complete, target renamed
     // aside, crash before staging renamed in
@@ -282,7 +282,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("intoPartitionedPath keeps survivors inside a touched partition") {
-    val dir = java.nio.file.Files.createTempDirectory("pmerge2").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("pmerge2").toString + "/t"
     val t0 = Seq((1, "a", "p1"), (2, "b", "p1"), (3, "c", "p2"))
       .toDF("id", "v", "partition_value")
     MergeUpsert.intoPartitionedPath(spark, dir, t0, Seq("id"))
@@ -309,7 +309,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("a partition-scoped merge evaluates its source exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("once1").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("once1").toString + "/t"
     seed(dir)
     val acc = spark.sparkContext.longAccumulator("merge-source-rows")
     MergeUpsert.intoPartitionedPath(spark, dir, counted(src, acc), Seq("id"))
@@ -318,7 +318,7 @@ class MergeUpsertSpec extends AnyFunSuite {
   }
 
   test("a partition-scoped delete evaluates its keys exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("once2").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("once2").toString + "/t"
     seed(dir)
     val acc = spark.sparkContext.longAccumulator("delete-key-rows")
     MergeUpsert.deleteFromPartitionedPath(spark, dir,

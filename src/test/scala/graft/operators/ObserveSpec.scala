@@ -21,7 +21,7 @@ class ObserveSpec extends AnyFunSuite {
         count(lit(1)).as("n_rows"),
         sum(when(col("payload").isNull, 1L).otherwise(0L)).as("n_null_payload"),
         max(col("id")).as("max_id"))
-      val out = java.nio.file.Files.createTempDirectory("graft_observe").toString
+      val out = graft.core.Fixtures.tempDir("graft_observe").toString
       audited.write.mode("overwrite").parquet(out)
       val row = h.await("ingest_audit").getOrElse(fail("no observation arrived"))
       assert(row.getAs[Long]("n_rows") === 1000L)

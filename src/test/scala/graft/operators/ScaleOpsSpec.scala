@@ -84,7 +84,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("compaction bounds file count, preserves content, skips healthy partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("compact").toString + "/t"
     // p1: 20 tiny files (unhealthy); p2: 2 files (healthy)
     (1 to 20).foreach { i =>
       Seq((i.toLong, "p1")).toDF("id", "partition_value")

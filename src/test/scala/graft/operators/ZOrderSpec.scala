@@ -39,7 +39,7 @@ class ZOrderSpec extends AnyFunSuite {
       }
 
   test("both dimensions stay narrow per file; a point predicate prunes most files") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("zorder").toString + "/t"
     // 8 bits/dim = 256 curve cells per dimension against an ~8x8 file
     // grid — the same layout-quality witness as the 16-bit default at
     // a third of the wall-clock (the 32-bit interleave expression's
@@ -64,7 +64,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("single-column sort leaves the second dimension unprunable (the contrast)") {
-    val dir = java.nio.file.Files.createTempDirectory("sorted1d").toString + "/t"
+    val dir = graft.core.Fixtures.tempDir("sorted1d").toString + "/t"
     points.repartitionByRange(16, col("a")).sortWithinPartitions(col("a"))
       .write.mode("overwrite").parquet(dir)
     val bCoverage = fileRanges(dir, "b")

@@ -15,7 +15,7 @@ class EagerAggregationSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.ea", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.ea.root",
-      java.nio.file.Files.createTempDirectory("graft-ea").toString)
+      graft.core.Fixtures.tempDir("graft-ea").toString)
     s.sql("CREATE NAMESPACE IF NOT EXISTS ea.ns")
     // fact: duplicate fks, null fks, two group dims, values with nulls
     s.sql("""CREATE TABLE ea.ns.fact (fk BIGINT, seg STRING, qty BIGINT,
@@ -389,7 +389,7 @@ class EagerAggregationSpec extends AnyFunSuite {
   test("external parquet uniqueness: CatalogStats.verifyUnique proves a " +
       "temp-view dim key; rewriting the files withdraws the premise") {
     import graft.operators.CatalogStats
-    val dir = java.nio.file.Files.createTempDirectory("graft-ea-ext").toString
+    val dir = graft.core.Fixtures.tempDir("graft-ea-ext").toString
     val dimPath = s"$dir/xdim.parquet"
     spark.sql("SELECT id AS pk, concat('g', CAST(id % 5 AS STRING)) AS grp " +
       "FROM range(0, 600)").write.parquet(dimPath)

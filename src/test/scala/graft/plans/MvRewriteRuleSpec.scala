@@ -16,8 +16,8 @@ class MvRewriteRuleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val base = java.nio.file.Files
-    .createTempDirectory("graft_mv_spec").toString
+  private val base = graft.core.Fixtures
+    .tempDir("graft_mv_spec").toString
   private val factPath = s"$base/fact.parquet"
   private val mvPath = s"$base/mv.parquet"
 

@@ -14,7 +14,7 @@ class AnalyzeConvertSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.ac", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.ac.root",
-      java.nio.file.Files.createTempDirectory("graft-ac").toString)
+      graft.core.Fixtures.tempDir("graft-ac").toString)
     s.sql("CREATE NAMESPACE IF NOT EXISTS ac.ns")
     s
   }

@@ -13,7 +13,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.wh", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.wh.root",
-      java.nio.file.Files.createTempDirectory("graft-catalog").toString)
+      graft.core.Fixtures.tempDir("graft-catalog").toString)
     s
   }
 

@@ -17,7 +17,7 @@ class GraftParquetFormatSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.pq", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.pq.root",
-      java.nio.file.Files.createTempDirectory("graft-pq").toString)
+      graft.core.Fixtures.tempDir("graft-pq").toString)
     s
   }
   private def sql(q: String) = spark.sql(q)
@@ -35,7 +35,7 @@ class GraftParquetFormatSpec extends AnyFunSuite {
 
   test("path write/read round-trip: parquet shards, pushdown, partitionBy, metadata cols") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pq-path").toString
+    val dir = graft.core.Fixtures.tempDir("pq-path").toString
     val df = (0L until 1000L)
       .map(i => (i, s"doc$i", i * 1.5, i % 2 == 0, s"lang${i % 3}"))
       .toDF("id", "title", "score", "flag", "lang")
@@ -360,7 +360,7 @@ class GraftParquetFormatSpec extends AnyFunSuite {
       .schema("k long, v long").load(s"$root/sr/src")
       .writeStream.format("memory").queryName("pq_sr_sink")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("pq-sr").toString)
+        graft.core.Fixtures.tempDir("pq-sr").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     got.awaitTermination(60000)
@@ -652,7 +652,7 @@ class GraftParquetFormatSpec extends AnyFunSuite {
     val q = mem.toDF().toDF("k", "v").writeStream
       .format("graft-jsonl")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("pq-ck").toString)
+        graft.core.Fixtures.tempDir("pq-ck").toString)
       .trigger(Trigger.AvailableNow())
       .toTable("pq.st.t")
     q.awaitTermination(60000)

@@ -13,7 +13,7 @@ class GraftViewSqlSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.vw", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.vw.root",
-      java.nio.file.Files.createTempDirectory("graft-viewsql").toString)
+      graft.core.Fixtures.tempDir("graft-viewsql").toString)
     s.sql("CREATE NAMESPACE IF NOT EXISTS vw.ns")
     s.sql("CREATE TABLE vw.ns.t (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO vw.ns.t VALUES (1, 10), (2, 20), (3, 30)")

@@ -56,7 +56,7 @@ class IngestJobSpec extends AnyFunSuite {
   }
 
   test("transient fetch failures retry with backoff and the run succeeds") {
-    val root = java.nio.file.Files.createTempDirectory("ingest-retry").toString
+    val root = graft.core.Fixtures.tempDir("ingest-retry").toString
     val client = new FlakyClient(Seq(employeeRec("E001", "An", 1717218000000L)),
       failures = 2)
     val notifier = new RecordingNotifier
@@ -72,7 +72,7 @@ class IngestJobSpec extends AnyFunSuite {
   }
 
   test("exhausted retries notify the failure and skip the warehouse build") {
-    val root = java.nio.file.Files.createTempDirectory("ingest-fail").toString
+    val root = graft.core.Fixtures.tempDir("ingest-fail").toString
     val client = new FlakyClient(Seq(employeeRec("E001", "An", 1717218000000L)),
       failures = 99)
     val notifier = new RecordingNotifier
@@ -88,7 +88,7 @@ class IngestJobSpec extends AnyFunSuite {
   }
 
   test("discovered table lands, normalizes, and builds the SCD2 dim") {
-    val root = java.nio.file.Files.createTempDirectory("ingest-job").toString
+    val root = graft.core.Fixtures.tempDir("ingest-job").toString
     val client = new OneTableClient(Seq(
       employeeRec("E001", "An", 1717218000000L),
       employeeRec("E002", "Binh", 1717221600000L)))

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import graft.core.Fixtures
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -23,7 +24,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   private val fixture: String = {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = Fixtures.tempDir("graft_dsv2").toString
     writeShard(dir, "a.jsonl", Seq(
       """{"doc_id": 1, "text": "hello world", "lang": "en", "source": "web", "n_chars": 11}""",
       """{"doc_id": 2, "text": "bonjour", "lang": "fr", "source": "web", "n_chars": 7}""",
@@ -68,7 +69,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
 
   test("parity with the built-in JSON reader on a real corpus slice, gzip shards") {
     val docs = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val dir = Files.createTempDirectory("graft_dsv2_gz").toString
+    val dir = Fixtures.tempDir("graft_dsv2_gz").toString
     JsonlCorpus.write(docs, dir, partitionCol = None) // .json.gz shards
     val viaDsv2 = spark.read.format("graft-jsonl").load(dir)
     assert(viaDsv2.rdd.getNumPartitions >= 1)
@@ -88,7 +89,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("write path: staged commit publishes shards, append accumulates, overwrite truncates") {
-    val out = Files.createTempDirectory("graft_dsv2_write").toString
+    val out = Fixtures.tempDir("graft_dsv2_write").toString
     val a = Seq((1L, "one", "en", "s", 3L), (2L, "two", "fr", "s", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     a.write.format("graft-jsonl").mode("append").save(out)
@@ -108,7 +109,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
 
   test("partitioned layout: values injected from dirs, partitions pruned at planning") {
     val docs = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val dir = Files.createTempDirectory("graft_dsv2_part").toString
+    val dir = Fixtures.tempDir("graft_dsv2_part").toString
     JsonlCorpus.write(docs, dir, partitionCol = Some("lang")) // lang=*/ dirs
     val part = spark.read.format("graft-jsonl").load(dir)
     // full read: lang restored from directory names, full parity
@@ -129,7 +130,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("null partitions round-trip: sentinel dir reads back as SQL null") {
-    val dir = Files.createTempDirectory("graft_dsv2_nullpart").toString
+    val dir = Fixtures.tempDir("graft_dsv2_nullpart").toString
     val docs = Seq(
       (1L, "a", "en", "s", 1L),
       (2L, "b", null.asInstanceOf[String], "s", 1L))
@@ -146,7 +147,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("partition values with '+' and escaped chars survive (no URLDecoder plus-to-space)") {
-    val dir = Files.createTempDirectory("graft_dsv2_plus").toString
+    val dir = Fixtures.tempDir("graft_dsv2_plus").toString
     val docs = Seq((1L, "x", "c++", "s", 1L), (2L, "y", "a b", "s", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     JsonlCorpus.write(docs, dir, partitionCol = Some("lang"))
@@ -157,7 +158,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("two-level hive layout: values injected per level, both keys prune at planning") {
-    val dir = Files.createTempDirectory("graft_dsv2_twolevel").toString
+    val dir = Fixtures.tempDir("graft_dsv2_twolevel").toString
     Seq((1L, "a", "en", "web", 1L), (2L, "b", "en", "book", 1L),
       (3L, "c", "fr", "web", 1L),
       (4L, "d", null.asInstanceOf[String], "web", 1L))
@@ -194,7 +195,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("micro-batch stream works over a partitioned layout") {
-    val dir = Files.createTempDirectory("graft_dsv2_partstream").toString
+    val dir = Fixtures.tempDir("graft_dsv2_partstream").toString
     Seq((1L, "a", "en", "s", 1L), (2L, "b", "fr", "s", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").option("compression", "gzip")
@@ -210,7 +211,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("published shard names embed the write's queryId (cross-application append safety)") {
-    val out = Files.createTempDirectory("graft_dsv2_names").toString
+    val out = Fixtures.tempDir("graft_dsv2_names").toString
     val df = Seq((1L, "a", "en", "s", 1L)).toDF("doc_id", "text", "lang", "source", "n_chars")
     df.write.format("graft-jsonl").mode("append").save(out)
     df.write.format("graft-jsonl").mode("append").save(out)
@@ -223,7 +224,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("overwrite truncates a previously PARTITIONED table recursively") {
-    val dir = Files.createTempDirectory("graft_dsv2_truncpart").toString
+    val dir = Fixtures.tempDir("graft_dsv2_truncpart").toString
     Seq((1L, "a", "en", "s", 1L)).toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").option("compression", "gzip")
       .partitionBy("lang").json(dir)
@@ -235,7 +236,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("micro-batch stream: each batch reads exactly the newly-arrived shards") {
-    val dir = Files.createTempDirectory("graft_dsv2_stream").toString
+    val dir = Fixtures.tempDir("graft_dsv2_stream").toString
     writeShard(dir, "s1.jsonl", Seq(
       """{"doc_id": 1, "text": "a", "lang": "en", "source": "s", "n_chars": 1}"""))
     val stream = spark.readStream.format("graft-jsonl").load(dir)
@@ -256,7 +257,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("append into a partitioned table stays visible (root shards beside partition dirs)") {
-    val dir = Files.createTempDirectory("graft_dsv2_mixed").toString
+    val dir = Fixtures.tempDir("graft_dsv2_mixed").toString
     val base = Seq((1L, "a", "en", "s", 1L), (2L, "b", "fr", "s", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     JsonlCorpus.write(base, dir, partitionCol = Some("lang")) // lang=*/ dirs
@@ -274,7 +275,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("pushed numeric filters coerce to the declared column type (pushdown == residual)") {
-    val dir = Files.createTempDirectory("graft_dsv2_coerce").toString
+    val dir = Fixtures.tempDir("graft_dsv2_coerce").toString
     writeShard(dir, "c.jsonl", Seq(
       """{"doc_id": 1, "text": "frac", "lang": "en", "source": "s", "n_chars": 2.7}""",
       """{"doc_id": 2, "text": "int", "lang": "en", "source": "s", "n_chars": 3}""",
@@ -306,7 +307,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("watermark offsets stay O(1): size does not grow with batch count") {
-    val dir = Files.createTempDirectory("graft_dsv2_o1").toString
+    val dir = Fixtures.tempDir("graft_dsv2_o1").toString
     def doc(i: Int) =
       s"""{"doc_id": $i, "text": "t", "lang": "en", "source": "s", "n_chars": 1}"""
     writeShard(dir, "w0.jsonl", Seq(doc(0)))
@@ -333,8 +334,8 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("stream restart resumes from the checkpointed watermark, no re-read") {
-    val dir = Files.createTempDirectory("graft_dsv2_restart").toString
-    val ckpt = Files.createTempDirectory("graft_dsv2_restart_ckpt").toString
+    val dir = Fixtures.tempDir("graft_dsv2_restart").toString
+    val ckpt = Fixtures.tempDir("graft_dsv2_restart_ckpt").toString
     def doc(i: Int) =
       s"""{"doc_id": $i, "text": "t", "lang": "en", "source": "s", "n_chars": 1}"""
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -363,7 +364,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
     // object-store list gap). latestOffset must hand back the
     // checkpointed offset — a zero offset here would be COMMITTED and
     // replay every shard as a duplicate once the files reappear
-    val gone = Files.createTempDirectory("graft_dsv2_gone").toString + "/missing"
+    val gone = Fixtures.tempDir("graft_dsv2_gone").toString + "/missing"
     val s = new JsonlMicroBatchStream(gone, dsv2.schema, dsv2.schema,
       Array.empty)
     val ckpt = JsonlWatermarkOffset(1700000000000L, Seq("/drop/z.jsonl"))
@@ -386,7 +387,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
     assert(colr.filter(col("text").isNull).select("doc_id")
       .as[Long].collect().sorted === Array(3L, 4L))
     // partitioned layouts: injected values fill vectors too
-    val dir = Files.createTempDirectory("graft_dsv2_colpart").toString
+    val dir = Fixtures.tempDir("graft_dsv2_colpart").toString
     Seq((1L, "a", "en", "s", 1L), (2L, "b", null.asInstanceOf[String], "s", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").option("compression", "gzip")
@@ -397,7 +398,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("write/read round-trip preserves escapes, unicode, and nulls") {
-    val out = Files.createTempDirectory("graft_dsv2_rt").toString
+    val out = Fixtures.tempDir("graft_dsv2_rt").toString
     val tricky = Seq(
       (1L, "line\nbreak and \"quotes\" and \\slash", "en", "s", 1L),
       (2L, "unicode: héllo 中文 🚀", "zh", "s", 2L),
@@ -434,7 +435,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("runtime filtering: an execution-time IN filter prunes partition dirs") {
-    val dir = Files.createTempDirectory("graft_dsv2_rtf").toString
+    val dir = Fixtures.tempDir("graft_dsv2_rtf").toString
     for (lang <- Seq("en", "fr", "de"))
       writeShard(s"$dir/lang=$lang", "p.jsonl", Seq(
         s"""{"doc_id": 1, "text": "x", "lang": "$lang", "source": "s", "n_chars": 1}"""))
@@ -460,7 +461,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("dynamic partition pruning fires on a broadcast join over the partition key") {
-    val dir = Files.createTempDirectory("graft_dsv2_dpp").toString
+    val dir = Fixtures.tempDir("graft_dsv2_dpp").toString
     for (lang <- Seq("en", "fr", "de", "zh"))
       writeShard(s"$dir/lang=$lang", "p.jsonl", (0 until 5).map(i =>
         s"""{"doc_id": $i, "text": "t$i", "lang": "$lang", "source": "s", "n_chars": 2}"""))
@@ -492,7 +493,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("scan reports partition-pruned byte statistics to the planner") {
-    val dir = Files.createTempDirectory("graft_dsv2_stats").toString
+    val dir = Fixtures.tempDir("graft_dsv2_stats").toString
     writeShard(s"$dir/lang=en", "p.jsonl",
       Seq("""{"doc_id": 1, "text": "aaaa", "lang": "en", "source": "s", "n_chars": 4}"""))
     writeShard(s"$dir/lang=fr", "q.jsonl", Seq(
@@ -516,7 +517,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
     val s = spark
     s.conf.set("spark.sql.catalog.nt", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.nt.root",
-      Files.createTempDirectory("graft-nested").toString)
+      Fixtures.tempDir("graft-nested").toString)
     s.sql("CREATE NAMESPACE IF NOT EXISTS nt.ns")
     s.sql("""CREATE TABLE nt.ns.t (
             |  id BIGINT,
@@ -557,7 +558,7 @@ class JsonlDsv2Spec extends AnyFunSuite {
   }
 
   test("external JSONL: ISO temporal text, nested objects, and mismatches read safely") {
-    val dir = Files.createTempDirectory("graft_dsv2_nested").toString
+    val dir = Fixtures.tempDir("graft_dsv2_nested").toString
     writeShard(dir, "x.jsonl", Seq(
       // ISO text forms for temporal; nested object + array
       """{"id": 1, "ts": "2024-03-01T12:30:45.5", "d": "2024-03-01", "meta": {"score": 1.5, "tags": ["x"]}}""",

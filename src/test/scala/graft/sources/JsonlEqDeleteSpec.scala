@@ -15,7 +15,7 @@ class JsonlEqDeleteSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.eq", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.eq.root",
-      java.nio.file.Files.createTempDirectory("graft-eq").toString)
+      graft.core.Fixtures.tempDir("graft-eq").toString)
     s.sql("CREATE NAMESPACE IF NOT EXISTS eq.ns")
     s
   }
@@ -148,7 +148,7 @@ class JsonlEqDeleteSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long)]
     val q = mem.toDS().toDF("k", "v").writeStream
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("eq-st").toString)
+        graft.core.Fixtures.tempDir("eq-st").toString)
       .trigger(Trigger.AvailableNow())
     mem.addData((1L, 10L), (2L, 20L))
     val q1 = q.toTable("eq.ns.st"); q1.awaitTermination(); q1.stop()
@@ -176,7 +176,7 @@ class JsonlEqDeleteSpec extends AnyFunSuite {
           |  'graft.row-level.mode'='merge-on-read')""".stripMargin)
     val q = JsonlChangeFeed.stream(spark, catalog, "ca.up")
       .writeStream.option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("eq-cdc").toString)
+        graft.core.Fixtures.tempDir("eq-cdc").toString)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         val s = df.sparkSession
         import org.apache.spark.sql.functions.col
@@ -522,7 +522,7 @@ class JsonlEqDeleteSpec extends AnyFunSuite {
           |TBLPROPERTIES ('graft.row-level.mode'='merge-on-read')""".stripMargin)
     val q = JsonlChangeFeed.stream(spark, catalog, "cs.up")
       .writeStream.option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("eq-cs").toString)
+        graft.core.Fixtures.tempDir("eq-cs").toString)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         // a wave window holds delete(old)+insert(new) for the same key
         // — typeChanges collapses them so the MERGE sees one source
@@ -774,7 +774,7 @@ class JsonlEqDeleteSpec extends AnyFunSuite {
   test("claim protocol: failed waves tombstone, sequences never reassign") {
     import graft.sources.dsv2.JsonlEqDeletes
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("eq-claims").toString
+    val dir = graft.core.Fixtures.tempDir("eq-claims").toString
     val table = new Path(dir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staleMs = 60000L
@@ -805,7 +805,7 @@ class JsonlEqDeleteSpec extends AnyFunSuite {
       "authoritative — no retired sequence is ever re-claimed") {
     import graft.sources.dsv2.JsonlEqDeletes
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("eq-hwm-crash").toString
+    val dir = graft.core.Fixtures.tempDir("eq-hwm-crash").toString
     val table = new Path(dir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // simulate the delete-then-rename fallback crashing between the
@@ -828,7 +828,7 @@ class JsonlEqDeleteSpec extends AnyFunSuite {
       "stands the overwritten wave down loudly") {
     import graft.sources.dsv2.JsonlEqDeletes
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("eq-token").toString
+    val dir = graft.core.Fixtures.tempDir("eq-token").toString
     val table = new Path(dir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (seq, token) = JsonlEqDeletes.claimNextWithToken(fs, table, 60000L)

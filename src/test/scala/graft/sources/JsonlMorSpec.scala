@@ -22,7 +22,7 @@ class JsonlMorSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.mw", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.mw.root",
-      java.nio.file.Files.createTempDirectory("graft-mor").toString)
+      graft.core.Fixtures.tempDir("graft-mor").toString)
     s
   }
 
@@ -288,7 +288,7 @@ class JsonlMorSpec extends AnyFunSuite {
   test("release verifies ownership: a broken-and-reacquired lock is not deleted") {
     import graft.sources.dsv2.RowLevelLock
     val conf = new org.apache.hadoop.conf.Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("rlo-verify").toFile
+    val dir = graft.core.Fixtures.tempDir("rlo-verify").toFile
     val table = new org.apache.hadoop.fs.Path(dir.toString)
     val fs = table.getFileSystem(conf)
     val a = RowLevelLock.acquire(fs, conf, table, "writer-a")
@@ -314,7 +314,7 @@ class JsonlMorSpec extends AnyFunSuite {
     // only one rename of the stale file succeeds. Race many rounds.
     val conf = new org.apache.hadoop.conf.Configuration()
     (1 to 20).foreach { round =>
-      val dir = java.nio.file.Files.createTempDirectory(s"rlo-race$round").toFile
+      val dir = graft.core.Fixtures.tempDir(s"rlo-race$round").toFile
       val table = new org.apache.hadoop.fs.Path(dir.toString)
       val fs = table.getFileSystem(conf)
       val lockFile = new java.io.File(dir, RowLevelLock.FileName)
@@ -347,7 +347,7 @@ class JsonlMorSpec extends AnyFunSuite {
     import graft.sources.dsv2.RowLevelLock
     val conf = new org.apache.hadoop.conf.Configuration()
     conf.setLong(RowLevelLock.StaleMsKey, 2500L) // heartbeat ≈ every 1s
-    val dir = java.nio.file.Files.createTempDirectory("rlo-beat").toFile
+    val dir = graft.core.Fixtures.tempDir("rlo-beat").toFile
     val table = new org.apache.hadoop.fs.Path(dir.toString)
     val fs = table.getFileSystem(conf)
     val a = RowLevelLock.acquire(fs, conf, table, "long-op")
@@ -533,7 +533,7 @@ class JsonlMorSpec extends AnyFunSuite {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.hadoop.fs.Path
     val table = new Path(
-      java.nio.file.Files.createTempDirectory("graft-scoped-race").toString)
+      graft.core.Fixtures.tempDir("graft-scoped-race").toString)
     val hconf = spark.sessionState.newHadoopConf()
     val fs = table.getFileSystem(hconf)
     fs.mkdirs(table)

@@ -14,7 +14,7 @@ class JsonlSkipIndexSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.sk", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.sk.root",
-      java.nio.file.Files.createTempDirectory("graft-skip").toString)
+      graft.core.Fixtures.tempDir("graft-skip").toString)
     s
   }
   private def sql(q: String) = spark.sql(q)
@@ -144,14 +144,14 @@ class JsonlSkipIndexSpec extends AnyFunSuite {
     sql("CREATE NAMESPACE IF NOT EXISTS sk.st")
     sql("""CREATE TABLE sk.st.sink (k BIGINT, v BIGINT)
           |TBLPROPERTIES ('graft.skip.columns'='k')""".stripMargin)
-    val src = java.nio.file.Files.createTempDirectory("graft-skip-stream").toString
+    val src = graft.core.Fixtures.tempDir("graft-skip-stream").toString
     spark.range(0, 50).selectExpr("id AS k", "id AS v")
       .write.format("graft-jsonl").mode("append").save(src)
     val q = spark.readStream.format("graft-jsonl")
       .schema("k BIGINT, v BIGINT").load(src)
       .writeStream.format("graft-jsonl")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-skip-ck").toString)
+        graft.core.Fixtures.tempDir("graft-skip-ck").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .toTable("sk.st.sink")
     q.awaitTermination(60000)

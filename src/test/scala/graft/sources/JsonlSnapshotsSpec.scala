@@ -14,7 +14,7 @@ class JsonlSnapshotsSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.sn", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.sn.root",
-      java.nio.file.Files.createTempDirectory("graft-snap").toString)
+      graft.core.Fixtures.tempDir("graft-snap").toString)
     s
   }
   private def sql(q: String) = spark.sql(q)
@@ -216,7 +216,7 @@ class JsonlSnapshotsSpec extends AnyFunSuite {
           |TBLPROPERTIES ('graft.row-level.mode'='merge-on-read')""".stripMargin)
     sql("INSERT INTO sn.cs.t VALUES (1, 10), (2, 20), (3, 30)")
     sql("CALL sn.system.snapshot('cs.t')") // v1
-    val ckpt = java.nio.file.Files.createTempDirectory("cf-ckpt").toString
+    val ckpt = graft.core.Fixtures.tempDir("cf-ckpt").toString
     // foreachBatch: the one test sink that supports checkpoint
     // RECOVERY (the memory sink refuses to resume)
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, String)]()
@@ -262,7 +262,7 @@ class JsonlSnapshotsSpec extends AnyFunSuite {
     val q3 = JsonlChangeFeed.stream(spark, catalog, "cs.t", startVersion = 2)
       .writeStream.format("memory").queryName("cf_mem3")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cf-ckpt3").toString).start()
+        graft.core.Fixtures.tempDir("cf-ckpt3").toString).start()
     try {
       q3.processAllAvailable()
       assert(spark.sql("SELECT k FROM cf_mem3").collect()
@@ -409,7 +409,7 @@ class JsonlSnapshotsSpec extends AnyFunSuite {
       (Long, Seq[(Long, String)])]()
     val q = JsonlChangeFeed.stream(spark, catalog, "ac.t")
       .writeStream.option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ac-ckpt").toString)
+        graft.core.Fixtures.tempDir("ac-ckpt").toString)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         val rs = df.select("k", "_change").collect()
           .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
@@ -447,7 +447,7 @@ class JsonlSnapshotsSpec extends AnyFunSuite {
       Seq[(Long, String)]]()
     val q = JsonlChangeFeed.stream(spark, catalog, "au.t")
       .writeStream.option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("au-ckpt").toString)
+        graft.core.Fixtures.tempDir("au-ckpt").toString)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         val rs = df.select("k", "_change").collect()
           .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
@@ -623,7 +623,7 @@ class JsonlSnapshotsSpec extends AnyFunSuite {
           |TBLPROPERTIES ('graft.row-level.mode'='merge-on-read')""".stripMargin)
     val q = JsonlChangeFeed.stream(spark, catalog, "cdc.up")
       .writeStream.option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cdc-apply").toString)
+        graft.core.Fixtures.tempDir("cdc-apply").toString)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         // the canonical CDC-apply MERGE: per-version micro-batches
         // (admission control) make each batch's per-key change
@@ -667,7 +667,7 @@ class JsonlSnapshotsSpec extends AnyFunSuite {
           |TBLPROPERTIES ('graft.row-level.mode'='merge-on-read')""".stripMargin)
     val q = JsonlChangeFeed.stream(spark, catalog, "cdcw.up")
       .writeStream.option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cdcw-apply").toString)
+        graft.core.Fixtures.tempDir("cdcw-apply").toString)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         val typed = JsonlChangeFeed.typeChanges(df, Seq("k"))
           .where(org.apache.spark.sql.functions.col("_change")
@@ -943,7 +943,7 @@ class JsonlSnapshotsSpec extends AnyFunSuite {
     val q = spark.readStream.format("graft-jsonl-changes").load(dir)
       .writeStream
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("an-ckpt").toString)
+        graft.core.Fixtures.tempDir("an-ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         val ks = df.select("k").collect().map(_.getLong(0)).sorted.toSeq
@@ -961,7 +961,7 @@ class JsonlSnapshotsSpec extends AnyFunSuite {
       .option("maxVersionsPerBatch", 10).load(dir)
       .writeStream
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("an-ckpt2").toString)
+        graft.core.Fixtures.tempDir("an-ckpt2").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         val ks = df.select("k").collect().map(_.getLong(0)).sorted.toSeq

@@ -18,7 +18,7 @@ class JsonlSpjSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val root: String = {
-    val r = java.nio.file.Files.createTempDirectory("graft-spj-spec").toString
+    val r = graft.core.Fixtures.tempDir("graft-spj-spec").toString
     val facts = Seq(
       (1L, "en", 10L), (2L, "en", 20L), (3L, "en", 30L), (4L, "en", 40L),
       (5L, "de", 5L), (6L, "de", 15L), (7L, "fr", 7L), (8L, "fr", 9L))
@@ -130,7 +130,7 @@ class JsonlSpjSpec extends AnyFunSuite {
     // post-cluster_table shape) — nothing is grouped, both reported
     // orderings hold, and the join is a pure zero-shuffle zero-sort
     // merge of the co-located layouts
-    val r2 = java.nio.file.Files.createTempDirectory("graft-spj-one").toString
+    val r2 = graft.core.Fixtures.tempDir("graft-spj-one").toString
     val facts1 = Seq(
       (1L, "en", 10L), (2L, "en", 20L), (5L, "de", 5L), (7L, "fr", 7L))
       .toDF("id", "lang", "v")
@@ -164,7 +164,7 @@ class JsonlSpjSpec extends AnyFunSuite {
   }
 
   test("flat (unpartitioned) layout never reports key grouping") {
-    val flat = java.nio.file.Files.createTempDirectory("graft-spj-flat").toString
+    val flat = graft.core.Fixtures.tempDir("graft-spj-flat").toString
     Seq((1L, "en", 2L)).toDF("id", "lang", "v").write
       .json(s"$flat/t")
     val df = spark.read.format("graft-jsonl").schema(factSchema)

@@ -13,7 +13,7 @@ class JsonlStreamingWriteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.core.Fixtures.tempDir(prefix).toString
 
   test("epochs append staged shards; restart resumes without duplicates") {
     import spark.implicits._

@@ -67,7 +67,7 @@ class LarkSourceSpec extends AnyFunSuite {
   }
 
   test("incremental ingest: watermark filter, landing round-trip, day-boundary rule") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-landing").toString
+    val dir = graft.core.Fixtures.tempDir("graft-landing").toString
     val state = new IngestionState(s"$dir/state.json")
     val d1 = LocalDate.parse("2024-06-01")
     val recs = Seq(
@@ -100,7 +100,7 @@ class LarkSourceSpec extends AnyFunSuite {
   }
 
   test("landing CSV index is contiguous 0..n-1 for multi-partition input") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-idx").toString
+    val dir = graft.core.Fixtures.tempDir("graft-idx").toString
     val df = spark.range(10).selectExpr("CAST(id AS STRING) AS v").repartition(4)
     LarkSource.writeLandingCsv(df, dir, "tblIdx", "2024-06-01")
     val raw = spark.read.option("header", "true")

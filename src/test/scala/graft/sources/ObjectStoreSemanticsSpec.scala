@@ -62,7 +62,7 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite {
       classOf[ObjectStoreLikeFileSystem].getName)
     s.conf.set("spark.sql.catalog.os", "graft.sources.dsv2.GraftCatalog")
     s.conf.set("spark.sql.catalog.os.root", "oslike://" +
-      java.nio.file.Files.createTempDirectory("graft-oslike").toString)
+      graft.core.Fixtures.tempDir("graft-oslike").toString)
     s
   }
   private def sql(q: String) = spark.sql(q)
@@ -153,8 +153,8 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite {
     conf.set("fs.oslike.impl", classOf[ObjectStoreLikeFileSystem].getName)
     var multiWins = 0
     (1 to 15).foreach { round =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"oslike-rlo$round").toFile
+      val dir = graft.core.Fixtures
+        .tempDir(s"oslike-rlo$round").toFile
       val table = new Path("oslike://" + dir.toString)
       val fs = table.getFileSystem(conf)
       val lockFile = new java.io.File(dir, RowLevelLock.FileName)

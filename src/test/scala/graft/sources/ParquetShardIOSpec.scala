@@ -21,7 +21,7 @@ class ParquetShardIOSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   test("full type lattice round-trips; column pruning + missing-column nulls") {
-    val dir = java.nio.file.Files.createTempDirectory("pq-io").toString
+    val dir = graft.core.Fixtures.tempDir("pq-io").toString
     val file = new Path(dir, "s0.parquet")
     val schema = StructType(Seq(
       StructField("l", LongType), StructField("i", IntegerType),
@@ -122,7 +122,7 @@ class ParquetShardIOSpec extends AnyFunSuite {
 
   test("row-group pruning skips groups by footer stats; record-level " +
       "assembly stays off; footer aggregates fold across groups") {
-    val dir = java.nio.file.Files.createTempDirectory("pq-rg").toString
+    val dir = graft.core.Fixtures.tempDir("pq-rg").toString
     val file = new Path(dir, "rg.parquet")
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("s", StringType)))

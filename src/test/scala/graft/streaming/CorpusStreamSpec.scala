@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import graft.core.Fixtures
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sources.JsonlCorpus
@@ -31,7 +32,7 @@ class CorpusStreamSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
 
   test("quality-filters, dedups in and across batches, replays idempotently") {
-    val base = Files.createTempDirectory("corpus_stream").toString
+    val base = Fixtures.tempDir("corpus_stream").toString
     val (in, corpus, ck) = (s"$base/in", s"$base/corpus", s"$base/ck")
     Files.createDirectories(Paths.get(in))
 
@@ -61,7 +62,7 @@ class CorpusStreamSpec extends AnyFunSuite {
   }
 
   test("nearDupIngest: lightly-edited re-posts are caught by the signature index across epochs") {
-    val base = Files.createTempDirectory("neardup_stream").toString
+    val base = Fixtures.tempDir("neardup_stream").toString
     val (in, corpus, idx, ck) = (s"$base/in", s"$base/corpus", s"$base/idx", s"$base/ck")
     Files.createDirectories(Paths.get(in))
     def run(): Unit = {
@@ -102,7 +103,7 @@ class CorpusStreamSpec extends AnyFunSuite {
   }
 
   test("corrupt jsonl lines are excluded from the stream and counted in batch") {
-    val base = Files.createTempDirectory("corpus_corrupt").toString
+    val base = Fixtures.tempDir("corpus_corrupt").toString
     val in = s"$base/in"
     Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(s"$in/mixed.jsonl"), java.util.Arrays.asList(
@@ -119,7 +120,7 @@ class CorpusStreamSpec extends AnyFunSuite {
 
   test("jsonl round-trip: partitioned write reads back identically") {
     import spark.implicits._
-    val base = Files.createTempDirectory("jsonl_rt").toString
+    val base = Fixtures.tempDir("jsonl_rt").toString
     val docs = Seq(
       (1L, "plain ascii text", "en", "s1"),
       (2L, "quotes \" and backslash \\ and tab\tsurvive", "en", "s2"),

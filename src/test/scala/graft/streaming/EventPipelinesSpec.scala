@@ -145,9 +145,9 @@ class EventPipelinesSpec extends AnyFunSuite {
 
   test("mergeStream lands micro-batches as keyed merges into the lake") {
     import spark.implicits._
-    val lake = java.nio.file.Files.createTempDirectory("stream-lake").toString
-    val src = java.nio.file.Files.createTempDirectory("stream-src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("stream-ckpt").toString
+    val lake = graft.core.Fixtures.tempDir("stream-lake").toString
+    val src = graft.core.Fixtures.tempDir("stream-src").toString
+    val ckpt = graft.core.Fixtures.tempDir("stream-ckpt").toString
 
     def writeBatch(rows: Seq[(Long, Long, Long, String, Double, String)]): Unit =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -152,7 +152,7 @@ class StateV2Spec extends AnyFunSuite {
 
   test("ListState TTL: the store evicts idle state; an ample TTL carries it") {
     import spark.implicits._
-    import java.nio.file.Files
+    import graft.core.Fixtures
     withRocksDb {
       // TTL requires TimeMode.ProcessingTime, whose no-data batches
       // never settle under MemoryStream.processAllAvailable — so this
@@ -160,8 +160,8 @@ class StateV2Spec extends AnyFunSuite {
       // shared checkpoint (fresh query per batch, state restored from
       // the store between runs).
       def run(ttl: java.time.Duration): Seq[StateV2.VelocityAlert] = {
-        val eventsDir = Files.createTempDirectory("vel_ttl_ev").toString
-        val ckpt = Files.createTempDirectory("vel_ttl_ck").toString
+        val eventsDir = Fixtures.tempDir("vel_ttl_ev").toString
+        val ckpt = Fixtures.tempDir("vel_ttl_ck").toString
         val got = scala.collection.mutable.ArrayBuffer.empty[StateV2.VelocityAlert]
         val schema =
           org.apache.spark.sql.Encoders.product[EventPipelines.Event].schema

@@ -2,7 +2,6 @@ package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -19,20 +18,16 @@ import graft.TestSpark
   *     version, payments join post-merge dim state (etl.py:566-578);
   *   - re-running day 2 is a no-op (watermark-shaped idempotence).
   *
-  * The lake is a temp dir, deleted when the suite ends.
+  * The lake is a temp dir, deleted when the test JVM exits.
   */
-class GoldenPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GoldenPipelineSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
   private val landing = new java.io.File("fixtures").getAbsolutePath
   private lazy val lake =
-    java.nio.file.Files.createTempDirectory("graft-golden-lake").toString
+    graft.core.Fixtures.tempDir("graft-golden-lake").toString
   private lazy val pipe = new Pipeline(spark, landing, lake)
-
-  override def afterAll(): Unit =
-    try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(lake))
-    finally super.afterAll()
 
   private def fmt(c: String): org.apache.spark.sql.Column =
     date_format(col(c), "yyyy-MM-dd HH:mm:ss")

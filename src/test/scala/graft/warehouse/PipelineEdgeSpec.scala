@@ -1,7 +1,7 @@
 package graft.warehouse
 
 import java.io.File
-import java.nio.file.Files
+import graft.core.Fixtures
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.commons.io.FileUtils
@@ -25,7 +25,7 @@ class PipelineEdgeSpec extends AnyFunSuite {
 
   /** A temp dir for one test, deleted when the test ends. */
   private def withTempDir(prefix: String)(body: String => Unit): Unit = {
-    val dir = Files.createTempDirectory(prefix).toFile
+    val dir = Fixtures.tempDir(prefix).toFile
     try body(dir.toString) finally FileUtils.deleteDirectory(dir)
   }
 

@@ -1,32 +1,22 @@
 package graft.warehouse
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import java.nio.file.Files
+import graft.core.Fixtures
 
 /** Pointer-commit versioned table: publish/read round-trip, snapshot
   * isolation for in-flight readers, time travel, CDC diff, crash
   * (pointer-never-moved) recovery, and vacuum retention rules. Each
-  * table lives in a temp dir, deleted when the suite ends.
+  * table lives in a temp dir, deleted when the test JVM exits.
   */
-class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
+class VersionedTableSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
-
-  private def tmpRoot(): String = {
-    val dir = Files.createTempDirectory("graft-vt")
-    dirs += dir.toFile
-    dir.resolve("tbl").toString
-  }
-
-  override def afterAll(): Unit =
-    try dirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-    finally super.afterAll()
+  private def tmpRoot(): String =
+    Fixtures.tempDir("graft-vt").resolve("tbl").toString
 
   test("publish assigns increasing versions; read resolves the latest") {
     val root = tmpRoot()
