@@ -1,7 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, sum, xxhash64}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import scala.collection.mutable.LinkedHashMap
+import graft.perf.Harness
+import graft.perf.Harness.Json.{num, obj, str}
 
 /** Benchmark main: times each registered query at SPARK_GRAFT_SF_DIR.
   *
@@ -15,19 +17,13 @@ import scala.collection.mutable.LinkedHashMap
   * query is reported explicitly under "errors" — never folded into a
   * timing.
   *
-  * The sink hashes EVERY output column (`xxhash64` over all columns,
-  * summed): a bare `count()` would let Catalyst prune the projection-
-  * only operators being benchmarked (simhash, token counts,
-  * fingerprints would degenerate to zero-column row counts).
+  * The sink hashes EVERY output column ([[Harness.hashSink]]).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = graft.core.GraftSession.applyConfigs(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 4)
 
     // prove the star-schema dim keys, then enable eager aggregation
     // for the suite session (see SuiteTuning)
@@ -36,34 +32,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY=q59,q61 — iterate on a slice of the suite
     // locally; unset (the driver) runs everything
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(f => f.exists(n.startsWith)))
-    val errors = LinkedHashMap[String, String]()
-    def timeOne(name: String): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-          .agg(sum("__h")).head()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-          .replaceAll("\\s+", " ").take(200)
-        None
-      } finally {
-        // drop blocks the query materialized (localCheckpoint/persist
-        // hooks) OUTSIDE the timed region — and on the FAILURE path
-        // too (a query that checkpoints then throws would otherwise
-        // pin its blocks for the rest of the suite): left to the
-        // weak-ref ContextCleaner they pile up across the 4-pass suite
-        // until one arbitrary query absorbs the resulting full-GC +
-        // cleaner flush (q76 6.3s in r4 at 8g, q66 6.5s at 16g —
-        // roving with heap size; both ~1s in isolation)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
-    }
+    val names = Harness.queries(only)
 
     // warmup pass, untimed — but instrumented to ATTRIBUTE the
     // per-query floor (round-17 verdict: low/high-core scaling ratios
@@ -73,72 +42,48 @@ object Bench {
     // planning of the exact sink plan the timed reps execute, exec =
     // the warmup execution itself. Written to the full artifact as
     // queries_build/queries_plan (addition-only fields; the timed
-    // methodology below is unchanged).
+    // methodology below is unchanged). Failures are reported from the
+    // timed runs.
     val buildSec = LinkedHashMap[String, Double]()
     val planSec = LinkedHashMap[String, Double]()
     names.foreach { name =>
-      try {
+      Harness.attempt(spark) {
         val t0 = System.nanoTime()
         val df = SparkEntry.queries(name)(spark, sfDir)
         val t1 = System.nanoTime()
-        val sink = df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-          .agg(sum("__h"))
+        val sink = Harness.hashSink(df)
         sink.queryExecution.executedPlan
         val t2 = System.nanoTime()
         sink.head()
         buildSec(name) = (t1 - t0) / 1e9
         planSec(name) = (t2 - t1) / 1e9
-      } catch { case _: Throwable => () // reported from the timed runs
-      } finally spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      }
     }
-    errors.clear()            // only report errors from timed runs
-    // (median, min) per query. Between queries the JVM is SETTLED:
-    // System.gc() forces the weak-ref processing the ContextCleaner
-    // waits on and the sleep lets its queue drain, so the garbage one
-    // query leaves behind is paid between timings instead of being
-    // absorbed as a roving full-GC outlier by an arbitrary later query
-    // (q76 6.3s in r4, q55 5.4s in r5 — both sub-second isolated).
-    // The min rides along as the noise floor: a median far above its
-    // min flags residual interference rather than a real regression.
-    val timings: Seq[(String, Option[(Double, Double, Double)])] = names.map { n =>
-      System.gc()
-      Thread.sleep(100L)
-      val runs = (1 to reps).flatMap(_ => timeOne(n))
-      n -> (if (runs.isEmpty) None
-            else Some((runs.sorted.apply(runs.size / 2), runs.min, runs.max)))
+    // per query: settle once (Harness.settle), then the timed reps; the
+    // min rides along as the noise floor and max - min as the spread
+    val errors = LinkedHashMap[String, String]()
+    val timings = names.flatMap { n =>
+      Harness.settle()
+      val runs = (1 to reps).flatMap { _ =>
+        Harness.attempt(spark)(Harness.seconds(
+          Harness.hashSink(SparkEntry.queries(n)(spark, sfDir)).head()))
+          .left.map(e => errors(n) = Option(e.getMessage)
+            .getOrElse(e.getClass.getName).replaceAll("\\s+", " ").take(200))
+          .toOption
+      }
+      Option.when(runs.nonEmpty)(n -> Harness.Reps.of(runs))
     }
-
-    // locale-safe number text + full control-char escaping (same
-    // contract as Verify's oracle_sql.json writer: a stray control
-    // char or comma-decimal would break the driver's json.load)
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = timings.collect { case (k, Some((med, _, _))) => q(k) + ":" + num(med) }
-      .mkString("{", ",", "}")
-    val qsMin = timings.collect { case (k, Some((_, mn, _))) => q(k) + ":" + num(mn) }
-      .mkString("{", ",", "}")
+    def field(f: Harness.Reps => Double): String =
+      obj(timings.map { case (k, r) => k -> num(f(r)) })
+    def secs(m: LinkedHashMap[String, Double]): String =
+      obj(m.map { case (k, v) => k -> num(v) })
+    val errJson = obj(errors.map { case (k, v) => k -> str(v) })
+    val total = num(timings.map(_._2.median).sum)
     // per-query spread (max - min over the reps): the variance witness
     // — a round-over-round median swing SMALLER than the query's own
     // spread is harness noise, not a regression (the r9 verdict burned
     // an investigation on exactly that ambiguity)
-    val qsSpread = timings.collect { case (k, Some((_, mn, mx))) =>
-      q(k) + ":" + num(mx - mn) }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => q(k) + ":" + q(v) }
-      .mkString("{", ",", "}")
-    val total = num(timings.flatMap(_._2.map(_._1)).sum)
-    // floor attribution from the instrumented warmup pass (see above)
-    val qsBuild = buildSec.map { case (k, v) => q(k) + ":" + num(v) }
-      .mkString("{", ",", "}")
-    val qsPlan = planSec.map { case (k, v) => q(k) + ":" + num(v) }
-      .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qsMin,"queries_spread":$qsSpread,"queries_build":$qsBuild,"queries_plan":$qsPlan,"errors":$errJson,"reps":$reps,"sf":${q(sfDir)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${field(_.median)},"queries_min":${field(_.min)},"queries_spread":${field(r => r.max - r.min)},"queries_build":${secs(buildSec)},"queries_plan":${secs(planSec)},"errors":$errJson,"reps":$reps,"sf":${str(sfDir)}}"""
     // the driver's per-round artifact keeps only a ~2000-char TAIL of
     // stdout AND parses it as one JSON document: the full per-query
     // line exceeds the window (round-12..14 `parsed: null` symptom),
@@ -146,34 +91,30 @@ object Bench {
     // therefore carries ONE compact, self-contained JSON line —
     // headline numbers + the slowest queries — and nothing else; the
     // committed BENCH_FULL.json artifact carries every timing.
-    val slowest = timings.collect { case (k, Some((med, _, _))) => (k, med) }
-      .toSeq.sortBy(-_._2).take(15)
-      .map { case (k, v) => q(k) + ":" + num(v) }.mkString("{", ",", "}")
-    val summary = s"""{"metric":"total","value":$total,"unit":"sec","queries":$slowest,"errors":$errJson,"reps":$reps,"sf":${q(sfDir)},"n_queries":${timings.count(_._2.isDefined)},"note":"slowest 15 shown; full per-query data in BENCH_FULL.json"}"""
+    val slowest = obj(timings.sortBy(-_._2.median).take(15)
+      .map { case (k, r) => k -> num(r.median) })
+    val summary = s"""{"metric":"total","value":$total,"unit":"sec","queries":$slowest,"errors":$errJson,"reps":$reps,"sf":${str(sfDir)},"n_queries":${timings.size},"note":"slowest 15 shown; full per-query data in BENCH_FULL.json"}"""
     // 2500 leading newlines push every earlier stdout line (sbt's
     // project-load banner rides stdout even with StdoutOutput) out of
     // the driver's 2000-char tail window, so the window holds ONLY
     // whitespace + this line — which strict json.loads accepts
     // (leading whitespace is skipped) and line-wise parsers accept too
     println("\n" * 2500 + summary)
+    def save(path: String, text: String): Unit =
+      try Files.write(Paths.get(path), (text + "\n").getBytes(UTF_8))
+      catch { case e: Exception =>
+        System.err.println(s"bench write of $path failed: $e") }
     // belt-and-braces for the driver parse (rounds 13-15 recorded
     // `parsed: null`): the SAME summary goes to a file too, and
     // build.sbt routes forked stdout through VERBATIM (StdoutOutput,
     // showSuccess=false) so the line above is the last BARE line on
     // stdout — no `[info] ` prefix, no `[success]` trailer
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SUMMARY.json"),
-      (summary + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception =>
-      System.err.println(s"bench summary write failed: $e") }
+    save("BENCH_SUMMARY.json", summary)
     // the driver's per-round artifact keeps only a 2000-char TAIL of
     // stdout, hiding ~2/3 of the suite's timings — persist the same
     // JSON line as a committed file so every timing is reviewable
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-    if (outFile.nonEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: Exception =>
-        System.err.println(s"bench artifact write failed: $e") }
+    if (outFile.nonEmpty) save(outFile, line)
     // EVERY full-suite run additionally lands in its own
     // BENCH_FULL_run<N>.json (N = first free integer), so no run can
     // overwrite another — the round-16 drift analysis lost run 1 to
@@ -181,14 +122,8 @@ object Bench {
     // (SPARK_GRAFT_BENCH_ONLY) skip this: partial timings would read
     // as mysteriously-fast full runs.
     if (only.isEmpty)
-      try {
-        val runFile = Iterator.from(1)
-          .map(i => java.nio.file.Paths.get(s"BENCH_FULL_run$i.json"))
-          .find(p => !java.nio.file.Files.exists(p)).get
-        java.nio.file.Files.write(runFile,
-          (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } catch { case e: Exception =>
-        System.err.println(s"bench per-run artifact write failed: $e") }
+      save(Iterator.from(1).map(i => s"BENCH_FULL_run$i.json")
+        .find(p => !Files.exists(Paths.get(p))).get, line)
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+import graft.perf.Harness
+import graft.perf.Harness.Json.{num, str}
 
 /** A/B micro-harness for the eager-aggregation rewrites: wall +
   * SHUFFLE-WRITE volume (records/bytes via task-metrics listener) with
@@ -20,12 +22,8 @@ import org.apache.spark.sql.functions._
 object EagerAbBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    val spark = graft.core.GraftSession.applyConfigs(
-      org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCpus = 32, logLevel = "ERROR")
 
     val recs = new java.util.concurrent.atomic.AtomicLong
     val bytes = new java.util.concurrent.atomic.AtomicLong
@@ -46,7 +44,7 @@ object EagerAbBench {
     // pre-aggregation into shuffle-volume savings
     val tmp = graft.core.Fixtures.tempDir("graft-eagerab").toString
     spark.read.parquet(s"$sfDir/orders.parquet")
-      .repartition(cpus.toInt, col("o_custkey"))
+      .repartition(spark.sparkContext.defaultParallelism, col("o_custkey"))
       .sortWithinPartitions("o_custkey")
       .write.mode("overwrite").parquet(s"$tmp/oc.parquet")
     graft.operators.CatalogStats.verifyUnique(
@@ -72,24 +70,18 @@ object EagerAbBench {
       spark.conf.set("spark.graft.eagerAgg.enabled", on.toString)
       q.collect() // warmup (codegen + page cache), outside the counters
       recs.set(0); bytes.set(0)
-      var walls = List.empty[Double]
       var check = 0L
-      (1 to reps).foreach { _ =>
-        val t0 = System.nanoTime()
-        check = q.agg(sum(xxhash64(col("c_mktsegment"), col("total"),
-          col("n"), col("max_ok")))).head().getLong(0)
-        walls ::= (System.nanoTime() - t0) / 1e9
+      val wall = Harness.timeReps(reps) {
+        check = Harness.hashSink(q).head().getLong(0)
       }
-      (walls.sorted.apply(reps / 2), recs.get / reps, bytes.get / reps, check)
+      (wall.median, recs.get / reps, bytes.get / reps, check)
     }
     val off = run(on = false)
     val onr = run(on = true)
     require(off._4 == onr._4,
       s"A/B results diverged: hash ${off._4} vs ${onr._4}")
-    def f(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    println(s"""{"shape":"left_outer_enrich","sf":"$sfDir","reps":$reps,""" +
-      s""""wall_off":${f(off._1)},"wall_on":${f(onr._1)},""" +
+    println(s"""{"shape":"left_outer_enrich","sf":${str(sfDir)},"reps":$reps,""" +
+      s""""wall_off":${num(off._1)},"wall_on":${num(onr._1)},""" +
       s""""shuffle_recs_off":${off._2},"shuffle_recs_on":${onr._2},""" +
       s""""shuffle_bytes_off":${off._3},"shuffle_bytes_on":${onr._3},""" +
       s""""results_equal":true}""")

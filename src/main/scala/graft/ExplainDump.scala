@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.FormattedMode
+import graft.perf.Harness
 
 /** Plan-evidence dumper for the optimization rounds: writes
   * `.explain("formatted")` for registered queries to text files, one
@@ -24,31 +25,18 @@ import java.nio.file.{Files, Paths}
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_DIR", "plans/r17")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "before")
-    val spark = graft.core.GraftSession.applyConfigs(
-      org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCpus = 4, logLevel = "ERROR")
     SuiteTuning.enableEagerAgg(spark, sfDir)
     Files.createDirectories(Paths.get(outDir))
-    val only = sys.env.get("SPARK_GRAFT_EXPLAIN_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(f => f.exists(n.startsWith)))
-    names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val text = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
-          text.getBytes(StandardCharsets.UTF_8))
-        println(s"[explain] $name -> $outDir/${name}_$suffix.txt")
-      } catch { case e: Throwable =>
-        println(s"[explain] $name ERROR ${e.getMessage}")
-      } finally spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+    Harness.queries(sys.env.get("SPARK_GRAFT_EXPLAIN_ONLY")).foreach { name =>
+      val out = s"$outDir/${name}_$suffix.txt"
+      Harness.attempt(spark) {
+        Files.writeString(Paths.get(out), SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.explainString(FormattedMode))
+        println(s"[explain] $name -> $out")
+      }.left.foreach(e => println(s"[explain] $name ERROR ${e.getMessage}"))
     }
     spark.stop()
   }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Fixtures
+import graft.perf.Harness
+import graft.perf.Harness.Json.{num, obj, str}
 
 /** Maintenance-operation benchmark: wall-times the catalog MAINTENANCE
   * path (CTAS ingest → snapshot → build_skip_index → cluster_table →
@@ -18,22 +20,14 @@ import org.apache.spark.sql.SparkSession
 object MaintBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nShards = sys.env.getOrElse("SPARK_GRAFT_MAINT_SHARDS", "32").toInt
-    val spark = graft.core.GraftSession.applyConfigs(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val c = spark.newSession()
-    c.conf.set("spark.sql.catalog.mb", "graft.sources.dsv2.GraftCatalog")
-    c.conf.set("spark.sql.catalog.mb.root",
-      graft.core.Fixtures.tempDir("graft-maintbench").toString)
-    val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def timed(name: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      body
-      timings(name) = math.rint((System.nanoTime() - t0) / 1e6) / 1e3
+    val spark = Harness.session(defaultCpus = 4)
+    val c = Fixtures.catalogSession(spark, sfDir, "graft-maintbench", "mb") {
+      _.sql("CREATE NAMESPACE mb.m")
     }
-    c.sql("CREATE NAMESPACE mb.m")
+    val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
+    def timed(name: String)(body: => Any): Unit =
+      timings(name) = Harness.seconds(body)
     timed("ctas_ingest") {
       c.sql(
         s"""CREATE TABLE mb.m.orders
@@ -284,49 +278,10 @@ object MaintBench {
       c.sql("SELECT min(o_orderkey), max(o_orderkey), count(*) " +
         "FROM mb.m.ck").collect()
     }
-    // at-rest format comparison (round 15): the SAME lineitem rows as
-    // gzip line-JSON vs zstd parquet twins under one catalog. The
-    // pruned-projection row is the columnar tier's reason to exist —
-    // 2 columns of an 11-column table decode ~2/11ths of a parquet
-    // shard but ALWAYS parse whole JSON lines — and the bytes row
-    // prices the at-rest footprint. Rows land in BASELINE.md.
-    for (fmt <- Seq("jsonl", "parquet")) {
-      timed(s"fmt_${fmt}_ingest") {
-        c.sql(
-          s"""CREATE TABLE mb.m.li_$fmt
-             |TBLPROPERTIES ('graft.format'='$fmt') AS
-             |SELECT /*+ REPARTITION($nShards) */ *
-             |FROM parquet.`$sfDir/lineitem.parquet`""".stripMargin)
-      }
-      timed(s"fmt_${fmt}_scan_full_agg") {
-        c.sql(
-          s"""SELECT l_returnflag, l_linestatus, count(*),
-             |  sum(l_quantity), sum(l_extendedprice),
-             |  avg(l_discount), max(l_shipdate)
-             |FROM mb.m.li_$fmt
-             |GROUP BY l_returnflag, l_linestatus""".stripMargin).collect()
-      }
-      timed(s"fmt_${fmt}_scan_2col_projection") {
-        c.sql(s"SELECT sum(l_extendedprice * (1 - l_discount)) " +
-          s"FROM mb.m.li_$fmt").collect()
-      }
-      timed(s"fmt_${fmt}_scan_filtered") {
-        c.sql(s"SELECT count(*), sum(l_quantity) FROM mb.m.li_$fmt " +
-          "WHERE l_returnflag = 'A'").collect()
-      }
-      locally {
-        val d = new org.apache.hadoop.fs.Path(
-          c.conf.get("spark.sql.catalog.mb.root") + s"/m/li_$fmt")
-        val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bytes = fs.getContentSummary(d).getLength
-        timings(s"fmt_${fmt}_bytes_mb") = math.rint(bytes / 1e4) / 1e2
-      }
-    }
-    val total = math.rint(timings.values.sum * 1000) / 1e3
-    val q = timings.map { case (k, v) => s""""$k":$v""" }.mkString(",")
     // one JSON line, Bench's shape, so the same tooling parses it
-    println(s"""{"metric":"maint_total","value":$total,"unit":"sec",""" +
-      s""""queries":{$q},"shards":$nShards,"sf":"$sfDir"}""")
+    println(s"""{"metric":"maint_total","value":${num(timings.values.sum)},""" +
+      s""""unit":"sec","queries":${obj(timings.map { case (k, v) => k -> num(v) })},""" +
+      s""""shards":$nShards,"sf":${str(sfDir)}}""")
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.perf.Harness
+
 /** Fleet-wide scan-amplification audit: executes every registered
   * query at sf0.001 and reports how many parquet scans its FINAL
   * adaptive plan performs per distinct input table — the metric that
@@ -26,14 +28,11 @@ package graft
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.applyConfigs(
-      org.apache.spark.sql.SparkSession.builder().master("local[4]"), 4)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCpus = 4, logLevel = "ERROR")
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sf)
+    Harness.queries(only = None).foreach { name =>
+      Harness.attempt(spark) {
+        val df = SparkEntry.queries(name)(spark, sf)
         df.collect()
         val full = df.queryExecution.executedPlan.toString
         val p = full.split("== Initial Plan ==").head
@@ -42,10 +41,7 @@ object PlanAudit {
           .findAllMatchIn(p).map(_.matched).toSet.size
         val flag = if (tables > 0 && scans > 3 * tables) "  <-- AMPLIFIED" else ""
         println(f"[audit] $name%-34s scans=$scans%2d tables=$tables%d$flag")
-      } catch {
-        case e: Throwable => println(s"[audit] $name ERROR ${e.getMessage}")
-      } finally spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      }.left.foreach(e => println(s"[audit] $name ERROR ${e.getMessage}"))
     }
     spark.stop()
   }

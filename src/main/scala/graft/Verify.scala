@@ -1,15 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.perf.Harness
+import graft.perf.Harness.Json.{obj, str}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.applyConfigs(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 4)
     // Fail fast on HUGEINT-prone oracle SQL before dumping anything —
     // see OracleLint (this class of bug cost gate rows in rounds 1 and 2).
     OracleLint.check(SparkEntry.oracleSql)
@@ -19,50 +17,24 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q138,q141 — dump a slice while iterating
     // locally; unset (the driver) dumps everything
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    Harness.queries(sys.env.get("SPARK_GRAFT_VERIFY_ONLY")).foreach { name =>
+      def dump(df: => org.apache.spark.sql.DataFrame) = Harness.attempt(spark)(
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      dump(SparkEntry.queries(name)(spark, sfDir)).left.foreach { e =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // Still emit a dump for the failed query: a one-row parquet whose
         // schema can never match any oracle, so the driver's compare
         // records a loud rows/schema/hash mismatch instead of silently
         // omitting the query from CORRECTNESS (round 6 lost q32 this way
         // — the report read fully green while the bench was failing).
-        try {
-          import spark.implicits._
-          Seq(s"$name FAILED: ${e.toString.take(500)}")
-            .toDF("graft_query_error").coalesce(1)
-            .write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e2: Throwable =>
-          System.err.println(s"[verify] $name error-dump also failed: ${e2.getMessage}")
-        }
-      } finally
-        // queries with localCheckpoint/persist hooks leave blocks
-        // behind; drop them so the 90+-query dump doesn't accumulate
-        // storage memory (same hygiene as Bench.timeOne)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        import spark.implicits._
+        dump(Seq(s"$name FAILED: ${e.toString.take(500)}")
+          .toDF("graft_query_error")).left.foreach(e2 => System.err.println(
+            s"[verify] $name error-dump also failed: ${e2.getMessage}"))
+      }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.map { case (k, v) => k -> str(v) }))
     spark.stop()
   }
 }

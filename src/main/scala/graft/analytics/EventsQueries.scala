@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.functions.Exact._
 
 /** Event-stream analytics over the `events` table (SURVEY.md ST4 and
@@ -435,8 +435,8 @@ object EventsQueries {
       .select(col("ts"), to_date(col("ts")).as("d"), col("event_type"),
         lit(1L).as("n_events"), dec(col("value"), 18, 2).as("total_value"),
         col("value").as("max_value"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_incr_cube_" +
-      math.abs(dir.hashCode.toLong)
+    val path = Fixtures("graft_incr_cube", dir)(
+      Fixtures.tempDir("graft_incr_cube").toString)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(p, true) // fresh maintenance run per invocation (idempotent)

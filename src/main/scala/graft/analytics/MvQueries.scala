@@ -2,7 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.functions.Exact._
 
 /** Materialized-view serving queries — the
@@ -26,8 +26,8 @@ object MvQueries {
       .write.mode("overwrite").parquet(mvPath)
 
   private def mvPath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_mv_lineitem_" +
-      math.abs(dir.hashCode.toLong)
+    Fixtures("graft_mv_lineitem", dir)(
+      Fixtures.tempDir("graft_mv_lineitem").toString)
 
   private def mvSpec(dir: String): String =
     s"${mvPath(dir)}|$dir/lineitem.parquet|l_returnflag,l_linestatus|" +

@@ -2189,8 +2189,8 @@ object WarehouseQueries {
     * not the maintenance cost). */
   def incrementalJoinView(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.IncrementalJoin
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_incr_join_" +
-      math.abs(dir.hashCode.toLong)
+    val root = Fixtures("graft_incr_join", dir)(
+      Fixtures.tempDir("graft_incr_join").toString)
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(p, true) // fresh maintenance run per invocation (idempotent)

@@ -16,35 +16,43 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** (total row groups, total rows) per parquet path, memoized per
-    * (path, mtime) — footer METADATA only (never results), the same
-    * class of plan-time evidence as [[graft.operators.CatalogStats]]'
-    * uniqueness fingerprints. */
+    * path and replaced when the path's newest data file changes —
+    * footer METADATA only (never results), the same class of plan-time
+    * evidence as [[graft.operators.CatalogStats]]' uniqueness
+    * fingerprints. */
   private val footerMeta =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), (Int, Long)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, (Int, Long))]()
 
   private def rowGroupStats(spark: SparkSession, path: String): (Int, Long) = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // data files only: like Spark's file index, skip `_` metadata and
+    // `.` hidden files (an editor's swap file, an upload's partial part)
     val files = (if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq
                  else Seq(fs.getFileStatus(p)))
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-    val mtime = files.map(_.getModificationTime).maxOption.getOrElse(0L)
-    footerMeta.computeIfAbsent((path, mtime), _ => {
-      var groups = 0
-      var rows = 0L
-      files.foreach { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val bs = r.getFooter.getBlocks
-          groups += bs.size()
-          var i = 0
-          while (i < bs.size()) { rows += bs.get(i).getRowCount; i += 1 }
-        } finally r.close()
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
-      (groups, rows)
-    })
+    val mtime = files.map(_.getModificationTime).maxOption.getOrElse(0L)
+    footerMeta.compute(path, (_, old) =>
+      if (old != null && old._1 == mtime) old
+      else {
+        var groups = 0
+        var rows = 0L
+        files.foreach { st =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromStatus(st, spark.sparkContext.hadoopConfiguration)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try {
+            val bs = r.getFooter.getBlocks
+            groups += bs.size()
+            var i = 0
+            while (i < bs.size()) { rows += bs.get(i).getRowCount; i += 1 }
+          } finally r.close()
+        }
+        (mtime, (groups, rows))
+      })._2
   }
 
   /** Plain parquet scan with SCAN-PARALLELISM REPAIR: the parquet row

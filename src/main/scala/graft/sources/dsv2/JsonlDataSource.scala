@@ -2061,7 +2061,6 @@ final class JsonlMicroBatchStream(path: String, dataSchema: StructType,
 
   private def seen(off: Offset, file: String, mtime: Long): Boolean = off match {
     case JsonlWatermarkOffset(w, recent) => mtime < w || recent.contains(file)
-    case JsonlFilesOffset(files) => files.contains(file)
   }
 
   override def initialOffset(): Offset = JsonlWatermarkOffset(0L, Seq.empty)
@@ -2073,17 +2072,12 @@ final class JsonlMicroBatchStream(path: String, dataSchema: StructType,
   // Spark a zero watermark, commit it, and replay every shard as a
   // duplicate once the files reappear (files are immutable once
   // placed, so forward-only is always safe)
-  @transient private var lastOff: Offset = JsonlWatermarkOffset(0L, Seq.empty)
+  @transient private var lastOff = JsonlWatermarkOffset(0L, Seq.empty)
   // the listing latestOffset derived its offset from, reused by the
   // common planInputPartitions(lastStart, lastOff) call so the
   // scheduling hot path does ONE directory LIST per micro-batch, not
   // two (restart replay for any other offset pair still re-lists)
   @transient private var lastListing: Seq[(String, Long)] = null
-
-  private def lastWatermark: Long = lastOff match {
-    case JsonlWatermarkOffset(w, _) => w
-    case _ => 0L
-  }
 
   override def latestOffset(): Offset = {
     val files = listing()
@@ -2094,7 +2088,7 @@ final class JsonlMicroBatchStream(path: String, dataSchema: StructType,
     // per the maxFileAge contract a shard surfacing with mtime below
     // the committed watermark is "too old" and stays ignored, exactly
     // like Spark's built-in file source
-    val w = math.max(lastWatermark, math.max(0L, maxM - maxFileAgeMs))
+    val w = math.max(lastOff.watermarkMs, math.max(0L, maxM - maxFileAgeMs))
     val off = JsonlWatermarkOffset(w,
       files.collect { case (f, m) if m >= w => f }.sorted)
     lastOff = off
@@ -2104,13 +2098,7 @@ final class JsonlMicroBatchStream(path: String, dataSchema: StructType,
 
   override def deserializeOffset(json: String): Offset = {
     val off = JsonlWatermarkOffset.fromJson(json)
-    (off, lastOff) match {
-      case (n: JsonlWatermarkOffset, c: JsonlWatermarkOffset)
-          if n.watermarkMs >= c.watermarkMs => lastOff = n
-      case (f: JsonlFilesOffset, c: JsonlWatermarkOffset)
-          if c.watermarkMs == 0L && c.recent.isEmpty => lastOff = f
-      case _ => ()
-    }
+    if (off.watermarkMs >= lastOff.watermarkMs) lastOff = off
     off
   }
 
@@ -2179,41 +2167,14 @@ final case class JsonlWatermarkOffset(watermarkMs: Long, recent: Seq[String])
 }
 
 object JsonlWatermarkOffset {
-  /** Parses both offset generations: the watermark object and the
-    * legacy round's plain JSON array of every file ever seen. */
-  def fromJson(json: String)
-      : org.apache.spark.sql.connector.read.streaming.Offset = {
+  def fromJson(json: String): JsonlWatermarkOffset = {
     val node = new ObjectMapper().readTree(json)
-    if (node.isArray)
-      JsonlFilesOffset((0 until node.size()).map(node.get(_).asText))
-    else {
-      val arr = node.get("recent")
-      JsonlWatermarkOffset(node.get("watermarkMs").asLong,
-        (0 until arr.size()).map(arr.get(_).asText))
-    }
+    require(node.isObject,
+      s"not a watermark offset (pre-watermark file-set arrays are not read): $json")
+    val arr = node.get("recent")
+    JsonlWatermarkOffset(node.get("watermarkMs").asLong,
+      (0 until arr.size()).map(arr.get(_).asText))
   }
-}
-
-/** Legacy (pre-watermark) offset: the full set of files ever seen.
-  * Still deserializable so old checkpoints restart cleanly; never
-  * produced as a new offset. */
-final case class JsonlFilesOffset(files: Seq[String])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = {
-    val m = new ObjectMapper()
-    val arr = m.createArrayNode()
-    files.foreach(arr.add)
-    m.writeValueAsString(arr)
-  }
-}
-
-object JsonlFilesOffset {
-  def fromJson(json: String): JsonlFilesOffset =
-    JsonlWatermarkOffset.fromJson(json) match {
-      case f: JsonlFilesOffset => f
-      case _ => throw new IllegalArgumentException(
-        s"not a legacy file-set offset: $json")
-    }
 }
 
 final case class JsonlInputPartition(

@@ -300,10 +300,11 @@ class JsonlDsv2Spec extends AnyFunSuite {
     val off = graft.sources.dsv2.JsonlWatermarkOffset(1700000000123L,
       Seq("/a/x.jsonl", "/a/y.jsonl"))
     assert(graft.sources.dsv2.JsonlWatermarkOffset.fromJson(off.json()) === off)
-    // legacy (pre-watermark) checkpoint offsets still deserialize
-    val legacy = graft.sources.dsv2.JsonlFilesOffset(Seq("/a/x.jsonl", "/a/y.jsonl"))
-    assert(graft.sources.dsv2.JsonlFilesOffset.fromJson(legacy.json()) === legacy)
-    assert(graft.sources.dsv2.JsonlWatermarkOffset.fromJson(legacy.json()) === legacy)
+    // the pre-watermark form (a JSON array of every file seen) is
+    // rejected by name, not read as a watermark object
+    val e = intercept[IllegalArgumentException](
+      graft.sources.dsv2.JsonlWatermarkOffset.fromJson("""["/a/x.jsonl","/a/y.jsonl"]"""))
+    assert(e.getMessage.contains("pre-watermark"))
   }
 
   test("watermark offsets stay O(1): size does not grow with batch count") {
