@@ -25,6 +25,11 @@ import graft.perf.Harness
   * 2-column pushed-filter scan beats materializing a fact-scale
   * slice. q31 — MergeUpsert's staged swap re-reads the target by
   * contract (merge input, untouched-partition copy, verification).
+  * q177 — two of its four embedding scans are the five query vectors
+  * (`vec_id IN (...)` pushed into the scan); the two full scans feed
+  * different projections (binary words for the Hamming pass, norms
+  * for the rerank join), so a shared materialization saves at most
+  * one full scan.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {

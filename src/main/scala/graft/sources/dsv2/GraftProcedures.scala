@@ -562,7 +562,8 @@ object GraftProcedures {
               if (rowsMode) {
                 // format invariant: partition-column values ride in the
                 // k=v dirs, never in the file (the dataIdx pattern of
-                // JsonlPartitionedDataWriter) — project the dir's
+                // the task writer, JsonlPartitionedDataWriter, which
+                // writes every table layout) — project the dir's
                 // columns out of the rewritten shards too, or a compact
                 // of a partitioned table would bloat files with values
                 // readers mask anyway

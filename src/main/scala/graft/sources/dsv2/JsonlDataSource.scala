@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -405,55 +405,11 @@ class JsonlTable(tableSchema: StructType, path: String,
     * (`_`/`.`-prefixed — table spec, stream log): the shared wipe
     * behind SQL `TRUNCATE TABLE` and the unconditional `DELETE FROM`. */
   private def dropAllData(): Unit = {
-    val p = new Path(path)
-    val hconf = JsonlHadoopConf.fromSession().value
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) return
-    // destructive: serialize against row-level commits and CALL
-    // snapshot, the same contract as the overwrite branches of
-    // JsonlBatchWrite.commit — a snapshot must never pin a
-    // half-truncated table
-    val rloLease = RowLevelLock.acquire(fs, hconf, p,
-      s"truncate-${java.util.UUID.randomUUID}")
-    try {
-    if (fs.exists(p)) {
-      // snapshot retention: a shard a live manifest references moves
-      // under _snapshots/retained/ instead of dying with the truncate
-      val referenced = JsonlSnapshots.referencedRels(fs, p)
-      val qualified = fs.makeQualified(p).toUri
-      def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-        if (st.isDirectory) {
-          walk(st.getPath)
-          if (fs.listStatus(st.getPath).isEmpty) fs.delete(st.getPath, false)
-        } else if (JsonlLayout.isShard(st.getPath.getName)) {
-          val rel = qualified
-            .relativize(fs.makeQualified(st.getPath).toUri).getPath
-          JsonlSnapshots.discardShard(fs, p, st.getPath, rel, referenced)
-        } else fs.delete(st.getPath, false)
-      }
-      fs.listStatus(p).filter { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }.foreach { st =>
-        if (st.isDirectory) {
-          walk(st.getPath)
-          if (fs.exists(st.getPath) && fs.listStatus(st.getPath).isEmpty)
-            fs.delete(st.getPath, false)
-        } else if (JsonlLayout.isShard(st.getPath.getName))
-          JsonlSnapshots.discardShard(fs, p, st.getPath,
-            st.getPath.getName, referenced)
-        else fs.delete(st.getPath, false)
-      }
+    val fs = pmFs
+    if (!fs.exists(new Path(path))) return
+    underTableLock(fs, "truncate") {
+      JsonlShards.retireAll(fs, new Path(path))
     }
-    // position-delete sidecars index rows of the shards just dropped —
-    // they go with them (shard names are attempt-unique so a stale
-    // sidecar could never match a future shard, but an empty table
-    // should be EMPTY; snapshots embed their ordinals, so no snapshot
-    // depends on the live sidecar files)
-    fs.delete(new Path(path, JsonlDeletes.DirName), true)
-    // the index described the dropped shards — it goes with them
-    JsonlSkipIndex.dropAll(fs, p)
-    } finally RowLevelLock.release(fs, rloLease)
   }
 
   /** SQL `TRUNCATE TABLE`: the statement form of [[dropAllData]]. */
@@ -548,21 +504,8 @@ class JsonlTable(tableSchema: StructType, path: String,
   override def partitionSchema(): StructType =
     StructType(partCols.map(c => tableSchema(tableSchema.fieldIndex(c))))
 
-  /** ONE pair of value↔path-string conversions shared by every
-    * partition-management entry point, so a type supported by SHOW
-    * PARTITIONS is by construction supported by ADD/DROP PARTITION
-    * and the identifier reconstruction. */
-  private def partValueToString(row: InternalRow, i: Int,
-                                dt: DataType): String = dt match {
-    case LongType => row.getLong(i).toString
-    case IntegerType => row.getInt(i).toString
-    case DoubleType => row.getDouble(i).toString
-    case BooleanType => row.getBoolean(i).toString
-    case StringType => row.getUTF8String(i).toString
-    case other => throw new UnsupportedOperationException(
-      s"graft-jsonl: unsupported partition type $other")
-  }
-
+  /** Inverse of [[JsonlLayout.partValueString]], for the identifier
+    * reconstruction. */
   private def partValueFromString(s: String, dt: DataType): Any = dt match {
     case LongType => s.toLong
     case IntegerType => s.toInt
@@ -577,15 +520,8 @@ class JsonlTable(tableSchema: StructType, path: String,
     val ps = partitionSchema()
     ps.fields.indices.map { i =>
       if (ident.isNullAt(i)) None
-      else Some(partValueToString(ident, i, ps.fields(i).dataType))
+      else Some(JsonlLayout.partValueString(ident, i, ps.fields(i).dataType))
     }
-  }
-
-  private def identDir(ident: InternalRow): Path = {
-    val rel = partCols.zip(identValues(ident)).map { case (c, v) =>
-      s"$c=${v.map(JsonlLayout.escapePathName).getOrElse(JsonlLayout.NullPartition)}"
-    }.mkString("/")
-    new Path(path, rel)
   }
 
   /** Every directory this logical partition may live under: the
@@ -593,12 +529,10 @@ class JsonlTable(tableSchema: StructType, path: String,
     * ([[JsonlLayout.aliasVariantDirs]]). Drop/truncate/exists operate
     * on the logical partition, so they sweep all of them; creates
     * target the head (current names) only. */
-  private def identDirs(ident: InternalRow): Seq[Path] = {
-    val rel = partCols.zip(identValues(ident)).map { case (c, v) =>
-      s"$c=${v.map(JsonlLayout.escapePathName).getOrElse(JsonlLayout.NullPartition)}"
-    }.mkString("/")
-    JsonlLayout.aliasVariantDirs(rel, segAliasesRev).map(new Path(path, _))
-  }
+  private def identDirs(ident: InternalRow): Seq[Path] =
+    JsonlLayout.aliasVariantDirs(
+      JsonlLayout.relDirOf(partCols, identValues(ident)), segAliasesRev)
+      .map(new Path(path, _))
 
   private def pmFs = new Path(path)
     .getFileSystem(JsonlHadoopConf.fromSession().value)
@@ -614,7 +548,18 @@ class JsonlTable(tableSchema: StructType, path: String,
     if (identDirs(ident).exists(fs.exists))
       throw new org.apache.spark.sql.catalyst.analysis.PartitionsAlreadyExistException(
         name(), ident, partitionSchema())
-    fs.mkdirs(identDir(ident))
+    fs.mkdirs(identDirs(ident).head)
+  }
+
+  /** The `_rlo_lock` every destructive partition/table operation holds
+    * (TRUNCATE, DROP/TRUNCATE PARTITION, metadata DELETE) — the same
+    * contract as the overwrite branches of [[JsonlBatchWrite.commit]]:
+    * a concurrent row-level commit can't race the drop, and a CALL
+    * snapshot can't pin a half-dropped layout. */
+  private def underTableLock[T](fs: FileSystem, op: String)(body: => T): T = {
+    val lease = RowLevelLock.acquire(fs, JsonlHadoopConf.fromSession().value,
+      new Path(path), s"$op-${java.util.UUID.randomUUID}")
+    try body finally RowLevelLock.release(fs, lease)
   }
 
   override def dropPartition(ident: InternalRow): Boolean = {
@@ -624,36 +569,20 @@ class JsonlTable(tableSchema: StructType, path: String,
     // variants — dropping it sweeps every one
     val dirs = identDirs(ident).filter(fs.exists)
     if (dirs.isEmpty) return false
-    val tRoot = new Path(path)
-    dirs.foreach { dir =>
-      // snapshot retention before the dir goes
-      val referenced = JsonlSnapshots.referencedRels(fs, tRoot)
-      if (referenced.nonEmpty) {
-        val qualified = fs.makeQualified(tRoot).toUri
-        def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-          if (st.isDirectory) walk(st.getPath)
-          else if (JsonlLayout.isShard(st.getPath.getName)) {
-            val rel = qualified
-              .relativize(fs.makeQualified(st.getPath).toUri).getPath
-            if (referenced.contains(rel))
-              JsonlSnapshots.discardShard(fs, tRoot, st.getPath, rel, referenced)
-          }
+    val root = new Path(path)
+    underTableLock(fs, "drop-partition") {
+      JsonlShards.retire(fs, root,
+        dirs.flatMap(JsonlLayout.discover(fs, _).map(_._1)),
+        dirs.map(JsonlShards.relOf(fs, root, _)))
+      dirs.foreach { dir =>
+        fs.delete(dir, true)
+        // prune now-empty ancestors so intermediate values leave the layout
+        var parent = dir.getParent
+        while (parent != null && parent != root &&
+          fs.exists(parent) && fs.listStatus(parent).isEmpty) {
+          fs.delete(parent, false)
+          parent = parent.getParent
         }
-        walk(dir)
-      }
-      fs.delete(dir, true)
-      // sidecars of the dropped partition's shards go with it
-      val rel = fs.makeQualified(new Path(path)).toUri
-        .relativize(fs.makeQualified(dir).toUri).getPath
-      if (!rel.startsWith("/"))
-        fs.delete(new Path(new Path(path, JsonlDeletes.DirName), rel), true)
-      // prune now-empty ancestors so intermediate values leave the layout
-      var parent = dir.getParent
-      val root = new Path(path)
-      while (parent != null && parent != root &&
-        fs.exists(parent) && fs.listStatus(parent).isEmpty) {
-        fs.delete(parent, false)
-        parent = parent.getParent
       }
     }
     true
@@ -683,7 +612,7 @@ class JsonlTable(tableSchema: StructType, path: String,
       case (n, i) =>
         val fi = ps.fieldIndex(n)
         n -> (if (ident.isNullAt(i)) None
-              else Some(partValueToString(ident, i, ps.fields(fi).dataType)))
+              else Some(JsonlLayout.partValueString(ident, i, ps.fields(fi).dataType)))
     }.toMap
     // walk k=v dirs (NOT shards: an ADD'ed-but-empty partition must
     // list) to full partitioning depth, then filter on the given values
@@ -726,25 +655,12 @@ class JsonlTable(tableSchema: StructType, path: String,
     if (dirs.isEmpty)
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchPartitionException(
         name(), ident, partitionSchema())
-    val tRoot = new Path(path)
-    // destructive on live shards: same _rlo_lock contract as TRUNCATE
-    val rloLease = RowLevelLock.acquire(fs,
-      JsonlHadoopConf.fromSession().value, tRoot,
-      s"truncate-partition-${java.util.UUID.randomUUID}")
-    try {
-      val referenced = JsonlSnapshots.referencedRels(fs, tRoot)
-      val qualified = fs.makeQualified(tRoot).toUri
-      dirs.foreach { dir =>
-        fs.listStatus(dir).filter(st => st.isFile && JsonlLayout.isShard(st.getPath.getName))
-          .foreach { st =>
-            val rel = qualified
-              .relativize(fs.makeQualified(st.getPath).toUri).getPath
-            JsonlSnapshots.discardShard(fs, tRoot, st.getPath, rel, referenced)
-          }
-      }
-      JsonlSkipIndex.removeDirs(fs, tRoot, dirs.map(dir => qualified
-        .relativize(fs.makeQualified(dir).toUri).getPath))
-    } finally RowLevelLock.release(fs, rloLease)
+    // the emptied dirs stay: SHOW PARTITIONS still lists the partition
+    val root = new Path(path)
+    underTableLock(fs, "truncate-partition") {
+      JsonlShards.retire(fs, root, dirs.flatMap(JsonlShards.shardsIn(fs, _)),
+        dirs.map(JsonlShards.relOf(fs, root, _)))
+    }
     true
   }
 
@@ -771,7 +687,7 @@ class JsonlTable(tableSchema: StructType, path: String,
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val p = new Path(path)
-    val fs = p.getFileSystem(JsonlHadoopConf.fromSession().value)
+    val fs = pmFs
     val effective = filters.filterNot(_.isInstanceOf[AlwaysTrue])
     if (effective.isEmpty) {
       // DELETE FROM t with no (effective) predicate: same full wipe
@@ -779,56 +695,25 @@ class JsonlTable(tableSchema: StructType, path: String,
       dropAllData()
       return
     }
-    // destructive on live shards: discovery AND the drop run under
-    // _rlo_lock (same contract as the overwrite branches), so a
-    // racing MOR commit can't re-sidecar a shard mid-drop and a CALL
-    // snapshot can't pin a half-deleted layout
-    val rloLease = RowLevelLock.acquire(fs,
-      JsonlHadoopConf.fromSession().value, p,
-      s"delete-where-${java.util.UUID.randomUUID}")
-    try {
-    val layout = JsonlLayout.discover(fs, p, segAliases)
-    // every shard must pin every referenced column, or the delete
-    // cannot be whole-partition (a root-level appended shard may hold
-    // ANY key value in its rows) — refuse loudly rather than delete
-    // a subset of the matching rows
-    val refs = effective.flatMap(_.references).distinct
-    val uncovered = layout.filterNot { case (_, pv) => refs.forall(pv.contains) }
-    if (uncovered.nonEmpty)
-      throw new UnsupportedOperationException(
-        s"graft-jsonl DELETE: ${uncovered.size} shard(s) outside the " +
-          s"partition layout for ${refs.mkString(",")} (e.g. ${uncovered.head._1})")
-    val deleteReferenced = JsonlSnapshots.referencedRels(fs, p)
-    val deletedRels = layout
-      .filter { case (_, pv) =>
-        effective.forall(f =>
-          pv.forall { case (k, v) =>
-            JsonlPartitionPruning.admits(f, k, v, tableSchema) })
-      }
-      .map { case (shard, _) =>
-        val rel = fs.makeQualified(p).toUri
-          .relativize(fs.makeQualified(shard).toUri).getPath
-        JsonlSnapshots.discardShard(fs, p, shard, rel, deleteReferenced)
-        // a sidecar indexing a dropped shard is dead weight (it can
-        // never match a future shard name; snapshots embed ordinals) —
-        // sweep it with the shard
-        fs.delete(JsonlDeletes.sidecarFor(fs, p, shard), false)
-        rel
-      }
-    JsonlSkipIndex.removeEntries(fs, p, deletedRels.toSeq)
-    // drop now-empty partition dirs so the value disappears from the
-    // layout (and from SPJ partition listings)
-    def prune(dir: Path): Boolean = { // returns "dir is now empty"
-      if (!fs.getFileStatus(dir).isDirectory) return false
-      val entries = fs.listStatus(dir)
-      val remaining = entries.filterNot { st =>
-        st.isDirectory && st.getPath.getName.contains("=") && prune(st.getPath)
-      }
-      if (remaining.isEmpty && dir != p) { fs.delete(dir, false); true }
-      else false
+    // discovery AND the drop run under the lock, so a racing MOR commit
+    // can't re-sidecar a shard mid-drop
+    underTableLock(fs, "delete-where") {
+      val layout = JsonlLayout.discover(fs, p, segAliases)
+      // every shard must pin every referenced column, or the delete
+      // cannot be whole-partition (a root-level appended shard may hold
+      // ANY key value in its rows) — refuse loudly rather than delete
+      // a subset of the matching rows
+      val refs = effective.flatMap(_.references).distinct
+      val uncovered = layout.filterNot { case (_, pv) => refs.forall(pv.contains) }
+      if (uncovered.nonEmpty)
+        throw new UnsupportedOperationException(
+          s"graft-jsonl DELETE: ${uncovered.size} shard(s) outside the " +
+            s"partition layout for ${refs.mkString(",")} (e.g. ${uncovered.head._1})")
+      JsonlShards.retire(fs, p, layout.collect { case (shard, pv)
+        if effective.forall(f => pv.forall { case (k, v) =>
+          JsonlPartitionPruning.admits(f, k, v, tableSchema) }) => shard })
+      JsonlShards.pruneEmptyDirs(fs, p)
     }
-    prune(p)
-    } finally RowLevelLock.release(fs, rloLease)
   }
 }
 
@@ -1072,6 +957,27 @@ object JsonlLayout {
     }
     new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
   }
+
+  /** The ONE rendering of a partition value as its dir-name string,
+    * shared by the shard writer and every partition-management entry
+    * point, so a type a write can route is by construction one ADD /
+    * DROP / SHOW PARTITIONS can name. */
+  def partValueString(row: InternalRow, i: Int, dt: DataType): String =
+    dt match {
+      case LongType => row.getLong(i).toString
+      case IntegerType => row.getInt(i).toString
+      case DoubleType => row.getDouble(i).toString
+      case BooleanType => row.getBoolean(i).toString
+      case StringType => row.getUTF8String(i).toString
+      case other => throw new UnsupportedOperationException(
+        s"graft-jsonl: unsupported partition type $other")
+    }
+
+  /** `c1=v1/c2=v2` for a partition tuple (None → the null sentinel). */
+  def relDirOf(cols: Seq[String], values: Seq[Option[String]]): String =
+    cols.zip(values).map { case (c, v) =>
+      s"$c=${v.map(escapePathName).getOrElse(NullPartition)}"
+    }.mkString("/")
 
   /** Shards of a table directory with their partition values: a flat
     * dir or single file yields empty values; `k=v` subdirs — nested
@@ -2351,6 +2257,25 @@ final class JsonlWriteBuilder(schema: StructType, path: String, queryId: String,
           "re-CALL evolve_partitioning to unify the layout first")
     doDynamic = true; this
   }
+  /** Both faces of one write; `verified` are the columns the writers
+    * VERIFY the within-file order of. Dynamic overwrite of an
+    * UNPARTITIONED table replaces its single implicit partition — the
+    * whole table. */
+  private class PlainWrite(verified: Seq[String])
+      extends org.apache.spark.sql.connector.write.Write {
+    override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
+      new JsonlBatchWrite(schema, path, queryId,
+        doTruncate || (doDynamic && partCols.isEmpty), partCols,
+        doDynamic && partCols.nonEmpty, overwriteFilters,
+        skipCols = skipCols, autoSnapshot = autoSnapshot,
+        upsertKeys = upsertKeys, orderCols = verified, format = format,
+        parquetConf = parquetConf)
+    override def toStreaming
+        : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
+      new JsonlStreamingWrite(schema, path, queryId, partCols, skipCols,
+        autoSnapshot, upsertKeys, verified, format, parquetConf)
+  }
+
   override def build(): org.apache.spark.sql.connector.write.Write = {
     // write-time clustering ([[JsonlTable.WriteOrderProp]]): order
     // columns present in the write schema participate (a MERGE's
@@ -2362,41 +2287,16 @@ final class JsonlWriteBuilder(schema: StructType, path: String, queryId: String,
     val verified =
       if (order.nonEmpty) order
       else verifyOrder.filter(schema.fieldNames.contains)
-    if (verifyOrder.nonEmpty && order.isEmpty)
-      // self-sorting rewrite ([[JsonlTable.VerifyOrderProp]]): the
-      // caller's plan already distributes AND sorts — stacking a
+    if (order.isEmpty && (verifyOrder.nonEmpty || partCols.isEmpty))
+      // a flat table without a write order needs no requirement; nor
+      // does a self-sorting rewrite ([[JsonlTable.VerifyOrderProp]]):
+      // the caller's plan already distributes AND sorts — stacking a
       // required clustered distribution here would make
       // CollapseRepartition replace the caller's range partitioning
       // with a plain hash and SCRAMBLE the within-file sort it came to
-      // have measured. No requirement: the writers route rows into
-      // partition dirs as delivered and record what actually held.
-      new org.apache.spark.sql.connector.write.Write {
-        override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-          new JsonlBatchWrite(schema, path, queryId,
-            doTruncate || (doDynamic && partCols.isEmpty), partCols,
-            doDynamic && partCols.nonEmpty, overwriteFilters,
-            skipCols = skipCols, autoSnapshot = autoSnapshot,
-            upsertKeys = upsertKeys, orderCols = verified, format = format,
-            parquetConf = parquetConf)
-        override def toStreaming
-            : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-          new JsonlStreamingWrite(schema, path, queryId, partCols, skipCols,
-            autoSnapshot, upsertKeys, verified, format, parquetConf)
-      }
-    else if (partCols.isEmpty && order.isEmpty)
-      new org.apache.spark.sql.connector.write.Write {
-        override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-          // dynamic overwrite of an UNPARTITIONED table replaces its
-          // single implicit partition — the whole table
-          new JsonlBatchWrite(schema, path, queryId, doTruncate || doDynamic,
-            Nil, skipCols = skipCols, autoSnapshot = autoSnapshot,
-            upsertKeys = upsertKeys, orderCols = verified, format = format,
-            parquetConf = parquetConf)
-        override def toStreaming
-            : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-          new JsonlStreamingWrite(schema, path, queryId, Nil, skipCols,
-            autoSnapshot, upsertKeys, verified, format, parquetConf)
-      }
+      // have measured. The writers route rows into partition dirs as
+      // delivered and record what actually held.
+      new PlainWrite(verified)
     else
       // hive-layout write: ask Spark to CLUSTER rows by the partition
       // columns and SORT them within each task, so each writer holds
@@ -2408,8 +2308,10 @@ final class JsonlWriteBuilder(schema: StructType, path: String, queryId: String,
       // cols): each task covers a contiguous key slice — still one
       // open file at a time — and the landed shards are
       // range-disjoint on the order columns, so their write-time skip
-      // stats prune from the first append.
-      new org.apache.spark.sql.connector.write.Write
+      // stats prune from the first append. The writers VERIFY the
+      // requested within-task sort per file and record the held
+      // prefix in the skip entry.
+      new PlainWrite(verified)
         with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
         import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
         private def sortOrders
@@ -2429,23 +2331,6 @@ final class JsonlWriteBuilder(schema: StructType, path: String, queryId: String,
         override def requiredOrdering()
             : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
           sortOrders
-        override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-          // dynamic overwrite of an UNPARTITIONED table (reachable
-          // here via graft.write.order) replaces its single implicit
-          // partition — the whole table, exactly as the no-order path
-          new JsonlBatchWrite(schema, path, queryId,
-            doTruncate || (doDynamic && partCols.isEmpty), partCols,
-            doDynamic && partCols.nonEmpty, overwriteFilters,
-            skipCols = skipCols, autoSnapshot = autoSnapshot,
-            upsertKeys = upsertKeys,
-            // the requested within-task sort: writers VERIFY it per
-            // file and record the held prefix in the skip entry
-            orderCols = verified, format = format,
-            parquetConf = parquetConf)
-        override def toStreaming
-            : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-          new JsonlStreamingWrite(schema, path, queryId, partCols, skipCols,
-            autoSnapshot, upsertKeys, verified, format, parquetConf)
       }
   }
 }
@@ -2499,16 +2384,17 @@ final class JsonlRowLevelOperation(
       wInfo: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
     new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
+      override def build(): org.apache.spark.sql.connector.write.Write = {
+        def batch: org.apache.spark.sql.connector.write.BatchWrite =
+          new JsonlBatchWrite(
+            JsonlTable.withFieldMeta(tableSchema, wInfo.schema()), path,
+            wInfo.queryId(), truncate = false, partCols,
+            replaceShards = () => scannedShards, skipCols = skipCols,
+            autoSnapshot = autoSnapshot, format = format,
+            parquetConf = parquetConf)
         if (partCols.isEmpty)
           new org.apache.spark.sql.connector.write.Write {
-            override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-              new JsonlBatchWrite(
-                JsonlTable.withFieldMeta(tableSchema, wInfo.schema()), path,
-                wInfo.queryId(), truncate = false, Nil,
-                replaceShards = () => scannedShards, skipCols = skipCols,
-                autoSnapshot = autoSnapshot, format = format,
-                parquetConf = parquetConf)
+            override def toBatch = batch
           }
         else
           new org.apache.spark.sql.connector.write.Write
@@ -2524,14 +2410,9 @@ final class JsonlRowLevelOperation(
               partCols.map(c =>
                 Expressions.sort(Expressions.identity(c), SortDirection.ASCENDING))
                 .toArray
-            override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-              new JsonlBatchWrite(
-                JsonlTable.withFieldMeta(tableSchema, wInfo.schema()), path,
-                wInfo.queryId(), truncate = false, partCols,
-                replaceShards = () => scannedShards, skipCols = skipCols,
-                autoSnapshot = autoSnapshot, format = format,
-                parquetConf = parquetConf)
+            override def toBatch = batch
           }
+      }
     }
 }
 
@@ -2599,8 +2480,8 @@ final class JsonlStreamingWrite(schema: StructType, path: String,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : streaming.StreamingDataWriterFactory =
-    new JsonlStreamingWriterFactory(schema, path, queryId, partCols, conf,
-      skipCols, upsertKeys, orderCols, format)
+    new JsonlWriterFactory(schema, path, queryId, conf, partCols, skipCols,
+      upsertKeys, orderCols, format)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val f = fs
@@ -2660,64 +2541,21 @@ final class JsonlStreamingWrite(schema: StructType, path: String,
       }
       // a prior attempt's shards may carry an equality-delete stamp
       // between the epoch marker and the extension, and either shard
-      // format — the marker regex matches every form
+      // format — the marker regex matches every form. A snapshot taken
+      // while they were visible may reference them — retire, not drop
       val markerRe = epochShardRe(epochId)
-      // replay sweep of the prior attempt's partials: a snapshot taken
-      // while they were visible may reference them — retain, not drop
-      val referenced = JsonlSnapshots.referencedRels(f, dest)
-      val qualified = f.makeQualified(dest).toUri
-      JsonlLayout.discover(f, dest)
-        .map(_._1).filter(pp => markerRe.matches(pp.getName))
-        .foreach { p =>
-          val rel = qualified.relativize(f.makeQualified(p).toUri).getPath
-          JsonlSnapshots.discardShard(f, dest, p, rel, referenced)
-        }
+      JsonlShards.retire(f, dest, JsonlLayout.discover(f, dest)
+        .map(_._1).filter(pp => markerRe.matches(pp.getName)))
     }
     f.create(inprog, true).close()
-    // equality-delete upsert tier: an epoch on a graft.upsert.keys
-    // table is an upsert WAVE — stamped inserts first, key file LAST
-    // (the wave's atomic commit point; same protocol and crash posture
-    // as the batch commit: a crash mid-wave shows transient duplicates,
-    // never deletes-without-inserts, and the epoch replay sweeps the
-    // orphan shards by marker then re-claims a fresh sequence)
-    val staged0 = messages.flatMap { case JsonlCommitMessage(s, _, _) => s }
-    val wave = upsertKeys.nonEmpty && staged0.nonEmpty
-    val (stampSeq, claimToken) =
-      if (!wave) (JsonlEqDeletes.currentSeq(f, dest), null: Array[Byte])
-      else JsonlEqDeletes.claimNextWithToken(f, dest,
-        conf.value.getLong(JsonlSnapshots.ClaimStaleMsKey,
-          JsonlSnapshots.DefaultClaimStaleMs))
-    try {
-    staged0.foreach {
-      case (stagedFile, relDir) =>
-        val s = new Path(stagedFile)
-        val destDir = if (relDir.isEmpty) dest else new Path(dest, relDir)
-        f.mkdirs(destDir)
-        val target =
-          new Path(destDir, JsonlEqDeletes.stampName(s.getName, stampSeq))
-        if (!f.rename(s, target))
-          throw new java.io.IOException(s"epoch $epochId commit failed for $s")
-    }
-    // write-time skip stats for this epoch's shards (graft.skip.columns)
-    JsonlSkipIndex.mergeEntries(f, dest, messages.flatMap {
-      case JsonlCommitMessage(s, st, _) => s.flatMap { case (stagedFile, relDir) =>
-        st.get(stagedFile).map { ws =>
-          val name =
-            JsonlEqDeletes.stampName(new Path(stagedFile).getName, stampSeq)
-          (if (relDir.isEmpty) name else s"$relDir/$name") -> ws
-        }
-      }
-    }.toSeq)
-    if (wave) {
-      val keys = messages.iterator.flatMap {
-        case m: JsonlCommitMessage => m.upsertKeys }.toSet
-      // the key file carries THIS EPOCH'S TAG so a crash-replay can
-      // roll the whole wave back (key file + marker-swept inserts)
-      JsonlEqDeletes.publish(f, dest, stampSeq, upsertKeys, keys,
-        epochQueryId(epochId), token = claimToken)
-    }
-    } finally if (wave)
-      JsonlEqDeletes.releaseClaim(f, dest, stampSeq, epochQueryId(epochId))
+    // an epoch on a graft.upsert.keys table is an upsert WAVE, same
+    // protocol and crash posture as the batch commit; the epoch replay
+    // sweeps the orphan shards by marker then re-claims a fresh
+    // sequence. The key file carries THIS EPOCH'S TAG so a crash-replay
+    // can roll the whole wave back (key file + marker-swept inserts)
+    val delta = JsonlShards.publishWave(f, conf.value, dest,
+      messages.toSeq.map { case m: JsonlCommitMessage => m }, upsertKeys,
+      epochQueryId(epochId), sized = autoSnapshot)
     // intent marker BEFORE the durable commit point: a crash between
     // the log rename and the auto-pin would otherwise leave this
     // epoch's shards in no manifest forever (delta pins rebase the
@@ -2744,16 +2582,7 @@ final class JsonlStreamingWrite(schema: StructType, path: String,
     // rebase (this epoch's shards over the previous manifest): no
     // table listing, no lock acquisition.
     if (autoSnapshot) {
-      val added = staged0
-        .map { case (stagedFile, relDir) =>
-          val name =
-            JsonlEqDeletes.stampName(new Path(stagedFile).getName, stampSeq)
-          val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-          rel -> f.getFileStatus(new Path(dest, rel)).getLen
-        }.toMap
-      JsonlSnapshots.autoPin(f, conf.value, dest, schema,
-        Some(JsonlSnapshots.PinDelta(added, Map.empty, Set.empty,
-          eqAdded = if (wave) Seq(s"s$stampSeq.json") else Nil)))
+      JsonlSnapshots.autoPin(f, conf.value, dest, schema, Some(delta))
       JsonlSnapshots.clearIntent(f, dest, epochQueryId(epochId))
     }
     // retention: only the LATEST epoch can ever re-execute (the
@@ -2771,39 +2600,8 @@ final class JsonlStreamingWrite(schema: StructType, path: String,
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     cleanupEpoch(fs, epochId)
 
-  private def cleanupEpoch(f: org.apache.hadoop.fs.FileSystem, epochId: Long): Unit = {
-    f.delete(new Path(path, s"_staging/${epochQueryId(epochId)}"), true)
-    // best-effort parent sweep, same contract as the batch path's
-    // cleanupStaging: runs AFTER the epoch log is durable, so it must
-    // never throw (the exists/isEmpty probe races concurrent writers'
-    // own staging subdirs on a shared table)
-    try {
-      val parent = new Path(path, "_staging")
-      if (f.exists(parent) && f.listStatus(parent).isEmpty)
-        f.delete(parent, false)
-    } catch { case _: java.io.IOException => () }
-  }
-}
-
-/** Executor-side factory for the streaming sink — a standalone
-  * Serializable class (the StreamingWrite itself stays driver-only). */
-final class JsonlStreamingWriterFactory(schema: StructType, path: String,
-                                        queryId: String, partCols: Seq[String],
-                                        conf: JsonlHadoopConf,
-                                        skipCols: Seq[String] = Nil,
-                                        upsertKeys: Seq[String] = Nil,
-                                        orderCols: Seq[String] = Nil,
-                                        format: String = "jsonl")
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    if (partCols.isEmpty)
-      new JsonlDataWriter(schema, path, s"$queryId-e$epochId",
-        partitionId, taskId, conf, skipCols, upsertKeys, orderCols, format)
-    else
-      new JsonlPartitionedDataWriter(schema, path, s"$queryId-e$epochId",
-        partitionId, taskId, conf, partCols, skipCols, upsertKeys, orderCols,
-        format)
+  private def cleanupEpoch(f: FileSystem, epochId: Long): Unit =
+    JsonlShards.cleanupStaging(f, new Path(path), epochQueryId(epochId))
 }
 
 /** Staged shard(s) of one task: (staged path, partition-relative dir —
@@ -2816,6 +2614,186 @@ final case class JsonlCommitMessage(staged: Seq[(String, String)],
     // distinct rendered key tuples; empty unless graft.upsert.keys
     upsertKeys: Set[String] = Set.empty)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
+
+/** One function per step of a graft-jsonl shard's life after its task
+  * closes it: [[publish]] takes staged shards live, [[retire]] takes
+  * live ones out, [[pruneEmptyDirs]] drops the partition dirs a drop
+  * emptied, and [[cleanupStaging]] drops a write's staging dir. Every
+  * commit and destructive table operation goes through these, so what
+  * rides along with a shard (its skip-index entry, its merge-on-read
+  * sidecar, its snapshot retention) is handled in one place. Callers
+  * own the locks, the intent markers and the order of the steps. */
+object JsonlShards {
+  /** `p` relative to the table root — both sides qualified, since
+    * `URI.relativize` silently returns its argument on a scheme
+    * mismatch. */
+  def relOf(fs: FileSystem, root: Path, p: Path): String =
+    fs.makeQualified(root).toUri.relativize(fs.makeQualified(p).toUri).getPath
+
+  /** The shard files directly in `dir` (none if it is gone). */
+  def shardsIn(fs: FileSystem, dir: Path): Seq[Path] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter(st => st.isFile &&
+      JsonlLayout.isShard(st.getPath.getName)).map(_.getPath)
+
+  /** Land staged (file, partition-relative dir) pairs: each renames
+    * into its dir under its name stamped with equality-delete sequence
+    * `seq` ([[JsonlEqDeletes.stampName]]), then the write-time skip
+    * stats the writers tracked (`stats`, keyed by staged path) merge
+    * into the index in one update, keyed by table-relative path. A
+    * crash before the merge only leaves the new shards index-unseen —
+    * scanned conservatively. Returns the added rel → byte length map
+    * the auto-pin delta needs when `sized`, else an empty map. */
+  def publish(fs: FileSystem, root: Path, staged: Seq[(String, String)],
+              stats: Map[String, JsonlSkipIndex.ShardWriteStats], seq: Long,
+              sized: Boolean): Map[String, Long] = {
+    val rels = staged.map { case (stagedFile, relDir) =>
+      val s = new Path(stagedFile)
+      val name = JsonlEqDeletes.stampName(s.getName, seq)
+      val rel = if (relDir.isEmpty) name else s"$relDir/$name"
+      val target = new Path(root, rel)
+      fs.mkdirs(target.getParent)
+      if (!fs.rename(s, target))
+        throw new java.io.IOException(s"commit rename failed for $s")
+      stagedFile -> rel
+    }
+    JsonlSkipIndex.mergeEntries(fs, root,
+      rels.flatMap { case (s, rel) => stats.get(s).map(rel -> _) })
+    if (!sized) Map.empty
+    else rels.map { case (_, rel) =>
+      rel -> fs.getFileStatus(new Path(root, rel)).getLen }.toMap
+  }
+
+  /** [[publish]] the task output of a batch or streaming epoch. On a
+    * table declaring `graft.upsert.keys` (`upsertCols`) it is an
+    * upsert WAVE: claim the next equality-delete sequence, land the
+    * insert shards STAMPED with it, then publish the key file LAST —
+    * the wave's atomic commit point. A crash before it leaves the
+    * stamped inserts visible WITHOUT their deletes: transient
+    * duplicates, healed by the retry's own higher-sequence wave over
+    * the same keys — never the inverse window where matched rows
+    * vanish without replacements. A failed wave tombstones its
+    * sequence in `releaseClaim` (the key file is absent), so orphan
+    * stamped shards can never be exempted from a reassigned number's
+    * deletes. Any other publish stamps at the current max sequence so
+    * its rows are never hidden by past waves. `tag` names the key file
+    * (a streaming epoch's, for its replay rollback; null for batch).
+    * Returns the commit's pin delta as far as the publish knows it:
+    * the added shards (when `sized`) and the wave's key file. */
+  def publishWave(fs: FileSystem, conf: Configuration, root: Path,
+                  msgs: Seq[JsonlCommitMessage], upsertCols: Seq[String],
+                  tag: String, sized: Boolean): JsonlSnapshots.PinDelta = {
+    val staged = msgs.flatMap(_.staged)
+    val wave = upsertCols.nonEmpty && staged.nonEmpty
+    val (seq, token) =
+      if (!wave) (JsonlEqDeletes.currentSeq(fs, root), null: Array[Byte])
+      else JsonlEqDeletes.claimNextWithToken(fs, root,
+        conf.getLong(JsonlSnapshots.ClaimStaleMsKey,
+          JsonlSnapshots.DefaultClaimStaleMs))
+    try {
+      val added = publish(fs, root, staged, msgs.flatMap(_.stats).toMap, seq,
+        sized)
+      if (wave)
+        JsonlEqDeletes.publish(fs, root, seq, upsertCols,
+          msgs.iterator.flatMap(_.upsertKeys).toSet, tag, token = token)
+      JsonlSnapshots.PinDelta(added, Map.empty, Set.empty,
+        eqAdded = if (wave) Seq(JsonlEqDeletes.keyFileName(seq, tag)) else Nil)
+    } finally if (wave) JsonlEqDeletes.releaseClaim(fs, root, seq, tag)
+  }
+
+  /** Take live `shards` out of the table (caller holds the table
+    * lock): each goes through snapshot retention
+    * ([[JsonlSnapshots.discardShard]] — a shard a manifest references
+    * moves under `_snapshots/retained/`), its merge-on-read sidecar is
+    * dropped (it indexes rows that are gone; snapshots embed their
+    * ordinals, so none depends on it), and the skip index forgets
+    * them in one update. `dirs`, when given, are the table-relative
+    * dirs the set empties: their manifests drop whole; `""` — the
+    * whole table — drops the index and the `_deletes` tree outright.
+    * A table without sidecars pays one existence probe. Returns the
+    * shards' table-relative paths. */
+  def retire(fs: FileSystem, root: Path, shards: Seq[Path],
+             dirs: Seq[String] = Nil): Seq[String] = {
+    val referenced =
+      if (shards.isEmpty) Set.empty[String]
+      else JsonlSnapshots.referencedRels(fs, root)
+    val rels = shards.map { p =>
+      val rel = relOf(fs, root, p)
+      JsonlSnapshots.discardShard(fs, root, p, rel, referenced)
+      rel
+    }
+    val sidecars = new Path(root, JsonlDeletes.DirName)
+    if (dirs.contains("")) {
+      fs.delete(sidecars, true)
+      JsonlSkipIndex.dropAll(fs, root)
+    } else {
+      if (rels.nonEmpty && fs.exists(sidecars)) rels.foreach { rel =>
+        fs.delete(new Path(sidecars, rel + JsonlDeletes.Suffix), false)
+      }
+      if (dirs.isEmpty) JsonlSkipIndex.removeEntries(fs, root, rels)
+      else JsonlSkipIndex.removeDirs(fs, root, dirs)
+    }
+    rels
+  }
+
+  /** [[retire]] every data entry under `root`, recursively (a
+    * previously PARTITIONED layout goes too), keeping metadata — the
+    * `_`/`.`-prefixed top-level entries: table spec, stream log,
+    * snapshots. Non-shard files are deleted, then every data dir left
+    * empty. The wipe behind TRUNCATE TABLE, the unconditional DELETE
+    * and a truncating overwrite. */
+  def retireAll(fs: FileSystem, root: Path): Unit = {
+    val shards, others, dirs = Seq.newBuilder[Path]
+    def walk(st: org.apache.hadoop.fs.FileStatus): Unit =
+      if (st.isDirectory) {
+        fs.listStatus(st.getPath).foreach(walk)
+        dirs += st.getPath // children first: a dir empties after them
+      } else if (JsonlLayout.isShard(st.getPath.getName)) shards += st.getPath
+      else others += st.getPath
+    fs.listStatus(root).filter { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }.foreach(walk)
+    retire(fs, root, shards.result(), Seq(""))
+    others.result().foreach(fs.delete(_, false))
+    dirs.result().foreach { d =>
+      if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
+    }
+  }
+
+  /** Drop the `k=v` dirs under `root` left holding nothing, bottom-up,
+    * so a value an operation emptied leaves the layout (and SPJ
+    * partition listings). */
+  def pruneEmptyDirs(fs: FileSystem, root: Path): Unit = {
+    def prune(dir: Path): Boolean = { // returns "dir is now empty"
+      if (!fs.getFileStatus(dir).isDirectory) return false
+      val remaining = fs.listStatus(dir).filterNot { st =>
+        st.isDirectory && st.getPath.getName.contains("=") && prune(st.getPath)
+      }
+      if (remaining.isEmpty && dir != root) { fs.delete(dir, false); true }
+      else false
+    }
+    prune(root)
+  }
+
+  /** Drop write `id`'s staging dir, then the `_staging` parent once no
+    * concurrent write holds it. STRICTLY best-effort: a commit runs it
+    * after its data, stats and pin have landed and its lock is
+    * released — a throw would report a COMMITTED write as failed, and
+    * a framework retry of a plain append would then double-apply it.
+    * The exists/isEmpty probe races concurrent writers creating or
+    * dropping their own staging subdirs (local-FS delete throws on a
+    * dir that fills mid-call), so swallow it: a leftover `_staging`
+    * dir is invisible to readers (`_` prefix) and the next commit's
+    * sweep gets another chance. */
+  def cleanupStaging(fs: FileSystem, root: Path, id: String): Unit =
+    try {
+      fs.delete(new Path(root, s"_staging/$id"), true)
+      val parent = new Path(root, "_staging")
+      if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
+        fs.delete(parent, false)
+    } catch { case _: java.io.IOException => () }
+}
 
 final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
                             truncate: Boolean, partCols: Seq[String],
@@ -2833,30 +2811,28 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
 
   private val conf = JsonlHadoopConf.fromSession(parquetConf)
   private def fs = new Path(path).getFileSystem(conf.value)
-  private def stagingDir = new Path(path, s"_staging/$queryId")
+  // COW group rewrite, TRUNCATE, static/dynamic INSERT OVERWRITE; a
+  // plain append is the only other shape
+  private val destructive = replaceShards != null || truncate ||
+    overwriteFilters != null || dynamicOverwrite
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new JsonlWriterFactory(schema, path, queryId, conf, partCols, skipCols,
-      if (truncate || dynamicOverwrite || overwriteFilters != null ||
-          replaceShards != null) Nil
-      else upsertKeys,
-      orderCols, format)
+      if (destructive) Nil else upsertKeys, orderCols, format)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val f = fs
     val dest = new Path(path)
     f.mkdirs(dest)
-    val staged = messages.flatMap { case JsonlCommitMessage(s, _, _) => s }
-    // single-writer enforcement for every DESTRUCTIVE commit — COW
-    // group rewrite, TRUNCATE, static/dynamic INSERT OVERWRITE — same
+    val msgs = messages.toSeq.map { case m: JsonlCommitMessage => m }
+    val staged = msgs.flatMap(_.staged)
+    // single-writer enforcement for every DESTRUCTIVE commit — same
     // contract as the merge-on-read delta commit: the whole
     // discard + publish runs under _rlo_lock, so a concurrent
     // row-level operation can't race the swap on the shards being
     // retired, and a CALL snapshot (which also takes the lock) can't
     // pin a half-overwritten table. Plain appends stay lockless:
     // their only mutation is an atomic rename into the layout.
-    val destructive = replaceShards != null || truncate ||
-      overwriteFilters != null || dynamicOverwrite
     // DYNAMIC partition overwrite replaces exactly the dirs the write
     // produced — lock just those scopes, so overwrites of disjoint
     // partitions commit in parallel (auto-snapshot no longer forces
@@ -2866,7 +2842,7 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
     val scopedDynamic = dynamicOverwrite && replaceShards == null &&
       !truncate && overwriteFilters == null && partCols.nonEmpty
     val scopes: Seq[String] =
-      if (scopedDynamic) staged.map(_._2).distinct.toSeq
+      if (scopedDynamic) staged.map(_._2).distinct
       else Nil
     val rloLeases: Seq[RowLevelLock.Lease] =
       if (destructive)
@@ -2879,44 +2855,12 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
     // a rollback would delete them. The next pin's stale-intent repair
     // (full listing) consumes the marker; success consumes it below.
     if (autoSnapshot) JsonlSnapshots.recordIntent(f, dest, queryId)
-    // the snapshot-referenced set is read INSIDE the lock: a CALL
-    // snapshot serializes against this commit, so the set can't grow
-    // between reading it and discarding shards it should have retained
-    val commitReferenced = JsonlSnapshots.referencedRels(f, dest)
-    val destUri0 = f.makeQualified(dest).toUri
-    def discardTree(start: org.apache.hadoop.fs.FileStatus): Unit = {
-      def relOf(pp: Path) =
-        destUri0.relativize(f.makeQualified(pp).toUri).getPath
-      def walk(d: Path): Unit = f.listStatus(d).foreach { st =>
-        if (st.isDirectory) {
-          walk(st.getPath)
-          if (f.listStatus(st.getPath).isEmpty) f.delete(st.getPath, false)
-        } else if (JsonlLayout.isShard(st.getPath.getName))
-          JsonlSnapshots.discardShard(f, dest, st.getPath,
-            relOf(st.getPath), commitReferenced)
-        else f.delete(st.getPath, false)
-      }
-      if (start.isDirectory) {
-        walk(start.getPath)
-        if (f.exists(start.getPath) && f.listStatus(start.getPath).isEmpty)
-          f.delete(start.getPath, false)
-      } else if (JsonlLayout.isShard(start.getPath.getName))
-        JsonlSnapshots.discardShard(f, dest, start.getPath,
-          relOf(start.getPath), commitReferenced)
-      else f.delete(start.getPath, false)
-    }
-    if (truncate)
-      // recursive: a previously PARTITIONED table (lang=*/ dirs) must
-      // truncate too, not throw or silently survive beside new shards;
-      // shards a snapshot references retire to _snapshots/retained/
-      f.listStatus(dest).filter { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }.foreach(discardTree)
-    if (truncate)
-      // every indexed shard just died; the staged shards' write-time
-      // stats re-seed the index below
-      JsonlSkipIndex.dropAll(f, dest)
+    // every retire below reads the snapshot-referenced set INSIDE the
+    // lock: a CALL snapshot serializes against this commit, so the set
+    // can't grow between reading it and discarding shards it should
+    // have retained. A truncate wipes every data entry; the staged
+    // shards' write-time stats re-seed the index below
+    if (truncate) JsonlShards.retireAll(f, dest)
     if (replaceShards != null) {
       // group copy-on-write commit: the scanned shards ARE the replaced
       // set. A driver crash between removing them and publishing the
@@ -2933,13 +2877,12 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
             "copy-on-write crashed mid-swap and the trash holds the only " +
             "copy of its groups; move its shards back into the table and " +
             "delete the trash dir before retrying")
-      val destUri = f.makeQualified(dest).toUri
       val trashedRels = replaceShards().map(new Path(_)).filter(f.exists)
         .map { p =>
         // keep the partition-relative layout inside the trash: one
         // task's shard name repeats across `k=v/` dirs, so a flat move
         // could collide — and recovery stays a plain move-back
-        val rel = destUri.relativize(f.makeQualified(p).toUri).getPath
+        val rel = JsonlShards.relOf(f, dest, p)
         val t = new Path(trash, rel)
         f.mkdirs(t.getParent)
         if (!f.rename(p, t))
@@ -2979,20 +2922,11 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
             s"the partition layout for ${refs.mkString(",")} " +
             s"(e.g. ${uncovered.head._1}) — compact the table into the hive " +
             "layout first, or use dynamic partition overwrite")
-      val overwrittenRels = layout
-        .filter { case (_, pv) =>
-          overwriteFilters.forall(fl =>
-            pv.forall { case (k, v) =>
-              JsonlPartitionPruning.admits(fl, k, v, schema) })
-        }
-        .map { case (shard, _) =>
-          val rel = destUri0.relativize(f.makeQualified(shard).toUri).getPath
-          JsonlSnapshots.discardShard(f, dest, shard, rel, commitReferenced)
-          rel
-        }
-      JsonlSkipIndex.removeEntries(f, dest, overwrittenRels)
+      JsonlShards.retire(f, dest, layout.collect { case (shard, pv)
+        if overwriteFilters.forall(fl => pv.forall { case (k, v) =>
+          JsonlPartitionPruning.admits(fl, k, v, schema) }) => shard })
     }
-    val dynRemoved = Seq.newBuilder[String]
+    var dynRemoved = Seq.empty[String]
     if (dynamicOverwrite) {
       // replace exactly the partition values the write produced: old
       // shards of a touched dir go, untouched dirs stay byte-identical.
@@ -3005,162 +2939,60 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
         .filter(_._2.nonEmpty).toMap
       val touchedDirs = staged.map(_._2).distinct.filter(_.nonEmpty)
         .flatMap(JsonlLayout.aliasVariantDirs(_, segRev)).distinct
-      touchedDirs.foreach { relDir =>
-        val d = new Path(dest, relDir)
-        if (f.exists(d))
-          f.listStatus(d).filter(st => st.isFile &&
-            JsonlLayout.isShard(st.getPath.getName))
-            .foreach { st =>
-              val rel = s"$relDir/${st.getPath.getName}"
-              JsonlSnapshots.discardShard(f, dest, st.getPath, rel,
-                commitReferenced)
-              dynRemoved += rel
-            }
-      }
-      // whole-dir replacement: drop each touched partition's manifest
-      // in one list update instead of per-shard edits
-      JsonlSkipIndex.removeDirs(f, dest, touchedDirs.toSeq)
+      // whole-dir replacement: each touched partition's index manifest
+      // drops in one list update instead of per-shard edits
+      dynRemoved = JsonlShards.retire(f, dest,
+        touchedDirs.flatMap(d => JsonlShards.shardsIn(f, new Path(dest, d))),
+        touchedDirs)
     }
-    // ------------- equality-delete upsert tier ([[JsonlEqDeletes]])
-    // a plain APPEND on a table declaring graft.upsert.keys is an
-    // upsert WAVE: claim the next sequence, land the insert shards
-    // STAMPED with it, then publish the batch's key file LAST — the
-    // key file is the wave's atomic commit point. A crash before it
-    // leaves the stamped inserts visible WITHOUT their deletes:
-    // transient duplicates, healed by the retry's own higher-sequence
-    // wave over the same keys (which hides both the old rows and the
-    // orphaned first-attempt inserts) — never the inverse window where
-    // matched target rows vanish without replacements. The wave's own
-    // rows are exempt from its deletes (stamp == seq), everything
-    // older subject. Every OTHER commit stamps at the current max
-    // sequence so rewritten/overwritten rows are never hidden by past
-    // waves.
-    // snapshots compose: manifests embed the key files pending at pin
-    // time (and this wave's delta pin adds its own), so a pinned scan
-    // applies the same equality rule and serves the upserted pin-time
-    // state; rollback restores the pinned equality set with the shards
-    val wave = upsertKeys.nonEmpty && !destructive && staged.nonEmpty
-    val (stampSeq, claimToken) =
-      if (!wave) (JsonlEqDeletes.currentSeq(f, dest), null: Array[Byte])
-      else JsonlEqDeletes.claimNextWithToken(f, dest,
-        conf.value.getLong(JsonlSnapshots.ClaimStaleMsKey,
-          JsonlSnapshots.DefaultClaimStaleMs))
-    try {
-    staged.foreach { case (stagedFile, relDir) =>
-      val s = new Path(stagedFile)
-      val destDir = if (relDir.isEmpty) dest else new Path(dest, relDir)
-      f.mkdirs(destDir)
-      if (!f.rename(s,
-          new Path(destDir, JsonlEqDeletes.stampName(s.getName, stampSeq))))
-        throw new java.io.IOException(s"commit rename failed for $s")
-    }
-    // write-time skip stats (graft.skip.columns): each writer tracked
-    // its files' min/max/nulls as rows streamed through; fold them into
-    // the index now that the shards are published, keyed by the shard's
-    // table-relative path. A crash before this point only leaves the
-    // new shards index-unseen — scanned conservatively.
-    val writeStats = messages.flatMap {
-      case JsonlCommitMessage(s, st, _) => s.flatMap { case (stagedFile, relDir) =>
-        st.get(stagedFile).map { ws =>
-          val name =
-            JsonlEqDeletes.stampName(new Path(stagedFile).getName, stampSeq)
-          (if (relDir.isEmpty) name else s"$relDir/$name") -> ws
-        }
-      }
-    }
-    JsonlSkipIndex.mergeEntries(f, dest, writeStats.toSeq)
-    if (wave) {
-      val keys = messages.iterator.flatMap {
-        case m: JsonlCommitMessage => m.upsertKeys }.toSet
-      JsonlEqDeletes.publish(f, dest, stampSeq, upsertKeys, keys,
-        token = claimToken)
-    }
-    // a failed wave tombstones its sequence in releaseClaim (the key
-    // file is absent), so orphan stamped shards can never be exempted
-    // from a reassigned number's deletes
-    } finally if (wave) JsonlEqDeletes.releaseClaim(f, dest, stampSeq)
+    // snapshots compose with upsert waves: manifests embed the key
+    // files pending at pin time (and a wave's delta pin adds its own),
+    // so a pinned scan applies the same equality rule and serves the
+    // upserted pin-time state; rollback restores the pinned equality
+    // set with the shards
+    val delta = JsonlShards.publishWave(f, conf.value, dest, msgs,
+      if (destructive) Nil else upsertKeys, tag = null, sized = autoSnapshot)
     if (replaceShards != null) {
       // every replacement landed — the table holds the new copy of each
       // affected group, so the trashed originals are dead weight UNLESS
       // a snapshot references them (the trash mirrors the table-relative
       // layout, so the rel path is direct)
       val cowTrash = new Path(dest, "_cow_trash")
-      JsonlSnapshots.retainFromTrash(f, dest, cowTrash, pp =>
-        f.makeQualified(cowTrash).toUri
-          .relativize(f.makeQualified(pp).toUri).getPath)
+      JsonlSnapshots.retainFromTrash(f, dest, cowTrash,
+        JsonlShards.relOf(f, cowTrash, _))
       f.delete(cowTrash, true)
       // an operation that emptied a whole partition leaves a bare dir:
       // prune it so the value leaves the layout (deleteWhere contract)
-      def prune(dir: Path): Boolean = {
-        if (!f.getFileStatus(dir).isDirectory) return false
-        val remaining = f.listStatus(dir).filterNot { st =>
-          st.isDirectory && st.getPath.getName.contains("=") && prune(st.getPath)
-        }
-        if (remaining.isEmpty && dir != dest) { f.delete(dir, false); true }
-        else false
-      }
-      prune(dest)
+      JsonlShards.pruneEmptyDirs(f, dest)
     }
     // auto-snapshot (graft.snapshot.auto): pin a version for THIS
-    // commit, lock-free (claim-CAS id assignment). A plain append
-    // knows its exact delta — the pin rebases the previous manifest,
-    // no table listing; destructive paths (truncate / COW / overwrite)
-    // have diffuse removed-sets and pin a full listing, which their
-    // table lock already serializes against other destructive ops
+    // commit, lock-free (claim-CAS id assignment). Plain appends AND
+    // partition-scoped dynamic overwrites know their exact delta
+    // (adds, plus the touched dirs' discarded shards) — their pins
+    // rebase the previous manifest with no table listing, so
+    // disjoint-partition writers' concurrent pins never capture each
+    // other's mid-swap windows; diffuse destructive shapes (truncate /
+    // COW / static overwrite) pin a full listing under the table lock
     if (autoSnapshot) {
-      val plainAppend = !truncate && replaceShards == null &&
-        overwriteFilters == null && !dynamicOverwrite
-      def addedRels: Map[String, Long] =
-        staged.map { case (stagedFile, relDir) =>
-          val name =
-            JsonlEqDeletes.stampName(new Path(stagedFile).getName, stampSeq)
-          val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-          rel -> f.getFileStatus(new Path(dest, rel)).getLen
-        }.toMap
-      // plain appends AND partition-scoped dynamic overwrites know
-      // their exact delta (adds, plus the touched dirs' discarded
-      // shards) — their pins rebase, so disjoint-partition writers'
-      // concurrent pins never capture each other's mid-swap windows;
-      // diffuse destructive shapes pin a full listing under the table
-      // lock as before
-      val delta =
-        if (plainAppend)
-          Some(JsonlSnapshots.PinDelta(addedRels, Map.empty, Set.empty,
-            eqAdded = if (wave) Seq(s"s$stampSeq.json") else Nil))
-        else if (scopedDynamic)
-          Some(JsonlSnapshots.PinDelta(addedRels, Map.empty,
-            dynRemoved.result().toSet))
-        else None
-      JsonlSnapshots.autoPin(f, conf.value, dest, schema, delta)
+      JsonlSnapshots.autoPin(f, conf.value, dest, schema,
+        if (!destructive) Some(delta)
+        else if (scopedDynamic) Some(delta.copy(removed = dynRemoved.toSet))
+        else None)
       JsonlSnapshots.clearIntent(f, dest, queryId)
     }
     } finally RowLevelLock.releaseAll(f, rloLeases)
-    cleanupStaging(f)
+    JsonlShards.cleanupStaging(f, dest, queryId)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupStaging(fs)
-
-  private def cleanupStaging(f: org.apache.hadoop.fs.FileSystem): Unit = {
-    f.delete(stagingDir, true)
-    // drop the _staging parent too once no concurrent write holds it.
-    // STRICTLY best-effort: by the time commit() reaches here the data,
-    // skip stats, and pin have all landed and the lock is released — a
-    // throw would report a COMMITTED write as failed, and a framework
-    // retry of a plain append would then double-apply it. The
-    // exists/isEmpty probe races concurrent writers creating or
-    // dropping their own staging subdirs (local-FS delete throws on a
-    // dir that empties mid-call), so swallow everything: a leftover
-    // empty `_staging` dir is invisible to readers (`_` prefix) and
-    // the next commit's sweep gets another chance.
-    try {
-      val parent = stagingDir.getParent
-      if (f.exists(parent) && f.listStatus(parent).isEmpty)
-        f.delete(parent, false)
-    } catch { case _: java.io.IOException => () }
-  }
+    JsonlShards.cleanupStaging(fs, new Path(path), queryId)
 }
 
+/** Executor-side factory for every graft-jsonl write, batch and
+  * streaming — a standalone Serializable class (the BatchWrite and
+  * StreamingWrite stay driver-only). A streaming writer's id is
+  * `<queryId>-e<epochId>`: the epoch marker its published shard names
+  * carry for the replay sweep. */
 final class JsonlWriterFactory(schema: StructType, path: String,
                                queryId: String, conf: JsonlHadoopConf,
                                partCols: Seq[String] = Nil,
@@ -3168,23 +3000,33 @@ final class JsonlWriterFactory(schema: StructType, path: String,
                                upsertKeys: Seq[String] = Nil,
                                orderCols: Seq[String] = Nil,
                                format: String = "jsonl")
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
+    extends org.apache.spark.sql.connector.write.DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
+  private def writer(id: String, partitionId: Int, taskId: Long) =
+    new JsonlPartitionedDataWriter(schema, path, id, partitionId, taskId,
+      conf, partCols, skipCols, upsertKeys, orderCols, format)
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    if (partCols.isEmpty)
-      new JsonlDataWriter(schema, path, queryId, partitionId, taskId, conf,
-        skipCols, upsertKeys, orderCols, format)
-    else
-      new JsonlPartitionedDataWriter(schema, path, queryId, partitionId,
-        taskId, conf, partCols, skipCols, upsertKeys, orderCols, format)
+    writer(queryId, partitionId, taskId)
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
+      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
+    writer(s"$queryId-e$epochId", partitionId, taskId)
 }
 
-/** Routes clustered+sorted rows into `k=v/` hive dirs: one staged file
-  * open at a time, closed when the partition-value tuple changes
+/** The one task writer: routes clustered+sorted rows into `k=v/` hive
+  * dirs — the table root when `partCols` is empty — with one staged
+  * file open at a time, closed when the partition-value tuple changes
   * (ordering is guaranteed by [[JsonlWriteBuilder]]'s
   * RequiresDistributionAndOrdering). Partition values are encoded in
-  * the DIRECTORY only — the JSON lines omit those fields, exactly the
-  * layout [[JsonlLayout.discover]] reads back with value injection. */
+  * the DIRECTORY only — the rows omit those fields, exactly the
+  * layout [[JsonlLayout.discover]] reads back with value injection. A
+  * file opens with its first row, so an empty task publishes nothing.
+  * Every name ends in `-<queryId>` before the extension (a UUID, or a
+  * stream's epoch marker): task ids are only unique within one
+  * SparkContext, and an append from a fresh application would
+  * otherwise stage `part-00000-0` again and rename-overwrite an
+  * existing shard — the same reason Spark's file committers put a job
+  * UUID in every part file name. */
 final class JsonlPartitionedDataWriter(schema: StructType, path: String,
                                        queryId: String, partitionId: Int,
                                        taskId: Long, conf: JsonlHadoopConf,
@@ -3215,32 +3057,23 @@ final class JsonlPartitionedDataWriter(schema: StructType, path: String,
       tracker.reset()
     }
 
-  private def escape(v: String): String = JsonlLayout.escapePathName(v)
-
   private def keyOf(row: InternalRow): Seq[Option[String]] =
     partIdx.map { i =>
       if (row.isNullAt(i)) None
-      else Some(schema.fields(i).dataType match {
-        case LongType => row.getLong(i).toString
-        case IntegerType => row.getInt(i).toString
-        case DoubleType => row.getDouble(i).toString
-        case BooleanType => row.getBoolean(i).toString
-        case StringType => row.getUTF8String(i).toString
-        case dt => throw new UnsupportedOperationException(
-          s"graft-jsonl: unsupported partition type $dt")
-      })
+      else Some(JsonlLayout.partValueString(row, i, schema.fields(i).dataType))
     }
 
   private def roll(key: Seq[Option[String]]): Unit = {
     snapshotCurrent() // per-FILE stats: the closing file's counters
     if (out != null) out.close()
     currentKey = key
-    val relDir = partCols.zip(key).map { case (c, v) =>
-      s"$c=${v.map(escape).getOrElse(JsonlLayout.NullPartition)}"
-    }.mkString("/")
-    val ext = ShardFileSink.extensionOf(format)
+    val relDir = JsonlLayout.relDirOf(partCols, key)
+    // a task's later files add their roll sequence to the name
+    val seq = if (fileSeq == 0) "" else s"-$fileSeq"
+    val name = f"part-$partitionId%05d-$taskId$seq-$queryId" +
+      ShardFileSink.extensionOf(format)
     val p = new Path(path,
-      f"_staging/$queryId/$relDir/part-$partitionId%05d-$taskId-$fileSeq-$queryId$ext")
+      s"_staging/$queryId/${if (relDir.isEmpty) name else s"$relDir/$name"}")
     fileSeq += 1
     staged ::= (p.toString, relDir)
     out = ShardFileSink(format, p, schema, dataIdx, conf)
@@ -3255,7 +3088,7 @@ final class JsonlPartitionedDataWriter(schema: StructType, path: String,
     out.write(row)
   }
 
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
+  override def commit(): JsonlCommitMessage = {
     snapshotCurrent()
     if (out != null) out.close()
     JsonlCommitMessage(staged.reverse, stats, upsertKeys.toSet)
@@ -3270,8 +3103,8 @@ final class JsonlPartitionedDataWriter(schema: StructType, path: String,
   override def close(): Unit = ()
 }
 
-/** Per-file row encoder behind both tuple writers — ONE open file at a
-  * time, rolled by the partitioned writer on key change. The JSONL
+/** Per-file row encoder behind the task writer — ONE open file at a
+  * time, rolled on partition key change. The JSONL
   * sink streams gzip JSON lines keyed by physical storage keys; the
   * parquet sink routes the same rows through Spark's own parquet
   * writer ([[org.apache.spark.sql.graftbridge.ParquetShardIO]]) with a
@@ -3335,58 +3168,6 @@ private[dsv2] object ShardFileSink {
     }
     override def close(): Unit = writer.close()
   }
-}
-
-/** Streams rows as gzip JSON lines into the attempt-unique staged
-  * file. Field order follows the write schema; nulls are emitted as
-  * JSON nulls (round-trips through the reader's null semantics).
-  * The PUBLISHED name embeds the write's queryId (a UUID): task ids
-  * are only unique within one SparkContext, and append mode from a
-  * fresh application would otherwise stage `part-00000-0` again and
-  * rename-overwrite an existing shard — the same reason Spark's file
-  * committers put a job UUID in every part file name. */
-final class JsonlDataWriter(schema: StructType, path: String, queryId: String,
-                            partitionId: Int, taskId: Long,
-                            conf: JsonlHadoopConf,
-                            skipCols: Seq[String] = Nil,
-                            upsertKeyCols: Seq[String] = Nil,
-                            orderCols: Seq[String] = Nil,
-                            format: String = "jsonl")
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-
-  private val upsertIdx: Seq[Int] =
-    upsertKeyCols.filter(schema.fieldNames.contains).map(schema.fieldIndex)
-  private val upsertKeys = scala.collection.mutable.HashSet.empty[String]
-
-  private val staged = new Path(path,
-    f"_staging/$queryId/part-$partitionId%05d-$taskId-$queryId" +
-      ShardFileSink.extensionOf(format))
-  private val out =
-    ShardFileSink(format, staged, schema, schema.fields.indices, conf)
-  private val tracker =
-    new JsonlSkipIndex.ShardStatsTracker(schema, skipCols, orderCols)
-
-  override def write(row: InternalRow): Unit = {
-    if (tracker.active) tracker.update(row)
-    if (upsertIdx.nonEmpty)
-      upsertKeys += JsonlEqDeletes.renderRow(row, schema, upsertIdx)
-    out.write(row)
-  }
-
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    out.close()
-    JsonlCommitMessage(Seq((staged.toString, "")),
-      if (tracker.active) Map(staged.toString -> tracker.snapshot())
-      else Map.empty,
-      upsertKeys.toSet)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    staged.getFileSystem(conf.value).delete(staged, false)
-  }
-
-  override def close(): Unit = ()
 }
 
 /** JSON ↔ Catalyst value conversion for the full supported type

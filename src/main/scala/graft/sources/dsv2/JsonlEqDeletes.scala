@@ -94,9 +94,12 @@ object JsonlEqDeletes {
   private val NullMark = "\u0000"
 
   def dir(table: Path): Path = new Path(table, DirName)
+  /** Name of wave `seq`'s key file (`tag`: a streaming epoch's) — the
+    * name manifests record in `eqFiles`. */
+  def keyFileName(seq: Long, tag: String = null): String =
+    if (tag == null) s"s$seq.json" else s"s$seq-$tag.json"
   private def keyFile(table: Path, seq: Long, tag: String = null): Path =
-    new Path(dir(table),
-      if (tag == null) s"s$seq.json" else s"s$seq-$tag.json")
+    new Path(dir(table), keyFileName(seq, tag))
   private def claimFile(table: Path, seq: Long): Path =
     new Path(dir(table), s"s$seq.claim")
   private def droppedFile(table: Path, seq: Long): Path =

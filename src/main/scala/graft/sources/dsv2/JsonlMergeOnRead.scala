@@ -759,11 +759,9 @@ final class JsonlDeltaBatchWrite(rowSchema: StructType, rowIdSchema: StructType,
     val scopes: Seq[String] =
       if (partCols.isEmpty) Nil
       else {
-        val destUri = f.makeQualified(dest).toUri
         val insertDirs = msgs.toSeq.flatMap(_.staged).map(_._2)
         val deleteDirs = msgs.toSeq.flatMap(_.deletes.keys).map { shard =>
-          val rel = destUri
-            .relativize(f.makeQualified(new Path(shard)).toUri).getPath
+          val rel = JsonlShards.relOf(f, dest, new Path(shard))
           val i = rel.lastIndexOf('/')
           if (rel.startsWith("/") || i < 0) "" else rel.substring(0, i)
         }
@@ -774,25 +772,9 @@ final class JsonlDeltaBatchWrite(rowSchema: StructType, rowIdSchema: StructType,
       // equality-delete tier: MERGE-inserted rows on a table with eq
       // history stamp at the CURRENT max sequence, or past waves
       // would hide them (JsonlEqDeletes sequence rule); 0 → identity
-      val stampSeq = JsonlEqDeletes.currentSeq(f, dest)
-      msgs.flatMap(_.staged).foreach { case (stagedFile, relDir) =>
-        val s = new Path(stagedFile)
-        val destDir = if (relDir.isEmpty) dest else new Path(dest, relDir)
-        f.mkdirs(destDir)
-        if (!f.rename(s,
-            new Path(destDir, JsonlEqDeletes.stampName(s.getName, stampSeq))))
-          throw new java.io.IOException(s"delta commit rename failed for $s")
-      }
-      // write-time skip stats for the insert shards (graft.skip.columns)
-      JsonlSkipIndex.mergeEntries(f, dest, msgs.flatMap { m =>
-        m.staged.flatMap { case (stagedFile, relDir) =>
-          m.stats.get(stagedFile).map { ws =>
-            val name =
-              JsonlEqDeletes.stampName(new Path(stagedFile).getName, stampSeq)
-            (if (relDir.isEmpty) name else s"$relDir/$name") -> ws
-          }
-        }
-      }.toSeq)
+      val added = JsonlShards.publish(f, dest, msgs.toSeq.flatMap(_.staged),
+        msgs.flatMap(_.stats).toMap, JsonlEqDeletes.currentSeq(f, dest),
+        sized = autoSnapshot)
       JsonlDeletes.appendAll(f, conf.value, dest,
         msgs.flatMap(_.deletes.toSeq)
           .groupBy(_._1).view.mapValues(_.flatMap(_._2).toArray).toMap)
@@ -805,36 +787,19 @@ final class JsonlDeltaBatchWrite(rowSchema: StructType, rowIdSchema: StructType,
       // pins serialize only at the milliseconds-long claim window,
       // never at the table lock
       if (autoSnapshot) {
-        val destUri = f.makeQualified(dest).toUri
-        val added = msgs.toSeq.flatMap(_.staged)
-          .map { case (stagedFile, relDir) =>
-            val name =
-              JsonlEqDeletes.stampName(new Path(stagedFile).getName, stampSeq)
-            val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-            rel -> f.getFileStatus(new Path(dest, rel)).getLen
-          }.toMap
         val ords = msgs.toSeq.flatMap(_.deletes.toSeq)
           .groupBy(_._1).map { case (shard, xs) =>
-            destUri.relativize(
-              f.makeQualified(new Path(shard)).toUri).getPath ->
-              xs.flatMap(_._2).toArray
+            JsonlShards.relOf(f, dest, new Path(shard)) -> xs.flatMap(_._2).toArray
           }
         JsonlSnapshots.autoPin(f, conf.value, dest, rowSchema,
           Some(JsonlSnapshots.PinDelta(added, ords, Set.empty)))
       }
     } finally RowLevelLock.releaseAll(f, locks)
-    cleanupStaging(f)
+    JsonlShards.cleanupStaging(f, dest, queryId)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupStaging(fs)
-
-  private def cleanupStaging(f: FileSystem): Unit = {
-    f.delete(new Path(path, s"_staging/$queryId"), true)
-    val parent = new Path(path, "_staging")
-    if (f.exists(parent) && f.listStatus(parent).isEmpty)
-      f.delete(parent, false)
-  }
+    JsonlShards.cleanupStaging(fs, new Path(path), queryId)
 }
 
 final class JsonlDeltaWriterFactory(rowSchema: StructType,
@@ -867,13 +832,9 @@ final class JsonlDeltaWriter(rowSchema: StructType, rowIdSchema: StructType,
   // is nothing to insert), so the partition-routing writer — which
   // resolves partCols against the schema — must not be built unless a
   // row actually arrives
-  private lazy val inserts: org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    if (partCols.isEmpty)
-      new JsonlDataWriter(rowSchema, path, queryId, partitionId, taskId, conf,
-        skipCols, format = format)
-    else
-      new JsonlPartitionedDataWriter(rowSchema, path, queryId,
-        partitionId, taskId, conf, partCols, skipCols, format = format)
+  private lazy val inserts =
+    new JsonlPartitionedDataWriter(rowSchema, path, queryId,
+      partitionId, taskId, conf, partCols, skipCols, format = format)
   private var insertsUsed = false
 
   // rowId projection order follows the declared rowId() array, but
@@ -902,7 +863,7 @@ final class JsonlDeltaWriter(rowSchema: StructType, rowIdSchema: StructType,
 
   override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
     val inner =
-      if (insertsUsed) inserts.commit().asInstanceOf[JsonlCommitMessage]
+      if (insertsUsed) inserts.commit()
       else JsonlCommitMessage(Seq.empty)
     JsonlDeltaCommitMessage(inner.staged,
       deletes.view.mapValues(_.toArray).toMap, inner.stats)

@@ -57,8 +57,8 @@ class JsonlStreamingWriteSpec extends AnyFunSuite {
     // so each staging below uses a different taskId on purpose
     def writeEpoch(taskId: Long)
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val dw = new graft.sources.dsv2.JsonlDataWriter(schema, dir, "q-retry-e7",
-        0, taskId, graft.sources.dsv2.JsonlHadoopConf.fromSession())
+      val dw = new graft.sources.dsv2.JsonlPartitionedDataWriter(schema, dir,
+        "q-retry-e7", 0, taskId, graft.sources.dsv2.JsonlHadoopConf.fromSession(), Nil)
       dw.write(InternalRow(5L, UTF8String.fromString("x")))
       dw.commit()
     }
@@ -83,8 +83,8 @@ class JsonlStreamingWriteSpec extends AnyFunSuite {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id long, v string")
     val w = new graft.sources.dsv2.JsonlStreamingWrite(schema, dir, "q-crash", Nil)
     def stage(taskId: Long): graft.sources.dsv2.JsonlCommitMessage = {
-      val dw = new graft.sources.dsv2.JsonlDataWriter(schema, dir, "q-crash-e3",
-        0, taskId, graft.sources.dsv2.JsonlHadoopConf.fromSession())
+      val dw = new graft.sources.dsv2.JsonlPartitionedDataWriter(schema, dir,
+        "q-crash-e3", 0, taskId, graft.sources.dsv2.JsonlHadoopConf.fromSession(), Nil)
       dw.write(InternalRow(9L, UTF8String.fromString("y")))
       dw.commit().asInstanceOf[graft.sources.dsv2.JsonlCommitMessage]
     }
@@ -123,9 +123,9 @@ class JsonlStreamingWriteSpec extends AnyFunSuite {
       Nil, upsertKeys = Seq("id"))
     def stage(epochQ: String, taskId: Long, v: String)
         : graft.sources.dsv2.JsonlCommitMessage = {
-      val dw = new graft.sources.dsv2.JsonlDataWriter(schema, dir, epochQ,
+      val dw = new graft.sources.dsv2.JsonlPartitionedDataWriter(schema, dir, epochQ,
         0, taskId, graft.sources.dsv2.JsonlHadoopConf.fromSession(),
-        Nil, Seq("id"))
+        Nil, Nil, Seq("id"))
       dw.write(InternalRow(9L, UTF8String.fromString(v)))
       dw.commit().asInstanceOf[graft.sources.dsv2.JsonlCommitMessage]
     }
@@ -180,9 +180,9 @@ class JsonlStreamingWriteSpec extends AnyFunSuite {
       Nil, upsertKeys = Seq("id"))
     def stage(epochQ: String, taskId: Long, v: String)
         : graft.sources.dsv2.JsonlCommitMessage = {
-      val dw = new graft.sources.dsv2.JsonlDataWriter(schema, dir, epochQ,
+      val dw = new graft.sources.dsv2.JsonlPartitionedDataWriter(schema, dir, epochQ,
         0, taskId, graft.sources.dsv2.JsonlHadoopConf.fromSession(),
-        Nil, Seq("id"))
+        Nil, Nil, Seq("id"))
       dw.write(InternalRow(9L, UTF8String.fromString(v)))
       dw.commit().asInstanceOf[graft.sources.dsv2.JsonlCommitMessage]
     }
@@ -256,8 +256,8 @@ class JsonlStreamingWriteSpec extends AnyFunSuite {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id long, v string")
     val w = new graft.sources.dsv2.JsonlStreamingWrite(schema, dir, "q-rb", Nil)
     def writeEpoch(epoch: Long, taskId: Long, id: Long) = {
-      val dw = new graft.sources.dsv2.JsonlDataWriter(schema, dir, s"q-rb-e$epoch",
-        0, taskId, graft.sources.dsv2.JsonlHadoopConf.fromSession())
+      val dw = new graft.sources.dsv2.JsonlPartitionedDataWriter(schema, dir,
+        s"q-rb-e$epoch", 0, taskId, graft.sources.dsv2.JsonlHadoopConf.fromSession(), Nil)
       dw.write(InternalRow(id, UTF8String.fromString("x")))
       dw.commit()
     }
