@@ -1,7 +1,9 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetShardIO
 
 /** Loaders for the test star schema (see /root/repo/TESTDATA.md).
   *
@@ -24,16 +26,13 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, (Long, (Int, Long))]()
 
   private def rowGroupStats(spark: SparkSession, path: String): (Int, Long) = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // data files only: like Spark's file index, skip `_` metadata and
     // `.` hidden files (an editor's swap file, an upload's partial part)
     val files = (if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq
                  else Seq(fs.getFileStatus(p)))
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+      .filter(st => st.isFile && isData(st))
     val mtime = files.map(_.getModificationTime).maxOption.getOrElse(0L)
     footerMeta.compute(path, (_, old) =>
       if (old != null && old._1 == mtime) old
@@ -53,6 +52,35 @@ object Tables {
         }
         (mtime, (groups, rows))
       })._2
+  }
+
+  /** Whether a listed entry is table data: like Spark's file index,
+    * `_` metadata and `.` hidden names are not. */
+  private def isData(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** `spark.read.parquet(dir)` without its schema-inference job: the
+    * data schema comes from the footer of one data file under `dir`,
+    * read on the driver, and Spark still discovers and types the
+    * partition columns from the directory names. Every file of a lake
+    * table is written with one schema, so one footer stands for all,
+    * as it does for Spark's own inference. Falls back to the plain
+    * read when `dir` holds no data file or its file carries no Spark
+    * row metadata. */
+  def readParquetDir(spark: SparkSession, dir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def firstData(d: Path): Option[FileStatus] =
+      fs.listStatus(d).iterator.filter(isData).flatMap { st =>
+        if (st.isDirectory) firstData(st.getPath) else Some(st)
+      }.nextOption()
+    val schema =
+      if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) None
+      else firstData(root).flatMap(ParquetShardIO.sparkSchema(_, conf, spark))
+    schema.fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
   }
 
   /** Plain parquet scan with SCAN-PARALLELISM REPAIR: the parquet row

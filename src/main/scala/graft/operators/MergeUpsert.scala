@@ -168,7 +168,7 @@ object MergeUpsert {
     // in executor block storage, never on the driver.
     val src = (if (reinsertSource) source else source.select(pks.map(col): _*))
       .localCheckpoint()
-    val t = spark.read.parquet(path)
+    val t = graft.core.Tables.readParquetDir(spark, path)
     val srcKeys = src.select(pks.map(col): _*)
     // touched = partitions holding rows the source replaces (or, for a
     // deletion, rows being removed) PLUS — merges only — partitions

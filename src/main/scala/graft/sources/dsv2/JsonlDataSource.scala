@@ -574,16 +574,9 @@ class JsonlTable(tableSchema: StructType, path: String,
       JsonlShards.retire(fs, root,
         dirs.flatMap(JsonlLayout.discover(fs, _).map(_._1)),
         dirs.map(JsonlShards.relOf(fs, root, _)))
-      dirs.foreach { dir =>
-        fs.delete(dir, true)
-        // prune now-empty ancestors so intermediate values leave the layout
-        var parent = dir.getParent
-        while (parent != null && parent != root &&
-          fs.exists(parent) && fs.listStatus(parent).isEmpty) {
-          fs.delete(parent, false)
-          parent = parent.getParent
-        }
-      }
+      dirs.foreach(fs.delete(_, true))
+      // prune now-empty ancestors so intermediate values leave the layout
+      JsonlShards.pruneEmptyDirs(fs, root, dirs.map(_.getParent))
     }
     true
   }
@@ -709,10 +702,10 @@ class JsonlTable(tableSchema: StructType, path: String,
         throw new UnsupportedOperationException(
           s"graft-jsonl DELETE: ${uncovered.size} shard(s) outside the " +
             s"partition layout for ${refs.mkString(",")} (e.g. ${uncovered.head._1})")
-      JsonlShards.retire(fs, p, layout.collect { case (shard, pv)
+      val gone = JsonlShards.retire(fs, p, layout.collect { case (shard, pv)
         if effective.forall(f => pv.forall { case (k, v) =>
           JsonlPartitionPruning.admits(f, k, v, tableSchema) }) => shard })
-      JsonlShards.pruneEmptyDirs(fs, p)
+      JsonlShards.pruneEmptyDirs(fs, p, JsonlShards.dirsOf(p, gone))
     }
   }
 }
@@ -2761,20 +2754,22 @@ object JsonlShards {
     }
   }
 
-  /** Drop the `k=v` dirs under `root` left holding nothing, bottom-up,
-    * so a value an operation emptied leaves the layout (and SPJ
-    * partition listings). */
-  def pruneEmptyDirs(fs: FileSystem, root: Path): Unit = {
-    def prune(dir: Path): Boolean = { // returns "dir is now empty"
-      if (!fs.getFileStatus(dir).isDirectory) return false
-      val remaining = fs.listStatus(dir).filterNot { st =>
-        st.isDirectory && st.getPath.getName.contains("=") && prune(st.getPath)
+  /** Drop each of `dirs`, then its ancestors below `root`, while it
+    * holds nothing, so a value an operation emptied leaves the layout
+    * (and SPJ partition listings). Only these dirs: an empty `k=v` dir
+    * elsewhere in the table (one `ADD PARTITION` made) stays. */
+  def pruneEmptyDirs(fs: FileSystem, root: Path, dirs: Seq[Path]): Unit =
+    dirs.distinct.foreach { d =>
+      var dir = d
+      while (dir.depth > root.depth && fs.exists(dir) && fs.listStatus(dir).isEmpty) {
+        fs.delete(dir, false)
+        dir = dir.getParent
       }
-      if (remaining.isEmpty && dir != root) { fs.delete(dir, false); true }
-      else false
     }
-    prune(root)
-  }
+
+  /** The dirs that held the shards at table-relative paths `rels`. */
+  def dirsOf(root: Path, rels: Seq[String]): Seq[Path] =
+    rels.map(new Path(root, _).getParent)
 
   /** Drop write `id`'s staging dir, then the `_staging` parent once no
     * concurrent write holds it. STRICTLY best-effort: a commit runs it
@@ -2861,7 +2856,7 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
     // have retained. A truncate wipes every data entry; the staged
     // shards' write-time stats re-seed the index below
     if (truncate) JsonlShards.retireAll(f, dest)
-    if (replaceShards != null) {
+    val cowTrashed = if (replaceShards == null) Nil else {
       // group copy-on-write commit: the scanned shards ARE the replaced
       // set. A driver crash between removing them and publishing the
       // staged replacements must never lose the only copy of a group,
@@ -2903,6 +2898,7 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
       // the trashed originals' index entries die with them (the staged
       // replacements re-enter via their write-time stats below)
       JsonlSkipIndex.removeEntries(f, dest, trashedRels)
+      trashedRels
     }
     if (overwriteFilters != null) {
       // static partition overwrite: drop every shard the predicate
@@ -2963,7 +2959,7 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
       f.delete(cowTrash, true)
       // an operation that emptied a whole partition leaves a bare dir:
       // prune it so the value leaves the layout (deleteWhere contract)
-      JsonlShards.pruneEmptyDirs(f, dest)
+      JsonlShards.pruneEmptyDirs(f, dest, JsonlShards.dirsOf(dest, cowTrashed))
     }
     // auto-snapshot (graft.snapshot.auto): pin a version for THIS
     // commit, lock-free (claim-CAS id assignment). Plain appends AND

@@ -2,7 +2,8 @@ package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.graftbridge.SessionClone
+import org.apache.spark.sql.internal.SQLConf
 
 /** The end-to-end medallion run: landing CSVs -> bronze -> silver
   * (dims then facts) -> gold (reference: LarkETL.run, dags/utils/
@@ -28,11 +29,37 @@ import org.apache.spark.sql.types.StringType
   * step's write order) as it was thrown, with the others suppressed,
   * and no later step runs.
   *
-  * Scale posture: every published table is partitioned on
-  * `partition_value`; bronze inputs for the day are re-read with a
-  * partition predicate (pruned scan); dims broadcast into fact joins.
+  * Execution posture: a run's inputs are dimension-scale. Every row
+  * the run reads came through the driver once, when
+  * `LarkSource.recordsToDf` built the fetched Bitable records into a
+  * frame, and each day adds one day of them. So every Spark action
+  * here is a few small tasks, and its fixed costs outweigh its rows:
+  * compiling generated code for each plan (Janino, ~160 classes a day,
+  * most of them byte-identical to an earlier day's or differing only
+  * by an inlined date or timestamp) and a Spark job per lake read to
+  * infer the parquet schema. The pipeline therefore runs all of its
+  * Spark work on its own clone of the caller's session with code
+  * generation off (no whole-stage code, interpreted expressions), and
+  * reads lake tables with the schema of one file footer
+  * ([[graft.core.Tables.readParquetDir]]). The clone keeps the
+  * caller's runtime SQL conf (dynamic partition overwrite, UTC, ANSI
+  * off); the caller's own session keeps code generation. Spark's file
+  * readers still build their row projection from generated code in
+  * any mode, once per read schema per JVM, so only a day whose landing
+  * CSVs bring new columns compiles, one class per such file. There is no
+  * size switch back to compiled code: input that is too large to pass
+  * through the driver never reaches this class. Every published table
+  * is partitioned on `partition_value`, bronze inputs for the day are
+  * read with a partition predicate, and dims broadcast into fact joins.
   */
-final class Pipeline(spark: SparkSession, landingDir: String, lakeDir: String) {
+final class Pipeline(caller: SparkSession, landingDir: String, lakeDir: String) {
+
+  private val spark: SparkSession = {
+    val s = SessionClone(caller)
+    s.conf.set(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key, "false")
+    s.conf.set(SQLConf.CODEGEN_FACTORY_MODE.key, "NO_CODEGEN")
+    s
+  }
 
   private val writer = new WarehouseWriter(spark, lakeDir)
 

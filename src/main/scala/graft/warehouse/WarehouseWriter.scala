@@ -78,7 +78,7 @@ final class WarehouseWriter(spark: SparkSession, lakeDir: String) {
   }
 
   def read(layer: String, table: String): DataFrame =
-    spark.read.parquet(path(layer, table))
+    graft.core.Tables.readParquetDir(spark, path(layer, table))
 
   /** Read a table if present, else None (reference's read-or-skip
     * guards, etl.py:147 etc.). */

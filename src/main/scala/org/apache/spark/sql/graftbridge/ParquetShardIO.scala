@@ -3,14 +3,15 @@ package org.apache.spark.sql.graftbridge
 import java.time.ZoneId
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetRecordReader, ParquetWriter}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetRecordReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetWriteSupport}
 import org.apache.spark.sql.internal.LegacyBehaviorPolicy
 import org.apache.spark.sql.types.StructType
 
@@ -213,6 +214,23 @@ object ParquetShardIO {
       }
       out.result()
     } finally r.close()
+  }
+
+  /** The data schema `spark.read.parquet` would infer from `file`,
+    * read from its footer on the calling thread: Spark's own
+    * `ParquetFileFormat.readSchemaFromFooter`, the function its
+    * schema-inference job runs on each footer, over the Spark row
+    * metadata the file carries. None when it carries none (a file not
+    * written by Spark), where the schema would come from converting
+    * the parquet types under the reader's options. */
+  def sparkSchema(file: FileStatus, conf: Configuration,
+                  spark: SparkSession): Option[StructType] = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val footer = try r.getFooter finally r.close()
+    if (!footer.getFileMetaData.getKeyValueMetaData
+        .containsKey(ParquetReadSupport.SPARK_METADATA_KEY)) None
+    else Some(ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
 
   /** Footer row count — lets COUNT(*)-only aggregate pushdown answer

@@ -288,6 +288,31 @@ class GraftCatalogSpec extends AnyFunSuite {
     sql("DROP TABLE wh.pm.t")
   }
 
+  test("a metadata DELETE or a row-level rewrite prunes only the dirs it emptied") {
+    sql("CREATE NAMESPACE IF NOT EXISTS wh.pk")
+    def parts(t: String) = sql(s"SHOW PARTITIONS wh.pk.$t").collect()
+      .map(_.getString(0)).sorted.toSeq
+    for (t <- Seq("d", "u")) {
+      sql(s"CREATE TABLE wh.pk.$t (k BIGINT, p STRING) PARTITIONED BY (p)")
+      sql(s"INSERT INTO wh.pk.$t VALUES (1, 'a'), (2, 'b')")
+      sql(s"ALTER TABLE wh.pk.$t ADD PARTITION (p = 'z')")
+      assert(parts(t) == Seq("p=a", "p=b", "p=z"))
+    }
+    // metadata DELETE: p=a's dir goes with its shards, the empty p=z stays
+    sql("DELETE FROM wh.pk.d WHERE p = 'a'")
+    assert(parts("d") == Seq("p=b", "p=z"))
+    // copy-on-write UPDATE: p=a is rewritten in place, p=z stays
+    sql("UPDATE wh.pk.u SET k = 10 WHERE k = 1")
+    assert(parts("u") == Seq("p=a", "p=b", "p=z"))
+    // copy-on-write DELETE that empties p=b prunes p=b alone
+    sql("DELETE FROM wh.pk.u WHERE k = 2")
+    assert(parts("u") == Seq("p=a", "p=z"))
+    assert(sql("SELECT k, p FROM wh.pk.u").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((10L, "a")))
+    sql("DROP TABLE wh.pk.d")
+    sql("DROP TABLE wh.pk.u")
+  }
+
   test("SQL MERGE INTO: matched update, matched delete, not-matched insert") {
     sql("CREATE NAMESPACE IF NOT EXISTS wh.rlo")
     sql("CREATE TABLE wh.rlo.dim (k BIGINT, v STRING, amt BIGINT) PARTITIONED BY (v)")
