@@ -10,7 +10,8 @@ import graft.perf.Harness.Json.{num, obj, str}
   * MEDIANS reported — single-shot timings bounce with page-cache/JIT
   * state, this is the reliable comparison (and the measure of the
   * round-15 vectorized parquet read path, which arms on exactly these
-  * filter-free scans). One JSON line, Bench's shape. */
+  * filter-free scans; `pos_rows` times the row reader on both formats).
+  * One JSON line, Bench's shape, with each timing's max - min spread. */
 object FmtBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -47,11 +48,15 @@ object FmtBench {
       "deleted1pct_agg" -> (fmt =>
         s"""SELECT l_returnflag, l_linestatus, count(*), sum(l_quantity),
            |  sum(l_extendedprice) FROM fb.m.lid_$fmt
-           |GROUP BY l_returnflag, l_linestatus""".stripMargin))
-    val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
+           |GROUP BY l_returnflag, l_linestatus""".stripMargin),
+      // a `_pos` projection disarms the vectorized decode: both formats
+      // time the shard row reader
+      "pos_rows" -> (fmt =>
+        s"SELECT sum(l_quantity), max(_pos) FROM fb.m.li_$fmt"))
+    val timings = scala.collection.mutable.LinkedHashMap[String, Harness.Reps]()
     for ((shape, q) <- shapes; fmt <- formats) {
       c.sql(q(fmt)).collect() // warmup
-      timings(s"${shape}_$fmt") = Harness.timeReps(reps)(c.sql(q(fmt)).collect()).median
+      timings(s"${shape}_$fmt") = Harness.timeReps(reps)(c.sql(q(fmt)).collect())
     }
     // WRITE-path A/B (round-16, graft.parquet.compression/level): the
     // same lineitem rows inserted into fresh tables per codec variant,
@@ -72,7 +77,7 @@ object FmtBench {
       timings(name) = Harness.timeReps(reps, setup = {
         c.sql(s"DROP TABLE IF EXISTS fb.m.w_$name")
         c.sql(s"CREATE TABLE fb.m.w_$name TBLPROPERTIES ($props) AS $lineitem LIMIT 0")
-      })(c.sql(s"INSERT INTO fb.m.w_$name $lineitem")).median
+      })(c.sql(s"INSERT INTO fb.m.w_$name $lineitem"))
       def walk(f: java.io.File): Long =
         if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0L
         else if (f.isDirectory) f.listFiles().map(walk).sum
@@ -81,7 +86,8 @@ object FmtBench {
         c.conf.get("spark.sql.catalog.fb.root") + s"/m/w_$name"))
     }
     println(s"""{"metric":"fmt_ab","unit":"sec",""" +
-      s""""queries":${obj(timings.map { case (k, v) => k -> num(v) })},""" +
+      s""""queries":${obj(timings.map { case (k, v) => k -> num(v.median) })},""" +
+      s""""spread":${obj(timings.map { case (k, v) => k -> num(v.max - v.min) })},""" +
       s""""bytes":${obj(bytes.map { case (k, v) => k -> v.toString })},""" +
       s""""reps":$reps,"shards":$nShards,"sf":${str(sfDir)}}""")
     spark.stop()

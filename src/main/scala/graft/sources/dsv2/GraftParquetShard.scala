@@ -15,10 +15,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * `_graft_table.json` spec, hive `k=v` dirs, `_skip` manifests,
   * `_snapshots` pins/CDC, `_eq_deletes` upsert waves, `_deletes`
   * position sidecars, and the staged-rename commit protocol are all
-  * keyed by shard PATHS and row ORDINALS, never by bytes. Readers
-  * dispatch PER FILE on the extension, so a table converted mid-life
-  * (ALTER ... SET TBLPROPERTIES('graft.format'='parquet') + compact)
-  * reads correctly while both populations coexist.
+  * keyed by shard PATHS and row ORDINALS, never by bytes. Row reads of
+  * both tiers go through one [[ShardRowReader]], which picks the
+  * format's row source PER FILE on the extension ([[ParquetRows]] here,
+  * with [[ParquetFooter]]'s alias resolution and row-group skipping),
+  * so a table converted mid-life (ALTER ... SET
+  * TBLPROPERTIES('graft.format'='parquet') + compact) reads correctly
+  * while both populations coexist; filter-free scans of all-parquet
+  * partition sets decode column-at-a-time instead
+  * ([[ParquetVectorizedShardReader]]).
   *
   * Scale note: this is the 100 TB posture for numeric-heavy tables —
   * real columnar pruning (nested included), no per-row JSON parse, no
@@ -237,6 +242,64 @@ final class MaskedColumnVector(base: org.apache.spark.sql.vectorized.ColumnVecto
       o => new MaskedColumnVector(base.getChild(o), mask))
 }
 
+/** Footer view of one parquet shard: where each declared field is
+  * stored, and the row-group predicate for a filter set. The footer is
+  * read at most once, and only when a renamed field or a row-group
+  * predicate asks for it. */
+final class ParquetFooter(file: String, conf: JsonlHadoopConf) {
+  lazy val types: Map[String, String] =
+    ParquetShardIO.footerFieldTypes(new Path(file), conf.value)
+
+  /** The name the shard stores `f` under: its physical key or, on a
+    * shard written before a rename, the newest former name the footer
+    * carries. */
+  def nameOf(f: StructField): String = {
+    val phys = JsonlTable.physicalKeyOf(f)
+    val aliases = JsonlTable.aliasesOf(f)
+    if (aliases.isEmpty || types.contains(phys)) phys
+    else aliases.find(types.contains).getOrElse(phys)
+  }
+
+  def readSchema(fields: Seq[StructField]): StructType =
+    StructType(fields.map(f => StructField(nameOf(f), f.dataType, nullable = true)))
+
+  /** Statistics-only predicate over `filters` ([[ParquetRowGroupFilter]]);
+    * `injected` names columns the file does not store. */
+  def rowGroupFilter(filters: Seq[Filter], injected: String => Boolean,
+                     dataSchema: StructType)
+      : Option[org.apache.parquet.filter2.predicate.FilterPredicate] =
+    if (filters.isEmpty) None
+    else ParquetRowGroupFilter.build(filters, injected, dataSchema, nameOf, types.get)
+}
+
+/** Parquet rows from Spark's own record reader, with the footer's
+  * rename-alias resolution and statistics-only skipping of row groups
+  * `groupFilters` rule out. Values come out of the converter's reused
+  * buffer, so kept ones are deep-copied. */
+private[dsv2] final class ParquetRows(file: String, cols: Seq[StructField],
+                                      conf: JsonlHadoopConf,
+                                      groupFilters: Seq[Filter],
+                                      injected: String => Boolean,
+                                      dataSchema: StructType)
+    extends ShardRows {
+  private val footer = new ParquetFooter(file, conf)
+  private val readSchema = footer.readSchema(cols)
+  private val types = readSchema.fields.map(_.dataType)
+  private val reader = ParquetShardIO.openReader(new Path(file), readSchema,
+    conf.value, footer.rowGroupFilter(groupFilters, injected, dataSchema))
+  private var row: InternalRow = _
+
+  override def next(): Boolean =
+    reader.nextKeyValue() && { row = reader.getCurrentValue; true }
+  override def parse(): Boolean = true
+  override def value(c: Int): Any = if (row.isNullAt(c)) null else row.get(c, types(c))
+  override def own(v: Any): Any = v match {
+    case b: Array[Byte] => b.clone()
+    case other => ParquetShardIO.copyValue(other)
+  }
+  override def close(): Unit = reader.close()
+}
+
 /** VECTORIZED parquet shard scan: [[org.apache.spark.sql.vectorized.ColumnarBatch]]es
   * straight from Spark's own vectorized column readers — the default
   * for parquet partitions emitting rows verbatim-or-masked (no claimed
@@ -262,62 +325,26 @@ final class MaskedColumnVector(base: org.apache.spark.sql.vectorized.ColumnVecto
   * is permuted once to the projection's column order (the underlying
   * reader appends partition columns last). Anything still conditional
   * (equality-delete hiding, `_pos`/`_shard`/`_change` projections,
-  * pushed LIMIT) takes [[ParquetShardReader]]'s row path instead. */
-final class ParquetVectorizedShardReader(file: String, required: StructType,
-                                         partValues: Map[String, Option[String]],
+  * pushed LIMIT) takes [[ShardRowReader]]'s row path instead. Partition
+  * constants, position sets and the drop rule are that reader's. */
+final class ParquetVectorizedShardReader(p: JsonlInputPartition,
+                                         required: StructType,
                                          dataSchema: StructType,
                                          conf: JsonlHadoopConf,
-                                         prune: Array[Filter] = Array.empty,
-                                         deletesPath: String = null,
-                                         deletePositions: Array[Long] = null,
-                                         keepPositions: Array[Long] = null)
+                                         prune: Array[Filter] = Array.empty)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+  import ShardRowReader.{deletedSet, dropped, partConst, positionSet}
 
   private val fileFields: Seq[StructField] =
-    required.fields.toSeq.filterNot(f => partValues.contains(f.name))
+    required.fields.toSeq.filterNot(f => p.partValues.contains(f.name))
   private val partFields: Seq[StructField] =
-    required.fields.toSeq.filter(f => partValues.contains(f.name))
+    required.fields.toSeq.filter(f => p.partValues.contains(f.name))
 
-  private lazy val footerTypes: Map[String, String] =
-    ParquetShardIO.footerFieldTypes(new Path(file), conf.value)
-  private val needFooter: Boolean =
-    fileFields.exists(f => JsonlTable.aliasesOf(f).nonEmpty)
-  private def resolvedName(f: StructField): String = {
-    val phys = JsonlTable.physicalKeyOf(f)
-    if (JsonlTable.aliasesOf(f).isEmpty || footerTypes.contains(phys)) phys
-    else JsonlTable.aliasesOf(f).find(footerTypes.contains).getOrElse(phys)
-  }
-  private val readSchema: StructType = StructType(fileFields.map { f =>
-    val phys = JsonlTable.physicalKeyOf(f)
-    val name =
-      if (!needFooter || footerTypes.contains(phys)) phys
-      else JsonlTable.aliasesOf(f).find(footerTypes.contains).getOrElse(phys)
-    StructField(name, f.dataType, nullable = true)
-  })
-
-  // ---- position-delete / keep-set mask state (merge-on-read,
-  // snapshot-pinned ordinals, CDC keep pieces)
-  // ordinal-range guard matches JsonlDeletes.readBitSet: a pinned
-  // ordinal above Int.MaxValue would wrap negative in toInt and set a
-  // wrong bit (or throw inside BitSet) — refuse loudly instead
-  private def toBitSet(positions: Array[Long],
-                       what: String): java.util.BitSet = {
-    val bs = new java.util.BitSet()
-    positions.foreach { pos =>
-      require(pos >= 0 && pos <= Int.MaxValue,
-        s"$what ordinal $pos out of int range for $file")
-      bs.set(pos.toInt)
-    }
-    bs
-  }
-  private val deleted: java.util.BitSet =
-    if (deletePositions != null) toBitSet(deletePositions, "delete")
-    else if (deletesPath == null) null
-    else JsonlDeletes.readBitSet(conf, deletesPath)
-  private val kept: java.util.BitSet =
-    if (keepPositions == null) null
-    else toBitSet(keepPositions, "keep")
+  // position-delete / keep-set mask state (merge-on-read, snapshot-
+  // pinned ordinals, CDC keep pieces)
+  private val deleted = deletedSet(conf, p)
+  private val kept = positionSet(p.keepPositions, "keep", p.file)
   private val masking: Boolean = deleted != null || kept != null
 
   // row-group pruning from the DECLINED filters: footer statistics skip
@@ -325,31 +352,20 @@ final class ParquetVectorizedShardReader(file: String, required: StructType,
   // ordinals, so it arms only when NOT masking (masks are keyed by
   // file-sequential ordinals); `_pos` projections never reach this
   // reader (they disarm vectorization at the scan).
-  private val rowGroupFilter
-      : Option[org.apache.parquet.filter2.predicate.FilterPredicate] =
-    if (prune.isEmpty || masking) None
-    else ParquetRowGroupFilter.build(prune.toSeq, partValues.contains,
-      dataSchema, resolvedName, footerTypes.get)
+  private val footer = new ParquetFooter(p.file, conf)
+  private val rowGroupFilter =
+    footer.rowGroupFilter(if (masking) Nil else prune.toSeq,
+      p.partValues.contains, dataSchema)
 
   private val partRow: InternalRow = {
-    val vals = partFields.map { f =>
-      partValues(f.name) match {
-        case None => null
-        case Some(s) => try f.dataType match {
-          case LongType => java.lang.Long.valueOf(s.toLong)
-          case IntegerType => java.lang.Integer.valueOf(s.toInt)
-          case DoubleType => java.lang.Double.valueOf(s.toDouble)
-          case BooleanType => java.lang.Boolean.valueOf(s.toBoolean)
-          case _ => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-        } catch { case _: Exception => null }
-      }
-    }
-    new GenericInternalRow(vals.toArray[Any])
+    val zone = ShardRowReader.sessionZone(conf)
+    new GenericInternalRow(partFields.map(f =>
+      partConst(p.partValues(f.name), f.dataType, zone)).toArray[Any])
   }
 
   private val Capacity = 4096
   private val reader = ParquetShardIO.openVectorizedReader(
-    new Path(file), readSchema, conf.value,
+    new Path(p.file), footer.readSchema(fileFields), conf.value,
     StructType(partFields), partRow, Capacity, rowGroupFilter)
 
   // the underlying batch lays out file columns then partition columns;
@@ -382,16 +398,11 @@ final class ParquetVectorizedShardReader(file: String, required: StructType,
       val n = b.numRows()
       if (!masking) view.setNumRows(n)
       else {
-        // surviving batch-relative ordinals under the delete/keep
-        // bitsets — same drop rule as the row reader
+        // surviving batch-relative ordinals under the delete/keep bitsets
         var m = 0
         var i = 0
         while (i < n) {
-          val pos = posBase + i
-          val dropped = (deleted != null && pos <= Int.MaxValue &&
-            deleted.get(pos.toInt)) ||
-            (kept != null && (pos > Int.MaxValue || !kept.get(pos.toInt)))
-          if (!dropped) { mask.map(m) = i; m += 1 }
+          if (!dropped(posBase + i, deleted, kept)) { mask.map(m) = i; m += 1 }
           i += 1
         }
         posBase += n
@@ -402,277 +413,5 @@ final class ParquetVectorizedShardReader(file: String, required: StructType,
     has
   }
   override def get(): ColumnarBatch = view
-  override def close(): Unit = reader.close()
-}
-
-/** One parquet shard as a [[PartitionReader]] with the SAME emission
-  * semantics as [[JsonlPartitionReader]] — partition-directory value
-  * injection, `_shard`/`_pos`/`_change` metadata columns, pushed-filter
-  * evaluation (typed, exact — the file stores real types, so no JSON
-  * coercion lattice), equality-delete hiding / change-feed preimage
-  * emission, merge-on-read position-delete and keep bitsets, and the
-  * pushed LIMIT. Row ordinals are the sequential whole-file read
-  * positions, stable because shards are immutable once published —
-  * the `_pos` contract position deletes are keyed by. */
-final class ParquetShardReader(file: String, required: StructType,
-                               pushed: Array[Filter],
-                               partValues: Map[String, Option[String]],
-                               dataSchema: StructType,
-                               conf: JsonlHadoopConf,
-                               limit: Int = -1,
-                               deletesPath: String = null,
-                               deletePositions: Array[Long] = null,
-                               changeKind: String = null,
-                               keepPositions: Array[Long] = null,
-                               eqDeletes: Map[String, Long] = Map.empty,
-                               eqCols: Seq[String] = Nil,
-                               eqEmit: Map[String, Long] = Map.empty,
-                               // DECLINED filters (prune-only channel):
-                               // row-group skipping only, never
-                               // row-evaluated — FilterExec re-checks
-                               // above the scan
-                               prune: Array[Filter] = Array.empty)
-    extends PartitionReader[InternalRow] {
-
-  private val eqShardSeq: Long =
-    JsonlEqDeletes.shardSeqOf(new Path(file).getName)
-  private val eqActive: Boolean = eqCols.nonEmpty && eqDeletes.nonEmpty &&
-    eqDeletes.valuesIterator.max > eqShardSeq
-  private val eqEmitActive: Boolean = eqCols.nonEmpty && eqEmit.nonEmpty
-
-  // ordinal-range guard matches JsonlDeletes.readBitSet: a pinned
-  // ordinal above Int.MaxValue would wrap negative in toInt and set a
-  // wrong bit (or throw inside BitSet) — refuse loudly instead
-  private def toBitSet(positions: Array[Long],
-                       what: String): java.util.BitSet = {
-    val bs = new java.util.BitSet()
-    positions.foreach { pos =>
-      require(pos >= 0 && pos <= Int.MaxValue,
-        s"$what ordinal $pos out of int range for $file")
-      bs.set(pos.toInt)
-    }
-    bs
-  }
-  private val deleted: java.util.BitSet =
-    if (deletePositions != null) toBitSet(deletePositions, "delete")
-    else if (deletesPath == null) null
-    else JsonlDeletes.readBitSet(conf, deletesPath)
-  private val kept: java.util.BitSet =
-    if (keepPositions == null) null
-    else toBitSet(keepPositions, "keep")
-
-  // ---- the columns the FILE must supply: required data columns plus
-  // filter/eq-key columns outside the projection. Partition-directory
-  // columns and metadata columns are injected, never read.
-  private val metaNames = Set("_pos", "_shard", "_change")
-  private def isInjected(name: String): Boolean =
-    metaNames.contains(name) || partValues.contains(name)
-
-  private def attrOf(f: Filter): Option[String] = ParquetRowGroupFilter.attrOf(f)
-  private val filterAttrs: Seq[String] =
-    pushed.toSeq.flatMap(attrOf(_)).distinct
-  private val wantedNames: Seq[String] =
-    (required.fields.map(_.name).toSeq ++ filterAttrs ++ eqCols)
-      .distinct.filterNot(isInjected)
-      .filter(n => dataSchema.fieldNames.contains(n))
-
-  // rename-alias resolution: a shard written BEFORE a rename stores
-  // the old key — resolve each wanted field to the name the FOOTER
-  // actually carries (one footer read, paid only when aliases exist
-  // or when row-group pruning wants column presence confirmed)
-  private val fields: Seq[StructField] =
-    wantedNames.map(n => dataSchema(dataSchema.fieldIndex(n)))
-  private lazy val footerTypes: Map[String, String] =
-    ParquetShardIO.footerFieldTypes(new Path(file), conf.value)
-  private lazy val footerNames: Set[String] = footerTypes.keySet
-  private val needFooter: Boolean =
-    fields.exists(f => JsonlTable.aliasesOf(f).nonEmpty)
-  private def resolvedName(f: StructField): String = {
-    val phys = JsonlTable.physicalKeyOf(f)
-    if (!needFooter || footerNames.contains(phys)) phys
-    else JsonlTable.aliasesOf(f).find(footerNames.contains).getOrElse(phys)
-  }
-  private val readSchema: StructType = StructType(fields.map { f =>
-    StructField(resolvedName(f), f.dataType, nullable = true)
-  })
-  // display name -> position in the read row
-  private val readIdx: Map[String, Int] =
-    wantedNames.zipWithIndex.toMap
-
-  // ROW-GROUP pruning — footer statistics skip whole groups before
-  // any page decodes ([[ParquetRowGroupFilter]]). Skipping shifts row
-  // ordinals, so this arms ONLY when nothing position-sensitive is in
-  // play: no delete/keep ordinals (live sidecar or snapshot-pinned),
-  // no CDC kind, and `_pos` not projected. Equality-delete hiding is
-  // VALUE-based and composes fine. PUSHED filters (claimed, jsonl-
-  // format tables reading parquet shards) and DECLINED prune-only
-  // filters (parquet-format tables) both feed it; untranslated shapes
-  // still evaluate row-level below for `pushed`, and FilterExec
-  // re-checks `prune` — pruning is an overlay, never the answer.
-  private val rowGroupFilter
-      : Option[org.apache.parquet.filter2.predicate.FilterPredicate] =
-    if ((pushed.isEmpty && prune.isEmpty) || deletesPath != null ||
-        deletePositions != null || keepPositions != null ||
-        changeKind != null || required.fieldNames.contains("_pos")) None
-    else ParquetRowGroupFilter.build((pushed ++ prune).toSeq.distinct,
-      partValues.contains, dataSchema, resolvedName, footerTypes.get)
-
-  private val reader =
-    ParquetShardIO.openReader(new Path(file), readSchema, conf.value,
-      rowGroupFilter)
-
-  // ---- typed partition constants (declared type; unparseable -> null,
-  // the JSONL readers' mismatch posture). A null partition value (the
-  // __HIVE_DEFAULT_PARTITION__ dir) masks the column to SQL null.
-  private val partConst: Map[String, Any] = partValues.map { case (k, v) =>
-    k -> (v match {
-      case None => null
-      case Some(s) =>
-        val dt = dataSchema.fields.find(_.name == k).map(_.dataType)
-          .getOrElse(StringType)
-        try dt match {
-          case LongType => java.lang.Long.valueOf(s.toLong)
-          case IntegerType => java.lang.Integer.valueOf(s.toInt)
-          case DoubleType => java.lang.Double.valueOf(s.toDouble)
-          case BooleanType => java.lang.Boolean.valueOf(s.toBoolean)
-          case _ => UTF8String.fromString(s)
-        } catch { case _: Exception => null }
-    })
-  }
-
-  private var row: InternalRow = _ // the reader's reused buffer row
-  private var currentPos: Long = -1L
-  private var emittedRows = 0L
-
-  private def declaredType(name: String): DataType =
-    dataSchema.fields.find(_.name == name).map(_.dataType)
-      .getOrElse(StringType)
-
-  /** Current value of display column `name`: injected constant first
-    * (partition dirs mask the file, as in the JSONL reader), then the
-    * read row. */
-  private def valueOf(name: String): Any =
-    if (partValues.contains(name)) partConst(name)
-    else readIdx.get(name) match {
-      case Some(i) =>
-        if (row.isNullAt(i)) null
-        else row.get(i, readSchema.fields(i).dataType)
-      case None => null
-    }
-
-  // ---- equality-delete key rendering: the same writer-side renderer
-  // ([[JsonlEqDeletes.renderRow]]) over a tuple row of the key columns
-  // in their DECLARED types — identical strings to the published keys.
-  private lazy val eqSchema: StructType =
-    StructType(eqCols.map(c => StructField(c, declaredType(c))))
-  private lazy val eqIdx: Seq[Int] = eqCols.indices
-  private lazy val eqRow = new GenericInternalRow(eqCols.length)
-  private def eqKeyOf(): String = {
-    var i = 0
-    while (i < eqCols.length) {
-      eqRow.update(i, valueOf(eqCols(i)))
-      i += 1
-    }
-    JsonlEqDeletes.renderRow(eqRow, eqSchema, eqIdx)
-  }
-  private def eqHidden(): Boolean =
-    if (!eqActive && !eqEmitActive) false
-    else {
-      val key = eqKeyOf()
-      (eqActive && eqDeletes.get(key).exists(_ > eqShardSeq)) ||
-        (eqEmitActive && !eqEmit.get(key).exists(_ > eqShardSeq))
-    }
-
-  // ---- pushed-filter evaluation: typed three-valued compare collapsed
-  // to match/no-match. Values are exact (real column types), so only
-  // the five pushable scalar shapes need handling.
-  private def cmp(attr: String, value: Any): Option[Int] = {
-    val v = valueOf(attr)
-    if (v == null || value == null) None
-    else (v, value) match {
-      case (l: java.lang.Long, n: Number) =>
-        numCmp(l.longValue.toDouble, isIntegral = true, l.longValue, n)
-      case (i: java.lang.Integer, n: Number) =>
-        numCmp(i.intValue.toDouble, isIntegral = true, i.longValue, n)
-      case (d: java.lang.Double, n: Number) =>
-        numCmp(d.doubleValue, isIntegral = false, 0L, n)
-      // UTF8 BYTE order — Spark's own string comparison (UTF8String)
-      // and DuckDB's agree on it; java.lang.String.compareTo is UTF-16
-      // code-unit order, which diverges for supplementary characters
-      case (s: UTF8String, t: String) =>
-        Some(s.compareTo(UTF8String.fromString(t)))
-      case (b: java.lang.Boolean, t: java.lang.Boolean) =>
-        Some(java.lang.Boolean.compare(b, t))
-      case _ => None
-    }
-  }
-  private def numCmp(lhsD: Double, isIntegral: Boolean, lhsL: Long,
-                     rhs: Number): Option[Int] = {
-    val rhsIntegral = rhs.isInstanceOf[java.lang.Long] ||
-      rhs.isInstanceOf[java.lang.Integer] || rhs.isInstanceOf[java.lang.Short]
-    if (isIntegral && rhsIntegral)
-      Some(java.lang.Long.compare(lhsL, rhs.longValue))
-    else Some(java.lang.Double.compare(lhsD, rhs.doubleValue))
-  }
-  private def matches(f: Filter): Boolean = f match {
-    case EqualTo(a, v) => cmp(a, v).contains(0)
-    case In(a, vs) => vs.exists(v => cmp(a, v).contains(0))
-    case IsNull(a) => valueOf(a) == null
-    case IsNotNull(a) => valueOf(a) != null
-    case GreaterThan(a, v) => cmp(a, v).exists(_ > 0)
-    case GreaterThanOrEqual(a, v) => cmp(a, v).exists(_ >= 0)
-    case LessThan(a, v) => cmp(a, v).exists(_ < 0)
-    case LessThanOrEqual(a, v) => cmp(a, v).exists(_ <= 0)
-    case _ => true // unsupported shapes were returned as residual
-  }
-
-  // ---- materialization into the REQUIRED schema. Values leaving the
-  // reader outlive the converter's reused row buffer: deep-copy
-  // object types ([[ParquetShardIO.copyValue]]).
-  private def materialize(): InternalRow = {
-    val r = new GenericInternalRow(required.length)
-    var i = 0
-    while (i < required.length) {
-      val f = required.fields(i)
-      f.name match {
-        case "_pos" => r.setLong(i, currentPos)
-        case "_shard" => r.update(i, UTF8String.fromString(file))
-        case "_change" =>
-          if (changeKind == null) r.setNullAt(i)
-          else r.update(i, UTF8String.fromString(changeKind))
-        case n =>
-          val v = valueOf(n)
-          if (v == null) r.setNullAt(i)
-          else r.update(i, v match {
-            case b: Array[Byte] => b.clone()
-            case other => ParquetShardIO.copyValue(other)
-          })
-      }
-      i += 1
-    }
-    r
-  }
-
-  private var out: InternalRow = _
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emittedRows >= limit) return false
-    while (reader.nextKeyValue()) {
-      currentPos += 1
-      row = reader.getCurrentValue
-      val dropped = (deleted != null && currentPos <= Int.MaxValue &&
-        deleted.get(currentPos.toInt)) ||
-        (kept != null && (currentPos > Int.MaxValue ||
-          !kept.get(currentPos.toInt)))
-      if (!dropped && !eqHidden() && pushed.forall(matches)) {
-        out = materialize()
-        emittedRows += 1
-        return true
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = out
   override def close(): Unit = reader.close()
 }

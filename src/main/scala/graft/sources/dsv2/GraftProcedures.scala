@@ -552,7 +552,7 @@ object GraftProcedures {
               val outPath = new Path(s"$stagingStr/$rel", outName)
               // rows-based rewrite whenever parquet is involved on
               // either side (byte-level concat is a JSONL-only trick):
-              // each input decodes through its format's shard reader —
+              // each input decodes through the shard row reader —
               // sidecar ordinals dropped, equality-hidden rows filtered
               // by the reader's own stamp rule — and re-encodes through
               // the table-format sink. The JSONL->JSONL path below
@@ -583,16 +583,9 @@ object GraftProcedures {
                     if (exp && keySpecs.nonEmpty) taskEqMap
                     else Map.empty[String, Long]
                   val eqC = if (eqM.isEmpty) Nil else keySpecs.map(_._1)
-                  val rdr: org.apache.spark.sql.connector.read.PartitionReader[
-                      org.apache.spark.sql.catalyst.InternalRow] =
-                    if (GraftParquetShard.isParquetName(shard))
-                      new ParquetShardReader(shard, eqTblSchema, Array.empty,
-                        pv, eqTblSchema, conf, deletesPath = sc,
-                        eqDeletes = eqM, eqCols = eqC)
-                    else
-                      new JsonlPartitionReader(shard, eqTblSchema, Array.empty,
-                        pv, eqTblSchema, conf, deletesPath = sc,
-                        eqDeletes = eqM, eqCols = eqC)
+                  val rdr = new ShardRowReader(
+                    JsonlInputPartition(shard, pv, deletes = sc), eqTblSchema,
+                    eqTblSchema, conf, eqDeletes = eqM, eqCols = eqC)
                   try while (rdr.next()) sink.write(rdr.get())
                   finally rdr.close()
                 }

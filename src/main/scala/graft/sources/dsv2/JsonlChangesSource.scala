@@ -356,14 +356,8 @@ final class JsonlChangesReaderFactory(
         (if (eqFresh == null) Map.empty[String, Long] else eqFresh.value)
       else Map.empty[String, Long]
     val ec = if (p.eqKind == null) Nil else eqCols
-    if (GraftParquetShard.isParquetName(p.file))
-      new ParquetShardReader(p.file, readSchema, Array.empty, p.partValues,
-        tableSchema, conf, -1, p.deletes, p.deletePositions, p.changeKind,
-        p.keepPositions, hide, ec, emit)
-    else
-      new JsonlPartitionReader(p.file, readSchema, Array.empty, p.partValues,
-        tableSchema, conf, -1, p.deletes, p.deletePositions, p.changeKind,
-        p.keepPositions, hide, ec, emit)
+    new ShardRowReader(p, readSchema, tableSchema, conf, eqDeletes = hide,
+      eqCols = ec, eqEmit = emit)
   }
 }
 

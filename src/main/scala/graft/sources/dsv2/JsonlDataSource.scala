@@ -1,8 +1,6 @@
 package graft.sources.dsv2
 
-import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
-import java.util.zip.GZIPInputStream
 
 import scala.jdk.CollectionConverters._
 
@@ -374,7 +372,6 @@ class JsonlTable(tableSchema: StructType, path: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new JsonlScanBuilder(schema(), path,
       options.getLong("maxFileAgeMs", JsonlMicroBatchStream.DefaultMaxFileAgeMs),
-      options.getBoolean("columnar", false),
       options.getBoolean("spj", false),
       snapshot,
       // declared skip/cluster columns are runtime-filterable: a DPP-
@@ -712,7 +709,6 @@ class JsonlTable(tableSchema: StructType, path: String,
 
 final class JsonlScanBuilder(dataSchema: StructType, path: String,
                              maxFileAgeMs: Long = JsonlMicroBatchStream.DefaultMaxFileAgeMs,
-                             columnar: Boolean = false,
                              spj: Boolean = false,
                              snapshot: JsonlSnapshots.Manifest = null,
                              runtimeSkipCols: Seq[String] = Nil,
@@ -850,7 +846,7 @@ final class JsonlScanBuilder(dataSchema: StructType, path: String,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   override def build(): Scan =
-    new JsonlScan(dataSchema, required, pushed, path, maxFileAgeMs, columnar,
+    new JsonlScan(dataSchema, required, pushed, path, maxFileAgeMs,
       aggSpecs, limit, spj, snapshot = snapshot, pruneOnly = pruneOnly,
       runtimeSkipCols = runtimeSkipCols, statsJson = statsJson)
 }
@@ -1107,7 +1103,6 @@ object JsonlLayout {
 final class JsonlScan(dataSchema: StructType, required: StructType,
                       pushed: Array[Filter], path: String,
                       maxFileAgeMs: Long = JsonlMicroBatchStream.DefaultMaxFileAgeMs,
-                      columnar: Boolean = false,
                       aggSpecs: Seq[(String, String)] = Nil,
                       limit: Int = -1,
                       spj: Boolean = false,
@@ -1193,19 +1188,12 @@ final class JsonlScan(dataSchema: StructType, required: StructType,
 
   private def spjActive: Boolean = spj && !aggMode && spjKeys.nonEmpty
 
-  private def catalystKey(v: String, dt: DataType): Any = dt match {
-    case StringType  => org.apache.spark.unsafe.types.UTF8String.fromString(v)
-    case LongType    => v.toLong
-    case IntegerType => v.toInt
-    case DoubleType  => v.toDouble
-    case BooleanType => v.toBoolean
-    case other => throw new IllegalStateException(s"unreachable: $other")
-  }
-
+  // the key values the shard readers inject for the same dirs
   private def keyRowOf(pv: Map[String, Option[String]])
       : org.apache.spark.sql.catalyst.InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      spjKeys.map { case (n, dt) => pv(n).map(catalystKey(_, dt)).orNull }.toArray)
+      spjKeys.map { case (n, dt) =>
+        ShardRowReader.partConst(pv(n), dt, java.time.ZoneOffset.UTC) }.toArray)
 
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning =
@@ -1655,8 +1643,7 @@ final class JsonlScan(dataSchema: StructType, required: StructType,
   private lazy val allVectorizable: Boolean = {
     val parts = buildPartitions()
     parts.nonEmpty && pushed.isEmpty && limit < 0 &&
-      !required.fields.exists(f =>
-        f.name == "_pos" || f.name == "_shard" || f.name == "_change") &&
+      !required.fieldNames.exists(ShardRowReader.MetadataColumns) &&
       parts.forall { ip =>
         val p = ip.asInstanceOf[JsonlInputPartition]
         GraftParquetShard.isParquetName(p.file) &&
@@ -1721,7 +1708,7 @@ final class JsonlScan(dataSchema: StructType, required: StructType,
         eqState.files)
     else
       new JsonlReaderFactory(required, pushed, dataSchema,
-        JsonlHadoopConf.fromSession(), columnar, limit,
+        JsonlHadoopConf.fromSession(), limit,
         eqBroadcast, eqState.cols, eqState.files,
         vectorized = allVectorizable, pruneFilters = pruneOnly)
 
@@ -1757,15 +1744,6 @@ final class JsonlAggReaderFactory(specs: Seq[(String, String)],
                                   eqCols: Seq[String] = Nil,
                                   eqFiles: Seq[String] = Nil)
     extends PartitionReaderFactory {
-  // over-cap executor-direct path: the map is built once per executor
-  // from the key files ([[JsonlEqDeletes.ExecutorIndexCache]])
-  private def eqResolved: (Map[String, Long], Seq[String]) =
-    if (eqFiles.nonEmpty) {
-      val (m, _, cols) =
-        JsonlEqDeletes.ExecutorIndexCache.get(conf.value, eqFiles)
-      (m, cols)
-    } else
-      (if (eqDeletes == null) Map.empty else eqDeletes.value, eqCols)
   /** Parquet footer-statistics partial: for an UNINDEXED parquet shard
     * (the driver's skip-index path answered nothing) with no filters,
     * no deletes, and no reachable equality state, COUNT comes from the
@@ -1785,12 +1763,8 @@ final class JsonlAggReaderFactory(specs: Seq[(String, String)],
         ((p.deletes != null || p.deletePositions != null) && !countOnly))
       return null
     val deletedCount: Long =
-      if (p.deletePositions != null) p.deletePositions.distinct.length.toLong
-      else if (p.deletes != null) {
-        val bs = JsonlDeletes.readBitSet(conf, p.deletes)
-        if (bs == null) 0L else bs.cardinality().toLong
-      } else 0L
-    val (eqMap, _) = if (p.eqExempt) (Map.empty[String, Long], Nil) else eqResolved
+      Option(ShardRowReader.deletedSet(conf, p)).fold(0L)(_.cardinality().toLong)
+    val (eqMap, _) = ShardRowReader.eqState(conf, p, eqDeletes, eqCols, eqFiles)
     val stamp = JsonlEqDeletes.shardSeqOf(new Path(p.file).getName)
     if (eqMap.nonEmpty && eqMap.valuesIterator.max > stamp) return null
     val mm = specs.collect { case (op, c) if op != "count" => c }.distinct
@@ -1801,18 +1775,10 @@ final class JsonlAggReaderFactory(specs: Seq[(String, String)],
     val fileCols = Seq.newBuilder[String]
     val resolve = mm.map { c =>
       val fl = dataSchema.fields.find(_.name == c).getOrElse(return null)
-      if (p.partValues.contains(c)) {
-        val v: Any = p.partValues(c) match {
-          case Some(s) => try fl.dataType match {
-            case LongType => java.lang.Long.valueOf(s.toLong)
-            case IntegerType => java.lang.Integer.valueOf(s.toInt)
-            case DoubleType => java.lang.Double.valueOf(s.toDouble)
-            case _ => return null
-          } catch { case _: Exception => return null }
-          case None => null
-        }
-        c -> Left(v)
-      } else {
+      if (p.partValues.contains(c))
+        c -> Left(ShardRowReader.partConst(p.partValues(c), fl.dataType,
+          ShardRowReader.sessionZone(conf)))
+      else {
         if (JsonlTable.aliasesOf(fl).nonEmpty) return null
         fl.dataType match {
           case LongType | IntegerType | DoubleType | DateType |
@@ -1855,20 +1821,12 @@ final class JsonlAggReaderFactory(specs: Seq[(String, String)],
     val p = partition.asInstanceOf[JsonlInputPartition]
     val cols = specs.collect { case (op, c) if op != "count" => c }.distinct
     val required = StructType(cols.map(c => dataSchema(c)))
-    val (eqMap, eqC) = if (p.eqExempt) (Map.empty[String, Long], Nil) else eqResolved
+    val (eqMap, eqC) = ShardRowReader.eqState(conf, p, eqDeletes, eqCols, eqFiles)
     new JsonlAggReader(specs, required,
       if (p.agg != null) p.agg
       else footerPartial(p),
-      if (GraftParquetShard.isParquetName(p.file))
-        new ParquetShardReader(p.file, required, pushed, p.partValues,
-          dataSchema, conf, deletesPath = p.deletes,
-          deletePositions = p.deletePositions,
-          eqDeletes = eqMap, eqCols = eqC)
-      else
-        new JsonlPartitionReader(p.file, required, pushed, p.partValues,
-          dataSchema, conf, deletesPath = p.deletes,
-          deletePositions = p.deletePositions,
-          eqDeletes = eqMap, eqCols = eqC))
+      new ShardRowReader(p, required, dataSchema, conf, pushed,
+        eqDeletes = eqMap, eqCols = eqC))
   }
 }
 
@@ -2121,36 +2079,24 @@ object JsonlPartitionPruning {
     case _ => false
   }
 
-  private def typed(value: String, dt: DataType): Any = dt match {
-    case LongType => value.toLong
-    case IntegerType => value.toInt
-    case DoubleType => value.toDouble
-    case BooleanType => value.toBoolean
-    case _ => value
-  }
-  private def cmp(value: String, dt: DataType, other: Any): Option[Int] =
-    try (typed(value, dt), other) match {
-      case (a: String, b: String) => Some(a.compareTo(b))
-      case (a: Long, b: Number) => Some(java.lang.Long.compare(a, b.longValue))
-      case (a: Int, b: Number) => Some(java.lang.Long.compare(a.toLong, b.longValue))
-      case (a: Double, b: Number) => Some(java.lang.Double.compare(a, b.doubleValue))
-      case (a: Boolean, b: java.lang.Boolean) => Some(java.lang.Boolean.compare(a, b))
-      case _ => None
-    } catch { case _: Exception => None }
-
+  /** The partition's value is the one the shard readers inject
+    * ([[ShardRowReader.partConst]]: text that does not parse as the
+    * column's type is SQL null) and compares as they compare it. */
   def admits(f: Filter, col: String, value: Option[String],
              schema: StructType): Boolean = {
     val dt = schema.fields.find(_.name == col).map(_.dataType)
       .getOrElse(return true)
-    (f, value) match {
-      case (IsNull(a), v) if a == col => v.isEmpty
-      case (IsNotNull(a), v) if a == col => v.isDefined
+    val typed = ShardRowReader.partConst(value, dt, java.time.ZoneOffset.UTC)
+    def cmp(other: Any): Option[Int] = ShardRowReader.compare(typed, other)
+    (f, typed) match {
+      case (IsNull(a), v) if a == col => v == null
+      case (IsNotNull(a), v) if a == col => v != null
       // null-safe equality decides BOTH populations exactly: the null
       // partition matches iff the literal is null, a value by compare
-      case (EqualNullSafe(a, v), None) if a == col => v == null
-      case (EqualNullSafe(a, v), Some(pv)) if a == col =>
-        v != null && cmp(pv, dt, v).forall(_ == 0)
-      case (_, None) => f match {
+      case (EqualNullSafe(a, v), null) if a == col => v == null
+      case (EqualNullSafe(a, v), _) if a == col =>
+        v != null && cmp(v).forall(_ == 0)
+      case (_, null) => f match {
         // a null partition value fails every comparison filter on col
         case EqualTo(a, _) if a == col => false
         case In(a, _) if a == col => false
@@ -2160,15 +2106,12 @@ object JsonlPartitionPruning {
         case LessThanOrEqual(a, _) if a == col => false
         case _ => true
       }
-      case (EqualTo(a, v), Some(pv)) if a == col => cmp(pv, dt, v).forall(_ == 0)
-      case (In(a, vs), Some(pv)) if a == col =>
-        vs.exists(v => cmp(pv, dt, v).forall(_ == 0))
-      case (GreaterThan(a, v), Some(pv)) if a == col => cmp(pv, dt, v).forall(_ > 0)
-      case (GreaterThanOrEqual(a, v), Some(pv)) if a == col =>
-        cmp(pv, dt, v).forall(_ >= 0)
-      case (LessThan(a, v), Some(pv)) if a == col => cmp(pv, dt, v).forall(_ < 0)
-      case (LessThanOrEqual(a, v), Some(pv)) if a == col =>
-        cmp(pv, dt, v).forall(_ <= 0)
+      case (EqualTo(a, v), _) if a == col => cmp(v).forall(_ == 0)
+      case (In(a, vs), _) if a == col => vs.exists(v => cmp(v).forall(_ == 0))
+      case (GreaterThan(a, v), _) if a == col => cmp(v).forall(_ > 0)
+      case (GreaterThanOrEqual(a, v), _) if a == col => cmp(v).forall(_ >= 0)
+      case (LessThan(a, v), _) if a == col => cmp(v).forall(_ < 0)
+      case (LessThanOrEqual(a, v), _) if a == col => cmp(v).forall(_ <= 0)
       case _ => true
     }
   }
@@ -3330,21 +3273,11 @@ private[dsv2] object JsonlJson {
         }
       case _ => null
     }
-
-  /** Only these types take the vectorized copy in
-    * [[JsonlColumnarReader]]; nested values fall back to the row
-    * path. */
-  def columnarCompatible(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | DoubleType | BooleanType | StringType |
-         TimestampType | TimestampNTZType | DateType => true
-    case _ => false
-  }
 }
 
 final class JsonlReaderFactory(required: StructType, pushed: Array[Filter],
                                dataSchema: StructType,
                                conf: JsonlHadoopConf,
-                               columnar: Boolean = false,
                                limit: Int = -1,
                                // BROADCAST, not a closure field: the
                                // key map can be O(pending upserts) and
@@ -3368,424 +3301,20 @@ final class JsonlReaderFactory(required: StructType, pushed: Array[Filter],
                                // FilterExec re-checks above the scan
                                pruneFilters: Array[Filter] = Array.empty)
     extends PartitionReaderFactory {
-  private def eqResolved: (Map[String, Long], Seq[String]) =
-    if (eqFiles.nonEmpty) {
-      val (m, _, cols) =
-        JsonlEqDeletes.ExecutorIndexCache.get(conf.value, eqFiles)
-      (m, cols)
-    } else
-      (if (eqDeletes == null) Map.empty else eqDeletes.value, eqCols)
+  // SCAN-LEVEL decision (Spark refuses mixed row/columnar partition
+  // sets): `vectorized` was computed by the scan over the WHOLE planned
+  // partition set
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    // SCAN-LEVEL decision (Spark refuses mixed row/columnar partition
-    // sets): `vectorized` was computed by the scan over the WHOLE
-    // planned partition set. The opt-in row-wrap path stays available
-    // for JSONL scans; nested values have no vectorized copy there —
-    // those take the (composed, identical-semantics) row path.
-    vectorized || (columnar && required.fields.forall(f =>
-      JsonlJson.columnarCompatible(f.dataType)))
+    vectorized
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[JsonlInputPartition]
-    val (eqMap, eqC) = if (p.eqExempt) (Map.empty[String, Long], Nil) else eqResolved
-    // per-FILE format dispatch: a converted table serves both shard
-    // populations through one scan
-    if (GraftParquetShard.isParquetName(p.file))
-      new ParquetShardReader(p.file, required, pushed, p.partValues,
-        dataSchema, conf, limit, p.deletes, p.deletePositions,
-        p.changeKind, p.keepPositions, eqMap, eqC,
-        prune = pruneFilters)
-    else
-      new JsonlPartitionReader(p.file, required, pushed, p.partValues,
-        dataSchema, conf, limit, p.deletes, p.deletePositions,
-        p.changeKind, p.keepPositions, eqMap, eqC)
+    val (eqMap, eqC) = ShardRowReader.eqState(conf, p, eqDeletes, eqCols, eqFiles)
+    new ShardRowReader(p, required, dataSchema, conf, pushed, limit,
+      eqMap, eqC, prune = pruneFilters)
   }
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[JsonlInputPartition]
-    if (vectorized)
-      new ParquetVectorizedShardReader(p.file, required, p.partValues,
-        dataSchema, conf, prune = pruneFilters, deletesPath = p.deletes,
-        deletePositions = p.deletePositions, keepPositions = p.keepPositions)
-    else new JsonlColumnarReader(createReader(partition), required)
-  }
-}
-
-/** Streams one shard line by line: parse (Jackson), evaluate pushed
-  * filters on the parsed tree (SQL semantics: a comparison against a
-  * missing/null field never matches; IsNull does), then materialize
-  * ONLY the required columns into an InternalRow. Partition-directory
-  * values (absent from the JSON lines) are injected as typed virtual
-  * fields, visible to both filters and materialization. */
-final class JsonlPartitionReader(file: String, required: StructType,
-                                 pushed: Array[Filter],
-                                 partValues: Map[String, Option[String]],
-                                 dataSchema: StructType,
-                                 conf: JsonlHadoopConf,
-                                 limit: Int = -1,
-                                 deletesPath: String = null,
-                                 deletePositions: Array[Long] = null,
-                                 changeKind: String = null,
-                                 keepPositions: Array[Long] = null,
-                                 eqDeletes: Map[String, Long] = Map.empty,
-                                 eqCols: Seq[String] = Nil,
-                                 eqEmit: Map[String, Long] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  // equality-delete tier ([[JsonlEqDeletes]]): a key tuple named by a
-  // delete with sequence > this shard's name stamp is hidden. Inert
-  // (one boolean) unless the table has pending equality deletes that
-  // can reach this shard.
-  private val eqShardSeq: Long =
-    JsonlEqDeletes.shardSeqOf(new Path(file).getName)
-  private val eqActive: Boolean = eqCols.nonEmpty && eqDeletes.nonEmpty &&
-    eqDeletes.valuesIterator.max > eqShardSeq
-  // change-feed eq-delta recovery: when `eqEmit` is set the reader
-  // emits ONLY the rows a window's NEW waves hide - visible before the
-  // window per `eqDeletes`, named by an added key file whose sequence
-  // outranks this shard's stamp. These are the delete records an
-  // upsert produces.
-  private val eqEmitActive: Boolean = eqCols.nonEmpty && eqEmit.nonEmpty
-  private lazy val eqDts: Seq[DataType] =
-    eqCols.map(c => dataSchema(dataSchema.fieldIndex(c)).dataType)
-  // single-column fast path: no per-row Seq/Option churn on the
-  // dominant shape (one BIGINT/STRING key over millions of rows).
-  // Temporal keys take the general renderNodes path (textual epoch
-  // fallbacks live there).
-  private lazy val eqOneDt: DataType = eqDts.head
-  private lazy val eqOneCol: String =
-    if (eqCols.length == 1 && (eqOneDt == LongType ||
-        eqOneDt == IntegerType || eqOneDt == StringType)) eqCols.head
-    else null
-  private lazy val eqColsArr: Array[String] = eqCols.toArray
-  private lazy val eqDtsArr: Array[DataType] = eqDts.toArray
-  private def eqKeyOf(node: JsonNode): String =
-    if (eqOneCol != null) {
-      val v = field(node, eqOneCol)
-      if (v == null || v.isNull) "\u0000"
-      else eqOneDt match {
-        case LongType => if (v.isNumber) v.asLong.toString else "\u0000"
-        case IntegerType => if (v.isNumber) v.asInt.toString else "\u0000"
-        case StringType => if (v.isTextual) v.asText else "\u0000"
-        case _ => "\u0000"
-      }
-    } else if (eqColsArr.length == 1)
-      // single temporal key: one part, no separator, no Seq
-      JsonlEqDeletes.renderNode1(field(node, eqColsArr(0)), eqDtsArr(0))
-    else {
-      // composite key hot path: build the tuple in one pass — the
-      // zip/map/mkString form allocates several collections PER ROW,
-      // which dominated a 10x-scale composite-key scan
-      val sb = new java.lang.StringBuilder(32)
-      var i = 0
-      while (i < eqColsArr.length) {
-        if (i > 0) sb.append('\u0001')
-        sb.append(JsonlEqDeletes.renderNode1(field(node, eqColsArr(i)),
-          eqDtsArr(i)))
-        i += 1
-      }
-      sb.toString
-    }
-  private def eqHidden(node: JsonNode): Boolean =
-    if (!eqActive && !eqEmitActive) false
-    else {
-      val key = eqKeyOf(node) // rendered ONCE per row (emit mode needs both maps)
-      (eqActive && eqDeletes.get(key).exists(_ > eqShardSeq)) ||
-        (eqEmitActive && !eqEmit.get(key).exists(_ > eqShardSeq))
-    }
-
-  // change-feed ordinal-delta piece: emit ONLY the listed positions
-  // (the rows a merge-on-read delete removed between two snapshots)
-  private val kept: java.util.BitSet =
-    if (keepPositions == null) null
-    else {
-      val bs = new java.util.BitSet()
-      keepPositions.foreach(pos => bs.set(pos.toInt))
-      bs
-    }
-
-  // pushed LIMIT: stop reading (and parsing) this shard once `limit`
-  // post-filter rows have been emitted; -1 = unbounded
-  private var emittedRows = 0L
-
-  // merge-on-read position deletes: line ordinals recorded in this
-  // shard's `_deletes/` sidecar are skipped BEFORE parsing (the check
-  // is a bitset probe per physical line). `lineNo` counts every
-  // physical line — empty and malformed included — which is also the
-  // `_pos` row-id value the delta write records, so the two can never
-  // disagree.
-  private val deleted: java.util.BitSet =
-    if (deletePositions != null) {
-      // snapshot reads carry the ordinals EMBEDDED (pinned at snapshot
-      // time — the live sidecar may have grown since)
-      val bs = new java.util.BitSet()
-      deletePositions.foreach(pos => bs.set(pos.toInt))
-      bs
-    } else if (deletesPath == null) null
-    else JsonlDeletes.readBitSet(conf, deletesPath)
-  private var lineNo: Long = -1L
-  private var currentPos: Long = -1L
-
-  private val mapper = new ObjectMapper()
-  private val reader: BufferedReader = {
-    val p = new Path(file)
-    val in = p.getFileSystem(conf.value).open(p)
-    val stream = if (file.endsWith(".gz")) new GZIPInputStream(in) else in
-    new BufferedReader(new InputStreamReader(stream, StandardCharsets.UTF_8))
-  }
-  private var row: InternalRow = _
-
-  // partition-directory values as typed virtual JSON fields; a null
-  // partition (the __HIVE_DEFAULT_PARTITION__ dir) masks the column
-  // to SQL null — it must not fall through to the JSON line
-  private val nullPartCols: Set[String] =
-    partValues.collect { case (k, None) => k }.toSet
-  private val partNode: com.fasterxml.jackson.databind.node.ObjectNode = {
-    val n = mapper.createObjectNode()
-    partValues.foreach {
-      case (k, Some(v)) =>
-        dataSchema.fields.find(_.name == k).map(_.dataType) match {
-          case Some(LongType) => n.put(k, v.toLong)
-          case Some(IntegerType) => n.put(k, v.toInt)
-          case Some(DoubleType) => n.put(k, v.toDouble)
-          case Some(BooleanType) => n.put(k, v.toBoolean)
-          case _ => n.put(k, v)
-        }
-      case _ => ()
-    }
-    // `_shard` metadata column: provenance, injected exactly like a
-    // partition value (only consulted when the read schema asks)
-    n.put("_shard", file)
-    // change-feed reads: the `_change` column rides in the same way
-    if (changeKind != null) n.put("_change", changeKind)
-    n
-  }
-
-  // RENAME COLUMN aliasing: shards written before a rename hold the
-  // old JSON key; the field's schema metadata lists its former names
-  // (newest first) and the lookup falls back through them. The NEW
-  // key wins when a line carries both.
-  private val aliasOf: Map[String, Seq[String]] =
-    dataSchema.fields.iterator
-      .map(f => f.name -> JsonlTable.aliasesOf(f))
-      .filter(_._2.nonEmpty).toMap
-
-  // A value that fails the declared-type check is null HERE, not just
-  // at materialize: pushed IsNull/IsNotNull/comparisons claim full
-  // evaluation (they are not re-checked post-scan), so the filter view
-  // of a field and its materialized value must never disagree.
-  // DROP + re-ADD indirection: a re-added column reads its FRESH
-  // physical key, so old shards' tombstoned values stay invisible
-  private val physKey: Map[String, String] = dataSchema.fields.iterator
-    .map(f => f.name -> JsonlTable.physicalKeyOf(f))
-    .filter(kv => kv._2 != kv._1).toMap
-
-  private def field(node: JsonNode, name: String): JsonNode = {
-    if (nullPartCols.contains(name)) return null
-    val p = partNode.get(name)
-    var v = if (p != null) p else node.get(physKey.getOrElse(name, name))
-    if (v == null && aliasOf.nonEmpty)
-      aliasOf.get(name).foreach(_.iterator
-        .map(node.get).find(_ != null).foreach(v = _))
-    if (v == null || v.isNull) return null
-    declaredType.get(name) match {
-      case Some(LongType | IntegerType | DoubleType) => if (v.isNumber) v else null
-      case Some(BooleanType) => if (v.isBoolean) v else null
-      case Some(StringType) => if (v.isTextual) v else null
-      case _ => v
-    }
-  }
-
-  private val declaredType: Map[String, DataType] =
-    dataSchema.fields.map(f => f.name -> f.dataType).toMap
-
-  // session time zone for TEXTUAL zoned-timestamp values in
-  // externally-authored JSONL (graft writers emit epoch-micros
-  // numbers): must match Spark's own string→timestamp semantics.
-  // newHadoopConf() copies every SET SQL conf into the carrier; the
-  // unset default is the JVM zone, same as SQLConf's.
-  private val sessionZone: java.time.ZoneId =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
-      conf.value.get("spark.sql.session.timeZone",
-        java.time.ZoneId.systemDefault().getId))
-
-  // three-valued compare collapsed to match/no-match (null never matches).
-  // The DECLARED column type drives coercion so a pushed filter sees
-  // exactly the value materialize() would produce: a fractional JSON
-  // value in a LongType column truncates via asLong BEFORE comparing,
-  // and a type-mismatched value (textual in a numeric column) compares
-  // as null — otherwise the same predicate gives different answers
-  // pushed vs residual, and pushdown must only change row counts,
-  // never results.
-  private def cmp(node: JsonNode, attr: String, value: Any): Option[Int] = {
-    val v = field(node, attr)
-    if (v == null || value == null) None
-    else {
-      val dt = declaredType.get(attr)
-      value match {
-        case s: String =>
-          if (v.isTextual && dt.forall(_ == StringType))
-            // UTF8 BYTE order, matching Spark's UTF8String comparison
-            // (and DuckDB's): String.compareTo is UTF-16 code-unit
-            // order, which diverges for supplementary characters —
-            // and a pushed filter claims FULL evaluation, so the
-            // reader's order must equal the engine's
-            Some(UTF8String.fromString(v.asText)
-              .compareTo(UTF8String.fromString(s)))
-          else None
-        case b: java.lang.Boolean =>
-          if (v.isBoolean && dt.forall(_ == BooleanType))
-            Some(java.lang.Boolean.compare(v.asBoolean, b))
-          else None
-        case n: Number =>
-          if (!v.isNumber) None
-          else {
-            val integralCol = dt match {
-              case Some(LongType) | Some(IntegerType) => true
-              case Some(DoubleType) => false
-              case _ => v.isIntegralNumber
-            }
-            val rhsIntegral = n.isInstanceOf[java.lang.Long] ||
-              n.isInstanceOf[java.lang.Integer] || n.isInstanceOf[java.lang.Short]
-            if (integralCol && rhsIntegral)
-              Some(java.lang.Long.compare(v.asLong, n.longValue))
-            else {
-              val lhs = if (integralCol) v.asLong.toDouble else v.asDouble
-              Some(java.lang.Double.compare(lhs, n.doubleValue))
-            }
-          }
-        case _ => None
-      }
-    }
-  }
-
-  private def matches(node: JsonNode, f: Filter): Boolean = f match {
-    case EqualTo(a, v) => cmp(node, a, v).contains(0)
-    case In(a, vs) => vs.exists(v => cmp(node, a, v).contains(0))
-    case IsNull(a) => field(node, a) == null
-    case IsNotNull(a) => field(node, a) != null
-    case GreaterThan(a, v) => cmp(node, a, v).exists(_ > 0)
-    case GreaterThanOrEqual(a, v) => cmp(node, a, v).exists(_ >= 0)
-    case LessThan(a, v) => cmp(node, a, v).exists(_ < 0)
-    case LessThanOrEqual(a, v) => cmp(node, a, v).exists(_ <= 0)
-    case _ => true // unsupported filters were returned as residual
-  }
-
-  private def materialize(node: JsonNode): InternalRow = {
-    val r = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(required.length)
-    var i = 0
-    while (i < required.length) {
-      val f = required.fields(i)
-      // `_pos` metadata column: the physical line ordinal of THIS row
-      // (the merge-on-read row-id component; `_shard` rides in as a
-      // virtual field like partition values)
-      if (f.name == "_pos") { r.setLong(i, currentPos); i += 1 }
-      else {
-      val v = field(node, f.name)
-      if (v == null) r.setNullAt(i)
-      else f.dataType match {
-        case LongType if v.isNumber => r.setLong(i, v.asLong)
-        case IntegerType if v.isNumber => r.setInt(i, v.asInt)
-        case DoubleType if v.isNumber => r.setDouble(i, v.asDouble)
-        case BooleanType if v.isBoolean => r.setBoolean(i, v.asBoolean)
-        case StringType if v.isTextual =>
-          r.update(i, UTF8String.fromString(v.asText))
-        case dt @ (TimestampType | TimestampNTZType | DateType |
-                   FloatType | ShortType | ByteType | _: DecimalType |
-                   _: StructType | _: ArrayType | _: MapType) =>
-          // temporal + narrow-numeric + nested: the shared decoder
-          // (type-checked at every level; mismatch -> SQL null)
-          val d = JsonlJson.decode(v, dt, sessionZone)
-          if (d == null) r.setNullAt(i) else r.update(i, d)
-        case _ => r.setNullAt(i) // type mismatch -> SQL null, not a crash
-      }
-      i += 1
-      }
-    }
-    r
-  }
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emittedRows >= limit) return false
-    var line = reader.readLine()
-    while (line != null) {
-      lineNo += 1
-      val dropped = (deleted != null && lineNo <= Int.MaxValue &&
-        deleted.get(lineNo.toInt)) ||
-        (kept != null && (lineNo > Int.MaxValue || !kept.get(lineNo.toInt)))
-      if (!dropped && line.nonEmpty) {
-        val node =
-          try mapper.readTree(line)
-          catch { case _: Exception => null } // malformed: skip (clean-path scan)
-        if (node != null && node.isObject && !eqHidden(node) &&
-            pushed.forall(matches(node, _))) {
-          currentPos = lineNo
-          row = materialize(node)
-          emittedRows += 1
-          return true
-        }
-      }
-      line = reader.readLine()
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
-}
-
-/** Columnar read path: the SAME parse/filter/coercion pipeline as
-  * [[JsonlPartitionReader]] (composed, so the two can never drift),
-  * batched into [[org.apache.spark.sql.vectorized.ColumnarBatch]]es
-  * of up to 4096 rows over on-heap column vectors. JSONL has no
-  * columnar layout, so parsing is inherently row-wise — what the
-  * batch boundary buys is the downstream side: one virtual call per
-  * 4096 rows instead of per row at the scan edge, and Spark's
-  * VECTORIZED ColumnarToRow transition (the same consumption shape as
-  * the parquet reader) instead of a row-iterator volcano. OPT-IN via
-  * `.option("columnar", true)`: measured on the string-heavy document
-  * corpus (q114, sf0.1) the vector copy costs slightly more than the
-  * iterator it saves (~0.21s row vs ~0.25s columnar min) because a
-  * ColumnarToRow re-materializes each string immediately — the shape
-  * pays off for numeric-dominant schemas or downstream operators that
-  * consume batches directly, so it ships measured and off. */
-final class JsonlColumnarReader(rows: PartitionReader[InternalRow],
-                                required: StructType)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-  private val capacity = 4096
-  private val vectors: Array[OnHeapColumnVector] =
-    OnHeapColumnVector.allocateColumns(capacity, required)
-  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-
-  override def next(): Boolean = {
-    var i = 0
-    while (i < vectors.length) { vectors(i).reset(); i += 1 }
-    var n = 0
-    while (n < capacity && rows.next()) {
-      val r = rows.get()
-      var c = 0
-      while (c < required.length) {
-        val v = vectors(c)
-        if (r.isNullAt(c)) v.putNull(n)
-        else required.fields(c).dataType match {
-          case LongType | TimestampType | TimestampNTZType =>
-            v.putLong(n, r.getLong(c))
-          case IntegerType | DateType => v.putInt(n, r.getInt(c))
-          case DoubleType => v.putDouble(n, r.getDouble(c))
-          case BooleanType => v.putBoolean(n, r.getBoolean(c))
-          case StringType =>
-            val b = r.getUTF8String(c).getBytes
-            v.putByteArray(n, b, 0, b.length)
-          case _ => v.putNull(n) // unreachable: factory gates columnar
-        }
-        c += 1
-      }
-      n += 1
-    }
-    batch.setNumRows(n)
-    n > 0
-  }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = { batch.close(); rows.close() }
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new ParquetVectorizedShardReader(
+      partition.asInstanceOf[JsonlInputPartition], required, dataSchema,
+      conf, pruneFilters)
 }

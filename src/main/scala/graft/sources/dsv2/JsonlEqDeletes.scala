@@ -323,7 +323,7 @@ object JsonlEqDeletes {
   }
 
   /** Publish wave `seq`'s key file (tmp + rename — readers never see a
-    * torn file). `keys` are RENDERED tuples ([[renderParts]]). STANDS
+    * torn file). `keys` are RENDERED tuples ([[renderRow]]). STANDS
     * DOWN (throws) if the wave's claim was stale-broken: a tombstoned
     * sequence means maintenance (compact/cluster) may have already
     * reconciled past this wave — its shards re-stamped at or above
@@ -751,14 +751,7 @@ object JsonlEqDeletes {
     else new RangeProbe(probes.toArray, maxSeqAll)
   }
 
-  /** Canonical rendering of one key part (None = SQL null). The same
-    * text must come out of an `InternalRow` at write and a parsed
-    * `JsonNode` at read — key column types are restricted to
-    * BIGINT/INT/STRING at property validation for exactly this. */
-  def renderParts(parts: Seq[Option[String]]): String =
-    parts.map(_.getOrElse(NullMark)).mkString(Sep)
-
-  /** Inverse of [[renderParts]] into TYPED values (null for the null
+  /** Inverse of [[renderRow]] into TYPED values (null for the null
     * mark) — how the change feed turns a key file back into join
     * rows. */
   def parseRendered(key: String,
@@ -783,18 +776,21 @@ object JsonlEqDeletes {
     }
   }
 
-  /** Writer-side rendering: key tuple of `row` at field indexes
-    * `idx`. DATE renders as epoch DAYS, TIMESTAMP/TIMESTAMP_NTZ as
-    * epoch MICROS — the exact integers the JSONL writer stores, so
-    * the reader-side rendering agrees byte-for-byte. */
+  /** Key tuple of `row` at field indexes `idx` — the writers' keys and
+    * the shard readers' probes alike. DATE renders as epoch DAYS,
+    * TIMESTAMP/TIMESTAMP_NTZ as epoch MICROS: the exact integers the
+    * JSONL writer stores. Built in one pass (a reader renders one key
+    * per row). `refuseControl` refuses string values holding the
+    * separator/null-mark characters — the write-side guard; a reader
+    * renders them as they are (no published key can hold them). */
   def renderRow(row: org.apache.spark.sql.catalyst.InternalRow,
                 schema: org.apache.spark.sql.types.StructType,
-                idx: Seq[Int]): String = {
+                idx: Seq[Int], refuseControl: Boolean = true): String = {
     import org.apache.spark.sql.types.{DateType, IntegerType, LongType,
       StringType, TimestampNTZType, TimestampType}
-    renderParts(idx.map { i =>
-      if (row.isNullAt(i)) None
-      else Some(schema.fields(i).dataType match {
+    def part(i: Int): String =
+      if (row.isNullAt(i)) NullMark
+      else schema.fields(i).dataType match {
         case LongType => row.getLong(i).toString
         case IntegerType => row.getInt(i).toString
         case StringType =>
@@ -804,7 +800,7 @@ object JsonlEqDeletes {
           // distinct tuples render identically (one silently hiding
           // the other) — refuse loudly at the write
           var j = 0
-          while (j < v.length) {
+          while (refuseControl && j < v.length) {
             if (v.charAt(j) <= '\u0002')
               throw new UnsupportedOperationException(
                 "graft.upsert.keys: key values must not contain control " +
@@ -818,22 +814,25 @@ object JsonlEqDeletes {
         case dt => throw new UnsupportedOperationException(
           "graft.upsert.keys supports BIGINT/INT/STRING/DATE/TIMESTAMP, " +
             s"got $dt")
-      })
-    })
+      }
+    if (idx.length == 1) part(idx.head)
+    else {
+      val sb = new java.lang.StringBuilder(32)
+      val it = idx.iterator
+      while (it.hasNext) {
+        sb.append(part(it.next()))
+        if (it.hasNext) sb.append(Sep)
+      }
+      sb.toString
+    }
   }
 
-  /** Reader-side rendering: the same tuple from parsed JSON values
-    * (each already resolved through physical keys / partition-path
-    * injection by the caller). Connector-written temporal values are
-    * epoch numbers; externally-authored ISO text parses through the
-    * same zone-free conversions the scan's materializer uses (zoned
-    * textual TIMESTAMPs parse as UTC — write epoch micros, or use
-    * TIMESTAMP_NTZ/DATE keys, for foreign data). */
-  /** One key part's canonical text ([[NullMark]] for null or a type
-    * mismatch) — the hot-path unit [[renderNodes]] composes, exposed
-    * so per-row readers can build the tuple without Seq churn. */
-  def renderNode1(n: com.fasterxml.jackson.databind.JsonNode,
-                  dt: org.apache.spark.sql.types.DataType): String = {
+  /** One key part's canonical text from a parsed JSON value
+    * ([[NullMark]] for null or a type mismatch). Connector-written
+    * temporal values are epoch numbers; externally-authored ISO text
+    * parses zone-free (zoned textual TIMESTAMPs as UTC). */
+  private def renderNode1(n: com.fasterxml.jackson.databind.JsonNode,
+                          dt: org.apache.spark.sql.types.DataType): String = {
     import org.apache.spark.sql.types.{DateType, IntegerType, LongType,
       StringType, TimestampNTZType, TimestampType}
     import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -866,6 +865,9 @@ object JsonlEqDeletes {
     }
   }
 
+  /** The key tuple of parsed JSON values (each resolved through
+    * physical keys / partition-path values by the caller) — the probe
+    * of compaction's line-level JSONL rewrite. */
   def renderNodes(nodes: Seq[com.fasterxml.jackson.databind.JsonNode],
                   dts: Seq[org.apache.spark.sql.types.DataType]): String =
     nodes.zip(dts).map { case (n, dt) => renderNode1(n, dt) }.mkString(Sep)

@@ -373,31 +373,6 @@ class JsonlDsv2Spec extends AnyFunSuite {
     assert(s.latestOffset() === ckpt)
   }
 
-  test("columnar read path: ColumnarToRow in the plan, bit-parity with row reads") {
-    val colr = spark.read.format("graft-jsonl").option("columnar", "true")
-      .load(fixture)
-    val rowr = spark.read.format("graft-jsonl").load(fixture) // row default
-    assert(colr.exceptAll(rowr).isEmpty && rowr.exceptAll(colr).isEmpty)
-    // the scan emits batches: Spark inserts the vectorized transition
-    val plan = colr.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"), s"plan:\n$plan")
-    assert(!rowr.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-    // pushdown, pruning, and null semantics ride through the batches
-    assert(colr.filter(col("lang") === "en" && col("n_chars") >= 5)
-      .select("doc_id").as[Long].collect().sorted === Array(1L, 4L))
-    assert(colr.filter(col("text").isNull).select("doc_id")
-      .as[Long].collect().sorted === Array(3L, 4L))
-    // partitioned layouts: injected values fill vectors too
-    val dir = Fixtures.tempDir("graft_dsv2_colpart").toString
-    Seq((1L, "a", "en", "s", 1L), (2L, "b", null.asInstanceOf[String], "s", 1L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").option("compression", "gzip")
-      .partitionBy("lang").json(dir)
-    val back = spark.read.format("graft-jsonl").option("columnar", "true").load(dir)
-    assert(back.select("doc_id", "lang").as[(Long, Option[String])].collect()
-      .sortBy(_._1).toSeq === Seq((1L, Some("en")), (2L, None)))
-  }
-
   test("write/read round-trip preserves escapes, unicode, and nulls") {
     val out = Fixtures.tempDir("graft_dsv2_rt").toString
     val tricky = Seq(
@@ -582,10 +557,10 @@ class JsonlDsv2Spec extends AnyFunSuite {
     assert(rows(1).getAs[java.sql.Date]("d").toString == "2024-03-01",
       "epoch-days number decodes to the same date")
     assert(rows(2).isNullAt(1) && rows(2).isNullAt(2) && rows(2).isNullAt(3))
-    // the columnar opt-in quietly takes the row path for nested
-    // schemas — same answers
-    val columnar = spark.read.format("graft-jsonl")
-      .option("columnar", true).schema(schema).load(dir)
-    assert(columnar.orderBy(col("id")).collect().toSeq == rows.toSeq)
+    // a pushed filter on the key column reads the nested and temporal
+    // values it keeps exactly as the unfiltered read does
+    val filtered = spark.read.format("graft-jsonl").schema(schema).load(dir)
+      .where(col("id") >= 1L)
+    assert(filtered.orderBy(col("id")).collect().toSeq == rows.toSeq)
   }
 }

@@ -10,7 +10,7 @@ import graft.TestSpark
   *
   *   - a small MERGE/DELETE rewrites ZERO data shards (the whole
   *     point — copy-on-write pays group-rewrite amplification);
-  *   - every read path (row, COUNT(*) pushdown, columnar, streaming)
+  *   - every read path (row, COUNT(*) pushdown, streaming)
   *     sees deletes applied;
   *   - a MOR table and its COW twin answer identically after the same
   *     interleaved MERGE/DELETE waves;
@@ -194,7 +194,7 @@ class JsonlMorSpec extends AnyFunSuite {
       .head.getLong(0) == (0L until 2000L).map(_ * 7).sum)
   }
 
-  test("UPDATE that moves a row across partitions; columnar read applies deletes") {
+  test("UPDATE that moves a row across partitions; a path read applies deletes") {
     sql("CREATE NAMESPACE IF NOT EXISTS mw.mv")
     sql("""CREATE TABLE mw.mv.t (k BIGINT, grp STRING, amt BIGINT)
           |PARTITIONED BY (grp)
@@ -204,11 +204,10 @@ class JsonlMorSpec extends AnyFunSuite {
     assert(sql("SELECT grp FROM mw.mv.t WHERE k = 1").head.getString(0) == "z")
     assert(new java.io.File(s"$root/mv/t/grp=z").exists(),
       "moved row lands in its new partition directory")
-    // columnar path shares the sidecar application
+    // a path read of the table dir applies the same sidecars
     val tdir = s"$root/mv/t"
     val cols = spark.read.format("graft-jsonl")
-      .schema("k BIGINT, grp STRING, amt BIGINT")
-      .option("columnar", "true").load(tdir)
+      .schema("k BIGINT, grp STRING, amt BIGINT").load(tdir)
     assert(cols.count() == 2L)
     assert(cols.where("k = 1").head.getString(1) == "z")
   }
