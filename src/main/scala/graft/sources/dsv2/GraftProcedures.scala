@@ -20,11 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     more than `max_shards` shards are rewritten into
   *     ceil(bytes/target) gzip shards. JSONL compaction is LINE
   *     concatenation — no parse, no schema, bit-faithful rows — run as
-  *     a distributed job (one task per dir), staged OUTSIDE the table
-  *     root and swapped with the same trash protocol as
-  *     [[graft.operators.Compaction]] (a crash mid-swap leaves the
-  *     trash holding the only copy; the next run refuses until
-  *     recovered — never silent data loss);
+  *     a distributed job (one task per dir), staged under the table
+  *     root and swapped shard by shard through [[JsonlShards.swap]] (a
+  *     crash mid-swap leaves the trash holding the only copy; the next
+  *     run refuses until recovered — never silent data loss);
   *   - `expire_staging(table, age_minutes)`: drops `_staging/` write
   *     attempts older than the horizon (crashed writers leak them; a
   *     LIVE writer younger than the horizon is untouchable);
@@ -342,7 +341,7 @@ object GraftProcedures {
         val conf = JsonlHadoopConf.fromSession()
         // single-maintenance-writer PER SCOPE: the rewrite + swap holds
         // the same lock tier as row-level commits, cluster_table, and
-        // snapshot, so none can race the window where a dir is mid-swap
+        // snapshot, so none can race the swap of the shards it read
         val rloLocks = RowLevelLock.acquireScoped(fs, conf.value, table,
           s"compact-${java.util.UUID.randomUUID}", scope.toSeq)
         try {
@@ -365,8 +364,7 @@ object GraftProcedures {
         // ordinals, no JSON parse) and the consumed sidecars deleted.
         // A dir holding ANY sidecar qualifies regardless of shard
         // count (including the table ROOT, which the size criterion
-        // skips because the root can't be dir-swapped — it takes the
-        // per-file swap below).
+        // skips).
         val sidecars = JsonlDeletes.index(fs, table)
         // equality-delete reconcile ([[JsonlEqDeletes]]): dirs holding
         // shards EXPOSED to pending equality deletes (name stamp <
@@ -458,7 +456,7 @@ object GraftProcedures {
               val hasSc = shards.exists(s => sidecars.contains(s._1.toString))
               // conversion sweep: any shard whose extension disagrees
               // with the (just-updated) table format rewrites — root
-              // dir included (it per-file-swaps like the sidecar path)
+              // dir included
               val wrongFmt = convert && shards.exists { case (p, _) =>
                 GraftParquetShard.isParquetName(p.getName) !=
                   (outFmt == "parquet") }
@@ -494,22 +492,10 @@ object GraftProcedures {
           }
           JsonlSkipIndex.renameEntries(fs, table, rel2.toSeq)
         }
-        def retireOutgrown(): Unit = if (eqMax > 0L) {
-          val live = JsonlLayout.discoverFull(fs, table)
-          val minLive =
-            if (live.isEmpty) Long.MaxValue
-            else live.iterator.map { case (pp, _, _, _) =>
-              JsonlEqDeletes.shardSeqOf(pp.getName) }.min
-          // key files a snapshot manifest embedded move to retained/
-          // instead of deleting — pinned scans keep resolving them
-          JsonlEqDeletes.retire(fs, table, minLive,
-            JsonlSnapshots.retainedRoot(table))
-          ()
-        }
         if (todo.isEmpty) {
           // re-stamps + key-file retirement still moved the
           // fingerprint: carry the stats over them too
-          retireOutgrown(); statsDone()
+          retireOutgrownKeys(fs, table, eqMax); statsDone()
           return result(compactSchema, Nil)
         }
         val tableStr = table.toString
@@ -523,7 +509,8 @@ object GraftProcedures {
         // bit-identical, memory O(1) per task (plus one bitset per
         // sidecar-carrying shard). Output GROUPS (and names) are
         // assigned on the DRIVER so the post-swap index synthesis
-        // below knows exactly which inputs each output concatenates.
+        // below knows exactly which inputs each output concatenates;
+        // the swap stamps them at eqMax.
         val plan = todo.map { case (rel, shards) =>
           val withSc = shards.map { case (p, len) =>
             (p.toString, len, sidecars.getOrElse(p.toString, null),
@@ -534,11 +521,12 @@ object GraftProcedures {
           val groups = withSc.grouped(
             math.max(1, math.ceil(withSc.size.toDouble / nOut).toInt)).toSeq
           (rel, groups.zipWithIndex.map { case (g, i) =>
-            (JsonlEqDeletes.stampName(
-              f"compact-$i%05d-${java.util.UUID.randomUUID}" +
-                ShardFileSink.extensionOf(outFmt), eqMax),
-              g) })
+            (f"compact-$i%05d-${java.util.UUID.randomUUID}" +
+              ShardFileSink.extensionOf(outFmt), g) })
         }
+        // a function value, so the rewrite tasks below capture only it
+        val stagedOf = (rel: String, outName: String) =>
+          new Path(s"$stagingStr/$rel", outName).toString
         val after = spark.sparkContext
           .parallelize(plan, math.max(1, plan.size))
           .map { case (rel, namedGroups) =>
@@ -549,7 +537,7 @@ object GraftProcedures {
               else JsonlEqDeletes.ExecutorIndexCache
                 .get(conf.value, eqTaskFiles)._1
             namedGroups.foreach { case (outName, group) =>
-              val outPath = new Path(s"$stagingStr/$rel", outName)
+              val outPath = new Path(stagedOf(rel, outName))
               // rows-based rewrite whenever parquet is involved on
               // either side (byte-level concat is a JSONL-only trick):
               // each input decodes through the shard row reader —
@@ -664,13 +652,12 @@ object GraftProcedures {
           }.collect()
         // metadata-only index carry-over: each output's entry folds
         // its inputs' entries (range union, Σ rows − dropped deleted
-        // lines) — computed BEFORE the swap retires the inputs, merged
-        // AFTER it; a group with any unindexed input stays unindexed
-        val tblSchema = catalog.loadTable(Identifier.of(
-          input.getUTF8String(0).toString.split("\\.").init,
-          input.getUTF8String(0).toString.split("\\.").last)).schema()
-        val preIdx = JsonlSkipIndex.open(fs, table, tblSchema)
-        val synthesized: Seq[(String, JsonlSkipIndex.ShardWriteStats)] =
+        // lines) — computed BEFORE the swap retires the inputs, so a
+        // fully-indexed dir stays skippable through compaction with
+        // zero re-scan; a group with any unindexed input stays
+        // unindexed until the next `CALL build_skip_index`
+        val preIdx = JsonlSkipIndex.open(fs, table, eqTblSchema)
+        val synthesized: Map[String, JsonlSkipIndex.ShardWriteStats] =
           plan.flatMap { case (rel, namedGroups) =>
             namedGroups.flatMap { case (outName, group) =>
               val entries = group.flatMap { case (shard, _, _, _) =>
@@ -683,89 +670,45 @@ object GraftProcedures {
                   if (sc == null) 0L
                   else JsonlDeletes.read(fs, new Path(sc)).distinct.length.toLong
                 }.sum
-                JsonlSkipIndex.foldForConcat(entries, dropped, tblSchema)
-                  .map(st =>
-                    (if (rel.isEmpty) outName else s"$rel/$outName") -> st)
+                JsonlSkipIndex.foldForConcat(entries, dropped, eqTblSchema)
+                  .map(stagedOf(rel, outName) -> _)
               }
             }
-          }
-        // swap: partition dir -> trash, staged dir -> partition dir,
-        // then drop trash — crash between the renames leaves the trash
-        // copy and the require above refuses the next run. The table
-        // ROOT (rel == "") cannot be dir-renamed, so its shards swap
-        // per-file through the same trash. Consumed sidecars drop
-        // last: a crash before that leaves orphans keyed by old shard
-        // names, which no reader will ever match.
-        val byRel = plan.map { case (rel, namedGroups) =>
-          rel -> namedGroups.flatMap(_._2) }.toMap
-        after.foreach { case (rel, _, _) =>
-          if (rel.isEmpty) {
-            val t = new Path(trash, "__root__")
-            fs.mkdirs(t)
-            byRel(rel).foreach { case (shard, _, _, _) =>
-              val p = new Path(shard)
-              require(fs.rename(p, new Path(t, p.getName)),
-                s"swap-out failed for $p")
-            }
-            fs.listStatus(staging)
-              .filter(st => st.isFile && JsonlLayout.isShard(st.getPath.getName))
-              .foreach { st =>
-                require(fs.rename(st.getPath, new Path(table, st.getPath.getName)),
-                  s"swap-in failed for ${st.getPath}")
-              }
-            byRel(rel).foreach { case (_, _, sc, _) =>
-              if (sc != null) fs.delete(new Path(sc), false)
-            }
-          } else {
-            val live = new Path(table, rel)
-            val staged = new Path(staging, rel)
-            val t = new Path(trash, rel)
-            fs.mkdirs(t.getParent)
-            require(fs.rename(live, t), s"swap-out failed for $live")
-            fs.mkdirs(staged.getParent)
-            require(fs.rename(staged, live), s"swap-in failed for $staged")
-            fs.delete(new Path(new Path(table, JsonlDeletes.DirName), rel), true)
-          }
-        }
-        // the rewritten dirs' old shards left the layout — drop their
-        // manifests, then merge the DRIVER-SYNTHESIZED entries for the
-        // outputs (fold of the consumed inputs' entries: range union,
-        // exact row count) so a fully-indexed dir stays skippable
-        // through compaction with zero re-scan; groups with unindexed
-        // inputs stay unindexed until the next `CALL build_skip_index`
-        JsonlSkipIndex.removeDirs(fs, table, after.map(_._1).toSeq)
-        JsonlSkipIndex.mergeEntries(fs, table, synthesized)
-        // the _deletes tree may now be empty scaffolding — drop it so
-        // future plans pay a single existence probe again. SCOPED runs
-        // must not touch other partitions' subtrees: a concurrent MOR
-        // commit elsewhere may be publishing a sidecar this instant
-        val delRoot = scope.fold(new Path(table, JsonlDeletes.DirName))(
-          sc => new Path(table, s"${JsonlDeletes.DirName}/$sc"))
-        def emptyTree(d: Path): Boolean =
-          fs.exists(d) && fs.listStatus(d).forall(st =>
-            st.isDirectory && emptyTree(st.getPath))
-        if (emptyTree(delRoot)) fs.delete(delRoot, true)
-        // snapshot retention: trashed originals a manifest references
-        // move under _snapshots/retained/ (the trash mirrors the
-        // table-relative layout, with "__root__" for root shards)
-        JsonlSnapshots.retainFromTrash(fs, table, trash, pp => {
-          val r = fs.makeQualified(trash).toUri
-            .relativize(fs.makeQualified(pp).toUri).getPath
-          if (r.startsWith("__root__/")) r.stripPrefix("__root__/") else r
-        })
-        fs.delete(trash, true)
+          }.toMap
+        JsonlShards.swap(fs, table, trash,
+          plan.flatMap(_._2.flatMap(_._2.map(g => new Path(g._1)))),
+          plan.flatMap { case (rel, namedGroups) =>
+            namedGroups.map { case (outName, _) => (stagedOf(rel, outName), rel) }
+          }, synthesized, eqMax)
         fs.delete(staging, true)
-        // equality-delete retirement: a key file with sequence S is
-        // needed only while some live shard's stamp is < S; after the
-        // rewrite re-stamped the exposed shards, drop what no shard
-        // is exposed to (global rule — a scoped run retires only what
+        // equality-delete retirement: the rewrite re-stamped the
+        // exposed shards (global rule — a scoped run retires only what
         // the rest of the layout also outgrew)
-        retireOutgrown()
+        retireOutgrownKeys(fs, table, eqMax)
         statsDone()
         result(compactSchema, after.toSeq.map { case (rel, b, a) =>
           new GenericInternalRow(Array[Any](utf8(rel), b, a)): InternalRow })
         } finally RowLevelLock.releaseAll(fs, rloLocks)
       }
+    }
+
+  /** Equality-delete retirement after a rewrite that reconciled every
+    * delete <= `eqMax`: a key file with sequence S is needed only while
+    * some live shard's stamp is < S, so drop what no live shard is
+    * exposed to (a wave that landed mid-rewrite keeps its
+    * higher-sequence file — its stamps hold the minimum down). Key
+    * files a snapshot manifest embedded move to retained/ instead —
+    * pinned scans keep resolving them. */
+  private def retireOutgrownKeys(fs: org.apache.hadoop.fs.FileSystem,
+                                 table: Path, eqMax: Long): Unit =
+    if (eqMax > 0L) {
+      val live = JsonlLayout.discoverFull(fs, table)
+      val minLive =
+        if (live.isEmpty) Long.MaxValue
+        else live.iterator.map { case (p, _, _, _) =>
+          JsonlEqDeletes.shardSeqOf(p.getName) }.min
+      JsonlEqDeletes.retire(fs, table, minLive,
+        JsonlSnapshots.retainedRoot(table))
     }
 
   /** MAINTENANCE STATS CARRY-OVER: compaction / clustering /
@@ -996,8 +939,8 @@ object GraftProcedures {
 
   /** `cluster_table(table, columns, target_shards)`: sort-rewrite —
     * rows range-repartitioned and sorted on `columns` into
-    * `target_shards` shards, then swapped in with the compact trash
-    * protocol — so each rewritten shard covers a contiguous key range
+    * `target_shards` shards, then swapped in ([[JsonlShards.swap]]) —
+    * so each rewritten shard covers a contiguous key range
     * and the skip index ([[JsonlSkipIndex]]) actually prunes: the
     * OPTIMIZE + cluster step of the cluster→stats→skip ladder
     * (Delta's OPTIMIZE ZORDER shape). `zorder => true` interleaves
@@ -1015,16 +958,14 @@ object GraftProcedures {
     * the partition-col prefix keeps each output task inside one dir's
     * key range, so within every dir the rewritten shards are
     * range-disjoint — and the partitioned staging write routes rows
-    * into `k=v/` staging dirs that then dir-swap with the live ones
-    * (per-partition trash + snapshot retention, O(partitions)
-    * metadata, no per-partition jobs). `target_shards` is the TOTAL
+    * into `k=v/` staging dirs (no per-partition jobs). `target_shards` is the TOTAL
     * output task count; size it ≈ partitions × shards-per-partition.
     * Root shards beside a partitioned layout refuse (their rows
     * aren't dir-addressable — compact into the hive layout first).
     * Single-maintenance-writer contract, same as `compact`: the
     * table-level `_rlo_lock` blocks row-level operations for the
-    * duration, concurrent APPENDS during the rewrite are the caller's
-    * responsibility to quiesce. */
+    * duration; the swap replaces only the shards the rewrite read, so
+    * APPENDS landing during the rewrite stay live. */
   private def clusterTable(catalog: GraftCatalog): BoundProcedure =
     new Bound("cluster_table", tableParam,
       ProcedureParameter.in("columns", StringType)
@@ -1079,10 +1020,8 @@ object GraftProcedures {
           }
           val partitioned = partCols.nonEmpty
           if (partitioned) {
-            // a root shard's rows aren't dir-addressable: the per-dir
-            // swap below could not retire them, leaving their rows
-            // live beside the rewrite's copy — refuse, as overwrite
-            // and partition-DELETE do
+            // a root shard's rows aren't dir-addressable — refuse, as
+            // overwrite and partition-DELETE do
             val uncovered = layout.filter(_._4.isEmpty)
             require(uncovered.isEmpty,
               s"cluster_table: ${uncovered.size} shard(s) of $tableName sit " +
@@ -1240,17 +1179,6 @@ object GraftProcedures {
             .foldLeft(w) { case (acc, (k, v)) => acc.option(k, v) }
           (if (partitioned) wc.partitionBy(partCols: _*) else wc)
             .save(staging.toString)
-          // stamp the staged outputs IN STAGING (before any swap, so
-          // both branches' renames carry the stamped names): the
-          // rewrite's rows reflect every delete <= eqMaxCl, so they
-          // must be exempt from exactly those sequences
-          if (eqMaxCl > 0L)
-            JsonlLayout.discover(fs, staging).map(_._1).foreach { p =>
-              val n = JsonlEqDeletes.stampName(p.getName, eqMaxCl)
-              if (n != p.getName)
-                require(fs.rename(p, new Path(p.getParent, n)),
-                  s"cluster_table: eq stamp rename failed for $p")
-            }
           // ABORT if an upsert wave raced the rewrite: a wave whose
           // inserts were listed into `before` but whose key file
           // published after eqMaxCl was read would have its only
@@ -1274,123 +1202,46 @@ object GraftProcedures {
                 s"flight during the rewrite of $tableName — retry when " +
                 "the writers quiesce (the table is untouched)")
           }
-          // certificate source: the EXACT shard set THIS rewrite
-          // publishes — staging-relative paths (names are final here:
-          // eq-stamped above, and the swap's renames preserve names)
-          // equal the table-relative published paths. Captured BEFORE
-          // the swap: a plain INSERT committing between the swap and a
-          // post-swap listing (appends don't hold RowLevelLock) must
-          // not fold into the fingerprint, or a later cluster CALL
-          // would no-op while certifying a layout containing a
-          // never-clustered shard.
-          val stagingUri = fs.makeQualified(staging).toUri
-          val publishedRels = JsonlLayout.discoverFull(fs, staging)
-            .map { case (pp, _, _, _) =>
-              stagingUri.relativize(fs.makeQualified(pp).toUri).getPath }
-          // swap: originals (the PRE-rewrite snapshot — appends racing
-          // the rewrite stay untouched) -> trash, staged shards up,
-          // consumed sidecars + stale index out, trash last
-          fs.mkdirs(trash)
-          val tUri = fs.makeQualified(table).toUri
-          def relOf(p: Path): String =
-            tUri.relativize(fs.makeQualified(p).toUri).getPath
-          val resultRows: Seq[InternalRow] =
-            if (!partitioned) {
-              before.foreach { p =>
-                if (fs.exists(p))
-                  require(fs.rename(p, new Path(trash, p.getName)),
-                    s"swap-out failed for $p")
-              }
-              val delRoot = new Path(table, JsonlDeletes.DirName)
-              if (fs.exists(delRoot))
-                require(fs.rename(delRoot, new Path(trash, JsonlDeletes.DirName)),
-                  s"swap-out failed for $delRoot")
-              val staged = JsonlLayout.discover(fs, staging).map(_._1)
-              staged.foreach { p =>
-                require(fs.rename(p, new Path(table, p.getName)),
-                  s"swap-in failed for $p")
-              }
-              Seq(new GenericInternalRow(
-                Array[Any](utf8(""), before.size, staged.size)): InternalRow)
-            } else {
-              // per-partition dir swap, O(partitions) metadata: each
-              // live leaf dir -> trash/rel, staged/rel -> live. A dir
-              // whose every row was sidecar-deleted produces no staged
-              // replacement — the partition value leaves the layout,
-              // exactly as a full rewrite should
-              val byDir = layout.groupBy(e => JsonlSkipIndex.dirOf(relOf(e._1)))
-              val rows = byDir.toSeq.sortBy(_._1).map { case (rel, dirShards) =>
-                val live = new Path(table, rel)
-                val t = new Path(trash, rel)
-                fs.mkdirs(t.getParent)
-                require(fs.rename(live, t), s"swap-out failed for $live")
-                val stagedDir = new Path(staging, rel)
-                var after = 0
-                if (fs.exists(stagedDir)) {
-                  fs.mkdirs(live.getParent)
-                  require(fs.rename(stagedDir, live),
-                    s"swap-in failed for $stagedDir")
-                  after = fs.listStatus(live).count(st =>
-                    st.isFile && JsonlLayout.isShard(st.getPath.getName))
-                }
-                // the dir's consumed sidecars retire with its shards
-                fs.delete(new Path(new Path(table, JsonlDeletes.DirName), rel),
-                  true)
-                new GenericInternalRow(
-                  Array[Any](utf8(rel), dirShards.size, after)): InternalRow
-              }
-              // the _deletes tree may now be empty scaffolding — drop
-              // it so future plans pay a single existence probe again
-              val delRoot = new Path(table, JsonlDeletes.DirName)
-              def emptyTree(d: Path): Boolean =
-                fs.exists(d) && fs.listStatus(d).forall(st =>
-                  st.isDirectory && emptyTree(st.getPath))
-              if (emptyTree(delRoot)) fs.delete(delRoot, true)
-              rows
-            }
-          // the staging skip index was written at staging-write time,
-          // BEFORE the eq stamp renames above — remap each entry's
-          // filename through the same stamp or the transplant would
-          // write ghost entries for pre-stamp names that no longer
-          // exist while the swapped-in stamped shards never receive
-          // their measured stats + verified-sorted flags
-          val stagedEntries =
-            JsonlSkipIndex.entriesOf(fs, staging, tbl.schema()).map {
-              case (rel, st) if eqMaxCl > 0L =>
-                val cut = rel.lastIndexOf('/') + 1
-                (rel.substring(0, cut) +
-                  JsonlEqDeletes.stampName(rel.substring(cut), eqMaxCl)) -> st
-              case e => e
-            }
+          // swap: the PRE-rewrite shards out (appends racing the
+          // rewrite stay live), the staged shards in, stamped at
+          // eqMaxCl — the rewrite's rows reflect every delete <=
+          // eqMaxCl, so they must be exempt from exactly those
+          // sequences. The published paths certify the layout below:
+          // a plain INSERT committing after the swap (appends don't
+          // hold RowLevelLock) must not fold into the fingerprint, or
+          // a later cluster CALL would no-op while certifying a layout
+          // containing a never-clustered shard.
+          val stagedRels = JsonlLayout.discoverFull(fs, staging).map {
+            case (pp, _, _, _) => JsonlShards.relOf(fs, staging, pp) }
+          val stagedStats =
+            JsonlSkipIndex.entriesOf(fs, staging, tbl.schema()).toMap
+          val publishedRels = JsonlShards.swap(fs, table, trash, before,
+            stagedRels.map(r =>
+              (new Path(staging, r).toString, JsonlSkipIndex.dirOf(r))),
+            Map.empty, eqMaxCl)
           fs.delete(staging, true)
-          JsonlSnapshots.retainFromTrash(fs, table, trash, pp =>
-            if (partitioned) relOf(pp).stripPrefix(
-              relOf(trash) + "/") // trash mirrors the table-relative layout
-            else pp.getName) // unpartitioned: rel is the file name
-          fs.delete(trash, true)
-          // the old index describes trashed shards: rebuild for the
-          // cluster columns plus any write-time-maintained ones, then
-          // overlay the staging write's measured entries (same data,
-          // plus the verified-sorted prefix — see staging write above)
+          val beforeByDir = liveRels.groupBy(JsonlSkipIndex.dirOf)
+          val afterByDir = publishedRels.groupBy(JsonlSkipIndex.dirOf)
+          val resultRows = (beforeByDir.keySet ++ afterByDir.keySet).toSeq
+            .sorted.map { rel =>
+              new GenericInternalRow(Array[Any](utf8(rel),
+                beforeByDir.get(rel).fold(0)(_.size),
+                afterByDir.get(rel).fold(0)(_.size))): InternalRow
+            }
+          // the old index described the replaced shards: rebuild for
+          // the cluster columns plus any write-time-maintained ones,
+          // then overlay the staging write's measured entries (same
+          // data, plus the verified-sorted prefix — see staging write
+          // above)
           fs.delete(new Path(table, JsonlSkipIndex.DirName), true)
           JsonlSkipIndex.build(spark, fs, table, ref, idxCols, Nil, 0L, 0L)
-          JsonlSkipIndex.mergeEntries(fs, table, stagedEntries)
-          // the rewrite reconciled every delete <= eqMaxCl: retire key
-          // files no live shard is exposed to (a wave that landed
-          // mid-rewrite keeps its higher-sequence file — its stamps
-          // hold the minimum down)
-          val liveAfter = JsonlLayout.discoverFull(fs, table)
-          if (eqMaxCl > 0L) {
-            val minLive =
-              if (liveAfter.isEmpty) Long.MaxValue
-              else liveAfter.iterator.map { case (pp, _, _, _) =>
-                JsonlEqDeletes.shardSeqOf(pp.getName) }.min
-            JsonlEqDeletes.retire(fs, table, minLive,
-              JsonlSnapshots.retainedRoot(table))
-          }
+          JsonlSkipIndex.mergeEntries(fs, table,
+            stagedRels.zip(publishedRels).flatMap { case (sr, pr) =>
+              stagedStats.get(sr).map(pr -> _) })
+          retireOutgrownKeys(fs, table, eqMaxCl)
           // layout certificate: spec + fingerprint of the shard set the
-          // rewrite ITSELF published (captured from staging pre-swap,
-          // not a post-swap re-listing) — the z-order no-op witness
+          // rewrite ITSELF published (the swap's paths, not a post-swap
+          // re-listing) — the z-order no-op witness
           // (and a cheap staleness probe for maintenance reporting). A
           // racing append therefore always shows as a fingerprint
           // mismatch, so the next CALL re-clusters instead of wrongly

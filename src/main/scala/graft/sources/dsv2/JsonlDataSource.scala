@@ -501,18 +501,6 @@ class JsonlTable(tableSchema: StructType, path: String,
   override def partitionSchema(): StructType =
     StructType(partCols.map(c => tableSchema(tableSchema.fieldIndex(c))))
 
-  /** Inverse of [[JsonlLayout.partValueString]], for the identifier
-    * reconstruction. */
-  private def partValueFromString(s: String, dt: DataType): Any = dt match {
-    case LongType => s.toLong
-    case IntegerType => s.toInt
-    case DoubleType => s.toDouble
-    case BooleanType => s.toBoolean
-    case StringType => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-    case other => throw new UnsupportedOperationException(
-      s"graft-jsonl: unsupported partition type $other")
-  }
-
   private def identValues(ident: InternalRow): Seq[Option[String]] = {
     val ps = partitionSchema()
     ps.fields.indices.map { i =>
@@ -623,20 +611,20 @@ class JsonlTable(tableSchema: StructType, path: String,
              else Some(JsonlLayout.unescapePathName(v)))))
         }
     }
+    // dir text types as scans read it (a `p=abc` under BIGINT is the
+    // null partition); deduplicated AFTER typing — a logical partition
+    // may live under a current-name dir and a pre-rename variant, or
+    // under a stray dir and `__HIVE_DEFAULT_PARTITION__` — one
+    // identifier, not two
+    val zone = ShardRowReader.sessionZone(JsonlHadoopConf.fromSession())
     walk(root, 0, Map.empty)
       .filter(pv => wanted.forall { case (k, v) => pv.get(k).contains(v) })
-      // a logical partition may live under BOTH a current-name dir and
-      // a pre-rename variant — one identifier, not two
+      .map(pv => ps.fields.toSeq.map(f =>
+        ShardRowReader.partConst(pv(f.name), f.dataType, zone)))
       .distinct
-      .map { pv =>
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          ps.fields.map { f =>
-            pv(f.name) match {
-              case None => null
-              case Some(s) => partValueFromString(s, f.dataType)
-            }
-          }.asInstanceOf[Array[Any]]): InternalRow
-      }.toArray
+      .map(vs => new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(vs.toArray): InternalRow)
+      .toArray
   }
 
   override def truncatePartition(ident: InternalRow): Boolean = {
@@ -2584,13 +2572,8 @@ object JsonlShards {
               stats: Map[String, JsonlSkipIndex.ShardWriteStats], seq: Long,
               sized: Boolean): Map[String, Long] = {
     val rels = staged.map { case (stagedFile, relDir) =>
-      val s = new Path(stagedFile)
-      val name = JsonlEqDeletes.stampName(s.getName, seq)
-      val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-      val target = new Path(root, rel)
-      fs.mkdirs(target.getParent)
-      if (!fs.rename(s, target))
-        throw new java.io.IOException(s"commit rename failed for $s")
+      val rel = landedRel(stagedFile, relDir, seq)
+      move(fs, new Path(stagedFile), new Path(root, rel), "commit rename")
       stagedFile -> rel
     }
     JsonlSkipIndex.mergeEntries(fs, root,
@@ -2598,6 +2581,65 @@ object JsonlShards {
     if (!sized) Map.empty
     else rels.map { case (_, rel) =>
       rel -> fs.getFileStatus(new Path(root, rel)).getLen }.toMap
+  }
+
+  /** The table-relative path [[publish]] lands staged `file` at: in
+    * partition-relative dir `relDir`, under its name stamped with `seq`. */
+  def landedRel(file: String, relDir: String, seq: Long): String = {
+    val name = JsonlEqDeletes.stampName(new Path(file).getName, seq)
+    if (relDir.isEmpty) name else s"$relDir/$name"
+  }
+
+  private def move(fs: FileSystem, from: Path, to: Path, what: String): Unit = {
+    fs.mkdirs(to.getParent)
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"$what failed for $from")
+  }
+
+  /** Replace live shards by staged ones — the one swap behind a
+    * copy-on-write commit, `CALL compact` and `CALL cluster_table`
+    * (caller holds the lock covering `replaced` and has refused over
+    * crashed swap dirs). In order:
+    *   1. each of `replaced` still live MOVES into `trash` at its
+    *      table-relative path (a task's shard name repeats across
+    *      `k=v/` dirs, so a flat trash could collide), its
+    *      merge-on-read sidecar beside it under `trash/_deletes/` (the
+    *      rewrite already applied it); a recovery is a plain move-back;
+    *   2. `staged` lands through [[publish]] at sequence `seq` with the
+    *      caller's skip `stats`;
+    *   3. the trash sweeps through snapshot retention and drops;
+    *   4. the skip index forgets the replaced shards;
+    *   5. the data and `_deletes` dirs the swap emptied are pruned.
+    * Only the named shards move, so a shard appended beside them
+    * mid-rewrite stays live. Out-then-in: a reader listing mid-swap may
+    * miss rows of a touched dir but never sees one twice. A crash
+    * before step 3 leaves the trash holding the only copy of the
+    * replaced shards. Returns the published table-relative paths, in
+    * `staged` order. */
+  def swap(fs: FileSystem, root: Path, trash: Path, replaced: Seq[Path],
+           staged: Seq[(String, String)],
+           stats: Map[String, JsonlSkipIndex.ShardWriteStats],
+           seq: Long): Seq[String] = {
+    val sidecars = new Path(root, JsonlDeletes.DirName)
+    val withSidecars = fs.exists(sidecars)
+    val gone = replaced.filter(fs.exists).map { p =>
+      val rel = relOf(fs, root, p)
+      move(fs, p, new Path(trash, rel), "swap-out")
+      val sc = new Path(sidecars, rel + JsonlDeletes.Suffix)
+      val scGone = withSidecars && fs.exists(sc)
+      if (scGone) move(fs, sc,
+        new Path(trash, s"${JsonlDeletes.DirName}/$rel${JsonlDeletes.Suffix}"),
+        "swap-out")
+      (rel, scGone)
+    }
+    publish(fs, root, staged, stats, seq, sized = false)
+    JsonlSnapshots.retainFromTrash(fs, root, trash, relOf(fs, trash, _))
+    fs.delete(trash, true)
+    val rels = gone.map(_._1)
+    JsonlSkipIndex.removeEntries(fs, root, rels)
+    pruneEmptyDirs(fs, root, dirsOf(root, rels) ++
+      dirsOf(sidecars, gone.collect { case (rel, true) => rel }))
+    staged.map { case (f, d) => landedRel(f, d, seq) }
   }
 
   /** [[publish]] the task output of a batch or streaming epoch. On a
@@ -2787,6 +2829,12 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
         RowLevelLock.acquireScoped(f, conf.value, dest, queryId, scopes)
       else Nil
     try {
+    // a crashed swap dir (this commit's `_cow_trash` or a maintenance
+    // CALL's trash or staging) may hold the only copy of shards this
+    // commit would replace — refuse until an operator restores them
+    if (replaceShards != null)
+      JsonlSnapshots.requireNoCrashedSwaps(f, dest,
+        "graft-jsonl row-level commit")
     // intent marker before the first mutation: if this commit dies
     // after its renames but before its auto-pin, its shards are live
     // in NO manifest — a delta-pin chain would never fold them in and
@@ -2799,50 +2847,6 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
     // have retained. A truncate wipes every data entry; the staged
     // shards' write-time stats re-seed the index below
     if (truncate) JsonlShards.retireAll(f, dest)
-    val cowTrashed = if (replaceShards == null) Nil else {
-      // group copy-on-write commit: the scanned shards ARE the replaced
-      // set. A driver crash between removing them and publishing the
-      // staged replacements must never lose the only copy of a group,
-      // so they are MOVED into `_cow_trash/` (the same swap protocol as
-      // `CALL compact`) and the trash is dropped only after every
-      // publish rename lands. A pre-existing trash dir means a prior
-      // COW died mid-swap and the trash holds the only copy of its
-      // groups — refuse until an operator restores them.
-      val trash = new Path(dest, "_cow_trash")
-      if (f.exists(trash))
-        throw new java.io.IOException(
-          s"graft-jsonl row-level commit: $trash exists — a previous " +
-            "copy-on-write crashed mid-swap and the trash holds the only " +
-            "copy of its groups; move its shards back into the table and " +
-            "delete the trash dir before retrying")
-      val trashedRels = replaceShards().map(new Path(_)).filter(f.exists)
-        .map { p =>
-        // keep the partition-relative layout inside the trash: one
-        // task's shard name repeats across `k=v/` dirs, so a flat move
-        // could collide — and recovery stays a plain move-back
-        val rel = JsonlShards.relOf(f, dest, p)
-        val t = new Path(trash, rel)
-        f.mkdirs(t.getParent)
-        if (!f.rename(p, t))
-          throw new java.io.IOException(s"COW trash move failed for $p")
-        // the shard's position-delete sidecar (merge-on-read) rides
-        // along: the rewrite scan already applied it, so the staged
-        // replacement must NOT see it again — and recovery (moving the
-        // trash back) needs it restored with the shard
-        val sc = JsonlDeletes.sidecarFor(f, dest, p)
-        if (f.exists(sc)) {
-          val st = new Path(trash, s"${JsonlDeletes.DirName}/$rel${JsonlDeletes.Suffix}")
-          f.mkdirs(st.getParent)
-          if (!f.rename(sc, st))
-            throw new java.io.IOException(s"COW trash move failed for $sc")
-        }
-        rel
-      }
-      // the trashed originals' index entries die with them (the staged
-      // replacements re-enter via their write-time stats below)
-      JsonlSkipIndex.removeEntries(f, dest, trashedRels)
-      trashedRels
-    }
     if (overwriteFilters != null) {
       // static partition overwrite: drop every shard the predicate
       // selects (decidability pre-checked by the builder), then land
@@ -2889,21 +2893,21 @@ final class JsonlBatchWrite(schema: StructType, path: String, queryId: String,
     // so a pinned scan applies the same equality rule and serves the
     // upserted pin-time state; rollback restores the pinned equality
     // set with the shards
-    val delta = JsonlShards.publishWave(f, conf.value, dest, msgs,
-      if (destructive) Nil else upsertKeys, tag = null, sized = autoSnapshot)
-    if (replaceShards != null) {
-      // every replacement landed — the table holds the new copy of each
-      // affected group, so the trashed originals are dead weight UNLESS
-      // a snapshot references them (the trash mirrors the table-relative
-      // layout, so the rel path is direct)
-      val cowTrash = new Path(dest, "_cow_trash")
-      JsonlSnapshots.retainFromTrash(f, dest, cowTrash,
-        JsonlShards.relOf(f, cowTrash, _))
-      f.delete(cowTrash, true)
-      // an operation that emptied a whole partition leaves a bare dir:
-      // prune it so the value leaves the layout (deleteWhere contract)
-      JsonlShards.pruneEmptyDirs(f, dest, JsonlShards.dirsOf(dest, cowTrashed))
-    }
+    val delta =
+      if (replaceShards == null)
+        JsonlShards.publishWave(f, conf.value, dest, msgs,
+          if (destructive) Nil else upsertKeys, tag = null, sized = autoSnapshot)
+      else {
+        // group copy-on-write commit: the scanned shards ARE the
+        // replaced set. A driver crash mid-swap must never lose the
+        // only copy of a group, so the swap moves them into
+        // `_cow_trash/` and drops it only after every replacement
+        // landed; the pin below lists the table, so no delta is kept
+        JsonlShards.swap(f, dest, new Path(dest, "_cow_trash"),
+          replaceShards().map(new Path(_)), staged, msgs.flatMap(_.stats).toMap,
+          JsonlEqDeletes.currentSeq(f, dest))
+        JsonlSnapshots.PinDelta(Map.empty, Map.empty, Set.empty)
+      }
     // auto-snapshot (graft.snapshot.auto): pin a version for THIS
     // commit, lock-free (claim-CAS id assignment). Plain appends AND
     // partition-scoped dynamic overwrites know their exact delta

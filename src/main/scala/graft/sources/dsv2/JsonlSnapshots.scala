@@ -523,7 +523,8 @@ object JsonlSnapshots {
     * glob catches every suffix): a crashed trash dir can hold the only
     * copy of its shards, and a crashed staging dir marks a partition
     * whose live listing is mid-swap, so rollback / compact /
-    * cluster_table proceeding over it would lose or duplicate rows. */
+    * cluster_table / a copy-on-write commit proceeding over it would
+    * lose or duplicate rows. */
   def requireNoCrashedSwaps(fs: FileSystem, table: Path, op: String): Unit = {
     val crashed = Seq("_cow_trash", "_compact_trash*", "_compact_staging*",
       "_cluster_trash", "_cluster_staging").flatMap { pat =>

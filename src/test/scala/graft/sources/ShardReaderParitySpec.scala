@@ -153,6 +153,11 @@ class ShardReaderParitySpec extends AnyFunSuite {
       assert(s.table(t).where("p IS NULL").select("k").as[Long].collect()
         .sorted.toSeq == Seq(1L, 2L), fmt)
       assert(s.table(t).where("p = 1").count() == 2L, fmt)
+      // partition listing types the dir as scans do: beside a real null
+      // partition, the stray dir lists as the same one null row
+      s.sql(s"INSERT INTO $t VALUES (3, NULL)")
+      assert(s.sql(s"SHOW PARTITIONS $t").as[String].collect().sorted.toSeq ==
+        Seq("p=1", "p=null"), fmt)
     }
   }
 }
