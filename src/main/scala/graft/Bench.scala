@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable.LinkedHashMap
 import graft.perf.Harness
 import graft.perf.Harness.Json.{num, obj, str}
+import org.apache.spark.sql.graftbridge.CodegenCount
 
 /** Benchmark main: times each registered query at SPARK_GRAFT_SF_DIR.
   *
@@ -15,7 +16,9 @@ import graft.perf.Harness.Json.{num, obj, str}
   * far above its min flags GC/cleaner interference, not a regression;
   * the JVM is settled between queries to keep that rare). A failing
   * query is reported explicitly under "errors" — never folded into a
-  * timing.
+  * timing. `BENCH_FULL.json` also lists, per query, the classes
+  * compiled from generated code during each timed rep
+  * ("queries_compiled").
   *
   * The sink hashes EVERY output column ([[Harness.hashSink]]).
   */
@@ -60,18 +63,24 @@ object Bench {
       }
     }
     // per query: settle once (Harness.settle), then the timed reps; the
-    // min rides along as the noise floor and max - min as the spread
+    // min rides along as the noise floor and max - min as the spread;
+    // per rep, the classes compiled during it (0 once the warmup has
+    // compiled the query's code and the codegen cache keeps it)
     val errors = LinkedHashMap[String, String]()
+    val compiled = LinkedHashMap[String, Seq[Long]]()
     val timings = names.flatMap { n =>
       Harness.settle()
-      val runs = (1 to reps).flatMap { _ =>
-        Harness.attempt(spark)(Harness.seconds(
+      val (runs, counts) = (1 to reps).map { _ =>
+        val c0 = CodegenCount()
+        val run = Harness.attempt(spark)(Harness.seconds(
           Harness.hashSink(SparkEntry.queries(n)(spark, sfDir)).head()))
           .left.map(e => errors(n) = Option(e.getMessage)
             .getOrElse(e.getClass.getName).replaceAll("\\s+", " ").take(200))
           .toOption
-      }
-      Option.when(runs.nonEmpty)(n -> Harness.Reps.of(runs))
+        (run, CodegenCount() - c0)
+      }.unzip
+      compiled(n) = counts
+      Option.when(runs.flatten.nonEmpty)(n -> Harness.Reps.of(runs.flatten))
     }
     def field(f: Harness.Reps => Double): String =
       obj(timings.map { case (k, r) => k -> num(f(r)) })
@@ -83,7 +92,7 @@ object Bench {
     // — a round-over-round median swing SMALLER than the query's own
     // spread is harness noise, not a regression (the r9 verdict burned
     // an investigation on exactly that ambiguity)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${field(_.median)},"queries_min":${field(_.min)},"queries_spread":${field(r => r.max - r.min)},"queries_build":${secs(buildSec)},"queries_plan":${secs(planSec)},"errors":$errJson,"reps":$reps,"sf":${str(sfDir)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${field(_.median)},"queries_min":${field(_.min)},"queries_spread":${field(r => r.max - r.min)},"queries_build":${secs(buildSec)},"queries_plan":${secs(planSec)},"queries_compiled":${obj(compiled.map { case (k, c) => k -> c.mkString("[", ",", "]") })},"errors":$errJson,"reps":$reps,"sf":${str(sfDir)}}"""
     // the driver's per-round artifact keeps only a ~2000-char TAIL of
     // stdout AND parses it as one JSON document: the full per-query
     // line exceeds the window (round-12..14 `parsed: null` symptom),

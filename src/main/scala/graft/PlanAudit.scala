@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.perf.Harness
 
 /** Fleet-wide scan-amplification audit: executes every registered
@@ -12,6 +15,8 @@ import graft.perf.Harness
   *
   * {{{ sbt "runMain graft.PlanAudit" }}}
   *
+  * Scans inside a checkpoint the query body ran (a `materialize`
+  * hook) count too: the final plan reads the checkpoint, not the table.
   * The AQE plan string appends an `== Initial Plan ==` section that
   * double-prints every node — counting stops at that marker. A ratio
   * above ~3 scans per distinct table usually means a shared subtree
@@ -35,12 +40,29 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val spark = Harness.session(defaultCpus = 4, logLevel = "ERROR")
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
+    // the body's checkpoints, from listener events: they arrive
+    // asynchronously but in order, and only for this session's actions
+    // (a query may run its own in a child session), so a marker action
+    // run after the query's flushes the events before it
+    val runs = new LinkedBlockingQueue[(String, QueryExecution)]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        runs.put(funcName -> qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
     Harness.queries(only = None).foreach { name =>
       Harness.attempt(spark) {
+        runs.clear()
         val df = SparkEntry.queries(name)(spark, sf)
         df.collect()
-        val full = df.queryExecution.executedPlan.toString
-        val p = full.split("== Initial Plan ==").head
+        val marker = spark.range(1).toDF()
+        marker.collect()
+        val plans = Iterator.continually(runs.poll(60, TimeUnit.SECONDS))
+          .takeWhile(r => r != null && (r._2 ne marker.queryExecution))
+          .collect { case (f, qe) if f == "localCheckpoint" || f == "checkpoint" => qe }
+          .toList :+ df.queryExecution
+        val p = plans.map(_.executedPlan.toString.split("== Initial Plan ==").head)
+          .mkString("\n")
         val scans = "FileScan parquet".r.findAllMatchIn(p).size
         val tables = "InMemoryFileIndex\\(1 paths\\)\\[[^\\]]+\\]".r
           .findAllMatchIn(p).map(_.matched).toSet.size

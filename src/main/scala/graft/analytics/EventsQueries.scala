@@ -836,15 +836,22 @@ object EventsQueries {
     *
     * Shape: the daily sketch table is calendar-sized (one bounded
     * row per day), so the day-to-prev-day join and everything after
-    * it is metadata-scale; the only corpus-scale work is the two
-    * distinct-aggregates, both partial map-side. */
-  def dailyNewUsers(s: SparkSession, dir: String): DataFrame = {
+    * it is metadata-scale; the only corpus-scale work is the distinct
+    * day/user projection, partial map-side. Its four consumers (the
+    * daily sketches, both sides of the anti self-join) read it through
+    * `materialize`: the copies differ after pruning, so AQE reuses no
+    * exchange between them, and the registry entry checkpoints it so
+    * `events` is scanned once. The sketch is duplicate-insensitive, so
+    * the daily aggregates over distinct pairs equal those over raw
+    * events. */
+  def dailyNewUsers(s: SparkSession, dir: String,
+                    materialize: DataFrame => DataFrame = identity): DataFrame = {
     val k = 32
-    val ev = Tables.events(s, dir)
-    val ud = ev.select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-    val daily = ev.groupBy(to_date(col("ts")).as("day"))
+    val ud = materialize(Tables.events(s, dir)
+      .select(to_date(col("ts")).as("day"), col("user_id")).distinct())
+    val daily = ud.groupBy(col("day"))
       .agg(graft.functions.Native.kmvSketch(userHash48, k).as("kmv"),
-        countDistinct(col("user_id")).as("exact_active"))
+        count(col("user_id")).as("exact_active"))
     val prev = daily.select(col("day").as("p_day"), col("kmv").as("p_kmv"),
       col("exact_active").as("p_active"))
     val exactNew = ud.as("a")
@@ -1460,7 +1467,8 @@ object EventsQueries {
     "q131_markov_transitions" -> (markovTransitions _),
     "q132_kmv_set_ops" -> (kmvSetOps _),
     "q134_linear_attribution" -> (linearAttribution _),
-    "q137_daily_new_users" -> (dailyNewUsers _),
+    "q137_daily_new_users" -> ((s: SparkSession, dir: String) =>
+      dailyNewUsers(s, dir, materialize = _.localCheckpoint())),
     "q99_sliding_event_rates" -> (slidingEventRates _),
     "q96_platform_click_pressure" -> (platformClickPressure _),
     "q98_click_pressure_broadcast" -> (platformClickPressureBroadcast _),

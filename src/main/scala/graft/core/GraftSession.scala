@@ -16,6 +16,45 @@ import org.apache.spark.sql.SparkSession
   * `errors='coerce'` (invalid input -> null, never an exception —
   * reference: dags/utils/etl.py:637-639), which matches Spark's
   * legacy non-ANSI behavior.
+  *
+  * Spark's cache of compiled generated code holds 2000 entries, not
+  * its default 100. The cache is keyed by (context class loader,
+  * code), and in local mode the AQE driver thread and the executor
+  * task compile each whole-stage class under different loaders, so
+  * one class takes two entries. `query_mix`'s ten queries make about
+  * 150 distinct classes (about 300 entries); at 100 entries each pass
+  * evicted what the next pass reused, and its two timed passes
+  * compiled 267 classes (2.7 s of Janino time), 224 of them code the
+  * same loader had compiled before. The cache is a segmented Guava
+  * cache whose bound is not a strict global LRU, hence the headroom.
+  * An entry is a loaded class (a few KB of metaspace to a few tens of
+  * KB for a wide stage), so a full cache costs tens of MB at most;
+  * `peak_rss_mb` did not move. The whole registry does not fit: a
+  * `graft.Bench` pass at sf0.1 compiles about 2300 classes, so each
+  * query's first timed rep recompiles what the other queries'
+  * warmups evicted. The conf is static, read once when
+  * `CodeGenerator` initializes, and holds because every entry point
+  * (`Harness.session`, the test session, the benchmark session)
+  * builds through [[applyConfigs]].
+  *
+  * Whole-stage classes are named `GeneratedIterator`, not
+  * `GeneratedIteratorForCodegenStage<id>`: the name is part of the
+  * cached code, and AQE numbers a stage after every re-plan before
+  * it, so one stage's id varies from run to run with the order its
+  * inputs finished. With ids in the names, a pass over `query_mix`'s
+  * seven passing queries at sf0.001 after two set-up passes still
+  * compiled 19 classes; without them, none (`CodegenCacheSpec`).
+  *
+  * Artifact isolation is off. With it on, every job carries its
+  * session's id and the local executor runs the session's tasks under
+  * a class loader of its own, so a query that builds a child session
+  * per call (`newSession()`: q96/q98's range-join confs, q106's CBO,
+  * the connected-components and maintained-view queries) compiles its
+  * executor-side code afresh under each new loader, and the cache
+  * keeps every dead session's loader alive. The engine adds no jars or
+  * files to a session, so isolation guards nothing here; off, those
+  * queries compile nothing after their first call (`queries_compiled`
+  * in `graft.Bench`).
   */
 object GraftSession {
 
@@ -55,6 +94,12 @@ object GraftSession {
       // would clobber
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
+      // compiled generated code outlives a pass over a query mix: a
+      // cache sized to the mix, class names free of stage ids and one
+      // executor loader for every session (see the object doc)
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def builder(cores: Int): SparkSession.Builder =
     applyConfigs(

@@ -8,6 +8,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CodegenCount
 import org.apache.spark.sql.internal.SQLConf
 import graft.TestSpark
 import graft.sources.LarkSource
@@ -155,9 +156,9 @@ class PipelineEdgeSpec extends AnyFunSuite {
       // once per read schema per JVM. Day 2's landing CSVs carry columns
       // day 1's lack, so they are read once before the count.
       BronzeSchemas.tableIds.keys.foreach(pipe.readLanding(_, "2024-06-02").foreach(_.collect()))
-      val before = org.apache.spark.CodegenCount()
+      val before = CodegenCount()
       pipe.run("2024-06-02") // the merge path's first run
-      assert(org.apache.spark.CodegenCount() - before === 0)
+      assert(CodegenCount() - before === 0)
       val own = pipe.table("silver", "dim_employee").sparkSession
       assert(own ne caller)
       assert(own.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) === "3")
